@@ -325,9 +325,9 @@ class FeatureStore:
         the ``online_node_count`` role: size it so a bucket ≈ one serving
         task. Rebuild is a full overwrite (the log is the source of truth;
         the online view is disposable); for per-batch incremental
-        maintenance wire the same layout through
-        ``streaming.upsert.upsert_parquet``, which rewrites only the
-        buckets a batch touches.
+        maintenance use ``streaming.upsert.upsert_batch``, which rewrites
+        only the buckets a batch touches (it buckets on Murmur3 ``hash``,
+        not ``crc32``, so its tables are not this layout).
         """
         wide = self.read_latest(featurestore_id, entity_type_id, at=at)
         path = self._online_path(featurestore_id, entity_type_id)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mlops_pipelines_featurestore_gcp_spark.ml.factorization import reward_join
-from mlops_pipelines_featurestore_gcp_spark.sources.trajectories import TRAJECTORY_SCHEMA
+from mlops_pipelines_featurestore_gcp_spark.sources.trajectories import TRAJECTORY_SCHEMA, trajectory_columns
 
 
 def random_policy(num_actions: int, *, seed: int = 7) -> Column:
@@ -68,19 +68,7 @@ def generate_trajectories(
     )
 
     batch = F.sort_array(F.collect_list(F.struct("slot", "obs", "action", "reward")))
-    rows = (
-        rewarded.groupBy("step")
-        .agg(batch.alias("b"))
-        .select(
-            F.transform("b", lambda s: F.lit(1).cast("long")).alias("step_type"),
-            F.transform("b", lambda s: F.struct(s.obs.alias("observation_batch"))).alias("observation"),
-            F.col("b.action").alias("action"),
-            F.transform("b", lambda s: F.lit(0.0)).alias("policy_info"),
-            F.transform("b", lambda s: F.lit(1).cast("long")).alias("next_step_type"),
-            F.col("b.reward").cast("array<double>").alias("reward"),
-            F.transform("b", lambda s: F.lit(1.0)).alias("discount"),
-        )
-    )
+    rows = rewarded.groupBy("step").agg(batch.alias("b")).select(*trajectory_columns(F.col("b")))
     # conform to the canonical nested schema (transform() tightens
     # nullability; DataFrame.to() relaxes it back and fixes column order)
     return rows.to(TRAJECTORY_SCHEMA)

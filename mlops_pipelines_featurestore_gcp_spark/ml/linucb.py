@@ -15,12 +15,12 @@ closed form:
 multiply A−λI and b by the epoch count, which we expose as ``num_epochs``
 for numerical parity).
 
-Scale design: sufficient stats are computed as **salted partial aggregates**
-— ``applyInPandas`` over ``(action, salt)`` groups emits k×k/k partials
-(so no single task ever holds an arm's full row set), and only the tiny
-``arms × salts`` partial set is reduced on the driver. Inference broadcasts
-the solved per-arm parameters and scores rows in vectorized NumPy batches
-(Arrow ``pandas_udf``), never per-row Python.
+Scale design: sufficient stats are **per-partition partial aggregates** —
+one ``mapInPandas`` pass emits a k×k/k partial per arm present in each
+input partition, with no shuffle (no task ever holds an arm's full row set),
+and only the tiny ``partitions × arms`` partial set is reduced on the
+driver. Inference broadcasts the solved per-arm parameters and scores rows
+in vectorized NumPy batches (Arrow ``pandas_udf``), never per-row Python.
 """
 
 from __future__ import annotations
@@ -46,7 +46,6 @@ class LinUCB:
     alpha: float = 10.0
     tikhonov: float = 0.01
     num_epochs: int = 1
-    salt_buckets: int = 32
 
     def fit(
         self,
@@ -67,33 +66,37 @@ class LinUCB:
             ]
         )
 
-        def _partial(pdf: pd.DataFrame) -> pd.DataFrame:
-            X = np.stack(pdf["__obs"].to_numpy())
-            r = pdf["__reward"].to_numpy()
-            return pd.DataFrame(
-                {
-                    "action": [int(pdf["__action"].iloc[0])],
-                    "a_flat": [(X.T @ X).ravel().tolist()],
-                    "b_vec": [(X.T @ r).tolist()],
-                    "n": [len(pdf)],
-                }
-            )
+        def _partial(batches):
+            acc = {}  # action -> (XᵀX, Xᵀr, n) over this partition's batches
+            for pdf in batches:  # an empty partition sends no batch
+                X = np.stack(pdf["__obs"].to_numpy())
+                r = pdf["__reward"].to_numpy()
+                actions = pdf["__action"].to_numpy()
+                for a in np.unique(actions).tolist():
+                    m = actions == a
+                    xtx, xtr, n = acc.get(a, (0.0, 0.0, 0))
+                    acc[a] = (xtx + X[m].T @ X[m], xtr + X[m].T @ r[m], n + int(m.sum()))
+            if acc:
+                yield pd.DataFrame(
+                    {
+                        "action": list(acc),
+                        "a_flat": [xtx.ravel().tolist() for xtx, _, _ in acc.values()],
+                        "b_vec": [xtr.tolist() for _, xtr, _ in acc.values()],
+                        "n": [n for _, _, n in acc.values()],
+                    }
+                )
 
         prepped = df.select(
             F.col(obs_col).cast("array<double>").alias("__obs"),
             F.col(action_col).cast("long").alias("__action"),
             F.col(reward_col).cast("double").alias("__reward"),
-            (F.abs(F.hash(F.col(obs_col).cast("array<double>"))) % self.salt_buckets).alias("__salt"),
         ).where(
             F.col("__obs").isNotNull()
             & F.col("__action").isNotNull()
             & F.col("__reward").isNotNull()
         )
-        partials = (
-            prepped.groupBy("__action", "__salt")
-            .applyInPandas(_partial, stats_schema)
-            .collect()  # ≤ num_actions × salt_buckets tiny rows — model state
-        )
+        # ≤ partitions × num_actions tiny rows — model state
+        partials = prepped.mapInPandas(_partial, stats_schema).collect()
 
         A = {a: self.tikhonov * np.eye(k) for a in range(self.num_actions)}
         b = {a: np.zeros(k) for a in range(self.num_actions)}

@@ -38,9 +38,6 @@ _DEFAULT_CONFS: dict[str, str] = {
     # nanosecond timestamps, so read the raw int64 and convert in the
     # catalog (truncate to µs, matching DuckDB's read of the same file).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Shuffle sizing for the local harness; cluster deploys override.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.ui.enabled": "false",
 }
 
@@ -48,8 +45,12 @@ _DEFAULT_CONFS: dict[str, str] = {
 def get_spark(app_name: str = "mlops-featurestore-spark", **overrides: str) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's default tuning.
 
-    ``overrides`` win over defaults; ``SPARK_GRAFT_CPUS`` controls local
-    parallelism (default 32, matching the harness box).
+    ``overrides`` win over defaults. The environment is read here, not at
+    import: ``SPARK_GRAFT_CPUS`` sets local parallelism and the shuffle
+    partition count (default 32, matching the harness box; cluster deploys
+    override), ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default 24g). A
+    streaming checkpoint keeps the shuffle-partition count it was created
+    with, whatever this session says.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Python workers resolve the package by module name (closures pickle
@@ -60,8 +61,12 @@ def get_spark(app_name: str = "mlops-featurestore-spark", **overrides: str) -> S
     if repo_dir not in py_path.split(os.pathsep):
         os.environ["PYTHONPATH"] = repo_dir + (os.pathsep + py_path if py_path else "")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    confs = dict(_DEFAULT_CONFS)
-    confs.update({k: str(v) for k, v in overrides.items()})
+    confs = {
+        **_DEFAULT_CONFS,
+        "spark.sql.shuffle.partitions": cpus,
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        **{k: str(v) for k, v in overrides.items()},
+    }
     for key, value in confs.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -11,7 +11,7 @@ array<struct<observation_batch: array<double>>>. Rows travel as NDJSON
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,6 +29,24 @@ TRAJECTORY_SCHEMA = T.StructType(
         T.StructField("discount", T.ArrayType(T.DoubleType())),
     ]
 )
+
+
+def trajectory_columns(slots: Column) -> list[Column]:
+    """The seven ``TRAJECTORY_SCHEMA`` columns from one row's batch slots,
+    an ``array<struct<obs, action, reward>>`` column. Every slot is a
+    single-step ``MID`` transition of a policy with no info, as the
+    reference writes them (``generator_component.py:122-137``,
+    ``logger/main.py:107-150``). Pass a column, not an expression: each
+    output column reads ``slots`` again."""
+    return [
+        F.transform(slots, lambda s: F.lit(1).cast("long")).alias("step_type"),
+        F.transform(slots, lambda s: F.struct(s.obs.alias("observation_batch"))).alias("observation"),
+        slots["action"].alias("action"),
+        F.transform(slots, lambda s: F.lit(0.0)).alias("policy_info"),
+        F.transform(slots, lambda s: F.lit(1).cast("long")).alias("next_step_type"),
+        slots["reward"].alias("reward"),
+        F.transform(slots, lambda s: F.lit(1.0)).alias("discount"),
+    ]
 
 
 def read_trajectories_ndjson(

@@ -5,7 +5,6 @@ BigQuery-append loop (SURVEY.md §2.7 ST1-ST5) re-expressed as
 from mlops_pipelines_featurestore_gcp_spark.streaming.log_loop import (
     MESSAGE_SCHEMA,
     enrich_with_reward,
-    kafka_reader_options,
     parse_message_json,
     read_prediction_stream,
     run_log_loop,
@@ -19,7 +18,6 @@ from mlops_pipelines_featurestore_gcp_spark.streaming.windows import (
 
 __all__ = [
     "MESSAGE_SCHEMA",
-    "kafka_reader_options",
     "parse_message_json",
     "read_prediction_stream",
     "enrich_with_reward",

@@ -11,19 +11,18 @@ does NOT dedup — duplicate training rows are possible.
 Spark version — strictly better semantics:
 
 - source: ``readStream`` over an NDJSON message directory (stands in for the
-  queue; a Kafka source drops in with only the reader swapped) with an
-  explicit schema, never inference.
-- enrichment: a stream-static **broadcast** join against the (small) item-
-  factor matrix + JVM-side dot product (``F.aggregate(F.zip_with(...))``) —
-  no Python UDF in the hot path, and the factor matrix is NOT rebuilt per
-  message (the reference re-runs a full SVD per message — SURVEY §4.1
-  anti-pattern).
+  queue) with an explicit schema, never inference.
+- enrichment: each message row scores its own slots in place — the item
+  factors ride along as one broadcast ``map<item_id, features>`` and the
+  dot product is a JVM-side fold — no Python UDF in the hot path, and the
+  factor matrix is NOT rebuilt per message (the reference re-runs a full
+  SVD per message — SURVEY §4.1 anti-pattern).
 - sink: ``writeStream`` append with checkpointing + watermarked
   ``dropDuplicates`` on ``message_id`` → exactly-once into the table.
 
 At 100 TB posture: the stream shuffles only for the dedup (keyed state);
-the enrichment join is broadcast (factor matrix is ``num_items × k`` ≈ MBs),
-so per-batch work is embarrassingly parallel over source partitions.
+enrichment is row-local (factor map is ``num_items × k`` ≈ MBs), so
+per-batch work is embarrassingly parallel over source partitions.
 """
 
 from __future__ import annotations
@@ -32,6 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+
+from mlops_pipelines_featurestore_gcp_spark.functions.vectors import dot
+from mlops_pipelines_featurestore_gcp_spark.sources.trajectories import trajectory_columns
 
 MESSAGE_SCHEMA = T.StructType(
     [
@@ -44,50 +46,24 @@ MESSAGE_SCHEMA = T.StructType(
 )
 
 
-def kafka_reader_options(bootstrap_servers: str, topic: str, *, starting_offsets: str = "earliest") -> dict[str, str]:
-    """Reader options for the Kafka flavor of the message source (S9).
-
-    Factored out so the option construction is unit-testable without a
-    broker: ``failOnDataLoss=false`` mirrors Pub/Sub's redelivery-tolerant
-    consumption (``logger/main.py:153``), and offsets start from earliest so
-    a fresh checkpoint drains the full topic like the file source drains the
-    directory.
-    """
-    return {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "subscribe": topic,
-        "startingOffsets": starting_offsets,
-        "failOnDataLoss": "false",
-    }
-
-
 def read_prediction_stream(
     spark: SparkSession,
     message_dir: str,
     *,
     max_files_per_trigger: int | None = None,
     source: str = "files",
-    bootstrap_servers: str = "localhost:9092",
 ) -> DataFrame:
     """S9: message-queue source, config-selectable.
 
     ``source="files"`` (default): each NDJSON line in ``message_dir`` is one
     message (``logger/main.py:153-162`` does base64+JSON decode; the file
-    source hands us the JSON directly). ``source="kafka"``: ``message_dir``
-    is the topic name; the Kafka ``(key, value binary, timestamp)`` rows go
-    through the same ``parse_message_json`` → an identical downstream plan.
-    ``source="socket"``: a live TCP push feed (``message_dir`` is
-    ``host:port``), one JSON message per line — the in-sandbox stand-in for
-    a real network consumer (no broker ships in this container); the socket
-    source has no replayable offsets, so it is the *parity* path proving the
-    parse→enrich→sink plan runs against a live network peer, not the
-    durability path.
+    source hands us the JSON directly). ``source="socket"``: a live TCP
+    push feed (``message_dir`` is ``host:port``), one JSON message per line
+    — the stand-in for a real network consumer (pyspark ships no Kafka
+    connector); the socket source has no replayable offsets, so it is the
+    *parity* path proving the parse→enrich→sink plan runs against a live
+    network peer, not the durability path.
     """
-    if source == "kafka":
-        reader = spark.readStream.format("kafka")
-        for opt, val in kafka_reader_options(bootstrap_servers, message_dir).items():
-            reader = reader.option(opt, val)
-        return parse_message_json(reader.load())
     if source == "socket":
         host, _, port = message_dir.rpartition(":")
         raw = (
@@ -99,7 +75,7 @@ def read_prediction_stream(
         return parse_message_json(raw)  # socket rows are (value string)
     if source != "files":
         raise ValueError(
-            f"unknown message source {source!r} (expected 'files', 'kafka' or 'socket')"
+            f"unknown message source {source!r} (expected 'files' or 'socket')"
         )
     reader = spark.readStream.schema(MESSAGE_SCHEMA)
     if max_files_per_trigger is not None:
@@ -108,7 +84,8 @@ def read_prediction_stream(
 
 
 def parse_message_json(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """Kafka-shaped alternative: bytes column → typed message struct
+    """Wire-format column (string or UTF-8 bytes, one JSON message per
+    row, as the socket source delivers it) → typed message columns
     (``F.from_json`` on the explicit schema)."""
     return raw.select(
         F.from_json(F.col(value_col).cast("string"), MESSAGE_SCHEMA).alias("m")
@@ -120,57 +97,38 @@ def enrich_with_reward(messages: DataFrame, item_factors: DataFrame) -> DataFram
 
     The reference's env reward is (approximately) the user-item rating
     reconstructed from the rank-k factorization, i.e. ``dot(user_vec,
-    item_vec[action])`` (``logger/main.py:63-66`` via the SVD env). We
-    zip each observation with its predicted action, broadcast-join the item
-    factor, and fold the dot product JVM-side.
+    item_vec[action])`` (``logger/main.py:63-66`` via the SVD env). Each
+    message zips its observations with its predicted actions and scores
+    every slot in place: the factor comes from a one-row broadcast
+    ``map<item_id, features>`` and the dot product is the left-to-right
+    ``vectors.dot`` fold. Message rows are never shuffled.
 
     ``item_factors``: ``(item_id long, features array<double>)``.
 
     Output: one row per message in the trajectory shape (batch arrays),
-    matching ``generator_component.py:122-137``.
+    matching ``generator_component.py:122-137``. A slot whose action has
+    no factor, or whose arrays are ragged or hold nulls, earns reward 0.0;
+    a message with no slots (empty or null arrays) is dropped.
     """
-    exploded = messages.select(
-        "message_id",
-        "publish_time",
-        F.posexplode(F.arrays_zip("observations", "predicted_actions")).alias("slot", "z"),
-    ).select(
-        "message_id",
-        "publish_time",
-        "slot",
-        F.col("z.observations").alias("obs"),
-        F.col("z.predicted_actions").alias("action"),
+    factors = item_factors.agg(
+        F.map_from_entries(F.collect_list(F.struct(F.col("item_id").cast("long"), "features"))).alias("__f")
     )
-    joined = exploded.join(
-        F.broadcast(item_factors.withColumnRenamed("item_id", "action")),
-        on="action",
-        how="left",
-    )
-    scored = joined.withColumn(
-        "reward",
-        F.coalesce(
-            F.aggregate(
-                F.zip_with("obs", "features", lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            F.lit(0.0),
+    zipped = F.arrays_zip("observations", "predicted_actions")
+    slots = F.transform(
+        zipped,
+        lambda z: F.struct(
+            z.observations.alias("obs"),
+            z.predicted_actions.alias("action"),
+            F.coalesce(
+                dot(z.observations, F.try_element_at(F.col("__f"), z.predicted_actions)), F.lit(0.0)
+            ).alias("reward"),
         ),
     )
-    batch = F.sort_array(
-        F.collect_list(F.struct("slot", "obs", "action", "reward"))
-    )
-    return scored.groupBy("message_id", "publish_time").agg(
-        batch.alias("b")
-    ).select(
-        "message_id",
-        "publish_time",
-        F.transform("b", lambda s: F.lit(1).cast("long")).alias("step_type"),
-        F.transform("b", lambda s: F.struct(s.obs.alias("observation_batch"))).alias("observation"),
-        F.col("b.action").alias("action"),
-        F.transform("b", lambda s: F.lit(0.0)).alias("policy_info"),
-        F.transform("b", lambda s: F.lit(1).cast("long")).alias("next_step_type"),
-        F.col("b.reward").alias("reward"),
-        F.transform("b", lambda s: F.lit(1.0)).alias("discount"),
+    return (
+        messages.where(F.size(zipped) > 0)
+        .crossJoin(F.broadcast(factors))
+        .select("message_id", "publish_time", slots.alias("b"))
+        .select("message_id", "publish_time", *trajectory_columns(F.col("b")))
     )
 
 
@@ -184,7 +142,6 @@ def run_log_loop(
     dedup_watermark: str = "10 minutes",
     available_now: bool = True,
     source: str = "files",
-    bootstrap_servers: str = "localhost:9092",
     processing_time: str = "5 minutes",
 ) -> StreamingQuery:
     """ST2+ST4: consume → enrich → exactly-once append.
@@ -209,12 +166,12 @@ def run_log_loop(
     processing-time trigger.
 
     Structure note: the stateful dedup lives in the stream (rows pass
-    through immediately — the watermark only bounds dedup state), while the
-    enrichment's per-message re-grouping runs inside ``foreachBatch`` as a
-    *batch* aggregation, so append mode never delays emission of the newest
+    through immediately — the watermark only bounds dedup state) and is its
+    only shuffle. The enrichment runs inside ``foreachBatch`` as a row-local
+    *batch* step, so append mode never delays emission of the newest
     messages behind the watermark.
     """
-    stream = read_prediction_stream(spark, message_dir, source=source, bootstrap_servers=bootstrap_servers)
+    stream = read_prediction_stream(spark, message_dir, source=source)
     deduped = stream.withWatermark("publish_time", dedup_watermark).dropDuplicatesWithinWatermark(["message_id"])
 
     def _emit(batch_df: DataFrame, batch_id: int) -> None:

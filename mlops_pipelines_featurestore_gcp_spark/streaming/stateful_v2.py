@@ -102,7 +102,7 @@ def online_feature_stream(
     """Streaming per-user feature rows over ``(user_id, value)`` events.
 
     Emits one updated row per key per micro-batch (update mode,
-    processing-time). Pair with ``streaming.upsert.upsert_parquet`` in
+    processing-time). Pair with ``streaming.upsert.upsert_batch`` in
     ``foreachBatch`` to maintain the bucketed online store incrementally.
     """
     return events.groupBy("user_id").transformWithStateInPandas(

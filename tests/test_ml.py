@@ -63,6 +63,44 @@ def test_linucb_epochs_scale_stats(spark):
     np.testing.assert_allclose(m1.theta, m5.theta, atol=0.01)
 
 
+def _bandit_df(spark, rows, n_partitions):
+    rdd = spark.sparkContext.parallelize(rows, n_partitions)
+    return spark.createDataFrame(rdd, "obs array<double>, action long, reward double")
+
+
+def test_linucb_fit_independent_of_partitioning(spark):
+    rows = _bandit_rows(n=500, seed=3)
+    one, seven = (
+        LinUCB(context_dim=3, num_actions=3, alpha=0.5, tikhonov=0.01).fit(_bandit_df(spark, rows, n))
+        for n in (1, 7)
+    )
+    np.testing.assert_allclose(one.theta, seven.theta, rtol=1e-10)
+    np.testing.assert_allclose(one.a_inv, seven.a_inv, rtol=1e-10)
+    assert one.counts.tolist() == seven.counts.tolist()
+
+
+def test_linucb_fit_collects_one_pass_without_exchange(spark, monkeypatch):
+    df = _bandit_df(spark, _bandit_rows(n=100), 4)
+    plans = []
+    collect = type(df).collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    LinUCB(context_dim=3, num_actions=3).fit(df)
+    assert len(plans) == 1
+    assert "MapInPandas" in plans[0] and "Exchange" not in plans[0]
+
+
+@pytest.mark.parametrize("action", [-1, 3])
+def test_linucb_fit_rejects_action_out_of_range(spark, action):
+    rows = _bandit_rows(n=50) + [([0.5, 0.5, 0.5], action, 1.0)]
+    with pytest.raises(KeyError):
+        LinUCB(context_dim=3, num_actions=3).fit(_bandit_df(spark, rows, 2))
+
+
 @pytest.fixture(scope="module")
 def tiny_ratings(spark):
     rng = np.random.default_rng(1)

@@ -51,6 +51,136 @@ def test_enrich_reward_is_dot_product(spark, factors):
     assert row.observation[0].observation_batch == [3.0, 4.0]
 
 
+def _enrich_with_reward_regroup(messages, item_factors):
+    """The shuffle-based enrichment the row-local one replaced, kept only
+    as the oracle: explode every slot, broadcast-join its factor, fold the
+    dot product, then regroup the slots per message."""
+    exploded = messages.select(
+        "message_id",
+        "publish_time",
+        F.posexplode(F.arrays_zip("observations", "predicted_actions")).alias("slot", "z"),
+    ).select(
+        "message_id",
+        "publish_time",
+        "slot",
+        F.col("z.observations").alias("obs"),
+        F.col("z.predicted_actions").alias("action"),
+    )
+    joined = exploded.join(
+        F.broadcast(item_factors.withColumnRenamed("item_id", "action")), on="action", how="left"
+    )
+    scored = joined.withColumn(
+        "reward",
+        F.coalesce(
+            F.aggregate(F.zip_with("obs", "features", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x),
+            F.lit(0.0),
+        ),
+    )
+    batch = F.sort_array(F.collect_list(F.struct("slot", "obs", "action", "reward")))
+    return scored.groupBy("message_id", "publish_time").agg(batch.alias("b")).select(
+        "message_id",
+        "publish_time",
+        F.transform("b", lambda s: F.lit(1).cast("long")).alias("step_type"),
+        F.transform("b", lambda s: F.struct(s.obs.alias("observation_batch"))).alias("observation"),
+        F.col("b.action").alias("action"),
+        F.transform("b", lambda s: F.lit(0.0)).alias("policy_info"),
+        F.transform("b", lambda s: F.lit(1).cast("long")).alias("next_step_type"),
+        F.col("b.reward").alias("reward"),
+        F.transform("b", lambda s: F.lit(1.0)).alias("discount"),
+    )
+
+
+def _random_messages(rng, n, k, num_actions):
+    """Slot arrays of independent random lengths (so often ragged), with
+    null vectors, null vector elements, null actions, actions without a
+    factor and whole-null arrays mixed in."""
+
+    def maybe_null(p, value):
+        return None if rng.random() < p else value
+
+    def vec():
+        return [maybe_null(0.05, float(v)) for v in rng.normal(0.0, 1.0, k)]
+
+    rows = []
+    for i in range(n):
+        n_obs, n_act = int(rng.integers(0, 5)), int(rng.integers(0, 5))
+        obs = maybe_null(0.05, [maybe_null(0.1, vec()) for _ in range(n_obs)])
+        acts = maybe_null(0.05, [maybe_null(0.1, int(rng.integers(0, num_actions + 2))) for _ in range(n_act)])
+        rows.append((f"m{i}", f"2024-01-01 00:{i % 60:02d}:00", obs, acts))
+    return rows
+
+
+def _messages_df(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "message_id string, publish_time string, observations array<array<double>>, predicted_actions array<long>",
+    ).withColumn("publish_time", F.col("publish_time").cast("timestamp"))
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_enrich_reward_matches_regroup_oracle(spark, seed):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    k, num_actions = 3, 6
+    factor_rows = [(a, [float(v) for v in rng.normal(0.0, 1.0, k)]) for a in range(num_actions - 2)]
+    factor_rows[0] = (0, factor_rows[0][1][:2])  # a factor shorter than the observations
+    factors = spark.createDataFrame(factor_rows, "item_id long, features array<double>")
+    msgs = _messages_df(spark, _random_messages(rng, 200, k, num_actions))
+
+    got = enrich_with_reward(msgs, factors)
+    want = _enrich_with_reward_regroup(msgs, factors)
+    # same column types; only top-level nullability differs, and a parquet
+    # sink stores every column as nullable anyway
+    assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
+    got_rows = sorted(got.collect(), key=lambda r: r.message_id)
+    want_rows = sorted(want.collect(), key=lambda r: r.message_id)
+    assert len(got_rows) > 100
+    rewards = [x for r in got_rows for x in r.reward]
+    assert 0.0 in rewards and any(rewards)  # unscored and scored slots both occur
+    assert got_rows == want_rows  # Row equality: every float bit for bit
+
+
+def test_enrich_reward_drops_messages_without_slots(spark, factors):
+    msgs = _messages_df(
+        spark,
+        [
+            ("empty", "2024-01-01 00:00:00", [], []),
+            ("null_obs", "2024-01-01 00:00:00", None, [1]),
+            ("null_actions", "2024-01-01 00:00:00", [[1.0, 0.0]], None),
+            ("no_factor", "2024-01-01 00:00:00", [[1.0, 0.0]], [7]),
+        ],
+    )
+    rows = enrich_with_reward(msgs, factors).collect()
+    assert [(r.message_id, r.reward) for r in rows] == [("no_factor", [0.0])]
+
+
+def _exchanges_outside_broadcast(plan: str) -> list[str]:
+    """Exchange nodes of a printed physical plan that are not inside a
+    BroadcastExchange subtree (the broadcast side is built once)."""
+    out, broadcast_indent = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if broadcast_indent is not None and indent > broadcast_indent:
+            continue
+        broadcast_indent = None
+        if "BroadcastExchange" in line:
+            broadcast_indent = indent
+        elif "Exchange" in line:
+            out.append(line.strip())
+    return out
+
+
+def test_enrich_reward_message_side_has_no_exchange(spark, factors):
+    msgs = _messages_df(spark, [("m1", "2024-01-01 00:00:00", [[3.0, 4.0]], [0])])
+    plan = enrich_with_reward(msgs, factors)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan
+    assert _exchanges_outside_broadcast(plan) == []
+    # the oracle's regroup does shuffle, so the check can see one
+    old = _enrich_with_reward_regroup(msgs, factors)._jdf.queryExecution().executedPlan().toString()
+    assert _exchanges_outside_broadcast(old)
+
+
 def test_log_loop_exactly_once(spark, factors, tmp_path):
     msg_dir = tmp_path / "msgs"
     sink = str(tmp_path / "sink")
@@ -152,16 +282,6 @@ def test_parse_message_json_kafka_shape(spark):
     assert row.message_id == "m9"
     assert row.observations == [[1.5, 2.5]]
     assert row.predicted_actions == [3]
-
-
-def test_kafka_reader_options_shape():
-    from mlops_pipelines_featurestore_gcp_spark.streaming import kafka_reader_options
-
-    opts = kafka_reader_options("broker1:9092,broker2:9092", "predictions")
-    assert opts["kafka.bootstrap.servers"] == "broker1:9092,broker2:9092"
-    assert opts["subscribe"] == "predictions"
-    assert opts["startingOffsets"] == "earliest"
-    assert opts["failOnDataLoss"] == "false"
 
 
 def test_unknown_source_rejected(spark, tmp_path):
