@@ -6,18 +6,19 @@ Mirrors the signatures of the reference's helper layer (SURVEY.md §2.9):
 (``:83-107``), ``create_feature`` (``:109-137``), ``import_feature_values``
 (``bigquery_to_featurestore.py:4-57``) — re-expressed over Spark tables:
 
-- **Registry** — small parquet tables (featurestores / entity_types /
-  features) under ``{base}/registry``; metadata, read rarely.
+- **Registry** — one JSON document at ``{base}/registry.json`` (see
+  ``FeatureStore``); metadata calls are dict edits that run no Spark job.
 - **Values** — one long-format parquet table per (store, entity type) at
   ``{base}/values/{fs}/{entity}``, schema ``(entity_id string, feature_name
   string, value string, feature_time timestamp)``, partitioned by
   ``feature_date`` so point-in-time reads prune partitions at scale.
-  Values are stored as STRING like the reference (all four features are
-  ``Feature.ValueType.STRING``, notebook cell 22); declared types live in
-  the registry and drive the cast on read.
+  Values are stored and read as STRING like the reference (all four
+  features are ``Feature.ValueType.STRING``, notebook cell 22); a
+  feature's declared ``value_type`` is recorded in the registry only.
 - **Reads** — latest / point-in-time via the window pattern (J2); spine
-  joins via the as-of operator. The online path (FS7) is the same latest
-  view kept cached.
+  joins via the as-of operator. The online path (FS7) reads the bucketed
+  latest-row copy that ``materialize_online`` writes under
+  ``{base}/online/{fs}/{entity}``.
 
 Two reference bugs deliberately NOT reproduced (SURVEY §2.9 FS6): the
 hardcoded source-URI and the ``entity_id_field`` parameter being overridden
@@ -26,16 +27,22 @@ with a literal ``"user_id"`` (``bigquery_to_featurestore.py:28,172``).
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
+import tempfile
+import zlib
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
 
 VALUES_SCHEMA = "entity_id string, feature_name string, value string, feature_time timestamp"
+REGISTRY_FILE = "registry.json"
 
 
 # ---------------------------------------------------------------------------
@@ -104,89 +111,94 @@ def point_in_time_values(values: DataFrame, spine: DataFrame, *, spine_key: str,
 # ---------------------------------------------------------------------------
 
 
+def _insert(table: dict, key: str, kind: str, entry: dict) -> None:
+    if key in table:
+        raise ValueError(f"{kind} {key!r} already exists")
+    table[key] = entry
+
+
+def _lookup(table: dict, key: str, kind: str) -> dict:
+    if key not in table:
+        raise ValueError(f"{kind} {key!r} does not exist")
+    return table[key]
+
+
 @dataclass
 class FeatureStore:
-    """Filesystem-rooted feature store (``base_path`` can be any Hadoop-FS
-    URI — local dir in tests, object store in production)."""
+    """Feature store rooted at ``base_path``, a local directory (the
+    registry and ``cleanup_featurestore`` use plain file I/O).
+
+    Every call reads the registry afresh (another instance may have written
+    it); a write replaces it whole through a fsynced temp file and
+    ``os.replace``, so a crash leaves the old or the new document.
+    Concurrent writers can lose an update. Shape::
+
+        {"featurestores": {fs: {"online_node_count": n, "entity_types": {
+            et: {"description": ..., "features": {f: {"value_type": ..., "description": ...}},
+                 "online": {"buckets": n, "schema": <StructType JSON>}}}}}}
+    """
 
     spark: SparkSession
     base_path: str
 
     # -- registry ----------------------------------------------------------
 
-    def _registry_path(self, table: str) -> str:
-        return f"{self.base_path}/registry/{table}"
+    def _load(self) -> dict:
+        try:
+            with open(Path(self.base_path) / REGISTRY_FILE) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {"featurestores": {}}
 
-    def _read_registry(self, table: str, schema: str) -> DataFrame:
-        path = Path(self.base_path) / "registry" / table
-        if not path.exists():
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(str(path))
-
-    def _overwrite_registry(self, table: str, df: DataFrame) -> None:
-        # Registry tables are tiny metadata. Materialize to the driver first:
-        # the new frame usually unions the files being overwritten, and a
-        # lazy overwrite would delete them before reading.
-        schema = df.schema
-        rows = df.collect()
-        self.spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-            self._registry_path(table)
-        )
-
-    _FS_SCHEMA = "featurestore_id string, online_node_count int, created_at timestamp"
-    _ONLINE_SCHEMA = "featurestore_id string, entity_type_id string, buckets int"
-    _ET_SCHEMA = "featurestore_id string, entity_type_id string, description string"
-    _FEAT_SCHEMA = (
-        "featurestore_id string, entity_type_id string, feature_id string, value_type string, description string"
-    )
+    def _save(self, doc: dict) -> None:
+        base = Path(self.base_path)
+        base.mkdir(parents=True, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=base, prefix=".registry-", suffix=".tmp")
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(doc, f, indent=1)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, base / REGISTRY_FILE)
+        except BaseException:
+            Path(tmp).unlink(missing_ok=True)
+            raise
 
     def create_featurestore(self, featurestore_id: str, *, online_node_count: int = 1) -> None:
         """FS1 (``feature_store_helper.py:30-57``): register a store.
 
         ``online_node_count`` mirrors ``fixed_node_count`` — here it only
-        records intent; the online path is a cached view, not provisioned
-        capacity."""
-        cur = self._read_registry("featurestores", self._FS_SCHEMA)
-        if cur.where(F.col("featurestore_id") == featurestore_id).count() > 0:
-            raise ValueError(f"featurestore {featurestore_id!r} already exists")
-        row = self.spark.createDataFrame(
-            [(featurestore_id, online_node_count)], "featurestore_id string, online_node_count int"
-        ).withColumn("created_at", F.current_timestamp())
-        self._overwrite_registry("featurestores", cur.unionByName(row))
+        records intent; the online path is bucketed parquet, not
+        provisioned capacity."""
+        doc = self._load()
+        entry = {"online_node_count": online_node_count, "entity_types": {}}
+        _insert(doc["featurestores"], featurestore_id, "featurestore", entry)
+        self._save(doc)
 
     def list_featurestores(self) -> list[str]:
         """FS2 (``feature_store_helper.py:61-78``)."""
-        return [
-            r.featurestore_id
-            for r in self._read_registry("featurestores", self._FS_SCHEMA)
-            .select("featurestore_id")
-            .orderBy("featurestore_id")
-            .collect()
-        ]
+        return sorted(self._load()["featurestores"])
 
     def cleanup_featurestore(self, featurestore_id: str, *, force: bool = True) -> None:
-        """FS3 (``feature_store_helper.py:8-27``): drop store + children +
-        values (``force`` mirrors the reference's force-delete)."""
-        if not force:
-            ets = self._read_registry("entity_types", self._ET_SCHEMA)
-            if ets.where(F.col("featurestore_id") == featurestore_id).count() > 0:
+        """FS3 (``feature_store_helper.py:8-27``): drop the store's registry
+        entry (entity types, features, online layouts), then its values and
+        online files (``force`` mirrors the reference's force-delete)."""
+        doc = self._load()
+        entry = doc["featurestores"].pop(featurestore_id, None)
+        if entry is not None:
+            if entry["entity_types"] and not force:
                 raise ValueError(f"featurestore {featurestore_id!r} is not empty; use force=True")
-        for table, schema in (
-            ("featurestores", self._FS_SCHEMA),
-            ("entity_types", self._ET_SCHEMA),
-            ("features", self._FEAT_SCHEMA),
-        ):
-            cur = self._read_registry(table, schema)
-            self._overwrite_registry(table, cur.where(F.col("featurestore_id") != featurestore_id))
-        values_dir = Path(self.base_path) / "values" / featurestore_id
-        if values_dir.exists():
-            shutil.rmtree(values_dir)
+            self._save(doc)
+        for kind in ("values", "online"):
+            shutil.rmtree(Path(self.base_path) / kind / featurestore_id, ignore_errors=True)
 
     def create_entity_type(self, featurestore_id: str, entity_type_id: str, *, description: str = "") -> None:
         """FS4 (``feature_store_helper.py:83-107``)."""
-        cur = self._read_registry("entity_types", self._ET_SCHEMA)
-        row = self.spark.createDataFrame([(featurestore_id, entity_type_id, description)], self._ET_SCHEMA)
-        self._overwrite_registry("entity_types", cur.unionByName(row))
+        doc = self._load()
+        store = _lookup(doc["featurestores"], featurestore_id, "featurestore")
+        entry = {"description": description, "features": {}}
+        _insert(store["entity_types"], entity_type_id, "entity type", entry)
+        self._save(doc)
 
     def create_feature(
         self,
@@ -197,14 +209,15 @@ class FeatureStore:
         value_type: str = "STRING",
         description: str = "",
     ) -> None:
-        """FS5 (``feature_store_helper.py:109-137``); ``value_type`` is the
-        declared read-cast type (the stored form is always STRING, matching
-        the reference's all-STRING features at notebook cell 22)."""
-        cur = self._read_registry("features", self._FEAT_SCHEMA)
-        row = self.spark.createDataFrame(
-            [(featurestore_id, entity_type_id, feature_id, value_type, description)], self._FEAT_SCHEMA
-        )
-        self._overwrite_registry("features", cur.unionByName(row))
+        """FS5 (``feature_store_helper.py:109-137``). ``value_type`` is
+        recorded metadata only: values are stored and read back as STRING,
+        like the reference's all-STRING features (notebook cell 22)."""
+        doc = self._load()
+        store = _lookup(doc["featurestores"], featurestore_id, "featurestore")
+        entity = _lookup(store["entity_types"], entity_type_id, "entity type")
+        entry = {"value_type": value_type, "description": description}
+        _insert(entity["features"], feature_id, "feature", entry)
+        self._save(doc)
 
     # -- values ------------------------------------------------------------
 
@@ -330,30 +343,17 @@ class FeatureStore:
         not ``crc32``, so its tables are not this layout).
         """
         wide = self.read_latest(featurestore_id, entity_type_id, at=at)
+        out = wide.withColumn("bucket", self._bucket_col(buckets))
         path = self._online_path(featurestore_id, entity_type_id)
-        (
-            wide.withColumn("bucket", self._bucket_col(buckets))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
-        # The modulus is LAYOUT metadata: record it in the registry so reads
-        # can never disagree with it (sparse data writes fewer bucket dirs
-        # than the modulus, so the directory listing cannot recover it).
-        cur = self._read_registry("online_layouts", self._ONLINE_SCHEMA)
-        row = self.spark.createDataFrame(
-            [(featurestore_id, entity_type_id, buckets)], self._ONLINE_SCHEMA
-        )
-        self._overwrite_registry(
-            "online_layouts",
-            cur.where(
-                ~(
-                    (F.col("featurestore_id") == featurestore_id)
-                    & (F.col("entity_type_id") == entity_type_id)
-                )
-            ).unionByName(row),
-        )
+        out.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(path)
+        # Record the modulus (sparse data writes fewer bucket dirs than it, so
+        # the listing cannot recover it) and the schema the files read back as
+        # (lookups skip inference). An unregistered entity type gets registered.
+        doc = self._load()
+        store = doc["featurestores"].setdefault(featurestore_id, {"online_node_count": 1, "entity_types": {}})
+        entity = store["entity_types"].setdefault(entity_type_id, {"description": "", "features": {}})
+        entity["online"] = {"buckets": buckets, "schema": out.schema.jsonValue()}
+        self._save(doc)
         return path
 
     def online_read(
@@ -364,26 +364,20 @@ class FeatureStore:
         Recomputes each key's bucket driver-side and filters on the
         PARTITION column first — the scan opens only the buckets the keys
         hash to (partition pruning, asserted in tests via ``inputFiles``),
-        then the row filter selects the entities inside them.
+        then the row filter selects the entities inside them. The layout
+        comes from the registry file and the read uses the recorded schema,
+        so building the frame runs no Spark job.
         """
-        import zlib
-
-        ids = [str(e) for e in entity_ids]
-        path = self._online_path(featurestore_id, entity_type_id)
-        meta = (
-            self._read_registry("online_layouts", self._ONLINE_SCHEMA)
-            .where(
-                (F.col("featurestore_id") == featurestore_id)
-                & (F.col("entity_type_id") == entity_type_id)
-            )
-            .collect()
-        )
-        if not meta:
+        try:
+            layout = self._load()["featurestores"][featurestore_id]["entity_types"][entity_type_id]["online"]
+        except KeyError:
             raise ValueError(
                 f"no online store materialized for {featurestore_id}/{entity_type_id}; "
                 "call materialize_online first"
-            )
-        nbuckets = meta[0].buckets
-        buckets = sorted({zlib.crc32(e.encode("utf-8")) % nbuckets for e in ids})
-        df = self.spark.read.parquet(path)
+            ) from None
+        ids = [str(e) for e in entity_ids]
+        buckets = sorted({zlib.crc32(e.encode("utf-8")) % layout["buckets"] for e in ids})
+        df = self.spark.read.schema(T.StructType.fromJson(layout["schema"])).parquet(
+            self._online_path(featurestore_id, entity_type_id)
+        )
         return df.where(F.col("bucket").isin(buckets)).where(F.col("entity_id").isin(ids))

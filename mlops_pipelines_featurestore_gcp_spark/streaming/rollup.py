@@ -35,9 +35,7 @@ remains for stores written by many fine-grained historical refreshes.
 Crash safety: the merged state is eagerly materialized
 (``localCheckpoint``) BEFORE the overwrite, because the refresh reads and
 rewrites the SAME path — without the barrier a lazy plan would read
-partitions mid-replacement on a task retry (the registry writer solved
-the same hazard by materializing first; see
-``feature_store/store.py`` `_write_registry`). The dynamic-overwrite mode
+partitions mid-replacement on a task retry. The dynamic-overwrite mode
 is scoped to the DataFrameWriter ``.option(...)``, never set on the
 session, so sibling static-overwrite writers (e.g. the IVF index rebuild
 in ``operators/similarity.py``) keep truncate-on-overwrite semantics.

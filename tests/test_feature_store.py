@@ -4,10 +4,16 @@ returns first, one row per entity)."""
 
 from __future__ import annotations
 
+import json
+import os
+import random
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from mlops_pipelines_featurestore_gcp_spark.feature_store import FeatureStore
+from mlops_pipelines_featurestore_gcp_spark.feature_store import store as store_mod
 from mlops_pipelines_featurestore_gcp_spark.feature_store.store import point_in_time_values
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
 
@@ -26,8 +32,70 @@ def test_registry_lifecycle(store):
     store.create_entity_type("movie_fs", "users", description="per-user features")
     for feat in ("user_id", "item_id", "rating", "timestamp"):
         store.create_feature("movie_fs", "users", feat, value_type="STRING")
+
+    # duplicates are AlreadyExists, unknown parents NotFound (as in Vertex)
+    with pytest.raises(ValueError, match="entity type 'users' already exists"):
+        store.create_entity_type("movie_fs", "users")
+    with pytest.raises(ValueError, match="feature 'rating' already exists"):
+        store.create_feature("movie_fs", "users", "rating")
+    with pytest.raises(ValueError, match="featurestore 'no_fs' does not exist"):
+        store.create_entity_type("no_fs", "users")
+    with pytest.raises(ValueError, match="featurestore 'no_fs' does not exist"):
+        store.create_feature("no_fs", "users", "rating")
+    with pytest.raises(ValueError, match="entity type 'items' does not exist"):
+        store.create_feature("movie_fs", "items", "rating")
+    # the same ids under another store are not duplicates
+    store.create_entity_type("other_fs", "users")
+    store.create_feature("other_fs", "users", "rating")
+
+    with pytest.raises(ValueError, match="not empty"):
+        store.cleanup_featurestore("movie_fs", force=False)
+    assert store.list_featurestores() == ["movie_fs", "other_fs"]
     store.cleanup_featurestore("movie_fs", force=True)
     assert store.list_featurestores() == ["other_fs"]
+    # a cleaned-up id can be registered again, with no children left over
+    store.create_featurestore("movie_fs")
+    store.create_entity_type("movie_fs", "users")
+
+
+def test_registry_write_is_atomic_and_shared(store, spark, monkeypatch):
+    store.create_featurestore("a")
+    store.create_entity_type("a", "users")
+    registry = Path(store.base_path) / "registry.json"
+    before = registry.read_bytes()
+
+    def failing_replace(src, dst):
+        raise OSError("simulated crash")
+
+    def partial_dump(doc, f, **kwargs):
+        f.write('{"featurestores": {"b"')
+        raise OSError("simulated crash")
+
+    for owner, name, fake in ((store_mod.os, "replace", failing_replace), (store_mod.json, "dump", partial_dump)):
+        monkeypatch.setattr(owner, name, fake)
+        for create in (
+            lambda: store.create_featurestore("b"),
+            lambda: store.create_entity_type("a", "items"),
+            lambda: store.create_feature("a", "users", "f"),
+        ):
+            with pytest.raises(OSError, match="simulated crash"):
+                create()
+            # the old document is untouched and still loads; no temp file is left
+            assert registry.read_bytes() == before
+            json.loads(before)
+            assert os.listdir(store.base_path) == ["registry.json"]
+            assert store.list_featurestores() == ["a"]
+        monkeypatch.undo()
+
+    # a second instance on the same base sees each write at once, both ways
+    other = FeatureStore(spark, store.base_path)
+    assert other.list_featurestores() == ["a"]
+    store.create_featurestore("b")
+    assert other.list_featurestores() == ["a", "b"]
+    other.create_entity_type("b", "users")
+    store.create_feature("b", "users", "f")
+    with pytest.raises(ValueError, match="already exists"):
+        other.create_feature("b", "users", "f")
 
 
 def test_import_and_latest_read(store, spark):
@@ -156,6 +224,89 @@ def test_online_rematerialize_overwrites(store, spark):
     store.import_feature_values("fs", "users", src2, entity_id_field="uid", feature_time="2024-02-01")
     store.materialize_online("fs", "users", buckets=4)
     assert [r.bal for r in store.online_read("fs", "users", [1]).collect()] == ["99.0"]
+
+
+def test_cleanup_leaves_no_servable_online_store(store, spark):
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    src = spark.createDataFrame([(1, 10.0), (2, 20.0)], "uid long, bal double")
+    store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time="2024-01-01")
+    store.materialize_online("fs", "users", buckets=4)
+    assert len(store.online_read("fs", "users", [1]).collect()) == 1
+
+    store.cleanup_featurestore("fs")
+    assert not os.path.exists(os.path.join(store.base_path, "online", "fs"))
+    assert not os.path.exists(os.path.join(store.base_path, "values", "fs"))
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    with pytest.raises(ValueError, match="no online store materialized"):
+        store.online_read("fs", "users", [1])
+
+
+def _jobs_run(spark, fn):
+    """``fn()`` and the number of Spark jobs it started, counted through a
+    job group of its own."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{random.getrandbits(64):x}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark):
+    """``online_read`` (recorded layout and schema, no job to build the
+    frame) equals a fresh ``spark.read.parquet`` with the same bucket and
+    entity filters, across a re-materialize that adds a feature column."""
+    import zlib
+
+    def oracle(keys, buckets):
+        ids = [str(k) for k in keys]
+        want = sorted({zlib.crc32(e.encode()) % buckets for e in ids})
+        fresh = spark.read.parquet(os.path.join(store.base_path, "online", "fs", "users"))
+        return fresh.where(F.col("bucket").isin(want)).where(F.col("entity_id").isin(ids))
+
+    def check(rng, buckets, n_entities):
+        for _ in range(6):
+            keys = rng.sample(range(300), rng.randint(1, 20)) + rng.sample(["absent", "-1"], rng.randint(0, 2))
+            got_df, build_jobs = _jobs_run(spark, lambda: store.online_read("fs", "users", keys))
+            got, collect_jobs = _jobs_run(spark, got_df.collect)
+            want_df = oracle(keys, buckets)
+            assert (build_jobs, collect_jobs) == (0, 1)
+            assert got_df.schema == want_df.schema
+            assert sorted(map(tuple, got)) == sorted(map(tuple, want_df.collect()))
+            assert {r.entity_id for r in got} == {str(k) for k in keys if k in range(n_entities)}
+
+    rng = random.Random(7)
+    _, meta_jobs = _jobs_run(
+        spark,
+        lambda: (
+            store.create_featurestore("fs"),
+            store.create_entity_type("fs", "users"),
+            store.create_feature("fs", "users", "bal", value_type="DOUBLE"),
+            store.list_featurestores(),
+        ),
+    )
+    assert meta_jobs == 0
+    src = spark.range(250).select(F.col("id").alias("uid"), (F.col("id") * 0.5).alias("bal"))
+    store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time="2024-01-01")
+    store.materialize_online("fs", "users", buckets=8)
+    check(rng, 8, 250)
+
+    # a new feature column and a new modulus: a stale recorded layout fails
+    src2 = spark.range(100, 300).select(
+        F.col("id").alias("uid"), (F.col("id") * 2.0).alias("bal"), (F.col("id") % 7).alias("tier")
+    )
+    store.import_feature_values("fs", "users", src2, entity_id_field="uid", feature_time="2024-02-01")
+    store.materialize_online("fs", "users", buckets=5)
+    assert store.online_read("fs", "users", [1]).columns == ["entity_id", "bal", "tier", "bucket"]
+    check(rng, 5, 300)
+
+    _, cleanup_jobs = _jobs_run(spark, lambda: store.cleanup_featurestore("fs"))
+    assert cleanup_jobs == 0
 
 
 def test_asof_forward_direction_and_tolerance(spark):
