@@ -16,9 +16,14 @@ Mirrors the signatures of the reference's helper layer (SURVEY.md §2.9):
   features are ``Feature.ValueType.STRING``, notebook cell 22); a
   feature's declared ``value_type`` is recorded in the registry only.
 - **Reads** — latest / point-in-time via the window pattern (J2); spine
-  joins via the as-of operator. The online path (FS7) reads the bucketed
-  latest-row copy that ``materialize_online`` writes under
-  ``{base}/online/{fs}/{entity}``.
+  joins via the as-of operator.
+- **Online store** (FS7) — immutable snapshots of the bucketed latest row
+  per entity, ``{base}/online/{fs}/{entity}/v{n}``. ``materialize_online``
+  writes a new snapshot, then one registry replace makes it current, then
+  it removes all but the current and the previous snapshot.
+  ``online_read`` reads the current snapshot's key buckets on the driver
+  with ``pyarrow.dataset`` and returns a local ``DataFrame``: a lookup runs
+  no Spark job and never sees a half-written store.
 
 Two reference bugs deliberately NOT reproduced (SURVEY §2.9 FS6): the
 hardcoded source-URI and the ``entity_id_field`` parameter being overridden
@@ -31,13 +36,18 @@ import json
 import os
 import shutil
 import tempfile
+import uuid
 import zlib
 from dataclasses import dataclass
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
 
@@ -135,7 +145,8 @@ class FeatureStore:
 
         {"featurestores": {fs: {"online_node_count": n, "entity_types": {
             et: {"description": ..., "features": {f: {"value_type": ..., "description": ...}},
-                 "online": {"buckets": n, "schema": <StructType JSON>}}}}}}
+                 "online": {"path": "online/{fs}/{et}/v{n}", "buckets": n,
+                            "schema": <StructType JSON>}}}}}}
     """
 
     spark: SparkSession
@@ -313,9 +324,6 @@ class FeatureStore:
 
     # -- online store ------------------------------------------------------
 
-    def _online_path(self, featurestore_id: str, entity_type_id: str) -> str:
-        return f"{self.base_path}/online/{featurestore_id}/{entity_type_id}"
-
     @staticmethod
     def _bucket_col(buckets: int):
         # crc32 is stable across Spark versions and partitionings (unlike
@@ -326,58 +334,111 @@ class FeatureStore:
     def materialize_online(
         self, featurestore_id: str, entity_type_id: str, *, buckets: int = 16, at=None
     ) -> str:
-        """Compact the append-only values log into the ONLINE store: one
-        wide latest-row per entity, hash-bucketed on the entity id.
+        """Compact the append-only values log into a new ONLINE snapshot (one
+        wide latest-row per entity) and make it current. Returns the
+        snapshot directory.
 
         The reference serves online reads from Vertex's managed store
         (``feature_store_helper.py`` online node knob; notebook cell 7
-        reads); here the serving copy is plain parquet with ``bucket =
-        crc32(entity_id) % buckets`` as a PARTITION column, so a point
-        lookup prunes to one directory before any file opens — at 100 TB
-        the lookup cost is one bucket, not a table scan. ``buckets`` plays
-        the ``online_node_count`` role: size it so a bucket ≈ one serving
-        task. Rebuild is a full overwrite (the log is the source of truth;
-        the online view is disposable); for per-batch incremental
-        maintenance use ``streaming.upsert.upsert_batch``, which rewrites
-        only the buckets a batch touches (it buckets on Murmur3 ``hash``,
+        reads). Here a snapshot is plain parquet at
+        ``online/{fs}/{entity}/v{n}`` with ``bucket = crc32(entity_id) %
+        buckets`` as a PARTITION column, so a lookup opens only the buckets
+        its keys hash to; ``buckets`` plays the ``online_node_count`` role.
+        Each refresh is a full rebuild (the log is the source of truth)
+        into a new directory, never over one that readers scan. One
+        registry replace then makes it current, so a reader sees the old or
+        the new snapshot whole. Every other entry is then renamed away and
+        removed, except the snapshot just replaced, which a reader may still
+        be scanning; that also sweeps a snapshot whose refresh crashed
+        before the replace. For per-batch incremental maintenance see
+        ``streaming.upsert.upsert_batch`` (it buckets on Murmur3 ``hash``,
         not ``crc32``, so its tables are not this layout).
         """
         wide = self.read_latest(featurestore_id, entity_type_id, at=at)
         out = wide.withColumn("bucket", self._bucket_col(buckets))
-        path = self._online_path(featurestore_id, entity_type_id)
-        out.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(path)
+        root = Path(self.base_path) / "online" / featurestore_id / entity_type_id
+        versions = [int(p.name[1:]) for p in root.glob("v*") if p.name[1:].isdigit()]
+        snapshot = root / f"v{max(versions, default=0) + 1}"
+        out.repartition("bucket").write.partitionBy("bucket").parquet(str(snapshot))
         # Record the modulus (sparse data writes fewer bucket dirs than it, so
-        # the listing cannot recover it) and the schema the files read back as
-        # (lookups skip inference). An unregistered entity type gets registered.
+        # the listing cannot recover it) and the schema the files read back
+        # as: every field nullable, like a fresh file read. An unregistered
+        # entity type gets registered.
         doc = self._load()
         store = doc["featurestores"].setdefault(featurestore_id, {"online_node_count": 1, "entity_types": {}})
         entity = store["entity_types"].setdefault(entity_type_id, {"description": "", "features": {}})
-        entity["online"] = {"buckets": buckets, "schema": out.schema.jsonValue()}
+        previous = entity.get("online", {}).get("path", "")
+        schema = T.StructType([T.StructField(f.name, f.dataType) for f in out.schema.fields])
+        entity["online"] = {
+            "path": snapshot.relative_to(self.base_path).as_posix(),
+            "buckets": buckets,
+            "schema": schema.jsonValue(),
+        }
         self._save(doc)
-        return path
+        for p in list(root.iterdir()):
+            if p.name not in (snapshot.name, Path(previous).name):
+                gone = p.with_name(f".drop-{uuid.uuid4().hex}")
+                p.rename(gone)
+                if gone.is_dir():
+                    shutil.rmtree(gone)
+                else:
+                    gone.unlink()
+        return str(snapshot)
 
-    def online_read(
-        self, featurestore_id: str, entity_type_id: str, entity_ids: list
-    ) -> DataFrame:
-        """Point lookup against the materialized online store.
-
-        Recomputes each key's bucket driver-side and filters on the
-        PARTITION column first — the scan opens only the buckets the keys
-        hash to (partition pruning, asserted in tests via ``inputFiles``),
-        then the row filter selects the entities inside them. The layout
-        comes from the registry file and the read uses the recorded schema,
-        so building the frame runs no Spark job.
-        """
+    def _online_layout(self, featurestore_id: str, entity_type_id: str) -> dict:
         try:
-            layout = self._load()["featurestores"][featurestore_id]["entity_types"][entity_type_id]["online"]
+            return self._load()["featurestores"][featurestore_id]["entity_types"][entity_type_id]["online"]
         except KeyError:
             raise ValueError(
                 f"no online store materialized for {featurestore_id}/{entity_type_id}; "
                 "call materialize_online first"
             ) from None
-        ids = [str(e) for e in entity_ids]
-        buckets = sorted({zlib.crc32(e.encode("utf-8")) % layout["buckets"] for e in ids})
-        df = self.spark.read.schema(T.StructType.fromJson(layout["schema"])).parquet(
-            self._online_path(featurestore_id, entity_type_id)
+
+    def _read_snapshot(self, layout: dict, ids: list[str]) -> pa.Table:
+        """The rows of ``ids`` from the recorded snapshot, read driver-side
+        from the bucket directories the keys hash to. Raises
+        ``FileNotFoundError`` if the snapshot is removed under the read."""
+        snapshot = Path(self.base_path) / layout["path"]
+        wanted = {f"bucket={zlib.crc32(e.encode('utf-8')) % layout['buckets']}" for e in ids}
+        files = [
+            str(snapshot / b / f)
+            for b in sorted(wanted.intersection(os.listdir(snapshot)))
+            for f in os.listdir(snapshot / b)
+            if not f.startswith((".", "_"))  # Spark's hidden files: checksums, _SUCCESS
+        ]
+        schema = to_arrow_schema(T.StructType.fromJson(layout["schema"]))
+        dataset = ds.dataset(
+            files,
+            schema=schema,
+            format="parquet",
+            partitioning=ds.partitioning(pa.schema([schema.field("bucket")]), flavor="hive"),
+            partition_base_dir=str(snapshot),
         )
-        return df.where(F.col("bucket").isin(buckets)).where(F.col("entity_id").isin(ids))
+        # One chunk: createDataFrame drops every record batch after an empty
+        # one, and a bucket file holding none of the keys yields one.
+        keys = pc.field("entity_id").isin(pa.array(ids, pa.string()))
+        return dataset.to_table(filter=keys).combine_chunks()
+
+    def online_read(
+        self, featurestore_id: str, entity_type_id: str, entity_ids: list
+    ) -> DataFrame:
+        """Point lookup against the current online snapshot.
+
+        Loads the registry once, recomputes each key's bucket with
+        ``zlib.crc32`` and reads only those ``bucket=`` directories of the
+        recorded snapshot with ``pyarrow.dataset`` on the driver, filtering
+        on ``entity_id``. The rows come back as a local ``DataFrame``
+        (``createDataFrame`` over the Arrow table, with the recorded
+        schema: the columns and types of a fresh ``spark.read`` of the
+        snapshot), so neither building nor collecting it runs a Spark job.
+        If a read overlaps two refreshes, its snapshot may be removed under
+        it; it then reloads the registry once and reads the current one.
+        """
+        ids = [str(e) for e in entity_ids]
+        layout = self._online_layout(featurestore_id, entity_type_id)
+        try:
+            table = self._read_snapshot(layout, ids)
+        except FileNotFoundError:
+            layout = self._online_layout(featurestore_id, entity_type_id)
+            table = self._read_snapshot(layout, ids)
+        return self.spark.createDataFrame(table, T.StructType.fromJson(layout["schema"]))

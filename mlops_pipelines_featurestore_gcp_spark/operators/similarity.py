@@ -209,8 +209,12 @@ def brute_force_topk(
     its semantics is needed and the oracle-hashed values are untouched.
     The ranking shuffle still moves ~partitions × k × |queries| rows.
     Degenerate cosines (zero-norm ⇒ NaN/divide-by-zero) pass through
-    unpruned and cross back as NULL (the ``_batch_topk_prune`` NaN→NULL
-    pin), ranking last under the DESC window exactly as before.
+    unpruned and are pinned to NULL in the JVM on the way out (the
+    ``_batch_topk_prune`` NaN→NULL pin), ranking last under the DESC
+    window exactly as before.
+
+    Corpus rows with a NULL vector are dropped before scoring; every
+    other vector (corpus and queries) must have the queries' length.
     """
     del dim
     qrows = _collect_query_rows(
@@ -238,7 +242,7 @@ def brute_force_topk(
     margin = 2.0 * 10.0 ** (-round_digits) + 2e-9  # + BLAS-error slack
     row_block = 2048  # bounds the (rows × nq) BLAS score block per step
 
-    c = corpus.select(
+    c = corpus.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )
@@ -298,8 +302,10 @@ def brute_force_topk(
                     }
                 )
 
+    # pin degenerates to NULL in the JVM, not by the Arrow hop's NaN→NULL
+    nan_to_null = F.when(F.isnan("cos_sim"), F.lit(None).cast("double")).otherwise(F.col("cos_sim"))
     scored = c.mapInPandas(_score, out_schema).withColumn(
-        "cos_sim", F.round(F.col("cos_sim"), round_digits)
+        "cos_sim", F.round(nan_to_null, round_digits)
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)

@@ -7,10 +7,12 @@ from __future__ import annotations
 import json
 import os
 import random
+import threading
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mlops_pipelines_featurestore_gcp_spark.feature_store import FeatureStore
 from mlops_pipelines_featurestore_gcp_spark.feature_store import store as store_mod
@@ -181,7 +183,7 @@ def test_point_in_time_empty_values_returns_spine(spark):
     assert out.count() == 1
 
 
-def test_online_materialize_and_pruned_read(store, spark):
+def test_online_materialize_and_pruned_read(store, spark, monkeypatch):
     store.create_featurestore("fs")
     store.create_entity_type("fs", "users")
     src = spark.createDataFrame(
@@ -191,23 +193,27 @@ def test_online_materialize_and_pruned_read(store, spark):
     store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time="2024-01-01")
     path = store.materialize_online("fs", "users", buckets=8)
 
+    # the Arrow read opens ONLY files under the buckets the keys hash to
+    opened = []
+    real_dataset = store_mod.ds.dataset
+
+    def recording_dataset(*args, **kwargs):
+        dataset = real_dataset(*args, **kwargs)
+        opened.extend(frag.path for frag in dataset.get_fragments())
+        return dataset
+
+    monkeypatch.setattr(store_mod.ds, "dataset", recording_dataset)
+
     # lookup agrees with the batch latest-read
     got = {r.entity_id: (r.bal, r.seg) for r in store.online_read("fs", "users", [3, 17]).collect()}
     assert got == {"3": ("4.5", "seg0"), "17": ("25.5", "seg2")}
 
-    # the scan opened ONLY the buckets the keys hash to — partition pruning
     import zlib
 
     want = {zlib.crc32(e.encode()) % 8 for e in ("3", "17")}
-    read_files = {
-        r[0]
-        for r in store.online_read("fs", "users", [3, 17])
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    }
-    assert read_files, "lookup read no files"
-    assert all(any(f"bucket={b}/" in f for b in want) for f in read_files)
+    assert opened, "lookup read no files"
+    assert all(f.startswith(path + "/") for f in opened)
+    assert {int(f.split("/bucket=")[1].split("/")[0]) for f in opened} == want
 
     # spark-side crc32 bucket == zlib.crc32 driver-side for every entity
     all_rows = spark.read.parquet(path).select("entity_id", "bucket").collect()
@@ -243,6 +249,11 @@ def test_cleanup_leaves_no_servable_online_store(store, spark):
         store.online_read("fs", "users", [1])
 
 
+def _recorded_online(store):
+    doc = json.loads((Path(store.base_path) / "registry.json").read_text())
+    return doc["featurestores"]["fs"]["entity_types"]["users"]["online"]
+
+
 def _jobs_run(spark, fn):
     """``fn()`` and the number of Spark jobs it started, counted through a
     job group of its own."""
@@ -258,15 +269,16 @@ def _jobs_run(spark, fn):
 
 
 def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark):
-    """``online_read`` (recorded layout and schema, no job to build the
-    frame) equals a fresh ``spark.read.parquet`` with the same bucket and
-    entity filters, across a re-materialize that adds a feature column."""
+    """``online_read`` (driver-side read of the recorded snapshot; no job to
+    build or collect the frame) equals a fresh ``spark.read.parquet`` of
+    that snapshot with the same bucket and entity filters, across a
+    re-materialize that adds a feature column and changes the modulus."""
     import zlib
 
     def oracle(keys, buckets):
         ids = [str(k) for k in keys]
         want = sorted({zlib.crc32(e.encode()) % buckets for e in ids})
-        fresh = spark.read.parquet(os.path.join(store.base_path, "online", "fs", "users"))
+        fresh = spark.read.parquet(os.path.join(store.base_path, _recorded_online(store)["path"]))
         return fresh.where(F.col("bucket").isin(want)).where(F.col("entity_id").isin(ids))
 
     def check(rng, buckets, n_entities):
@@ -275,7 +287,7 @@ def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark):
             got_df, build_jobs = _jobs_run(spark, lambda: store.online_read("fs", "users", keys))
             got, collect_jobs = _jobs_run(spark, got_df.collect)
             want_df = oracle(keys, buckets)
-            assert (build_jobs, collect_jobs) == (0, 1)
+            assert (build_jobs, collect_jobs) == (0, 0)
             assert got_df.schema == want_df.schema
             assert sorted(map(tuple, got)) == sorted(map(tuple, want_df.collect()))
             assert {r.entity_id for r in got} == {str(k) for k in keys if k in range(n_entities)}
@@ -307,6 +319,134 @@ def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark):
 
     _, cleanup_jobs = _jobs_run(spark, lambda: store.cleanup_featurestore("fs"))
     assert cleanup_jobs == 0
+
+
+def test_online_read_during_refresh_serves_one_whole_snapshot(store, spark):
+    """Reads racing a thread that re-materializes, alternating between two
+    value sets: every read returns every requested present key, all with
+    the values of one snapshot, and raises nothing."""
+    n, refreshes = 60, 12
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    for tag, when in (("a", "2024-01-01"), ("b", "2024-02-01")):
+        src = spark.range(n).select(
+            F.col("id").alias("uid"),
+            F.concat(F.lit(tag), F.col("id").cast("string")).alias("f1"),
+            F.concat(F.lit(tag + "-"), F.col("id").cast("string")).alias("f2"),
+        )
+        store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time=when)
+    store.materialize_online("fs", "users", buckets=8)
+
+    errors = []
+
+    def refresh():
+        try:
+            for i in range(refreshes):
+                # as of mid-January: value set "a"; latest: value set "b"
+                store.materialize_online("fs", "users", buckets=8, at="2024-01-15" if i % 2 == 0 else None)
+        except BaseException as e:  # surfaced by the main thread
+            errors.append(e)
+
+    worker = threading.Thread(target=refresh)
+    worker.start()
+    rng, reads, served = random.Random(11), 0, set()
+    try:
+        while worker.is_alive():
+            keys = rng.sample(range(n + 10), rng.randint(1, 16))
+            rows = store.online_read("fs", "users", keys).collect()
+            reads += 1
+            assert sorted(r.entity_id for r in rows) == sorted(str(k) for k in keys if k < n)
+            tags = {r.f1[0] for r in rows}
+            assert len(tags) <= 1, tags
+            assert all((r.f1, r.f2) == (t + r.entity_id, f"{t}-{r.entity_id}") for t in tags for r in rows)
+            served |= tags
+    finally:
+        worker.join(timeout=600)
+    assert not worker.is_alive()
+    assert not errors, errors
+    assert reads > refreshes and served == {"a", "b"}
+    # only the current snapshot and the one before it are left
+    root = Path(store.base_path) / "online" / "fs" / "users"
+    assert sorted(os.listdir(root)) == [f"v{refreshes}", f"v{refreshes + 1}"]
+
+
+def test_online_read_reloads_registry_once_when_its_snapshot_is_gone(store, spark, monkeypatch):
+    """A lookup loads the registry once; one whose registry read predates
+    two refreshes finds its snapshot removed, reloads once and serves the
+    current snapshot."""
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    for bal, when in ((10.0, "2024-01-01"), (99.0, "2024-02-01")):
+        src = spark.createDataFrame([(1, bal)], "uid long, bal double")
+        store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time=when)
+    store.materialize_online("fs", "users", buckets=4, at="2024-01-15")
+    stale = store._load()
+    store.materialize_online("fs", "users", buckets=4)
+    store.materialize_online("fs", "users", buckets=4)
+    assert not (Path(store.base_path) / "online" / "fs" / "users" / "v1").exists()
+
+    real_load, loads, stale_docs = store._load, [], [stale]
+
+    def counting_load():
+        loads.append(1)
+        return stale_docs.pop() if stale_docs else real_load()
+
+    monkeypatch.setattr(store, "_load", counting_load)
+    assert [r.bal for r in store.online_read("fs", "users", [1]).collect()] == ["99.0"]
+    assert len(loads) == 2
+    loads.clear()
+    assert [r.bal for r in store.online_read("fs", "users", [1]).collect()] == ["99.0"]
+    assert len(loads) == 1
+
+
+def test_online_crash_before_flip_keeps_old_snapshot(store, spark, monkeypatch):
+    """``os.replace`` fails after the new snapshot is written: the registry
+    still points at the old snapshot, reads serve the old rows, and the
+    next refresh removes the orphan directory."""
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    src1 = spark.createDataFrame([(1, 10.0), (2, 20.0)], "uid long, bal double")
+    store.import_feature_values("fs", "users", src1, entity_id_field="uid", feature_time="2024-01-01")
+    store.materialize_online("fs", "users", buckets=4)
+    src2 = spark.createDataFrame([(1, 99.0)], "uid long, bal double")
+    store.import_feature_values("fs", "users", src2, entity_id_field="uid", feature_time="2024-02-01")
+
+    def failing_replace(src, dst):
+        raise OSError("simulated crash")
+
+    monkeypatch.setattr(store_mod.os, "replace", failing_replace)
+    with pytest.raises(OSError, match="simulated crash"):
+        store.materialize_online("fs", "users", buckets=4)
+    monkeypatch.undo()
+
+    root = Path(store.base_path) / "online" / "fs" / "users"
+    assert sorted(os.listdir(root)) == ["v1", "v2"]
+    assert _recorded_online(store)["path"] == "online/fs/users/v1"
+    got = {r.entity_id: r.bal for r in store.online_read("fs", "users", [1, 2]).collect()}
+    assert got == {"1": "10.0", "2": "20.0"}
+
+    store.materialize_online("fs", "users", buckets=4)
+    assert sorted(os.listdir(root)) == ["v1", "v3"]
+    got = {r.entity_id: r.bal for r in store.online_read("fs", "users", [1, 2]).collect()}
+    assert got == {"1": "99.0", "2": "20.0"}
+
+
+def test_online_read_empty_and_absent_keys(store, spark):
+    """No keys, and only absent keys, each give an empty frame with the
+    recorded columns, and run no Spark job."""
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    src = spark.createDataFrame([(1, 10.0), (2, 20.0)], "uid long, bal double")
+    store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time="2024-01-01")
+    store.materialize_online("fs", "users", buckets=4)
+    recorded = T.StructType.fromJson(_recorded_online(store)["schema"])
+    for keys in ([], ["absent", -1, 3]):
+        df, build_jobs = _jobs_run(spark, lambda: store.online_read("fs", "users", keys))
+        rows, collect_jobs = _jobs_run(spark, df.collect)
+        assert rows == []
+        assert (build_jobs, collect_jobs) == (0, 0)
+        assert df.columns == ["entity_id", "bal", "bucket"]
+        assert df.schema == recorded
 
 
 def test_asof_forward_direction_and_tolerance(spark):

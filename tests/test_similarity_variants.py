@@ -616,3 +616,22 @@ def test_brute_force_small_blocks_exclude_self_and_match_naive(spark):
         )[:10]
         for rnk, (sim, c) in enumerate(scored, start=1):
             assert got[(q, rnk)] == (c, sim), (q, rnk)
+
+
+def test_brute_force_pins_degenerate_cosines_to_null_and_drops_null_vectors(spark):
+    """A zero-norm corpus vector scores a degenerate cosine: it comes back
+    NULL and ranks last, pinned by a JVM ``isnan`` guard between the
+    kernel and the ranking window rather than left to the Arrow hop. A
+    corpus row with a NULL vector is dropped instead of failing the
+    kernel."""
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.6, 0.8]), (3, None)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.where(F.col("vec_id") == 0)
+    out = similarity.brute_force_topk(corpus, queries, k=5)
+    got = [(r.neighbor_id, r.cos_sim, r.rnk) for r in out.orderBy("rnk").collect()]
+    assert got == [(2, 0.6, 1), (1, None, 2)]
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "isnan(cos_sim" in plan
+    assert plan.index("isnan(cos_sim") < plan.index("MapInPandas")

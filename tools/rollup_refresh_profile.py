@@ -4,8 +4,9 @@ rollup-refresh win at a 10× batch fixture — bytes-read/jobs per stateful
 refresh halved vs the pre-barrier code — or revert it").
 
 Builds a 10× copy of the sf0.1 events table under /tmp (the documented
-multi-GB fixture exemption, rebuilt on demand), seeds a store with state,
-then refreshes a 10×-sized batch twice:
+multi-GB fixture exemption, rebuilt on demand), seeds a store with state
+under ``/tmp/rollup10x_store_*`` (removed when the script exits), then
+refreshes a 10×-sized batch twice:
 
 - ``barrier``   — the shipped ``ContinuousAggregate.refresh`` (r13: the
   incoming partials are lazily checkpointed, so the touched-pgroup probe
@@ -20,6 +21,7 @@ REST API.  Usage: python tools/rollup_refresh_profile.py [sf_dir]
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
@@ -106,6 +108,7 @@ def main() -> None:
     def fresh_store(tag: str) -> ContinuousAggregate:
         path = f"/tmp/rollup10x_store_{tag}"
         shutil.rmtree(path, ignore_errors=True)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
         return ContinuousAggregate(
             path, time_col="t", value_col="v", keys=["event_type"],
             bucket_width=WIDTH,
