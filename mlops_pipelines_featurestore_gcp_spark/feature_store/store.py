@@ -15,12 +15,16 @@ Mirrors the signatures of the reference's helper layer (SURVEY.md §2.9):
   Values are stored and read as STRING like the reference (all four
   features are ``Feature.ValueType.STRING``, notebook cell 22); a
   feature's declared ``value_type`` is recorded in the registry only.
-- **Reads** — latest / point-in-time via the window pattern (J2); spine
-  joins via the as-of operator.
+- **Reads** — latest-wins is one grouped ``max_by`` on ``(feature_time,
+  value)`` (J2): ``latest_values`` for long rows, ``latest_wide`` for one
+  wide row per key; no window sort. Spine joins via the as-of operator.
 - **Online store** (FS7) — immutable snapshots of the bucketed latest row
-  per entity, ``{base}/online/{fs}/{entity}/v{n}``. ``materialize_online``
-  writes a new snapshot, then one registry replace makes it current, then
-  it removes all but the current and the previous snapshot.
+  per entity, ``{base}/online/{fs}/{entity}/v{n}``, bucketed with
+  ``streaming.upsert.bucket_col`` (the upsert tables' ``crc32`` layout).
+  ``materialize_online`` writes a new snapshot in 4 Spark jobs (one
+  aggregation inside the shuffle that writes one file per bucket), then one
+  registry replace makes it current, then it removes all but the current
+  and the previous snapshot.
   ``online_read`` reads the current snapshot's key buckets on the driver
   with ``pyarrow.dataset`` and returns a local ``DataFrame``: a lookup runs
   no Spark job and never sees a half-written store.
@@ -37,19 +41,19 @@ import os
 import shutil
 import tempfile
 import uuid
-import zlib
 from dataclasses import dataclass
 from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
+from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import bucket_col, bucket_of, latest_by
 
 VALUES_SCHEMA = "entity_id string, feature_name string, value string, feature_time timestamp"
 REGISTRY_FILE = "registry.json"
@@ -60,22 +64,32 @@ REGISTRY_FILE = "registry.json"
 # ---------------------------------------------------------------------------
 
 
-def latest_values(values: DataFrame, *, at=None, tie_break: str = "value") -> DataFrame:
-    """Latest value per (entity_id, feature_name), optionally as of ``at``.
+def _newest() -> Column:
+    """The latest-wins order: later ``feature_time``, then the larger value
+    for simultaneous writes (NULL loses both). A function, because a
+    module-level ``Column`` needs a session at import."""
+    return F.struct("feature_time", "value")
 
-    The J2 window pattern: one shuffle on the entity/feature key. ``at=None``
-    means "now" (no upper bound). ``tie_break`` makes simultaneous writes
-    deterministic (largest wins).
-    """
+
+def latest_values(values: DataFrame, *, at=None) -> DataFrame:
+    """Latest value per (entity_id, feature_name), optionally as of ``at``
+    (``None`` means now): the J2 read as one grouped ``max_by``, with
+    ``values``' columns in their order."""
     v = values if at is None else values.where(F.col("feature_time") <= F.lit(at).cast("timestamp"))
-    w = Window.partitionBy("entity_id", "feature_name").orderBy(
-        F.col("feature_time").desc(), F.col(tie_break).desc()
-    )
-    return (
-        v.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return latest_by(v, ["entity_id", "feature_name"], _newest())
+
+
+def feature_names(values: DataFrame) -> list[str]:
+    """The distinct feature names of a long values frame, sorted on the
+    driver (one small job; the pivot columns of every wide read)."""
+    return sorted(r.feature_name for r in values.select("feature_name").distinct().collect())
+
+
+def latest_wide(values: DataFrame, keys: list[str], names: list[str]) -> DataFrame:
+    """One row per ``keys`` with a column per name in ``names``: each
+    feature's latest value (``latest_values``' order), as one pivoted
+    ``max_by`` aggregation over the long rows."""
+    return values.groupBy(*keys).pivot("feature_name", names).agg(F.max_by("value", _newest()))
 
 
 def point_in_time_values(values: DataFrame, spine: DataFrame, *, spine_key: str, spine_time: str) -> DataFrame:
@@ -92,13 +106,13 @@ def point_in_time_values(values: DataFrame, spine: DataFrame, *, spine_key: str,
     Spine rows are assumed distinct (training spines are); exact duplicates
     would collapse in the pivot's group-by.
     """
-    feature_names = sorted(r.feature_name for r in values.select("feature_name").distinct().collect())
-    if not feature_names:
+    names = feature_names(values)
+    if not names:
         # An empty values table means "no features to attach" — return the
         # spine unchanged (exploding an empty name array would drop every
         # spine row instead).
         return spine
-    spine_x = spine.withColumn("feature_name", F.explode(F.array(*[F.lit(f) for f in feature_names])))
+    spine_x = spine.withColumn("feature_name", F.explode(F.array(*[F.lit(f) for f in names])))
     fv = values.select(
         F.col("entity_id").alias(spine_key),
         "feature_name",
@@ -113,7 +127,7 @@ def point_in_time_values(values: DataFrame, spine: DataFrame, *, spine_key: str,
         right_time="feature_time",
         tie_break="value",
     )
-    return joined.groupBy(*spine.columns).pivot("feature_name", feature_names).agg(F.first("value"))
+    return joined.groupBy(*spine.columns).pivot("feature_name", names).agg(F.first("value"))
 
 
 # ---------------------------------------------------------------------------
@@ -278,12 +292,14 @@ class FeatureStore:
         )
         # One pass: the row count is observed DURING the write action (the
         # r1 version ran a separate count() first — two full source scans).
+        # Observed after the shuffle: on an empty import, adaptive execution
+        # drops every node above an empty shuffle, and with it the metrics.
         from pyspark.sql import Observation
 
         obs = Observation("import_feature_values")
         (
-            long_df.observe(obs, F.count(F.lit(1)).alias("n"))
-            .repartition(worker_count)
+            long_df.repartition(worker_count)
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .write.mode("append")
             .partitionBy("feature_date")
             .parquet(self._values_path(featurestore_id, entity_type_id))
@@ -295,10 +311,8 @@ class FeatureStore:
             self._values_path(featurestore_id, entity_type_id)
         )
 
-    def read_latest(self, featurestore_id: str, entity_type_id: str, *, at=None, entity_ids=None) -> DataFrame:
-        """FS7/J2: wide latest-row per entity (optionally as of ``at`` /
-        restricted to ``entity_ids`` — the ``FeatureSelector(IdMatcher(...))``
-        equivalent, notebook cell 7).
+    def _log(self, featurestore_id: str, entity_type_id: str, *, at=None, entity_ids=None) -> DataFrame:
+        """The values log cut off at ``at`` and restricted to ``entity_ids``.
 
         A point-in-time read also bounds the ``feature_date`` PARTITION
         column, so the scan prunes every partition after the cutoff before
@@ -307,11 +321,19 @@ class FeatureStore:
         """
         v = self.values(featurestore_id, entity_type_id)
         if at is not None:
-            v = v.where(F.col("feature_date") <= F.to_date(F.lit(at).cast("timestamp")))
+            cutoff = F.lit(at).cast("timestamp")
+            v = v.where(F.col("feature_date") <= F.to_date(cutoff)).where(F.col("feature_time") <= cutoff)
         if entity_ids is not None:
             v = v.where(F.col("entity_id").isin([str(e) for e in entity_ids]))
-        latest = latest_values(v, at=at)
-        return latest.groupBy("entity_id").pivot("feature_name").agg(F.first("value"))
+        return v
+
+    def read_latest(self, featurestore_id: str, entity_type_id: str, *, at=None, entity_ids=None) -> DataFrame:
+        """FS7/J2: wide latest-row per entity (optionally as of ``at`` /
+        restricted to ``entity_ids`` — the ``FeatureSelector(IdMatcher(...))``
+        equivalent, notebook cell 7): ``entity_id`` and one column per
+        feature name present, sorted."""
+        v = self._log(featurestore_id, entity_type_id, at=at, entity_ids=entity_ids)
+        return latest_wide(v, ["entity_id"], feature_names(v))
 
     def point_in_time_join(
         self, featurestore_id: str, entity_type_id: str, spine: DataFrame, *, spine_key: str, spine_time: str
@@ -324,13 +346,6 @@ class FeatureStore:
 
     # -- online store ------------------------------------------------------
 
-    @staticmethod
-    def _bucket_col(buckets: int):
-        # crc32 is stable across Spark versions and partitionings (unlike
-        # rand()) so the same entity always lands in the same bucket file,
-        # and zlib.crc32 reproduces it driver-side for lookup pruning.
-        return F.pmod(F.crc32(F.col("entity_id").cast("string")), F.lit(buckets)).cast("int")
-
     def materialize_online(
         self, featurestore_id: str, entity_type_id: str, *, buckets: int = 16, at=None
     ) -> str:
@@ -342,24 +357,29 @@ class FeatureStore:
         (``feature_store_helper.py`` online node knob; notebook cell 7
         reads). Here a snapshot is plain parquet at
         ``online/{fs}/{entity}/v{n}`` with ``bucket = crc32(entity_id) %
-        buckets`` as a PARTITION column, so a lookup opens only the buckets
+        buckets`` (``streaming.upsert.bucket_col``, the upsert tables'
+        layout) as a PARTITION column, so a lookup opens only the buckets
         its keys hash to; ``buckets`` plays the ``online_node_count`` role.
         Each refresh is a full rebuild (the log is the source of truth)
-        into a new directory, never over one that readers scan. One
-        registry replace then makes it current, so a reader sees the old or
-        the new snapshot whole. Every other entry is then renamed away and
-        removed, except the snapshot just replaced, which a reader may still
-        be scanning; that also sweeps a snapshot whose refresh crashed
-        before the replace. For per-batch incremental maintenance see
-        ``streaming.upsert.upsert_batch`` (it buckets on Murmur3 ``hash``,
-        not ``crc32``, so its tables are not this layout).
+        into a new directory, never over one that readers scan, in 4 Spark
+        jobs: two collect the feature names from the log; the write
+        shuffles the bucketed log rows once and runs the latest-wins pivot
+        (``latest_wide`` on ``(bucket, entity_id)``) inside that
+        partitioning, one file per bucket. One registry replace then makes
+        the snapshot current, so a reader sees the old or the new snapshot
+        whole. Every other entry is then renamed away and removed, except
+        the snapshot just replaced, which a reader may still be scanning;
+        that also sweeps a snapshot whose refresh crashed before the
+        replace.
         """
-        wide = self.read_latest(featurestore_id, entity_type_id, at=at)
-        out = wide.withColumn("bucket", self._bucket_col(buckets))
+        log = self._log(featurestore_id, entity_type_id, at=at)
+        names = feature_names(log)
+        bucketed = log.withColumn("bucket", bucket_col("entity_id", buckets)).repartition("bucket")
+        out = latest_wide(bucketed, ["bucket", "entity_id"], names).select("entity_id", *names, "bucket")
         root = Path(self.base_path) / "online" / featurestore_id / entity_type_id
         versions = [int(p.name[1:]) for p in root.glob("v*") if p.name[1:].isdigit()]
         snapshot = root / f"v{max(versions, default=0) + 1}"
-        out.repartition("bucket").write.partitionBy("bucket").parquet(str(snapshot))
+        out.write.partitionBy("bucket").parquet(str(snapshot))
         # Record the modulus (sparse data writes fewer bucket dirs than it, so
         # the listing cannot recover it) and the schema the files read back
         # as: every field nullable, like a fresh file read. An unregistered
@@ -399,7 +419,7 @@ class FeatureStore:
         from the bucket directories the keys hash to. Raises
         ``FileNotFoundError`` if the snapshot is removed under the read."""
         snapshot = Path(self.base_path) / layout["path"]
-        wanted = {f"bucket={zlib.crc32(e.encode('utf-8')) % layout['buckets']}" for e in ids}
+        wanted = {f"bucket={bucket_of(e, layout['buckets'])}" for e in ids}
         files = [
             str(snapshot / b / f)
             for b in sorted(wanted.intersection(os.listdir(snapshot)))
@@ -425,7 +445,7 @@ class FeatureStore:
         """Point lookup against the current online snapshot.
 
         Loads the registry once, recomputes each key's bucket with
-        ``zlib.crc32`` and reads only those ``bucket=`` directories of the
+        ``bucket_of`` and reads only those ``bucket=`` directories of the
         recorded snapshot with ``pyarrow.dataset`` on the driver, filtering
         on ``entity_id``. The rows come back as a local ``DataFrame``
         (``createDataFrame`` over the Arrow table, with the recorded

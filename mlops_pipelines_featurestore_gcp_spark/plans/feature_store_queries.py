@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mlops_pipelines_featurestore_gcp_spark.feature_store.store import latest_values
+from mlops_pipelines_featurestore_gcp_spark.feature_store.store import latest_values, latest_wide
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
 from mlops_pipelines_featurestore_gcp_spark.plans.registry import register
 from mlops_pipelines_featurestore_gcp_spark.sources.catalog import load_table
@@ -38,9 +38,9 @@ _EVENT_VALUES_SQL = """
 
 
 # NOTE: the r1 ``f01_latest_per_entity`` query (bare latest-per-(entity,
-# feature) long read) was folded into f05, whose first stage IS that read —
-# registry slots are capped at 50 by the driver and f05 exercises the same
-# ``latest_values`` path plus the pivot.
+# feature) long read) was folded into f02 and f05 — registry slots are
+# capped at 50 by the driver, and f02 exercises that read's latest-wins
+# ``max_by`` (as of a cutoff) and f05 the same ``max_by`` pivoted.
 
 
 @register(
@@ -153,14 +153,10 @@ def f04_feature_import_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     defer=True,
 )
 def f05_latest_wide_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FS7 wide read: latest long values pivoted to one row per entity
-    (read_latest's shape). Pivot values are pinned so the plan is static."""
-    latest = latest_values(_event_values(spark, sf_dir))
-    return (
-        latest.groupBy("entity_id")
-        .pivot("feature_name", ["click", "error", "purchase", "signup", "view"])
-        .agg(F.first("value"))
-    )
+    """FS7 wide read: latest long values pivoted to one row per entity,
+    through read_latest's builder (``latest_wide``). Pivot values are pinned
+    so the plan is static."""
+    return latest_wide(_event_values(spark, sf_dir), ["entity_id"], ["click", "error", "purchase", "signup", "view"])
 
 
 def _psi_sql(src: str, xcol: str, ref_pred: str, cur_pred: str, feature: str) -> str:

@@ -3,13 +3,15 @@
 Plain parquet has no MERGE: the naive upsert reads the WHOLE table, unions
 the batch, dedups, and rewrites everything — a full-table write per batch,
 unusable at 100 TB. This module stores the table partitioned by a stable
-hash bucket of the key (``bucket=hash(key) % n``), so an incoming batch
-only touches the buckets its keys land in:
+hash bucket of the key (``bucket = crc32(key) % n``, ``bucket_col``), so an
+incoming batch only touches the buckets its keys land in:
 
   1. bucket the incoming batch (narrow projection),
   2. read ONLY those buckets of the existing table (partition pruning —
      the other ``n - |touched|`` buckets are never opened),
-  3. latest-wins per key inside the union (version column, then tie-break),
+  3. latest-wins per key inside the union (``latest_by`` on the version
+     column), grouped after the one shuffle that routes each bucket to one
+     writer,
   4. dynamic-partition-overwrite the touched buckets atomically.
 
 Per-batch cost is proportional to |touched buckets| ≈ batch key spread,
@@ -18,6 +20,9 @@ contents and overwrites the same partitions — idempotent, the same
 exactly-once construction as ``log_loop``'s ``_batch`` sink (reference's
 at-least-once append path: ``logger/main.py:107-150`` has no such guard).
 
+``bucket_col``/``bucket_of`` and ``latest_by`` are also the feature
+store's online layout and latest-wins read (``feature_store/store.py``).
+
 Use standalone for batch CDC-style merges, or as the ``foreachBatch``
 body of a streaming write (``upsert_sink``).
 """
@@ -25,17 +30,34 @@ body of a streaming write (``upsert_sink``).
 from __future__ import annotations
 
 import os
+import zlib
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _BUCKET = "__kbucket"
 
 
-def _bucketed(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
-    # non-negative stable hash: Murmur3 is fixed across Spark versions and
-    # machines, so bucket layout survives restarts and cluster moves
-    return df.withColumn(_BUCKET, F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
+def bucket_col(key: str, n_buckets: int) -> Column:
+    """``crc32`` of the key's string form, mod ``n_buckets``: stable across
+    Spark versions, machines and partitionings, and reproduced on the
+    driver by ``bucket_of``."""
+    return F.pmod(F.crc32(F.col(key).cast("string")), F.lit(n_buckets)).cast("int")
+
+
+def bucket_of(key, n_buckets: int) -> int:
+    """Driver twin of ``bucket_col`` for a string or integer key."""
+    return zlib.crc32(str(key).encode("utf-8")) % n_buckets
+
+
+def latest_by(df: DataFrame, keys: list[str], order) -> DataFrame:
+    """One row per ``keys``: the row with the largest ``order`` (a column or
+    name; NULL sorts lowest, a struct compares field by field), with
+    ``df``'s columns in ``df``'s order. Which of several rows tying on
+    ``order`` wins is unspecified. One grouped ``max_by``: a hash shuffle on
+    ``keys`` unless ``df`` is already partitioned on a subset of them."""
+    winner = F.max_by(F.struct(*df.columns), F.struct(order)).alias("__latest")
+    return df.groupBy(*keys).agg(winner).select("__latest.*")
 
 
 def upsert_batch(
@@ -52,7 +74,7 @@ def upsert_batch(
     carries an older version — late/replayed data cannot regress a key).
     """
     spark = batch.sparkSession
-    incoming = _bucketed(batch, key, n_buckets)
+    incoming = batch.withColumn(_BUCKET, bucket_col(key, n_buckets))
     touched = [r[_BUCKET] for r in incoming.select(_BUCKET).distinct().collect()]
     if not touched:
         return
@@ -73,24 +95,20 @@ def upsert_batch(
         merged = existing.unionByName(incoming, allowMissingColumns=True)
     else:
         merged = incoming
-    w = Window.partitionBy(key).orderBy(F.col(version_col).desc())
-    latest = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    # One shuffle routes each bucket to one partition; the latest-wins
+    # aggregate runs inside it and the write keeps that layout, so every
+    # rewritten dir is a single file (self-compacting — without this every
+    # merge leaves one shard per contributing partition).
+    latest = latest_by(merged.repartition(_BUCKET), [_BUCKET, key], version_col)
     # The merge plan reads the same path it overwrites: eagerly materialize
     # first, or a task retry mid-replacement would re-read partially
-    # rewritten buckets (same barrier as rollup._write_state).
+    # rewritten buckets (same barrier as rollup._write_state). The
+    # checkpoint keeps the bucket partitioning.
     latest = latest.localCheckpoint(eager=True)
     # dynamic overwrite replaces exactly the touched bucket partitions;
-    # untouched buckets' files are never rewritten (or read). One shuffle
-    # output per bucket keeps each rewritten dir at a single file
-    # (self-compacting — without this every merge leaves one shard per
-    # contributing shuffle partition and small files accumulate)
+    # untouched buckets' files are never rewritten (or read)
     (
-        latest.repartition(F.col(_BUCKET))
-        .write.mode("overwrite")
+        latest.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(_BUCKET)
         .parquet(table_path)

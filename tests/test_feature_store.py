@@ -8,16 +8,21 @@ import json
 import os
 import random
 import threading
+from collections import Counter
 from pathlib import Path
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mlops_pipelines_featurestore_gcp_spark.feature_store import FeatureStore
 from mlops_pipelines_featurestore_gcp_spark.feature_store import store as store_mod
-from mlops_pipelines_featurestore_gcp_spark.feature_store.store import point_in_time_values
+from mlops_pipelines_featurestore_gcp_spark.feature_store.store import latest_values, point_in_time_values
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
+from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import bucket_of
 
 
 @pytest.fixture
@@ -500,3 +505,158 @@ def test_asof_timestamp_tolerance_interval(spark):
         ).collect()
     }
     assert got == {1: 1.0, 3: None}  # March read is 60 days stale → dropped
+
+
+def test_empty_import_writes_nothing_and_store_keeps_working(store, spark):
+    """An import with no rows (a cycle with no new ratings) returns 0 and
+    writes no rows, before and after real imports."""
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    src = spark.createDataFrame([(1, 10.0), (2, 20.0)], "uid long, bal double")
+    empty = src.where("uid < 0")
+    assert store.import_feature_values("fs", "users", empty, entity_id_field="uid", feature_time="2024-01-01") == 0
+    assert store.values("fs", "users").count() == 0
+    assert store.read_latest("fs", "users").collect() == []
+    assert store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time="2024-01-01") == 2
+    assert store.import_feature_values("fs", "users", empty, entity_id_field="uid", feature_time="2024-02-01") == 0
+    assert store.values("fs", "users").count() == 2
+    latest = {r.entity_id: r.bal for r in store.read_latest("fs", "users").collect()}
+    assert latest == {"1": "10.0", "2": "20.0"}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_latest_reads_are_one_aggregation_and_refresh_runs_four_jobs(store, spark, monkeypatch):
+    """``read_latest`` and the online refresh plan no window; the refresh's
+    only shuffle is the one that writes a file per bucket, and a refresh
+    runs at most 4 jobs (feature names, then the write)."""
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    for when, scale in (("2024-01-01", 1.0), ("2024-02-01", 2.0)):
+        src = spark.range(200).select(
+            F.col("id").alias("uid"), (F.col("id") * scale).alias("bal"), (F.col("id") % 5).alias("tier")
+        )
+        store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time=when)
+    assert "Window" not in _plan(store.read_latest("fs", "users", at="2024-01-15"))
+
+    built = []
+    real_wide = store_mod.latest_wide
+
+    def recording_wide(*args):
+        built.append(real_wide(*args))
+        return built[-1]
+
+    monkeypatch.setattr(store_mod, "latest_wide", recording_wide)
+    store.materialize_online("fs", "users", buckets=8)
+    _, jobs = _jobs_run(spark, lambda: store.materialize_online("fs", "users", buckets=8))
+    assert jobs <= 4
+    plan = _plan(built[-1])
+    assert "Window" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    snapshot = os.path.join(store.base_path, _recorded_online(store)["path"])
+    assert all(len([f for f in os.listdir(os.path.join(snapshot, b)) if f.endswith(".parquet")]) == 1
+               for b in os.listdir(snapshot) if b.startswith("bucket="))
+
+
+def test_upsert_and_online_buckets_are_one_function(store, spark, tmp_path):
+    """For random keys the ``__kbucket=`` directory ``upsert_batch`` writes,
+    the driver-side ``bucket_of`` and the online snapshot's ``bucket=`` all
+    agree."""
+    from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import upsert_batch
+
+    rng = random.Random(5)
+    n = 7
+    for kind, keys in (
+        ("long", rng.sample(range(-(10**12), 10**12), 60)),
+        ("string", ["".join(rng.choices("abcxyz019-é", k=rng.randint(1, 9))) for _ in range(60)]),
+    ):
+        keys = list(dict.fromkeys(keys))
+        rows = [(k, 1.0) for k in keys]
+        table = str(tmp_path / f"upsert_{kind}")
+        upsert_batch(table, spark.createDataFrame(rows, f"k {kind}, v double"), key="k", version_col="v", n_buckets=n)
+        upserted = {r.k: r["__kbucket"] for r in spark.read.parquet(table).collect()}
+        assert upserted == {k: bucket_of(k, n) for k in keys}
+
+        fs = FeatureStore(spark, str(tmp_path / f"fs_{kind}"))
+        fs.import_feature_values("fs", "users", spark.createDataFrame(rows, f"uid {kind}, v double"),
+                                 entity_id_field="uid", feature_time="2024-01-01")
+        snapshot = fs.materialize_online("fs", "users", buckets=n)
+        online = {r.entity_id: r.bucket for r in spark.read.parquet(snapshot).collect()}
+        assert online == {str(k): upserted[k] for k in keys}
+
+
+def _window_latest(values, at=None):
+    """The row_number window ``latest_values`` replaced, kept as its oracle:
+    later ``feature_time`` first, then the larger value, NULLs last."""
+    v = values if at is None else values.where(F.col("feature_time") <= F.lit(at).cast("timestamp"))
+    w = Window.partitionBy("entity_id", "feature_name").orderBy(F.col("feature_time").desc(), F.col("value").desc())
+    return v.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
+
+
+def _window_read_latest(values, at=None):
+    """The window-then-``first`` pivot ``read_latest`` replaced."""
+    return _window_latest(values, at).groupBy("entity_id").pivot("feature_name").agg(F.first("value"))
+
+
+_DAYS = [None, "2024-01-01 00:00:00", "2024-01-01 00:00:00", "2024-01-02 06:00:00", "2024-01-03 00:00:00"]
+_FEATURES = ["f0", "f1", "f2"]
+_wide_rows = st.lists(
+    st.tuples(
+        st.integers(0, 5),
+        st.sampled_from(_DAYS),
+        *[st.sampled_from([None, "a", "b", "c"]) for _ in _FEATURES],
+    ),
+    min_size=1,
+    max_size=12,
+)
+# one import: its rows (some repeated), the features it carries, and how
+# often it is imported (twice = a replayed import)
+_imports = st.lists(
+    st.tuples(_wide_rows, st.lists(st.sampled_from(_FEATURES), min_size=1, max_size=3, unique=True), st.integers(1, 2)),
+    min_size=1,
+    max_size=3,
+)
+
+
+def _rows(df):
+    return Counter(map(tuple, df.collect()))
+
+
+@given(
+    imports=_imports,
+    at=st.sampled_from([None, "2023-12-31", "2024-01-01 00:00:00", "2024-01-02 12:00:00", "2024-01-05"]),
+    buckets=st.sampled_from([1, 3, 16]),
+    ids=st.one_of(st.none(), st.lists(st.integers(0, 7), max_size=4)),
+)
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_latest_reads_equal_the_window_oracle(spark, tmp_path_factory, imports, at, buckets, ids):
+    """Over random long logs (feature-time ties, NULL times and values,
+    duplicate rows, replayed and late imports, a random cutoff),
+    ``latest_values``, ``read_latest`` and ``materialize_online`` +
+    ``online_read`` equal the window implementation they replaced."""
+    store = FeatureStore(spark, str(tmp_path_factory.mktemp("eq") / "fs"))
+    for rows, feats, times in imports:
+        src = spark.createDataFrame(
+            rows + rows[: len(rows) // 2], "uid long, t string, f0 string, f1 string, f2 string"
+        ).withColumn("t", F.col("t").cast("timestamp"))
+        for _ in range(times):
+            store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_fields=feats, feature_time="t")
+    values = store.values("fs", "users")
+
+    got, want = latest_values(values, at=at), _window_latest(values, at)
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want)
+
+    wanted = values if ids is None else values.where(F.col("entity_id").isin([str(e) for e in ids]))
+    want_wide = _window_read_latest(wanted, at)
+    got_wide = store.read_latest("fs", "users", at=at, entity_ids=ids)
+    assert got_wide.columns == want_wide.columns
+    assert _rows(got_wide) == _rows(want_wide)
+
+    store.materialize_online("fs", "users", buckets=buckets, at=at)
+    served = store.online_read("fs", "users", list(range(8)))
+    want_online = _window_read_latest(values, at)
+    assert served.columns == want_online.columns + ["bucket"]
+    assert _rows(served) == Counter(tuple(r) + (bucket_of(r.entity_id, buckets),) for r in want_online.collect())

@@ -44,46 +44,3 @@ def test_running_totals_accumulate_across_batches(spark, tmp_path):
     assert last[2] == (1, 7.0)
     assert last[3] == (1, 2.0)
 
-
-def test_transform_with_state_accumulates_and_windows(spark, tmp_path):
-    import pytest
-
-    from mlops_pipelines_featurestore_gcp_spark.streaming.stateful_v2 import (
-        ROCKSDB_PROVIDER,
-        online_feature_stream,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip("transformWithState needs google.protobuf in the Python workers")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    src = tmp_path / "ev2"
-    src.mkdir()
-    (src / "b0.json").write_text(
-        "\n".join(json.dumps({"user_id": u, "value": float(v)}) for u, v in [(1, 10), (1, 5), (2, 7)])
-    )
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps({"user_id": u, "value": float(v)}) for u, v in [(1, 1), (3, 2)])
-    )
-    stream = (
-        spark.readStream.schema("user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    out = online_feature_stream(stream, recent_n=2)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("feat_v2")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    last = {}
-    for r in spark.sql("SELECT * FROM feat_v2").collect():
-        last[r.user_id] = (r.n_events, r.total_value, r.recent_mean)
-    # user 1: batches may arrive in either file order; lifetime totals are
-    # order-independent, the bounded window keeps the LAST two values seen
-    assert last[1][0] == 3 and last[1][1] == 16.0
-    assert last[2] == (1, 7.0, 7.0)
-    assert last[3] == (1, 2.0, 2.0)

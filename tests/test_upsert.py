@@ -6,6 +6,9 @@ from __future__ import annotations
 import json
 import os
 
+import pandas as pd
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import (
@@ -128,3 +131,27 @@ def test_upsert_buckets_self_compact(spark, tmp_path):
         if d.name.startswith("__kbucket="):
             files = [f for f in d.iterdir() if f.name.endswith(".parquet")]
             assert len(files) == 1, f"{d.name}: {len(files)} files"
+
+
+# a batch of (key, version) rows; a row's value is a function of both, so
+# rows that tie on version are equal
+_batches = st.lists(
+    st.lists(st.tuples(st.integers(0, 9), st.integers(0, 4)), min_size=1, max_size=8), min_size=1, max_size=3
+)
+
+
+@given(batches=_batches, replays=st.lists(st.integers(0, 2), max_size=2), n_buckets=st.sampled_from([1, 3, 8]))
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_upsert_equals_pandas_latest_wins(spark, tmp_path_factory, batches, replays, n_buckets):
+    """Over random batch sequences with replayed batches and older versions,
+    the table holds each key's highest-version row, once."""
+    path = str(tmp_path_factory.mktemp("upsert") / "tbl")
+    applied = batches + [batches[i % len(batches)] for i in replays]
+    for rows in applied:
+        batch = _df(spark, [(k, f"{k}@{ver}", ver) for k, ver in rows])
+        upsert_batch(path, batch, key="k", version_col="ver", n_buckets=n_buckets)
+    log = pd.DataFrame([(k, f"{k}@{ver}", ver) for rows in applied for k, ver in rows], columns=["k", "v", "ver"])
+    want = log.sort_values("ver").groupby("k").tail(1)
+    got = read_upsert_table(spark, path).toPandas()
+    assert list(got.columns) == ["k", "v", "ver"]
+    assert sorted(map(tuple, got.values.tolist())) == sorted(map(tuple, want.values.tolist()))
