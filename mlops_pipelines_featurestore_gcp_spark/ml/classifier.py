@@ -299,7 +299,6 @@ def score_sink(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    available_now: bool = True,
 ):
     """Attach the trained classifier as a ``foreachBatch`` scoring sink:
     each micro-batch is featurized and scored map-side (the per-batch
@@ -345,9 +344,7 @@ def score_sink(
     writer = stream.writeStream.foreachBatch(_score_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def save_model(spark: SparkSession, model: QualityClassifierModel, path: str) -> None:

@@ -131,7 +131,6 @@ def drift_sink(
     checkpoint_dir: str,
     *,
     bins: int = 10,
-    available_now: bool = True,
 ):
     """Attach the PSI monitor as a ``foreachBatch`` streaming sink: every
     micro-batch's feature distributions are scored against the frozen
@@ -158,6 +157,4 @@ def drift_sink(
     writer = stream.writeStream.foreachBatch(_score).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -237,7 +237,6 @@ class IncrementalDedupIndex:
         id_col: str,
         text_col: str,
         report_path: str | None = None,
-        available_now: bool = True,
     ):
         """Attach ``ingest`` as a ``foreachBatch`` streaming sink: every
         micro-batch of documents dedups against the index (and itself),
@@ -265,6 +264,4 @@ class IncrementalDedupIndex:
         writer = stream.writeStream.foreachBatch(_ingest).option(
             "checkpointLocation", checkpoint_dir
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return writer.trigger(availableNow=True).start()

@@ -5,8 +5,8 @@ BigQuery-append loop (SURVEY.md §2.7 ST1-ST5) re-expressed as
 from mlops_pipelines_featurestore_gcp_spark.streaming.log_loop import (
     MESSAGE_SCHEMA,
     enrich_with_reward,
-    parse_message_json,
-    read_prediction_stream,
+    factor_map,
+    publish_messages,
     run_log_loop,
 )
 from mlops_pipelines_featurestore_gcp_spark.streaming.joins import interval_join
@@ -18,9 +18,9 @@ from mlops_pipelines_featurestore_gcp_spark.streaming.windows import (
 
 __all__ = [
     "MESSAGE_SCHEMA",
-    "parse_message_json",
-    "read_prediction_stream",
+    "factor_map",
     "enrich_with_reward",
+    "publish_messages",
     "run_log_loop",
     "interval_join",
     "tumbling_window_agg",

@@ -196,8 +196,6 @@ def distinct_rollup_sink(
     stream: DataFrame,
     agg: DistinctCountRollup,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """Maintain the sketch store from a stream: each micro-batch unions its
     sketches under its batch id (replay-idempotent via the high-water
@@ -209,6 +207,4 @@ def distinct_rollup_sink(
     writer = stream.writeStream.foreachBatch(_refresh).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

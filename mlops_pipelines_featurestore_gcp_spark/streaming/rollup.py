@@ -330,8 +330,6 @@ def rollup_sink(
     stream: DataFrame,
     agg: ContinuousAggregate,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """Maintain the continuous aggregate from a stream: each micro-batch
     merges its partials under its batch id (replay-idempotent)."""
@@ -342,6 +340,4 @@ def rollup_sink(
     writer = stream.writeStream.foreachBatch(_refresh).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -129,7 +129,6 @@ def upsert_sink(
     key: str,
     version_col: str,
     n_buckets: int = 64,
-    available_now: bool = True,
 ):
     """Attach the upsert merge as a ``foreachBatch`` streaming sink.
 
@@ -142,6 +141,4 @@ def upsert_sink(
         upsert_batch(table_path, batch_df, key=key, version_col=version_col, n_buckets=n_buckets)
 
     writer = stream.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -1,19 +1,30 @@
 """Milestone-5 streaming tests (SURVEY.md §5.2): file-source micro-batches,
 duplicate-message injection must NOT duplicate sink rows (exactly-once),
-AvailableNow drain semantics, and batch/stream window-agg equivalence."""
+AvailableNow drain semantics (one micro-batch per drain), the
+publish → drain round trip, and batch/stream window-agg equivalence."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from mlops_pipelines_featurestore_gcp_spark.streaming import (
+    MESSAGE_SCHEMA,
     enrich_with_reward,
-    read_prediction_stream,
+    factor_map,
+    publish_messages,
     run_log_loop,
     tumbling_window_agg,
+)
+
+QUERY_CONFS = (
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.streaming.statefulOperator.allowMultiple",
 )
 
 
@@ -45,7 +56,7 @@ def test_enrich_reward_is_dot_product(spark, factors):
         [("m1", "2024-01-01 00:00:00", [[3.0, 4.0], [1.0, 2.0]], [0, 2])],
         "message_id string, publish_time string, observations array<array<double>>, predicted_actions array<long>",
     ).withColumn("publish_time", F.col("publish_time").cast("timestamp"))
-    row = enrich_with_reward(msgs, factors).first()
+    row = enrich_with_reward(msgs, factor_map(factors)).first()
     assert row.reward == [3.0, 1.5]  # dot([3,4],[1,0]) and dot([1,2],[.5,.5])
     assert row.action == [0, 2]
     assert row.observation[0].observation_batch == [3.0, 4.0]
@@ -128,7 +139,7 @@ def test_enrich_reward_matches_regroup_oracle(spark, seed):
     factors = spark.createDataFrame(factor_rows, "item_id long, features array<double>")
     msgs = _messages_df(spark, _random_messages(rng, 200, k, num_actions))
 
-    got = enrich_with_reward(msgs, factors)
+    got = enrich_with_reward(msgs, factor_map(factors))
     want = _enrich_with_reward_regroup(msgs, factors)
     # same column types; only top-level nullability differs, and a parquet
     # sink stores every column as nullable anyway
@@ -151,7 +162,7 @@ def test_enrich_reward_drops_messages_without_slots(spark, factors):
             ("no_factor", "2024-01-01 00:00:00", [[1.0, 0.0]], [7]),
         ],
     )
-    rows = enrich_with_reward(msgs, factors).collect()
+    rows = enrich_with_reward(msgs, factor_map(factors)).collect()
     assert [(r.message_id, r.reward) for r in rows] == [("no_factor", [0.0])]
 
 
@@ -173,12 +184,15 @@ def _exchanges_outside_broadcast(plan: str) -> list[str]:
 
 def test_enrich_reward_message_side_has_no_exchange(spark, factors):
     msgs = _messages_df(spark, [("m1", "2024-01-01 00:00:00", [[3.0, 4.0]], [0])])
-    plan = enrich_with_reward(msgs, factors)._jdf.queryExecution().executedPlan().toString()
+    plan = enrich_with_reward(msgs, factor_map(factors))._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan
     assert _exchanges_outside_broadcast(plan) == []
-    # the oracle's regroup does shuffle, so the check can see one
+    # the factor map is built once per query: a batch aggregates nothing
+    assert "Aggregate" not in plan
+    # the oracle's regroup does shuffle and aggregate, so the checks can see them
     old = _enrich_with_reward_regroup(msgs, factors)._jdf.queryExecution().executedPlan().toString()
     assert _exchanges_outside_broadcast(old)
+    assert "Aggregate" in old
 
 
 def test_log_loop_exactly_once(spark, factors, tmp_path):
@@ -205,6 +219,101 @@ def test_log_loop_exactly_once(spark, factors, tmp_path):
     out2 = spark.read.parquet(sink)
     assert out2.count() == 3  # m3 added, duplicate m1 still suppressed
     assert out2.where(F.col("message_id") == "m1").count() == 1
+
+
+def _lines_in(msg_dir) -> int:
+    return sum(
+        len(f.read_text().splitlines()) for f in msg_dir.iterdir() if not f.name.startswith((".", "_"))
+    )
+
+
+def test_publish_and_drain_round_trip(spark, factors, tmp_path):
+    """S8 → ST4 through the message directory: a redelivery inside one
+    publish and another across two drains each land once, each publish
+    returns the lines it wrote, and every reward is the dot product."""
+    msg_dir, sink, ckpt = tmp_path / "msgs", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    item = {0: [1.0, 0.0], 1: [0.0, 1.0], 2: [0.5, 0.5]}  # the factors fixture
+    t0 = dt.datetime(2024, 1, 1)
+
+    def msg(i):
+        return (f"p{i}", t0 + dt.timedelta(seconds=i), [[float(i), 1.0 - i], [0.25 * i, 2.0]], [i % 3, (i + 1) % 3])
+
+    first, second = [msg(i) for i in range(6)], [msg(i) for i in range(6, 10)]
+    written = 0
+    # p2 is redelivered inside the first publish, p4 in the second one
+    for batch in (first + [first[2]], second + [first[4]]):
+        n = publish_messages(spark.createDataFrame(batch, MESSAGE_SCHEMA).repartition(3), str(msg_dir))
+        written += len(batch)
+        assert n == len(batch) and _lines_in(msg_dir) == written
+        run_log_loop(spark, str(msg_dir), factors, sink, ckpt).awaitTermination(120)
+
+    rows = spark.read.parquet(sink).collect()
+    assert Counter(r.message_id for r in rows) == Counter(m[0] for m in first + second)
+
+    def rewards(obs, actions):
+        out = []
+        for o, a in zip(obs, actions):
+            acc = 0.0
+            for x, y in zip(o, item[a]):
+                acc += x * y
+            out.append(acc)
+        return out
+
+    assert {r.message_id: r.reward for r in rows} == {m[0]: rewards(m[2], m[3]) for m in first + second}
+
+
+def test_log_loop_one_batch_per_drain(spark, factors, tmp_path, monkeypatch):
+    """Each drain runs exactly one micro-batch (no trailing no-data batch),
+    the dedup still behaves across drains, and the log loop's streaming
+    confs are only set around its ``start()``."""
+    msg_dir, sink, ckpt = tmp_path / "msgs", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+
+    def confs():
+        return [spark.conf.get(key, None) for key in QUERY_CONFS]
+
+    before = confs()
+
+    def drain(messages):
+        _write_messages(msg_dir, messages)
+        q = run_log_loop(spark, str(msg_dir), factors, sink, ckpt)
+        assert confs() == before
+        q.awaitTermination(120)
+        return [(p.batchId, p.numInputRows) for p in q.recentProgress]
+
+    m3 = _msg("m3", "2024-01-01 00:30:00", [[0.0, 1.0]], [1])
+    # drain 1 moves the watermark to 00:30 - 10 minutes = 00:20
+    assert drain(
+        [_msg("m1", "2024-01-01 00:00:00", [[1.0, 0.0]], [0]), _msg("m2", "2024-01-01 00:01:00", [[1.0, 1.0]], [2]), m3]
+    ) == [(0, 3)]
+    # m3 redelivered inside the watermark collapses; "late" is behind 00:20
+    late = _msg("late", "2024-01-01 00:05:00", [[1.0, 0.0]], [0])
+    assert drain([m3, late, _msg("m5", "2024-01-01 00:31:00", [[2.0, 0.0]], [0])]) == [(1, 3)]
+    assert Counter(r.message_id for r in spark.read.parquet(sink).collect()) == Counter(["m1", "m2", "m3", "m5"])
+
+    # the confs are restored when start() raises too, also from explicit values
+    seen = []
+
+    def failing_start(self, *args, **kwargs):
+        seen.append(confs())
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+    try:
+        for explicit in (False, True):
+            if explicit:
+                for key in QUERY_CONFS:
+                    spark.conf.set(key, "true")
+            expected = confs()
+            with pytest.raises(RuntimeError, match="start failed"):
+                run_log_loop(spark, str(msg_dir), factors, sink, str(tmp_path / "ckpt2"))
+            assert confs() == expected
+    finally:
+        for key, value in zip(QUERY_CONFS, before):
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+    assert seen == [["false", "false"]] * 2
 
 
 def test_stream_window_agg_matches_batch(spark, tmp_path):
@@ -263,250 +372,3 @@ def test_stream_window_agg_matches_batch(spark, tmp_path):
     # emitted must exactly match the batch result for those windows
     assert got <= expected_all
     assert len(got) >= 2  # first two hourly windows are past the watermark
-
-
-def test_parse_message_json_kafka_shape(spark):
-    from mlops_pipelines_featurestore_gcp_spark.streaming import MESSAGE_SCHEMA
-    from mlops_pipelines_featurestore_gcp_spark.streaming.log_loop import parse_message_json
-
-    payload = json.dumps(
-        {
-            "message_id": "m9",
-            "publish_time": "2024-01-01T00:00:00Z",
-            "observations": [[1.5, 2.5]],
-            "predicted_actions": [3],
-        }
-    )
-    raw = spark.createDataFrame([(bytearray(payload.encode()),)], "value binary")
-    row = parse_message_json(raw).first()
-    assert row.message_id == "m9"
-    assert row.observations == [[1.5, 2.5]]
-    assert row.predicted_actions == [3]
-
-
-def test_unknown_source_rejected(spark, tmp_path):
-    with pytest.raises(ValueError, match="unknown message source"):
-        read_prediction_stream(spark, str(tmp_path), source="carrier-pigeon")
-
-
-def test_log_loop_live_socket_source(spark, factors, tmp_path):
-    """VERDICT r3 #7: the streaming leg against a LIVE network source.
-
-    A TCP server pushes JSON messages (with a duplicate) over a real
-    socket; run_log_loop consumes via Spark's socket source through the
-    same parse → dedup → enrich → idempotent-sink plan as the file/kafka
-    flavors. Proves the network-consumer path executes end to end — the
-    socket source has no offsets, so durability semantics stay covered by
-    the file-source exactly-once test."""
-    import socket
-    import threading
-    import time
-
-    msgs = [
-        _msg("s1", "2024-01-01 00:00:00", [[3.0, 4.0]], [0]),
-        _msg("s1", "2024-01-01 00:00:00", [[3.0, 4.0]], [0]),  # redelivery
-        _msg("s2", "2024-01-01 00:01:00", [[1.0, 2.0]], [2]),
-    ]
-    payload = ("\n".join(json.dumps(m) for m in msgs) + "\n").encode()
-
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(1)
-    port = srv.getsockname()[1]
-    stop = threading.Event()
-
-    def _serve():
-        conn, _ = srv.accept()
-        conn.sendall(payload)
-        stop.wait(120)  # keep the connection open until the test is done
-        conn.close()
-
-    t = threading.Thread(target=_serve, daemon=True)
-    t.start()
-
-    sink = str(tmp_path / "socket_sink")
-    q = run_log_loop(
-        spark,
-        f"127.0.0.1:{port}",
-        factors,
-        sink,
-        str(tmp_path / "socket_ckpt"),
-        available_now=False,
-        source="socket",
-        processing_time="1 seconds",
-    )
-    try:
-        deadline = time.time() + 90
-        rows = []
-        while time.time() < deadline:
-            try:
-                rows = spark.read.parquet(sink).collect()
-            except Exception:
-                rows = []
-            if len(rows) >= 2:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-        stop.set()
-        srv.close()
-
-    ids = sorted(r.message_id for r in rows)
-    assert ids == ["s1", "s2"], rows
-    got = {r.message_id: r.reward for r in rows}
-    assert got["s1"] == [3.0]  # dot([3,4],[1,0]) — enrichment ran on live rows
-    assert got["s2"] == [1.5]  # dot([1,2],[.5,.5])
-
-
-def test_publish_messages_over_live_socket(spark, tmp_path):
-    """S8's network leg: executor partitions publish JSON lines to a real
-    TCP endpoint (per-partition connections, no driver collect), and the
-    received lines parse back through the consumer's exact schema."""
-    import socket
-    import threading
-
-    from pyspark.sql import functions as F
-
-    from mlops_pipelines_featurestore_gcp_spark.streaming.log_loop import (
-        MESSAGE_SCHEMA,
-        publish_messages,
-    )
-
-    received = []
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(8)
-    port = srv.getsockname()[1]
-    done = threading.Event()
-
-    def _serve():
-        srv.settimeout(30)
-        while not done.is_set():
-            try:
-                conn, _ = srv.accept()
-            except socket.timeout:
-                break
-            buf = b""
-            while chunk := conn.recv(65536):
-                buf += chunk
-            conn.close()
-            received.extend(l for l in buf.decode().splitlines() if l)
-
-    t = threading.Thread(target=_serve, daemon=True)
-    t.start()
-
-    msgs = spark.createDataFrame(
-        [(f"m{i}", "2024-01-01 00:00:00", [[float(i), 0.0]], [i % 3]) for i in range(10)],
-        "message_id string, publish_time string, observations array<array<double>>, predicted_actions array<long>",
-    ).withColumn("publish_time", F.col("publish_time").cast("timestamp"))
-    n = publish_messages(msgs.repartition(4), f"127.0.0.1:{port}", source="socket")
-    assert n == 10
-
-    import time
-    deadline = time.time() + 20
-    while len(received) < 10 and time.time() < deadline:
-        time.sleep(0.2)
-    done.set()
-    srv.close()
-    assert len(received) == 10
-    # the wire format round-trips through the consumer's parser
-    parsed = spark.read.schema(MESSAGE_SCHEMA).json(spark.sparkContext.parallelize(received))
-    ids = sorted(r.message_id for r in parsed.collect())
-    assert ids == sorted(f"m{i}" for i in range(10))
-
-
-def test_full_loop_publish_relay_consume_over_tcp(spark, factors, tmp_path):
-    """The complete live circle: executor partitions PUBLISH JSON over TCP
-    to a relay; the streaming CONSUMER reads the relay's feed over TCP and
-    runs dedup → enrichment → idempotent sink. No files anywhere on the
-    wire path — both halves of the message loop execute over real
-    sockets in one test."""
-    import socket
-    import threading
-    import time
-
-    from mlops_pipelines_featurestore_gcp_spark.streaming.log_loop import publish_messages
-
-    # relay: one listener for publishers (ingest), one for the consumer
-    ingest = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    ingest.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    ingest.bind(("127.0.0.1", 0)); ingest.listen(8)
-    serve = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    serve.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    serve.bind(("127.0.0.1", 0)); serve.listen(1)
-    ingest_port, serve_port = ingest.getsockname()[1], serve.getsockname()[1]
-
-    buffered: list[str] = []
-    stop = threading.Event()
-
-    def _ingest():
-        ingest.settimeout(30)
-        while not stop.is_set():
-            try:
-                conn, _ = ingest.accept()
-            except socket.timeout:
-                return
-            buf = b""
-            while chunk := conn.recv(65536):
-                buf += chunk
-            conn.close()
-            buffered.extend(l for l in buf.decode().splitlines() if l)
-
-    def _serve():
-        conn, _ = serve.accept()
-        deadline = time.time() + 60
-        sent = 0
-        while time.time() < deadline and not stop.is_set():
-            while sent < len(buffered):
-                conn.sendall((buffered[sent] + "\n").encode())
-                sent += 1
-            time.sleep(0.2)
-        conn.close()
-
-    threading.Thread(target=_ingest, daemon=True).start()
-    threading.Thread(target=_serve, daemon=True).start()
-
-    # half 1: distributed publish (with a duplicate message)
-    msgs = spark.createDataFrame(
-        [
-            ("p1", "2024-01-01 00:00:00", [[3.0, 4.0]], [0]),
-            ("p1", "2024-01-01 00:00:00", [[3.0, 4.0]], [0]),  # redelivery
-            ("p2", "2024-01-01 00:01:00", [[1.0, 2.0]], [2]),
-        ],
-        "message_id string, publish_time string, observations array<array<double>>, predicted_actions array<long>",
-    ).withColumn("publish_time", F.col("publish_time").cast("timestamp"))
-    assert publish_messages(msgs.repartition(2), f"127.0.0.1:{ingest_port}", source="socket") == 3
-
-    # half 2: live consume through the full loop
-    sink = str(tmp_path / "loop_sink")
-    q = run_log_loop(
-        spark,
-        f"127.0.0.1:{serve_port}",
-        factors,
-        sink,
-        str(tmp_path / "loop_ckpt"),
-        available_now=False,
-        source="socket",
-        processing_time="1 seconds",
-    )
-    try:
-        deadline = time.time() + 90
-        rows = []
-        while time.time() < deadline:
-            try:
-                rows = spark.read.parquet(sink).collect()
-            except Exception:
-                rows = []
-            if len(rows) >= 2:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-        stop.set()
-        ingest.close(); serve.close()
-
-    got = {r.message_id: r.reward for r in rows}
-    assert sorted(got) == ["p1", "p2"]  # deduped across the live wire
-    assert got["p1"] == [3.0] and got["p2"] == [1.5]
