@@ -72,8 +72,3 @@ def round6(col: Column) -> Column:
     sign-symmetric quantizer without updating every SQL twin in lockstep.
     """
     return F.floor(col * F.lit(1_000_000.0) + F.lit(0.5)) / F.lit(1_000_000.0)
-
-
-def round6_sql(expr: str) -> str:
-    """DuckDB twin of :func:`round6` — identical fold, same doubles."""
-    return f"floor(({expr}) * 1000000.0 + 0.5) / 1000000.0"

@@ -41,18 +41,6 @@ def tokens(col: Column) -> Column:
     return F.array_remove(F.split(F.trim(col), r"\s+"), "")
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """All k-char shingles of a string (positional, may repeat).
-
-    Guarded so strings shorter than k yield an empty array — Spark's
-    ``sequence(1, 0)`` would otherwise produce a *descending* sequence.
-    """
-    n = F.length(col)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: F.substring(col, i, k))
-    )
-
-
 def word_ngrams(toks: Column, n: int = 3) -> Column:
     """Word n-grams (space-joined) from a token array.
 
@@ -127,12 +115,6 @@ def md5_long(col: Column, bits: int = 32) -> Column:
     """
     nhex = bits // 4
     return F.conv(F.substring(F.md5(col), 1, nhex), 16, 10).cast("long")
-
-
-def seeded_md5_long(col: Column, seed: Column | int, bits: int = 32) -> Column:
-    """Family of hash functions h_seed(x) — used for MinHash."""
-    seed_col = F.lit(seed) if isinstance(seed, int) else seed
-    return md5_long(F.concat(seed_col.cast("string"), F.lit("|"), col), bits=bits)
 
 
 def stopword_hits(toks: Column, lang: str) -> Column:

@@ -19,12 +19,15 @@ Scale design: sufficient stats are **per-partition partial aggregates** —
 one ``mapInPandas`` pass emits a k×k/k partial per arm present in each
 input partition, with no shuffle (no task ever holds an arm's full row set),
 and only the tiny ``partitions × arms`` partial set is reduced on the
-driver. Inference broadcasts the solved per-arm parameters and scores rows
-in vectorized NumPy batches (Arrow ``pandas_udf``), never per-row Python.
+driver (``solve``). ``arm_partials`` is that pass's body, so the retrain
+(``pipeline.py``) runs it in the same pass that writes its TFRecord files.
+Inference broadcasts the solved per-arm parameters and scores rows in
+vectorized NumPy batches (Arrow ``pandas_udf``), never per-row Python.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -32,7 +35,36 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+
+PARTIALS_SCHEMA = "action long, a_flat array<double>, b_vec array<double>, n long"
+
+
+def arm_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """One partition's per-arm ``(XᵀX, Xᵀr, n)`` as ``PARTIALS_SCHEMA`` rows:
+    a ``mapInPandas`` body over ``(obs, action, reward)`` rows. Rows with a
+    NULL field are skipped; an empty partition yields nothing."""
+    acc = {}  # action -> (XᵀX, Xᵀr, n) over this partition's batches
+    for pdf in batches:
+        pdf = pdf[pdf["obs"].notna() & pdf["action"].notna() & pdf["reward"].notna()]
+        if pdf.empty:
+            continue
+        X = np.stack(pdf["obs"].to_numpy())
+        r = pdf["reward"].to_numpy()
+        actions = pdf["action"].to_numpy().astype(np.int64)
+        for a in np.unique(actions).tolist():
+            m = actions == a
+            xtx, xtr, n = acc.get(a, (0.0, 0.0, 0))
+            acc[a] = (xtx + X[m].T @ X[m], xtr + X[m].T @ r[m], n + int(m.sum()))
+    if acc:
+        yield pd.DataFrame(
+            {
+                "action": list(acc),
+                "a_flat": [xtx.ravel().tolist() for xtx, _, _ in acc.values()],
+                "b_vec": [xtr.tolist() for _, xtr, _ in acc.values()],
+                "n": [n for _, _, n in acc.values()],
+            }
+        )
 
 
 @dataclass
@@ -55,49 +87,17 @@ class LinUCB:
         action_col: str = "action",
         reward_col: str = "reward",
     ) -> "LinUCBModel":
-        k = self.context_dim
-
-        stats_schema = T.StructType(
-            [
-                T.StructField("action", T.LongType()),
-                T.StructField("a_flat", T.ArrayType(T.DoubleType())),
-                T.StructField("b_vec", T.ArrayType(T.DoubleType())),
-                T.StructField("n", T.LongType()),
-            ]
-        )
-
-        def _partial(batches):
-            acc = {}  # action -> (XᵀX, Xᵀr, n) over this partition's batches
-            for pdf in batches:  # an empty partition sends no batch
-                X = np.stack(pdf["__obs"].to_numpy())
-                r = pdf["__reward"].to_numpy()
-                actions = pdf["__action"].to_numpy()
-                for a in np.unique(actions).tolist():
-                    m = actions == a
-                    xtx, xtr, n = acc.get(a, (0.0, 0.0, 0))
-                    acc[a] = (xtx + X[m].T @ X[m], xtr + X[m].T @ r[m], n + int(m.sum()))
-            if acc:
-                yield pd.DataFrame(
-                    {
-                        "action": list(acc),
-                        "a_flat": [xtx.ravel().tolist() for xtx, _, _ in acc.values()],
-                        "b_vec": [xtr.tolist() for _, xtr, _ in acc.values()],
-                        "n": [n for _, _, n in acc.values()],
-                    }
-                )
-
         prepped = df.select(
-            F.col(obs_col).cast("array<double>").alias("__obs"),
-            F.col(action_col).cast("long").alias("__action"),
-            F.col(reward_col).cast("double").alias("__reward"),
-        ).where(
-            F.col("__obs").isNotNull()
-            & F.col("__action").isNotNull()
-            & F.col("__reward").isNotNull()
+            F.col(obs_col).cast("array<double>").alias("obs"),
+            F.col(action_col).cast("long").alias("action"),
+            F.col(reward_col).cast("double").alias("reward"),
         )
         # ≤ partitions × num_actions tiny rows — model state
-        partials = prepped.mapInPandas(_partial, stats_schema).collect()
+        return self.solve(prepped.mapInPandas(arm_partials, PARTIALS_SCHEMA).collect())
 
+    def solve(self, partials: list) -> "LinUCBModel":
+        """The driver-side reduction: ``arm_partials`` rows → fitted policy."""
+        k = self.context_dim
         A = {a: self.tikhonov * np.eye(k) for a in range(self.num_actions)}
         b = {a: np.zeros(k) for a in range(self.num_actions)}
         counts = {a: 0 for a in range(self.num_actions)}

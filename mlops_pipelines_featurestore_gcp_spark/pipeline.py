@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 from mlops_pipelines_featurestore_gcp_spark.feature_store import FeatureStore
 from mlops_pipelines_featurestore_gcp_spark.ml.factorization import als_factors
 from mlops_pipelines_featurestore_gcp_spark.ml.generator import generate_trajectories
-from mlops_pipelines_featurestore_gcp_spark.ml.linucb import LinUCB, LinUCBModel
+from mlops_pipelines_featurestore_gcp_spark.ml.linucb import PARTIALS_SCHEMA, LinUCB, LinUCBModel, arm_partials
 from mlops_pipelines_featurestore_gcp_spark.sources import ratings as ratings_src
 from mlops_pipelines_featurestore_gcp_spark.sources import tfrecord
-from mlops_pipelines_featurestore_gcp_spark.sources.trajectories import flatten_observations
+from mlops_pipelines_featurestore_gcp_spark.sources.trajectories import TRAJECTORY_SCHEMA, flatten_observations
 
 
 @dataclass
@@ -75,8 +75,8 @@ def run_startup_pipeline(
        + seeded random-policy trajectories → nested training table.
     4. **ingest** (S4-S6, ``ingester_component.py``): SELECT * LIMIT n →
        flatten → TFRecord files.
-    5. **train** (M4, ``trainer_component.py``): LinUCB closed form from the
-       TFRecord slice → JSON model artifact (S11).
+    5. **train** (M4, ``trainer_component.py``): LinUCB closed form, summed
+       in the ingest pass (no read-back) → JSON model artifact (S11).
     """
     cfg = config or PipelineConfig()
 
@@ -128,31 +128,32 @@ def run_startup_pipeline(
 def _ingest_and_train(
     spark: SparkSession, training_table: str, work_dir: str, cfg: PipelineConfig
 ) -> tuple[str, str]:
-    """The shared tail: SELECT * LIMIT n → TFRecord → LinUCB → artifact."""
-    nested = spark.read.parquet(training_table).limit(cfg.max_rows)
+    """The shared tail in one pass: SELECT * LIMIT n → each partition writes
+    its TFRecord file and yields its LinUCB partials over the same rows →
+    solve → artifact. Nothing reads the files back: obs and reward are
+    rounded to float32 (FloatList) in the plan, so the partials sum what a
+    read-back returns and the files' bytes do not change."""
+    nested = spark.read.schema(TRAJECTORY_SCHEMA).parquet(training_table).limit(cfg.max_rows)
     flat_rows = (
         flatten_observations(nested)
         .select(F.posexplode(F.arrays_zip("observation", "action", "reward")).alias("slot", "z"))
         .select(
-            F.col("z.observation").alias("obs"),
+            F.col("z.observation").cast("array<float>").cast("array<double>").alias("obs"),
             F.col("z.action").alias("action"),
-            F.col("z.reward").alias("reward"),
+            F.col("z.reward").cast("float").cast("double").alias("reward"),
         )
     )
     tfrecord_dir = f"{work_dir}/tfrecords"
-    tfrecord.write_tfrecords(flat_rows, tfrecord_dir)
 
-    train_df = tfrecord.read_tfrecords(
-        spark,
-        tfrecord_dir,
-        flat_rows.schema,
-    )
+    def _write_and_sum(batches):
+        return arm_partials(tfrecord.write_partition(batches, tfrecord_dir))
+
     model = LinUCB(
         context_dim=cfg.rank_k,
         num_actions=cfg.num_actions,
         alpha=cfg.agent_alpha,
         tikhonov=cfg.tikhonov_weight,
-    ).fit(train_df)
+    ).solve(flat_rows.mapInPandas(_write_and_sum, PARTIALS_SCHEMA).collect())
     model_path = f"{work_dir}/model/policy.json"
     model.save(model_path)
     return tfrecord_dir, model_path

@@ -20,18 +20,21 @@ double columns FloatList, strings/binary BytesList, and array<T> columns
 map to multi-value lists — the natural columnar↔Example mapping.
 
 Distribution: writes go through ``mapInPandas`` (one TFRecord file per
-partition, executor-side); reads go through the ``binaryFile`` source +
+partition, executor-side; ``write_partition`` is the per-task body, which the
+retrain also runs), reads through the ``binaryFile`` source +
 ``mapInPandas`` decode. No driver-side data movement.
 """
 
 from __future__ import annotations
 
 import io
+import os
 import struct
 from collections.abc import Iterator
 
 import pandas as pd
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -181,7 +184,6 @@ def decode_example(data: bytes) -> dict:
                 # two's-complement back to signed
                 vals.append(v - (1 << 64) if v >= 1 << 63 else v)
             out[key] = vals
-        pos = pos  # noqa: PLW0127 - keep position explicit
     return out
 
 
@@ -198,25 +200,34 @@ def frame_records(records: list[bytes]) -> bytes:
 
 
 def unframe_records(data: bytes) -> Iterator[bytes]:
+    """Records of TFRecord file bytes; ``ValueError`` on a length or data
+    CRC mismatch and on a record cut short."""
     pos = 0
     while pos < len(data):
+        if pos + 12 > len(data):
+            raise ValueError(f"truncated TFRecord header at offset {pos}")
         (length,) = struct.unpack_from("<Q", data, pos)
         (lcrc,) = struct.unpack_from("<I", data, pos + 8)
         if lcrc != _masked_crc(data[pos : pos + 8]):
             raise ValueError(f"corrupt TFRecord length crc at offset {pos}")
-        rec = data[pos + 12 : pos + 12 + length]
+        end = pos + 12 + length
+        if end + 4 > len(data):
+            raise ValueError(f"truncated TFRecord at offset {pos}")
+        rec = data[pos + 12 : end]
+        (dcrc,) = struct.unpack_from("<I", data, end)
+        if dcrc != _masked_crc(rec):
+            raise ValueError(f"corrupt TFRecord data crc at offset {pos}")
         yield rec
-        pos += 12 + length + 4
+        pos = end + 4
 
 
 # --- DataFrame-level sink/scan ----------------------------------------------
 
 
-def write_tfrecords(df: DataFrame, out_dir: str) -> None:
-    """S6: one TFRecord file per partition under ``out_dir``.
-
-    Executor-side via mapInPandas — the write parallelism IS the partition
-    count; repartition upstream to size files.
+def write_partition(batches: Iterator[pd.DataFrame], out_dir: str) -> Iterator[pd.DataFrame]:
+    """S6 for one ``mapInPandas`` task: yields each batch on unchanged and,
+    once the batches are exhausted, commits them as the partition's
+    TFRecord file under ``out_dir`` (none for an empty partition).
 
     Retry safety: the output filename is DETERMINISTIC per partition
     (``part-<partitionId>``) and each attempt writes to an attempt-private
@@ -228,33 +239,34 @@ def write_tfrecords(df: DataFrame, out_dir: str) -> None:
     filesystem (local mode, NFS); an object-store deployment would route
     this through a Hadoop committer / custom datasource instead.
     """
-    cols = df.columns
+    records = []
+    for pdf in batches:
+        for row in pdf.to_dict("records"):
+            clean = {
+                k: (list(v) if hasattr(v, "__len__") and not isinstance(v, (str, bytes)) else v)
+                for k, v in row.items()
+            }
+            records.append(encode_example(clean))
+        yield pdf
+    if records:
+        ctx = TaskContext.get()
+        part, attempt = ctx.partitionId(), ctx.taskAttemptId()
+        os.makedirs(out_dir, exist_ok=True)
+        final = f"{out_dir}/part-{part:05d}.tfrecord"
+        tmp = f"{final}.{attempt}.tmp"
+        with open(tmp, "wb") as f:
+            f.write(frame_records(records))
+        os.replace(tmp, final)
+
+
+def write_tfrecords(df: DataFrame, out_dir: str) -> None:
+    """S6: ``write_partition`` in every task of ``df`` — the write
+    parallelism IS the partition count; repartition upstream to size files."""
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
+        yield pd.DataFrame({"n": [sum(len(pdf) for pdf in write_partition(batches, out_dir))]})
 
-        from pyspark import TaskContext
-
-        records = []
-        for pdf in batches:
-            for row in pdf.to_dict("records"):
-                clean = {
-                    k: (list(v) if hasattr(v, "__len__") and not isinstance(v, (str, bytes)) else v)
-                    for k, v in row.items()
-                }
-                records.append(encode_example(clean))
-        if records:
-            ctx = TaskContext.get()
-            part, attempt = ctx.partitionId(), ctx.taskAttemptId()
-            os.makedirs(out_dir, exist_ok=True)
-            final = f"{out_dir}/part-{part:05d}.tfrecord"
-            tmp = f"{final}.{attempt}.tmp"
-            with open(tmp, "wb") as f:
-                f.write(frame_records(records))
-            os.replace(tmp, final)
-        yield pd.DataFrame({"n": [len(records)]})
-
-    # count() forces the write on every partition
+    # the aggregate forces the write on every partition
     df.mapInPandas(_write, "n long").agg(F.sum("n")).collect()
 
 
@@ -284,7 +296,7 @@ def read_tfrecords(spark: SparkSession, path: str, schema: T.StructType) -> Data
                     rows.append(row)
             yield pd.DataFrame(rows, columns=[c for c, _ in cols])
 
-    binary = spark.read.format("binaryFile").load(f"{path}/*.tfrecord").select("content")
+    binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.tfrecord").load(path).select("content")
     return binary.mapInPandas(_decode, schema)
 
 

@@ -34,7 +34,7 @@ per-batch work is embarrassingly parallel over source partitions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -202,9 +202,9 @@ def publish_messages(df: DataFrame, message_dir: str) -> int:
     Publishing is at-least-once — exactly-once lives on the CONSUMER side
     (watermarked dedup on ``message_id``), matching the reference's Pub/Sub
     delivery contract.
+
+    One Spark job: the count is observed in the pass that writes the lines.
     """
-    # materialize once: counting then writing would execute the whole
-    # upstream plan twice (and could disagree on non-deterministic sources)
-    payload = df.select(F.to_json(F.struct(*df.columns)).alias("line")).localCheckpoint(eager=True)
-    payload.write.mode("append").text(message_dir)
-    return payload.count()
+    written = Observation()
+    df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("append").json(message_dir)
+    return written.get["n"]

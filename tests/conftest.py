@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import random
 import sys
 
 import pytest
@@ -20,6 +21,25 @@ def spark():
     s = get_spark("tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``run(fn)`` → ``(fn(), ids of the Spark jobs it started)``, counted
+    through a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-jobs-{random.getrandbits(64):x}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -259,21 +259,7 @@ def _recorded_online(store):
     return doc["featurestores"]["fs"]["entity_types"]["users"]["online"]
 
 
-def _jobs_run(spark, fn):
-    """``fn()`` and the number of Spark jobs it started, counted through a
-    job group of its own."""
-    sc = spark.sparkContext
-    group = f"test-jobs-{random.getrandbits(64):x}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark):
+def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark, spark_jobs):
     """``online_read`` (driver-side read of the recorded snapshot; no job to
     build or collect the frame) equals a fresh ``spark.read.parquet`` of
     that snapshot with the same bucket and entity filters, across a
@@ -289,17 +275,16 @@ def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark):
     def check(rng, buckets, n_entities):
         for _ in range(6):
             keys = rng.sample(range(300), rng.randint(1, 20)) + rng.sample(["absent", "-1"], rng.randint(0, 2))
-            got_df, build_jobs = _jobs_run(spark, lambda: store.online_read("fs", "users", keys))
-            got, collect_jobs = _jobs_run(spark, got_df.collect)
+            got_df, build_jobs = spark_jobs(lambda: store.online_read("fs", "users", keys))
+            got, collect_jobs = spark_jobs(got_df.collect)
             want_df = oracle(keys, buckets)
-            assert (build_jobs, collect_jobs) == (0, 0)
+            assert build_jobs == collect_jobs == []
             assert got_df.schema == want_df.schema
             assert sorted(map(tuple, got)) == sorted(map(tuple, want_df.collect()))
             assert {r.entity_id for r in got} == {str(k) for k in keys if k in range(n_entities)}
 
     rng = random.Random(7)
-    _, meta_jobs = _jobs_run(
-        spark,
+    _, meta_jobs = spark_jobs(
         lambda: (
             store.create_featurestore("fs"),
             store.create_entity_type("fs", "users"),
@@ -307,7 +292,7 @@ def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark):
             store.list_featurestores(),
         ),
     )
-    assert meta_jobs == 0
+    assert meta_jobs == []
     src = spark.range(250).select(F.col("id").alias("uid"), (F.col("id") * 0.5).alias("bal"))
     store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time="2024-01-01")
     store.materialize_online("fs", "users", buckets=8)
@@ -322,8 +307,8 @@ def test_online_read_matches_fresh_read_and_runs_no_planning_jobs(store, spark):
     assert store.online_read("fs", "users", [1]).columns == ["entity_id", "bal", "tier", "bucket"]
     check(rng, 5, 300)
 
-    _, cleanup_jobs = _jobs_run(spark, lambda: store.cleanup_featurestore("fs"))
-    assert cleanup_jobs == 0
+    _, cleanup_jobs = spark_jobs(lambda: store.cleanup_featurestore("fs"))
+    assert cleanup_jobs == []
 
 
 def test_online_read_during_refresh_serves_one_whole_snapshot(store, spark):
@@ -436,7 +421,7 @@ def test_online_crash_before_flip_keeps_old_snapshot(store, spark, monkeypatch):
     assert got == {"1": "99.0", "2": "20.0"}
 
 
-def test_online_read_empty_and_absent_keys(store, spark):
+def test_online_read_empty_and_absent_keys(store, spark, spark_jobs):
     """No keys, and only absent keys, each give an empty frame with the
     recorded columns, and run no Spark job."""
     store.create_featurestore("fs")
@@ -446,10 +431,10 @@ def test_online_read_empty_and_absent_keys(store, spark):
     store.materialize_online("fs", "users", buckets=4)
     recorded = T.StructType.fromJson(_recorded_online(store)["schema"])
     for keys in ([], ["absent", -1, 3]):
-        df, build_jobs = _jobs_run(spark, lambda: store.online_read("fs", "users", keys))
-        rows, collect_jobs = _jobs_run(spark, df.collect)
+        df, build_jobs = spark_jobs(lambda: store.online_read("fs", "users", keys))
+        rows, collect_jobs = spark_jobs(df.collect)
         assert rows == []
-        assert (build_jobs, collect_jobs) == (0, 0)
+        assert build_jobs == collect_jobs == []
         assert df.columns == ["entity_id", "bal", "bucket"]
         assert df.schema == recorded
 
@@ -528,7 +513,7 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_latest_reads_are_one_aggregation_and_refresh_runs_four_jobs(store, spark, monkeypatch):
+def test_latest_reads_are_one_aggregation_and_refresh_runs_four_jobs(store, spark, spark_jobs, monkeypatch):
     """``read_latest`` and the online refresh plan no window; the refresh's
     only shuffle is the one that writes a file per bucket, and a refresh
     runs at most 4 jobs (feature names, then the write)."""
@@ -550,8 +535,8 @@ def test_latest_reads_are_one_aggregation_and_refresh_runs_four_jobs(store, spar
 
     monkeypatch.setattr(store_mod, "latest_wide", recording_wide)
     store.materialize_online("fs", "users", buckets=8)
-    _, jobs = _jobs_run(spark, lambda: store.materialize_online("fs", "users", buckets=8))
-    assert jobs <= 4
+    _, jobs = spark_jobs(lambda: store.materialize_online("fs", "users", buckets=8))
+    assert len(jobs) <= 4
     plan = _plan(built[-1])
     assert "Window" not in plan, plan
     assert plan.count("Exchange") == 1, plan

@@ -3,17 +3,23 @@ MovieLens-shaped fixture, then streaming append + retrain (§3.2/ST5)."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from mlops_pipelines_featurestore_gcp_spark.feature_store import FeatureStore
+from mlops_pipelines_featurestore_gcp_spark.ml.linucb import LinUCB, LinUCBModel
 from mlops_pipelines_featurestore_gcp_spark.pipeline import (
     PipelineConfig,
     predict,
     retrain,
     run_startup_pipeline,
 )
+from mlops_pipelines_featurestore_gcp_spark.sources.tfrecord import read_tfrecords, write_tfrecords
+from mlops_pipelines_featurestore_gcp_spark.sources.trajectories import TRAJECTORY_SCHEMA, flatten_observations
 
 
 @pytest.fixture
@@ -79,3 +85,96 @@ def test_retrain_after_append(spark, u_data, tmp_path):
     new_model = retrain(spark, art.training_table, str(tmp_path / "work2"), config=cfg)
     obs = spark.createDataFrame([([0.5] * cfg.rank_k,)], "obs array<double>")
     assert predict(spark, new_model, obs).count() == 1
+
+
+def _read_back_fit(spark, training_table, work_dir, cfg):
+    """The retrain's former path, kept as its oracle: SELECT * LIMIT n →
+    ``write_tfrecords`` → ``read_tfrecords`` → ``LinUCB.fit``."""
+    nested = spark.read.parquet(training_table).limit(cfg.max_rows)
+    flat_rows = (
+        flatten_observations(nested)
+        .select(F.posexplode(F.arrays_zip("observation", "action", "reward")).alias("slot", "z"))
+        .select(
+            F.col("z.observation").alias("obs"),
+            F.col("z.action").alias("action"),
+            F.col("z.reward").alias("reward"),
+        )
+    )
+    write_tfrecords(flat_rows, f"{work_dir}/tfrecords")
+    train_df = read_tfrecords(spark, f"{work_dir}/tfrecords", flat_rows.schema)
+    return LinUCB(
+        context_dim=cfg.rank_k,
+        num_actions=cfg.num_actions,
+        alpha=cfg.agent_alpha,
+        tikhonov=cfg.tikhonov_weight,
+    ).fit(train_df)
+
+
+def _sink_shaped_table(spark, path, seed, n_rows, cfg):
+    """A log-loop-sink-shaped training table: message columns, the seven
+    trajectory columns, two ``_batch=`` partitions of several files; about
+    one reward in ten is NULL."""
+    rng = np.random.default_rng(seed)
+    t0 = dt.datetime(2024, 1, 1)
+
+    def observation():  # magnitudes from 1e-3 to 1e2, so float32 rounding shows
+        return {"observation_batch": (rng.normal(size=cfg.rank_k) * 10.0 ** rng.integers(-3, 3)).tolist()}
+
+    rows = [
+        (
+            f"m{i}",
+            t0 + dt.timedelta(seconds=i),
+            [1] * cfg.batch_size,
+            [observation() for _ in range(cfg.batch_size)],
+            rng.integers(0, cfg.num_actions, cfg.batch_size).tolist(),
+            [0.0] * cfg.batch_size,
+            [1] * cfg.batch_size,
+            [None if rng.random() < 0.1 else float(rng.normal()) for _ in range(cfg.batch_size)],
+            [1.0] * cfg.batch_size,
+            i % 2,
+        )
+        for i in range(n_rows)
+    ]
+    schema = "message_id string, publish_time timestamp, " + ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in TRAJECTORY_SCHEMA.fields
+    )
+    spark.createDataFrame(rows, schema + ", _batch int").repartition(3).write.partitionBy("_batch").parquet(path)
+
+
+def _plans_of(spark, job_ids):
+    """The physical plans of the last SQL executions that ran any of
+    ``job_ids``."""
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList().takeRight(20)
+    return [
+        run.physicalPlanDescription()
+        for run in (runs.apply(i) for i in range(runs.size()))
+        if any(run.jobs().contains(j) for j in job_ids)
+    ]
+
+
+@pytest.mark.parametrize("seed, n_rows, max_rows", [(0, 60, 10_000), (1, 150, 100), (2, 400, 10_000)])
+def test_retrain_is_one_pass_equal_to_the_read_back_oracle(spark, spark_jobs, tmp_path, seed, n_rows, max_rows):
+    """``retrain`` writes the TFRecord handoff and fits in one pass: the
+    policy equals the write → read-back → fit oracle bit for bit, the files
+    are byte-identical to ``write_tfrecords``', and it runs at most 2 Spark
+    jobs (the LIMIT's shuffle stage and the pass), none a ``binaryFile``
+    scan."""
+    cfg = PipelineConfig(rank_k=4, batch_size=3, num_actions=5, max_rows=max_rows)
+    table = str(tmp_path / "sink")
+    _sink_shaped_table(spark, table, seed, n_rows, cfg)
+    want = _read_back_fit(spark, table, str(tmp_path / "oracle"), cfg)
+
+    model_path, jobs = spark_jobs(lambda: retrain(spark, table, str(tmp_path / "work"), config=cfg))
+    got = LinUCBModel.load(model_path)
+    assert np.array_equal(got.theta, want.theta)
+    assert np.array_equal(got.a_inv, want.a_inv)
+    assert got.counts.tolist() == want.counts.tolist()
+    assert 0 < got.counts.sum() < cfg.batch_size * min(n_rows, max_rows)  # NULL rewards are skipped
+
+    def files(d):
+        return {f: (tmp_path / d / "tfrecords" / f).read_bytes() for f in os.listdir(tmp_path / d / "tfrecords")}
+
+    assert files("work") == files("oracle") and len(files("work")) == 1
+    assert 1 <= len(jobs) <= 2
+    plans = _plans_of(spark, jobs)
+    assert plans and not any("binaryFile" in p for p in plans)

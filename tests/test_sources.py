@@ -135,6 +135,13 @@ def test_tfrecord_framing_roundtrip_and_crc():
     corrupted[8] ^= 0xFF  # flip a length-crc byte
     with pytest.raises(ValueError, match="corrupt"):
         list(tfr.unframe_records(bytes(corrupted)))
+    corrupted = bytearray(framed)
+    corrupted[14] ^= 0xFF  # flip a data byte of the first record
+    with pytest.raises(ValueError, match="corrupt TFRecord data crc"):
+        list(tfr.unframe_records(bytes(corrupted)))
+    for cut in (10, 4, len(framed) - 3):  # into the last record, its crc, a header
+        with pytest.raises(ValueError, match="truncated"):
+            list(tfr.unframe_records(framed[:-cut]))
 
 
 def test_tfrecord_df_roundtrip(spark, tmp_path):

@@ -227,10 +227,11 @@ def _lines_in(msg_dir) -> int:
     )
 
 
-def test_publish_and_drain_round_trip(spark, factors, tmp_path):
+def test_publish_and_drain_round_trip(spark, spark_jobs, factors, tmp_path):
     """S8 → ST4 through the message directory: a redelivery inside one
     publish and another across two drains each land once, each publish
-    returns the lines it wrote, and every reward is the dot product."""
+    runs one Spark job and returns the lines it wrote (0 for an empty
+    frame), and every reward is the dot product."""
     msg_dir, sink, ckpt = tmp_path / "msgs", str(tmp_path / "sink"), str(tmp_path / "ckpt")
     item = {0: [1.0, 0.0], 1: [0.0, 1.0], 2: [0.5, 0.5]}  # the factors fixture
     t0 = dt.datetime(2024, 1, 1)
@@ -242,10 +243,14 @@ def test_publish_and_drain_round_trip(spark, factors, tmp_path):
     written = 0
     # p2 is redelivered inside the first publish, p4 in the second one
     for batch in (first + [first[2]], second + [first[4]]):
-        n = publish_messages(spark.createDataFrame(batch, MESSAGE_SCHEMA).repartition(3), str(msg_dir))
+        frame = spark.createDataFrame(batch, MESSAGE_SCHEMA).repartition(3).localCheckpoint()
+        n, jobs = spark_jobs(lambda: publish_messages(frame, str(msg_dir)))
         written += len(batch)
         assert n == len(batch) and _lines_in(msg_dir) == written
+        assert len(jobs) == 1
         run_log_loop(spark, str(msg_dir), factors, sink, ckpt).awaitTermination(120)
+    assert publish_messages(spark.createDataFrame([], MESSAGE_SCHEMA), str(msg_dir)) == 0
+    assert _lines_in(msg_dir) == written
 
     rows = spark.read.parquet(sink).collect()
     assert Counter(r.message_id for r in rows) == Counter(m[0] for m in first + second)
