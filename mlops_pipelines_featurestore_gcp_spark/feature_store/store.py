@@ -39,7 +39,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 import uuid
 from dataclasses import dataclass
 from pathlib import Path
@@ -53,6 +52,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
+from mlops_pipelines_featurestore_gcp_spark.sources.atomic import write_json
 from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import bucket_col, bucket_of, latest_by
 
 VALUES_SCHEMA = "entity_id string, feature_name string, value string, feature_time timestamp"
@@ -176,18 +176,7 @@ class FeatureStore:
             return {"featurestores": {}}
 
     def _save(self, doc: dict) -> None:
-        base = Path(self.base_path)
-        base.mkdir(parents=True, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=base, prefix=".registry-", suffix=".tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(doc, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, base / REGISTRY_FILE)
-        except BaseException:
-            Path(tmp).unlink(missing_ok=True)
-            raise
+        write_json(Path(self.base_path) / REGISTRY_FILE, doc, indent=1)
 
     def create_featurestore(self, featurestore_id: str, *, online_node_count: int = 1) -> None:
         """FS1 (``feature_store_helper.py:30-57``): register a store.

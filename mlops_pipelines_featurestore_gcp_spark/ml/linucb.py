@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mlops_pipelines_featurestore_gcp_spark.sources.atomic import write_json
+
 
 PARTIALS_SCHEMA = "action long, a_flat array<double>, b_vec array<double>, n long"
 
@@ -158,23 +160,19 @@ class LinUCBModel:
     # The reference persists its policy as a TF SavedModel on GCS
     # (``trainer_component.py:141-142``) and reloads it at serving startup
     # (``prediction_container/main.py:20-26``). Our artifact is one JSON
-    # file of the closed-form parameters.
+    # file of the closed-form parameters, replaced atomically: serving
+    # loads the path a retrain overwrites.
 
     def save(self, path: str) -> None:
-        import json
-        import os
-
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(
-                {
-                    "alpha": self.alpha,
-                    "theta": self.theta.tolist(),
-                    "a_inv": self.a_inv.tolist(),
-                    "counts": self.counts.tolist(),
-                },
-                f,
-            )
+        write_json(
+            path,
+            {
+                "alpha": self.alpha,
+                "theta": self.theta.tolist(),
+                "a_inv": self.a_inv.tolist(),
+                "counts": self.counts.tolist(),
+            },
+        )
 
     @classmethod
     def load(cls, path: str) -> "LinUCBModel":

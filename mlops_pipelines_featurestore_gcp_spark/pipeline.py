@@ -144,9 +144,10 @@ def _ingest_and_train(
         )
     )
     tfrecord_dir = f"{work_dir}/tfrecords"
+    schema = flat_rows.schema
 
     def _write_and_sum(batches):
-        return arm_partials(tfrecord.write_partition(batches, tfrecord_dir))
+        return arm_partials(tfrecord.write_partition(batches, tfrecord_dir, schema))
 
     model = LinUCB(
         context_dim=cfg.rank_k,

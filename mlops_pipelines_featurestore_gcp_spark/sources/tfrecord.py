@@ -224,10 +224,44 @@ def unframe_records(data: bytes) -> Iterator[bytes]:
 # --- DataFrame-level sink/scan ----------------------------------------------
 
 
-def write_partition(batches: Iterator[pd.DataFrame], out_dir: str) -> Iterator[pd.DataFrame]:
-    """S6 for one ``mapInPandas`` task: yields each batch on unchanged and,
-    once the batches are exhausted, commits them as the partition's
-    TFRecord file under ``out_dir`` (none for an empty partition).
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _exact_int(v):
+    """One value of an integral column that pandas widened to float64
+    because the batch holds a NULL: NaN is that NULL; a magnitude above
+    2**53 was already rounded by the widening, so it raises rather than
+    being written wrong."""
+    if v != v:
+        return None
+    if abs(v) > 2**53:
+        raise ValueError(f"integral value {v!r} was rounded to float64 by a NULL in its column")
+    return int(v)
+
+
+def _typed(pdf: pd.DataFrame, schema: T.StructType) -> pd.DataFrame:
+    """``pdf`` with every integral column holding exact Python ints (and
+    ``None``) again, so it encodes as the Int64List its Spark type says;
+    other columns pass as they are."""
+    fixed = {
+        f.name: pd.Series([_exact_int(v) for v in pdf[f.name]], index=pdf.index, dtype=object)
+        for f in schema.fields
+        if isinstance(f.dataType, _INTEGRAL) and pdf[f.name].dtype.kind == "f"
+    }
+    return pdf.assign(**fixed) if fixed else pdf
+
+
+def write_partition(
+    batches: Iterator[pd.DataFrame], out_dir: str, schema: T.StructType
+) -> Iterator[pd.DataFrame]:
+    """S6 for one ``mapInPandas`` task over a frame of ``schema``: yields
+    each batch on unchanged and, once the batches are exhausted, commits
+    them as the partition's TFRecord file under ``out_dir`` (none for an
+    empty partition).
+
+    Each feature's list kind follows the column's Spark type: a NULL value
+    is left out of its Example, and an integral column stays an Int64List
+    even when a NULL made pandas hand it over as float64.
 
     Retry safety: the output filename is DETERMINISTIC per partition
     (``part-<partitionId>``) and each attempt writes to an attempt-private
@@ -241,7 +275,7 @@ def write_partition(batches: Iterator[pd.DataFrame], out_dir: str) -> Iterator[p
     """
     records = []
     for pdf in batches:
-        for row in pdf.to_dict("records"):
+        for row in _typed(pdf, schema).to_dict("records"):
             clean = {
                 k: (list(v) if hasattr(v, "__len__") and not isinstance(v, (str, bytes)) else v)
                 for k, v in row.items()
@@ -262,9 +296,10 @@ def write_partition(batches: Iterator[pd.DataFrame], out_dir: str) -> Iterator[p
 def write_tfrecords(df: DataFrame, out_dir: str) -> None:
     """S6: ``write_partition`` in every task of ``df`` — the write
     parallelism IS the partition count; repartition upstream to size files."""
+    schema = df.schema
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield pd.DataFrame({"n": [sum(len(pdf) for pdf in write_partition(batches, out_dir))]})
+        yield pd.DataFrame({"n": [sum(len(pdf) for pdf in write_partition(batches, out_dir, schema))]})
 
     # the aggregate forces the write on every partition
     df.mapInPandas(_write, "n long").agg(F.sum("n")).collect()

@@ -7,23 +7,19 @@ associative. COUNT DISTINCT is the one dashboard aggregate with no exact
 bounded-size partial: exact distinct state grows with cardinality, so at
 100 TB the only maintainable form is a sketch. HLL sketches ARE
 associative (union), a few KB each regardless of cardinality, so they
-slot into the identical store design:
+live in the SAME store: ``DistinctCountRollup`` is a ``ContinuousAggregate``
+that defines only its partials (``hll_sketch_agg``, ``count``), its merge
+(``hll_union_agg``, ``sum``) and its reads. Layout, the batch-id replay
+mark, the touched-pgroup merge inside the write's ``pgroup`` shuffle, the
+write barrier, the overwrite and bucket-range pruning are
+``rollup.py``'s, and ``rollup.rollup_sink`` drives it from a stream.
 
-- refresh: sketch ONLY the incoming batch per (bucket, keys), read the
-  touched pgroup partitions, ``hll_union_agg`` old+new, dynamic-overwrite
-  the touched groups (eagerly materialized first — same crash-safety
-  barrier as the base rollup);
 - read: ``hll_sketch_estimate`` per bucket, or union ACROSS buckets for
   a rollup estimate over any bucket range (day → month → all-time from
   the same hour-grain store — re-aggregation sketches make cross-grain
   distinct counts legal, which raw counts never are);
 - replay safety: the batch-id high-water mark, because HLL union is
-  idempotent for identical items but a REPLAYED batch under a new id
-  would still be wrong for downstream exact partials — one mark guards
-  both stores.
-
-Same physical layout as ``rollup.py``: contiguous ``pgroup`` dirs,
-``bucket`` as a data column, one file per group per rewrite.
+  idempotent for identical items but the row-count partial is not.
 
 Estimates are deterministic for a fixed sketch algorithm + lgConfigK:
 incremental-vs-full equality holds EXACTLY (same sketch bytes → same
@@ -34,16 +30,13 @@ key), since the raw estimate values have no SQL twin.
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_META = "_distinct_rollup_meta.json"
+from mlops_pipelines_featurestore_gcp_spark.streaming.rollup import ContinuousAggregate
 
 
-class DistinctCountRollup:
+class DistinctCountRollup(ContinuousAggregate):
     """HLL-sketch-per-(bucket, keys) store for incremental distinct counts
     of ``item_col`` (e.g. distinct users per hour per event type)."""
 
@@ -58,12 +51,15 @@ class DistinctCountRollup:
         buckets_per_partition: int = 64,
         lg_config_k: int = 12,
     ) -> None:
-        self.path = path
-        self.time_col = time_col
+        super().__init__(
+            path,
+            time_col=time_col,
+            value_col=item_col,
+            keys=keys,
+            bucket_width=bucket_width,
+            buckets_per_partition=buckets_per_partition,
+        )
         self.item_col = item_col
-        self.keys = list(keys)
-        self.bucket_width = int(bucket_width)
-        self.buckets_per_partition = int(buckets_per_partition)
         # NOTE (st07 gate assumption): a chain of hll_union_agg merges
         # (with parquet round-trips between them) tracks a one-shot
         # hll_sketch_agg closely but NOT byte-exactly at every
@@ -78,92 +74,18 @@ class DistinctCountRollup:
         # those two imply by triangle inequality.
         self.lg_config_k = int(lg_config_k)
 
-    # --- layout (mirrors rollup.ContinuousAggregate) ----------------------
-    @property
-    def _store(self) -> str:
-        return os.path.join(self.path, "state")
+    def _partial_aggs(self) -> list[Column]:
+        return [
+            F.hll_sketch_agg(self.item_col, self.lg_config_k).alias("sketch"),
+            F.count(self.item_col).alias("n_rows"),
+        ]
 
-    def _with_pgroup(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "pgroup",
-            F.floor(F.col("bucket") / F.lit(self.buckets_per_partition)).cast("long"),
-        )
-
-    def _store_has_state(self) -> bool:
-        return os.path.isdir(self._store) and any(
-            e.startswith("pgroup=") for e in os.listdir(self._store)
-        )
-
-    def _last_batch(self) -> int:
-        meta = os.path.join(self.path, _META)
-        if os.path.exists(meta):
-            with open(meta) as f:
-                return json.load(f)["last_batch_id"]
-        return -1
-
-    def _record_batch(self, batch_id: int) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(os.path.join(self.path, _META), "w") as f:
-            json.dump({"last_batch_id": batch_id}, f)
-
-    # --- API --------------------------------------------------------------
-    def _partials(self, df: DataFrame) -> DataFrame:
-        bucket = (F.floor(F.col(self.time_col) / F.lit(self.bucket_width))).cast("long")
-        return (
-            df.where(F.col(self.time_col).isNotNull())
-            .withColumn("bucket", bucket)
-            .groupBy("bucket", *self.keys)
-            .agg(
-                F.hll_sketch_agg(self.item_col, self.lg_config_k).alias("sketch"),
-                F.count(self.item_col).alias("n_rows"),
-            )
-        )
-
-    def refresh(self, batch: DataFrame, *, batch_id: int = 0) -> None:
-        if batch_id <= self._last_batch():
-            return
-        spark = batch.sparkSession
-        incoming = self._partials(batch)
-        if self._store_has_state():
-            # barrier: the touched probe is eager — without it the merge
-            # re-runs the batch scan + sketch build a second time (see
-            # rollup.ContinuousAggregate.refresh, r13 optimization)
-            incoming = incoming.localCheckpoint(eager=False)
-            touched = [
-                r["pgroup"]
-                for r in self._with_pgroup(incoming).select("pgroup").distinct().collect()
-            ]
-            existing = (
-                spark.read.parquet(self._store)
-                .where(F.col("pgroup").isin(touched))
-                .drop("pgroup")
-            )
-            merged = existing.unionByName(incoming).groupBy("bucket", *self.keys).agg(
-                F.hll_union_agg("sketch").alias("sketch"),
-                F.sum("n_rows").alias("n_rows"),
-            )
-        else:
-            merged = incoming
-        materialized = self._with_pgroup(merged)
-        if self._store_has_state():
-            # write barrier only when the merge plan reads the path it
-            # overwrites; a FRESH store's lineage is the batch alone, so
-            # the write itself is the single materializing action (r14,
-            # mirrors rollup.ContinuousAggregate._write_state)
-            materialized = materialized.localCheckpoint(eager=True)
-        (
-            materialized.repartition("pgroup")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pgroup")
-            .parquet(self._store)
-        )
-        self._record_batch(batch_id)
+    def _merge_aggs(self) -> list[Column]:
+        return [F.hll_union_agg("sketch").alias("sketch"), F.sum("n_rows").alias("n_rows")]
 
     def read(self, spark: SparkSession) -> DataFrame:
         """(bucket, keys..., n_rows, approx_distinct) per bucket."""
-        st = spark.read.parquet(self._store)
-        return st.select(
+        return self._state(spark).select(
             "bucket",
             *self.keys,
             "n_rows",
@@ -180,31 +102,8 @@ class DistinctCountRollup:
         """Distinct estimate per keys ACROSS a bucket range: sketches union
         (re-aggregation is exact sketch algebra — the thing raw distinct
         counts can never do), pgroup dirs prune, then one tiny agg."""
-        st = spark.read.parquet(self._store)
-        bpp = self.buckets_per_partition
-        if bucket_min is not None:
-            st = st.where((F.col("pgroup") >= bucket_min // bpp) & (F.col("bucket") >= bucket_min))
-        if bucket_max is not None:
-            st = st.where((F.col("pgroup") <= bucket_max // bpp) & (F.col("bucket") <= bucket_max))
+        st = self._state(spark, bucket_min=bucket_min, bucket_max=bucket_max)
         return st.groupBy(*self.keys).agg(
             F.sum("n_rows").alias("n_rows"),
             F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("approx_distinct"),
         )
-
-
-def distinct_rollup_sink(
-    stream: DataFrame,
-    agg: DistinctCountRollup,
-    checkpoint_dir: str,
-):
-    """Maintain the sketch store from a stream: each micro-batch unions its
-    sketches under its batch id (replay-idempotent via the high-water
-    mark) — the same foreachBatch contract as ``rollup.rollup_sink``."""
-
-    def _refresh(batch_df: DataFrame, batch_id: int) -> None:
-        agg.refresh(batch_df, batch_id=batch_id)
-
-    writer = stream.writeStream.foreachBatch(_refresh).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return writer.trigger(availableNow=True).start()

@@ -13,6 +13,14 @@ per (time bucket, key). A refresh:
 3. merges (partials are associative: count+count, sum+sum, min(min),
    max(max)) and dynamic-partition-overwrites just those partitions.
 
+``ContinuousAggregate`` is the one store behind every rollup. A subclass
+defines only what differs per aggregate — the partial aggregates of a
+batch (``_partial_aggs``), the merge aggregates over partials
+(``_merge_aggs``) and the read that finalizes them — and inherits the
+layout, replay mark, merge, write barrier, overwrite and range pruning:
+``distinct_rollup.DistinctCountRollup`` keeps HLL sketches this way, and
+``quantile_rollup.QuantileRollup`` wraps the store with a bin key.
+
 Physical layout (round-4 redesign): state is partitioned by ``pgroup =
 floor(bucket / buckets_per_partition)`` — a CONTIGUOUS bucket group — with
 ``bucket`` kept as a data column. Raw per-bucket partitioning (the round-3
@@ -27,10 +35,13 @@ drag ~table/k state through the merge.) Bucket-range reads prune at two
 levels: pgroup directory pruning, then parquet row-group min/max stats on
 the ``bucket`` data column inside the group.
 
-Each refresh repartitions the merged state by ``pgroup`` before the write,
-so every group directory holds one file per rewrite — refreshes compact as
-they go instead of accumulating shuffle-partition shards. ``compact()``
-remains for stores written by many fine-grained historical refreshes.
+Every write repartitions its state by ``pgroup`` once, so each group
+directory holds one file per rewrite — refreshes compact as they go instead
+of accumulating shuffle-partition shards. A stateful refresh merges INSIDE
+that shuffle: stored ∪ incoming partials are routed by ``pgroup`` and
+grouped by (pgroup, bucket, keys) within it, so the merge needs no
+exchange of its own (the ``upsert_batch`` pattern). ``compact()`` remains
+for stores written by many fine-grained historical refreshes.
 
 Crash safety: the merged state is eagerly materialized
 (``localCheckpoint``) BEFORE the overwrite, because the refresh reads and
@@ -48,8 +59,9 @@ NULL partition that ``Column.isin`` pruning can never select.
 Exactly-once: ``refresh`` records the batch id high-water mark and skips
 replays (Structured Streaming re-delivers a failed micro-batch under the
 SAME id — merging partials twice would double-count, the additive-state
-failure mode append/recompute sinks don't have). ``rollup_sink`` wires
-this into ``writeStream.foreachBatch``.
+failure mode append/recompute sinks don't have). The mark is replaced
+atomically, so a crash mid-write leaves the previous mark readable.
+``rollup_sink`` wires any rollup into ``writeStream.foreachBatch``.
 
 Cascades compose: a day-grain ``ContinuousAggregate`` can ``refresh`` from
 the hour-grain store's partials (sum-of-sums), never from raw data.
@@ -64,8 +76,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mlops_pipelines_featurestore_gcp_spark.sources.atomic import write_json
 
 _META = "_rollup_meta.json"
 
@@ -100,6 +114,30 @@ class ContinuousAggregate:
         self.bucket_width = int(bucket_width)
         self.buckets_per_partition = int(buckets_per_partition)
 
+    # --- what differs per aggregate -----------------------------------------
+    def _partial_aggs(self) -> list[Column]:
+        return [
+            F.count(self.value_col).alias("p_count"),
+            # DECIMAL partials: refresh order / batch boundaries must not
+            # change the stored state (double sums are order-dependent in
+            # the low bits; decimal addition is exact) — the property that
+            # makes incremental == full-recompute bit-for-bit, and lets a
+            # SQL oracle replay the rollup with one GROUP BY
+            F.sum(F.col(self.value_col).cast("decimal(18,6)")).cast("decimal(18,6)").alias("p_sum"),
+            F.min(self.value_col).alias("p_min"),
+            F.max(self.value_col).alias("p_max"),
+        ]
+
+    def _merge_aggs(self) -> list[Column]:
+        return [
+            F.sum("p_count").alias("p_count"),
+            # decimal sum widens precision; narrow back so the state schema
+            # is stable across refreshes
+            F.sum("p_sum").cast("decimal(18,6)").alias("p_sum"),
+            F.min("p_min").alias("p_min"),
+            F.max("p_max").alias("p_max"),
+        ]
+
     # --- state layout -----------------------------------------------------
     def _with_pgroup(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -115,27 +153,7 @@ class ContinuousAggregate:
             df.where(F.col(self.time_col).isNotNull())
             .withColumn("bucket", bucket)
             .groupBy("bucket", *self.keys)
-            .agg(
-                F.count(self.value_col).alias("p_count"),
-                # DECIMAL partials: refresh order / batch boundaries must not
-                # change the stored state (double sums are order-dependent in
-                # the low bits; decimal addition is exact) — the property that
-                # makes incremental == full-recompute bit-for-bit, and lets a
-                # SQL oracle replay the rollup with one GROUP BY
-                F.sum(F.col(self.value_col).cast("decimal(18,6)")).cast("decimal(18,6)").alias("p_sum"),
-                F.min(self.value_col).alias("p_min"),
-                F.max(self.value_col).alias("p_max"),
-            )
-        )
-
-    def _merge(self, parts: DataFrame) -> DataFrame:
-        return parts.groupBy("bucket", *self.keys).agg(
-            F.sum("p_count").alias("p_count"),
-            # decimal sum widens precision; narrow back so the state schema
-            # is stable across refreshes
-            F.sum("p_sum").cast("decimal(18,6)").alias("p_sum"),
-            F.min("p_min").alias("p_min"),
-            F.max("p_max").alias("p_max"),
+            .agg(*self._partial_aggs())
         )
 
     def _last_batch(self) -> int:
@@ -146,9 +164,7 @@ class ContinuousAggregate:
         return -1
 
     def _record_batch(self, batch_id: int) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(os.path.join(self.path, _META), "w") as f:
-            json.dump({"last_batch_id": batch_id}, f)
+        write_json(os.path.join(self.path, _META), {"last_batch_id": batch_id})
 
     @property
     def _store(self) -> str:
@@ -160,8 +176,35 @@ class ContinuousAggregate:
             e.startswith("pgroup=") for e in os.listdir(store)
         )
 
-    def _write_state(self, merged: DataFrame) -> None:
-        """Dynamic-partition-overwrite the touched pgroup dirs.
+    def _state(
+        self,
+        spark: SparkSession,
+        *,
+        bucket_min: int | None = None,
+        bucket_max: int | None = None,
+    ) -> DataFrame:
+        """Stored partials (with ``pgroup``) in a bucket range. The bounds
+        prune twice: the derived pgroup filter prunes partition DIRECTORIES;
+        the bucket filter then skips parquet row-groups via min/max stats
+        inside the surviving files."""
+        st = spark.read.parquet(self._store)
+        bpp = self.buckets_per_partition
+        if bucket_min is not None:
+            st = st.where(
+                (F.col("pgroup") >= bucket_min // bpp) & (F.col("bucket") >= bucket_min)
+            )
+        if bucket_max is not None:
+            st = st.where(
+                (F.col("pgroup") <= bucket_max // bpp) & (F.col("bucket") <= bucket_max)
+            )
+        return st
+
+    def _write_state(self, parts: DataFrame, *, merge: bool = False) -> None:
+        """Dynamic-partition-overwrite the pgroup dirs of ``parts``.
+
+        One shuffle routes each pgroup to one task, so every rewritten dir
+        is a single file (self-compacting). With ``merge``, partials that
+        share a (bucket, keys) are merged inside that shuffle.
 
         A merge plan READS the same path it overwrites, so the state is
         eagerly materialized first — a lazy plan would re-read partitions
@@ -173,19 +216,19 @@ class ContinuousAggregate:
         action (the write) instead of two, and the batch is scanned once
         by the write itself. Every read-own-path writer (stateful
         refresh, ``compact``, an equal-width self-cascade) has state on
-        disk and keeps the barrier.
+        disk and keeps the barrier. The checkpoint keeps the pgroup
+        partitioning, so the write adds no shuffle.
         """
-        staged = self._with_pgroup(merged)
+        staged = self._with_pgroup(parts).repartition("pgroup")
+        if merge:
+            staged = staged.groupBy("pgroup", "bucket", *self.keys).agg(*self._merge_aggs())
         if self._store_has_state():
             staged = staged.localCheckpoint(eager=True)
         self._overwrite(staged)
 
     def _overwrite(self, materialized: DataFrame) -> None:
-        """One shuffle output per pgroup keeps each dir at a single file
-        per rewrite (self-compacting)."""
         (
-            materialized.repartition("pgroup")
-            .write.mode("overwrite")
+            materialized.write.mode("overwrite")
             # writer-scoped: never mutate the session conf (sibling static
             # overwrites — e.g. IVF index rebuilds — rely on truncate mode)
             .option("partitionOverwriteMode", "dynamic")
@@ -200,7 +243,6 @@ class ContinuousAggregate:
         batch twice would double-count)."""
         if batch_id <= self._last_batch():
             return
-        spark = batch.sparkSession
         incoming = self._partials(batch)
         if self._store_has_state():
             # The touched-groups probe is an eager job; without a
@@ -217,14 +259,13 @@ class ContinuousAggregate:
                 for r in self._with_pgroup(incoming).select("pgroup").distinct().collect()
             ]
             existing = (
-                spark.read.parquet(self._store)
+                self._state(batch.sparkSession)
                 .where(F.col("pgroup").isin(touched_groups))  # dir-pruned read
                 .drop("pgroup")
             )
-            merged = self._merge(existing.unionByName(incoming))
+            self._write_state(existing.unionByName(incoming), merge=True)
         else:
-            merged = incoming
-        self._write_state(merged)
+            self._write_state(incoming)
         self._record_batch(batch_id)
 
     def read(
@@ -234,24 +275,10 @@ class ContinuousAggregate:
         bucket_min: int | None = None,
         bucket_max: int | None = None,
     ) -> DataFrame:
-        """Finalized rollup: (bucket, keys..., n, total, vmin, vmax, vavg).
-
-        Bucket-range bounds prune twice: the derived pgroup filter prunes
-        partition DIRECTORIES; the bucket filter then skips parquet
-        row-groups via min/max stats inside the surviving files.
-        """
-        st = spark.read.parquet(self._store)
-        bpp = self.buckets_per_partition
-        if bucket_min is not None:
-            st = st.where(
-                (F.col("pgroup") >= bucket_min // bpp) & (F.col("bucket") >= bucket_min)
-            )
-        if bucket_max is not None:
-            st = st.where(
-                (F.col("pgroup") <= bucket_max // bpp) & (F.col("bucket") <= bucket_max)
-            )
+        """Finalized rollup: (bucket, keys..., n, total, vmin, vmax, vavg),
+        optionally over a pruned bucket range."""
         total = F.col("p_sum").cast("double")
-        return st.select(
+        return self._state(spark, bucket_min=bucket_min, bucket_max=bucket_max).select(
             "bucket",
             *self.keys,
             F.col("p_count").alias("n"),
@@ -286,14 +313,14 @@ class ContinuousAggregate:
         bpath = os.path.join(store, f"pgroup={boundary}")
         if before_bucket % self.buckets_per_partition and os.path.isdir(bpath):
             kept = (
-                spark.read.parquet(store)
+                self._state(spark)
                 .where((F.col("pgroup") == boundary) & (F.col("bucket") >= before_bucket))
-                .drop("pgroup")
+                .repartition("pgroup")
                 .localCheckpoint(eager=True)
             )
             shutil.rmtree(bpath)
             if kept.limit(1).count():
-                self._overwrite(self._with_pgroup(kept))
+                self._overwrite(kept)
 
     def compact(self, spark: SparkSession) -> None:
         """Rewrite every pgroup dir to one file (idempotent: state rows are
@@ -301,8 +328,7 @@ class ContinuousAggregate:
         stores produced by many historical fine-grained refreshes)."""
         if not self._store_has_state():
             return
-        state = spark.read.parquet(self._store).drop("pgroup")
-        self._write_state(state)
+        self._write_state(self._state(spark).drop("pgroup"))
 
     def cascade_into(
         self, coarser: "ContinuousAggregate", spark: SparkSession, *, batch_id: int = 0
@@ -316,23 +342,19 @@ class ContinuousAggregate:
             )
         if batch_id <= coarser._last_batch():
             return
-        st = spark.read.parquet(self._store).drop("pgroup")
         ratio = coarser.bucket_width // self.bucket_width
-        rebucketed = st.withColumn(
+        rebucketed = self._state(spark).drop("pgroup").withColumn(
             "bucket", F.floor(F.col("bucket") / F.lit(ratio)).cast("long")
         )
-        merged = self._merge(rebucketed)
-        coarser._write_state(merged)
+        coarser._write_state(rebucketed, merge=True)
         coarser._record_batch(batch_id)
 
 
-def rollup_sink(
-    stream: DataFrame,
-    agg: ContinuousAggregate,
-    checkpoint_dir: str,
-):
-    """Maintain the continuous aggregate from a stream: each micro-batch
-    merges its partials under its batch id (replay-idempotent)."""
+def rollup_sink(stream: DataFrame, agg, checkpoint_dir: str):
+    """Maintain a rollup from a stream: each micro-batch calls
+    ``agg.refresh(batch, batch_id=...)`` under its batch id
+    (replay-idempotent). Serves every rollup: ``ContinuousAggregate``,
+    ``DistinctCountRollup`` and ``QuantileRollup``."""
 
     def _refresh(batch_df: DataFrame, batch_id: int) -> None:
         agg.refresh(batch_df, batch_id=batch_id)

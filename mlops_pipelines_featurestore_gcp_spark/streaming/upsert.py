@@ -74,13 +74,17 @@ def upsert_batch(
     carries an older version — late/replayed data cannot regress a key).
     """
     spark = batch.sparkSession
-    incoming = batch.withColumn(_BUCKET, bucket_col(key, n_buckets))
+    # Pinned before the touched-bucket probe (an eager job), so the merge
+    # reads the probe's blocks instead of re-running the batch's source
+    # (the rollup refresh's r13 barrier).
+    incoming = batch.withColumn(_BUCKET, bucket_col(key, n_buckets)).localCheckpoint(eager=False)
     touched = [r[_BUCKET] for r in incoming.select(_BUCKET).distinct().collect()]
     if not touched:
         return
-    if os.path.isdir(table_path) and any(
+    has_state = os.path.isdir(table_path) and any(
         e.startswith(f"{_BUCKET}=") for e in os.listdir(table_path)
-    ):
+    )
+    if has_state:
         existing = (
             # mergeSchema: batches may EVOLVE the schema (new columns);
             # untouched buckets keep their old files and read as NULL for
@@ -100,11 +104,13 @@ def upsert_batch(
     # rewritten dir is a single file (self-compacting — without this every
     # merge leaves one shard per contributing partition).
     latest = latest_by(merged.repartition(_BUCKET), [_BUCKET, key], version_col)
-    # The merge plan reads the same path it overwrites: eagerly materialize
-    # first, or a task retry mid-replacement would re-read partially
-    # rewritten buckets (same barrier as rollup._write_state). The
-    # checkpoint keeps the bucket partitioning.
-    latest = latest.localCheckpoint(eager=True)
+    if has_state:
+        # The merge plan reads the same path it overwrites: eagerly
+        # materialize first, or a task retry mid-replacement would re-read
+        # partially rewritten buckets (same barrier as
+        # rollup._write_state; a fresh table's plan reads only the batch).
+        # The checkpoint keeps the bucket partitioning.
+        latest = latest.localCheckpoint(eager=True)
     # dynamic overwrite replaces exactly the touched bucket partitions;
     # untouched buckets' files are never rewritten (or read)
     (

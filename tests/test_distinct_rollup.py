@@ -84,13 +84,13 @@ def test_null_time_rows_dropped(spark, tmp_path):
 
 
 def test_distinct_rollup_streaming_sink(spark, tmp_path):
-    from mlops_pipelines_featurestore_gcp_spark.streaming.distinct_rollup import distinct_rollup_sink
+    from mlops_pipelines_featurestore_gcp_spark.streaming.rollup import rollup_sink
 
     src = tmp_path / "src"
     _batch(spark, [(10, "a", 1), (20, "a", 2), (30, "a", 1)]).write.parquet(str(src))
     stream = spark.readStream.schema("t long, k string, u long").parquet(str(src))
     dr = _dr(tmp_path)
-    q = distinct_rollup_sink(stream, dr, str(tmp_path / "ckpt"))
+    q = rollup_sink(stream, dr, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     row = dr.read(spark).collect()[0]
     assert row.n_rows == 3 and row.approx_distinct == 2

@@ -155,6 +155,42 @@ def test_linucb_model_save_load_roundtrip(spark, tmp_path):
     assert p1 == p2
 
 
+def test_model_save_is_atomic(tmp_path, monkeypatch):
+    """``predict`` loads the path a retrain overwrites: a crash halfway
+    through the save (in ``json.dump``, or at the rename) leaves the
+    previous artifact byte-identical and loadable, with no temp file."""
+    import os
+
+    from mlops_pipelines_featurestore_gcp_spark.ml import LinUCBModel
+    from mlops_pipelines_featurestore_gcp_spark.sources import atomic
+
+    def model(seed):
+        rng = np.random.default_rng(seed)
+        return LinUCBModel(alpha=0.5, theta=rng.normal(size=(3, 2)), a_inv=rng.normal(size=(3, 2, 2)), counts=np.arange(3))
+
+    path = tmp_path / "model" / "policy.json"
+    model(0).save(str(path))
+    before = path.read_bytes()
+
+    def partial_dump(doc, f, **kwargs):
+        f.write('{"alpha": 0.5, "theta": [[')
+        raise OSError("simulated crash")
+
+    def failing_replace(src, dst):
+        raise OSError("simulated crash")
+
+    for owner, name, fake in ((atomic.json, "dump", partial_dump), (atomic.os, "replace", failing_replace)):
+        monkeypatch.setattr(owner, name, fake)
+        with pytest.raises(OSError, match="simulated crash"):
+            model(1).save(str(path))
+        monkeypatch.undo()
+        assert path.read_bytes() == before
+        assert os.listdir(path.parent) == ["policy.json"]
+        np.testing.assert_array_equal(LinUCBModel.load(str(path)).theta, model(0).theta)
+    model(1).save(str(path))
+    np.testing.assert_array_equal(LinUCBModel.load(str(path)).theta, model(1).theta)
+
+
 def test_reward_join_missing_factor_is_null(spark):
     obs = spark.createDataFrame([([1.0, 2.0], 0), ([1.0, 2.0], 99)], "obs array<double>, action long")
     factors = spark.createDataFrame([(0, [3.0, 4.0])], "id long, features array<double>")

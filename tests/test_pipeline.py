@@ -178,3 +178,31 @@ def test_retrain_is_one_pass_equal_to_the_read_back_oracle(spark, spark_jobs, tm
     assert 1 <= len(jobs) <= 2
     plans = _plans_of(spark, jobs)
     assert plans and not any("binaryFile" in p for p in plans)
+
+
+def test_retrain_with_null_actions_writes_int64_actions(spark, tmp_path):
+    """``enrich_with_reward`` keeps a ragged message's extra slots with a
+    NULL action. The retrain's handoff still types ``action`` as Int64List
+    (pandas hands the column over as float64), leaves the NULL out, and
+    the policy equals the read-back oracle's."""
+    from mlops_pipelines_featurestore_gcp_spark.sources.tfrecord import decode_example, unframe_records
+
+    cfg = PipelineConfig(rank_k=4, batch_size=3, num_actions=5)
+    clean = str(tmp_path / "clean")
+    _sink_shaped_table(spark, clean, 3, 40, cfg)
+    table = str(tmp_path / "sink")
+    ragged = F.transform("action", lambda a, i: F.when((i == 2) & (F.col("message_id") < "m2"), None).otherwise(a))
+    spark.read.parquet(clean).withColumn("action", ragged).write.partitionBy("_batch").parquet(table)
+    want = _read_back_fit(spark, table, str(tmp_path / "oracle"), cfg)
+
+    got = LinUCBModel.load(retrain(spark, table, str(tmp_path / "work"), config=cfg))
+    assert np.array_equal(got.theta, want.theta) and got.counts.tolist() == want.counts.tolist()
+    tfrecords = tmp_path / "work" / "tfrecords"
+    examples = [
+        decode_example(rec)
+        for name in os.listdir(tfrecords)
+        for rec in unframe_records((tfrecords / name).read_bytes())
+    ]
+    actions = [ex["action"] for ex in examples if "action" in ex]
+    assert len(actions) < len(examples)  # the NULL actions are left out
+    assert all(len(a) == 1 and isinstance(a[0], int) for a in actions)

@@ -1,7 +1,14 @@
 from __future__ import annotations
 
+import json
+import os
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
+from mlops_pipelines_featurestore_gcp_spark.sources import atomic
+from mlops_pipelines_featurestore_gcp_spark.streaming.distinct_rollup import DistinctCountRollup
 from mlops_pipelines_featurestore_gcp_spark.streaming.rollup import ContinuousAggregate, rollup_sink
 
 
@@ -15,8 +22,27 @@ def _ca(tmp_path, width=100):
     )
 
 
+def _hll(tmp_path, width=100):
+    return DistinctCountRollup(
+        str(tmp_path / "rollup"),
+        time_col="t",
+        item_col="u",
+        keys=["k"],
+        bucket_width=width,
+    )
+
+
 def _batch(spark, rows):
     return spark.createDataFrame(rows, "t long, k string, v double")
+
+
+def _both(spark, rows):
+    """``_batch`` plus ``u = long(v)``, the distinct store's item column."""
+    return _batch(spark, rows).withColumn("u", F.col("v").cast("long"))
+
+
+# Both stores run the same store code; ``n`` is each one's finalized count.
+ROLLUPS = pytest.mark.parametrize("make, n", [(_ca, "n"), (_hll, "n_rows")], ids=["sum", "hll"])
 
 
 def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
@@ -38,14 +64,19 @@ def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
     assert got == expect
 
 
-def test_replayed_batch_is_skipped(spark, tmp_path):
-    ca = _ca(tmp_path)
+@ROLLUPS
+def test_replayed_batch_is_skipped(spark, tmp_path, make, n):
+    ca = make(tmp_path)
     b = [(10, "a", 2.0)]
-    ca.refresh(_batch(spark, b), batch_id=0)
-    ca.refresh(_batch(spark, b), batch_id=0)  # replay under the same id
+    ca.refresh(_both(spark, b), batch_id=0)
+    ca.refresh(_both(spark, b), batch_id=0)  # replay under the same id
     rows = ca.read(spark).collect()
     assert len(rows) == 1
-    assert rows[0]["n"] == 1 and rows[0]["total"] == 2.0
+    assert rows[0][n] == 1
+    if n == "n":
+        assert rows[0]["total"] == 2.0
+    else:
+        assert rows[0]["approx_distinct"] == 1.0
 
 
 def test_untouched_buckets_preserved(spark, tmp_path):
@@ -139,7 +170,8 @@ def test_bucket_range_read_prunes_and_matches(spark, tmp_path):
     assert "pgroup" in plan
 
 
-def test_refresh_survives_store_wipe_after_materialize(spark, tmp_path, monkeypatch):
+@ROLLUPS
+def test_refresh_survives_store_wipe_after_materialize(spark, tmp_path, monkeypatch, make, n):
     """Kill-and-retry safety: the merged state must be fully materialized
     BEFORE the overwrite starts. Injecting a total store wipe between the
     localCheckpoint and the write simulates the worst mid-replacement
@@ -147,8 +179,8 @@ def test_refresh_survives_store_wipe_after_materialize(spark, tmp_path, monkeypa
     would lose rows or crash reading the vanishing files."""
     import shutil
 
-    ca = _ca(tmp_path)
-    ca.refresh(_batch(spark, [(10, "a", 1.0), (550, "b", 9.0)]), batch_id=0)
+    ca = make(tmp_path)
+    ca.refresh(_both(spark, [(10, "a", 1.0), (550, "b", 9.0)]), batch_id=0)
 
     real_overwrite = ContinuousAggregate._overwrite
 
@@ -157,14 +189,81 @@ def test_refresh_survives_store_wipe_after_materialize(spark, tmp_path, monkeypa
         real_overwrite(self, materialized)
 
     monkeypatch.setattr(ContinuousAggregate, "_overwrite", wiping_overwrite)
-    ca.refresh(_batch(spark, [(20, "a", 1.0)]), batch_id=1)
+    ca.refresh(_both(spark, [(20, "a", 1.0)]), batch_id=1)
     monkeypatch.undo()
 
-    got = {(r.bucket, r.k): r.n for r in ca.read(spark).collect()}
+    got = {(r.bucket, r.k): r[n] for r in ca.read(spark).collect()}
     # bucket 0 merged across both batches; bucket 5's state survived because
     # it was read into the merge before the wipe (same pgroup at width=100/64)
     assert got[(0, "a")] == 2
     assert got[(5, "b")] == 1
+
+
+def _exchanges(plan: str) -> int:
+    return len(re.findall(r"\bExchange\b", plan))
+
+
+@ROLLUPS
+def test_stateful_refresh_merges_inside_the_write_shuffle(spark, spark_jobs, tmp_path, monkeypatch, make, n):
+    """A stateful refresh runs at most 7 Spark jobs, and one Exchange sits
+    between the union of stored and incoming partials and the write: the
+    pgroup repartition the write needs, with the merge grouped inside it
+    (a merge shuffle on (bucket, keys) ahead of it makes 2 Exchanges and 8
+    jobs). Each rewritten pgroup dir still holds one file."""
+    ca = make(tmp_path)
+    ca.refresh(_both(spark, [(i * 7 % 9000, "abc"[i % 3], float(i % 50)) for i in range(600)]), batch_id=0)
+    batch = _both(spark, [(i * 11 % 9000, "abd"[i % 3], float(i % 70)) for i in range(600)])
+    plans = []
+    frame = type(batch)  # the concrete DataFrame class
+    real_checkpoint, real_overwrite = frame.localCheckpoint, ContinuousAggregate._overwrite
+
+    def recording_checkpoint(self, eager=True, storageLevel=None):
+        if eager:
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real_checkpoint(self, eager, storageLevel)
+
+    def recording_overwrite(self, materialized):
+        plans.append(materialized._jdf.queryExecution().executedPlan().toString())
+        real_overwrite(self, materialized)
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording_checkpoint)
+    monkeypatch.setattr(ContinuousAggregate, "_overwrite", recording_overwrite)
+    _, jobs = spark_jobs(lambda: ca.refresh(batch, batch_id=1))
+    monkeypatch.undo()
+
+    assert len(jobs) <= 7
+    barrier, write = plans
+    assert "Union" in barrier
+    assert _exchanges(barrier) + _exchanges(write) == 1
+    store = tmp_path / "rollup" / "state"
+    for d in store.iterdir():
+        if d.name.startswith("pgroup="):
+            assert len([f for f in d.iterdir() if f.name.endswith(".parquet")]) == 1
+
+
+@ROLLUPS
+def test_torn_mark_write_keeps_the_previous_mark(spark, tmp_path, monkeypatch, make, n):
+    """The replay mark is replaced atomically: a crash halfway through its
+    ``json.dump`` leaves the previous mark byte-identical and loadable,
+    with no temp file beside it."""
+    ca = make(tmp_path)
+    ca.refresh(_both(spark, [(10, "a", 1.0)]), batch_id=0)
+    mark = tmp_path / "rollup" / "_rollup_meta.json"
+    before = mark.read_bytes()
+
+    def partial_dump(doc, f, **kwargs):
+        f.write('{"last_batch_id": ')
+        raise OSError("simulated crash")
+
+    monkeypatch.setattr(atomic.json, "dump", partial_dump)
+    with pytest.raises(OSError, match="simulated crash"):
+        ca.refresh(_both(spark, [(20, "a", 2.0)]), batch_id=1)
+    monkeypatch.undo()
+
+    assert mark.read_bytes() == before
+    assert json.loads(before) == {"last_batch_id": 0}
+    assert sorted(os.listdir(tmp_path / "rollup")) == ["_rollup_meta.json", "state"]
+    assert ca._last_batch() == 0
 
 
 def test_compact_coalesces_and_preserves_state(spark, tmp_path):

@@ -4,6 +4,8 @@ TFRecord codec (S6/S7) — golden-output + property checks per SURVEY.md §5.2."
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -161,6 +163,27 @@ def test_tfrecord_df_roundtrip(spark, tmp_path):
     assert back.count() == 20
     got = {r.step_type: (r.reward, r.label) for r in back.collect()}
     assert got[7] == ([7.0, 3.5], "row7")
+
+
+def test_tfrecord_long_column_with_null_stays_int64(spark, tmp_path):
+    """A NULL makes pandas hand a ``long`` column over as float64; the
+    writer types it by its Spark type instead: the NULL is left out, the
+    rest stay Int64List, and a value that float64 already rounded raises
+    instead of being written wrong."""
+    schema = "id long, label string"
+    ok = spark.createDataFrame([(1, "x"), (None, "y"), (2**53, "z")], schema).coalesce(1)
+    out = str(tmp_path / "ok")
+    tfr.write_tfrecords(ok, out)
+    back = tfr.read_tfrecords(spark, out, ok.schema)
+    assert sorted(map(tuple, back.collect()), key=lambda r: r[1]) == [(1, "x"), (None, "y"), (2**53, "z")]
+    (name,) = [f for f in os.listdir(out) if f.endswith(".tfrecord")]
+    with open(os.path.join(out, name), "rb") as f:
+        examples = [tfr.decode_example(rec) for rec in tfr.unframe_records(f.read())]
+    assert [ex.get("id") for ex in examples] == [[1], None, [2**53]]  # Int64List, not FloatList
+
+    rounded = spark.createDataFrame([(1, "x"), (None, "y"), (2**60 + 1, "z")], schema).coalesce(1)
+    with pytest.raises(Exception, match="ValueError"):
+        tfr.write_tfrecords(rounded, str(tmp_path / "rounded"))
 
 
 def test_fixture_schemas_match_declared(sf_small):

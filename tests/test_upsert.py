@@ -55,6 +55,27 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert got[7] == "updated" and len(got) == 200
 
 
+def test_upsert_fresh_table_runs_one_pass_over_the_batch(spark, spark_jobs, tmp_path):
+    """The batch is pinned before the touched-bucket probe, and a fresh
+    table's merge cannot read the path it writes, so it takes no eager
+    barrier: 4 jobs (5 with an eager checkpoint before the write). A
+    stateful merge after it keeps latest-wins and one file per bucket."""
+    path = str(tmp_path / "tbl")
+    first = spark.range(0, 500).select(
+        (F.col("id") % 30).alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v"), F.col("id").alias("ver")
+    )
+    _, jobs = spark_jobs(lambda: upsert_batch(path, first, key="k", version_col="ver", n_buckets=16))
+    assert len(jobs) <= 4
+    upsert_batch(path, _df(spark, [(3, "late", 1), (31, "new", 1), (29, "up", 600)]), key="k", version_col="ver", n_buckets=16)
+    got = {r.k: (r.v, r.ver) for r in read_upsert_table(spark, path).collect()}
+    newest = {k: k + 30 * ((499 - k) // 30) for k in range(30)}
+    want = {k: (f"v{i}", i) for k, i in newest.items()} | {31: ("new", 1), 29: ("up", 600)}
+    assert got == want
+    for d in os.listdir(path):
+        if d.startswith("__kbucket="):
+            assert len([f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]) == 1
+
+
 def test_upsert_batch_replay_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "tbl")
     upsert_batch(path, _df(spark, [(1, "a", 1), (2, "b", 1)]), key="k", version_col="ver")

@@ -72,8 +72,9 @@ def _build_10x(spark, sf_dir: str) -> str:
 
 
 def _pre_r13_refresh(agg: ContinuousAggregate, batch, *, batch_id: int) -> None:
-    """refresh() as shipped BEFORE r13: no incoming-partials barrier."""
-    spark = batch.sparkSession
+    """refresh() without the r13 incoming-partials barrier (the rest is the
+    shipped stateful path: merge inside the pgroup shuffle, eager write
+    barrier)."""
     incoming = agg._partials(batch)
     assert agg._store_has_state(), "profile needs the stateful path"
     touched_groups = [
@@ -81,13 +82,11 @@ def _pre_r13_refresh(agg: ContinuousAggregate, batch, *, batch_id: int) -> None:
         for r in agg._with_pgroup(incoming).select("pgroup").distinct().collect()
     ]
     existing = (
-        spark.read.parquet(agg._store)
+        agg._state(batch.sparkSession)
         .where(F.col("pgroup").isin(touched_groups))
         .drop("pgroup")
     )
-    merged = agg._merge(existing.unionByName(incoming))
-    # pre-r13 _write_state always checkpointed eagerly
-    agg._overwrite(agg._with_pgroup(merged).localCheckpoint(eager=True))
+    agg._write_state(existing.unionByName(incoming), merge=True)
     agg._record_batch(batch_id)
 
 
