@@ -39,7 +39,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -52,7 +51,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
-from mlops_pipelines_featurestore_gcp_spark.sources.atomic import write_json
+from mlops_pipelines_featurestore_gcp_spark.sources.atomic import next_version, sweep, write_json
 from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import bucket_col, bucket_of, latest_by
 
 VALUES_SCHEMA = "entity_id string, feature_name string, value string, feature_time timestamp"
@@ -356,18 +355,17 @@ class FeatureStore:
         (``latest_wide`` on ``(bucket, entity_id)``) inside that
         partitioning, one file per bucket. One registry replace then makes
         the snapshot current, so a reader sees the old or the new snapshot
-        whole. Every other entry is then renamed away and removed, except
-        the snapshot just replaced, which a reader may still be scanning;
-        that also sweeps a snapshot whose refresh crashed before the
-        replace.
+        whole. ``sources.atomic.sweep`` then removes every other version
+        except the snapshot just replaced, which a reader may still be
+        scanning; that also sweeps a snapshot whose refresh crashed before
+        the replace.
         """
         log = self._log(featurestore_id, entity_type_id, at=at)
         names = feature_names(log)
         bucketed = log.withColumn("bucket", bucket_col("entity_id", buckets)).repartition("bucket")
         out = latest_wide(bucketed, ["bucket", "entity_id"], names).select("entity_id", *names, "bucket")
         root = Path(self.base_path) / "online" / featurestore_id / entity_type_id
-        versions = [int(p.name[1:]) for p in root.glob("v*") if p.name[1:].isdigit()]
-        snapshot = root / f"v{max(versions, default=0) + 1}"
+        snapshot = root / f"v{next_version(root)}"
         out.write.partitionBy("bucket").parquet(str(snapshot))
         # Record the modulus (sparse data writes fewer bucket dirs than it, so
         # the listing cannot recover it) and the schema the files read back
@@ -384,14 +382,7 @@ class FeatureStore:
             "schema": schema.jsonValue(),
         }
         self._save(doc)
-        for p in list(root.iterdir()):
-            if p.name not in (snapshot.name, Path(previous).name):
-                gone = p.with_name(f".drop-{uuid.uuid4().hex}")
-                p.rename(gone)
-                if gone.is_dir():
-                    shutil.rmtree(gone)
-                else:
-                    gone.unlink()
+        sweep(root, {snapshot.name, Path(previous).name})
         return str(snapshot)
 
     def _online_layout(self, featurestore_id: str, entity_type_id: str) -> dict:

@@ -22,8 +22,8 @@ batch's keys actually touch):
   pipeline (``minhash_lsh_pairs``) since the batch's shingle sets are in
   hand anyway.
 
-Replay idempotence: every store is a keyed upsert (latest-wins, dynamic
-partition overwrite), and a doc re-ingested on a retry maps to ITSELF in
+Replay idempotence: every store is a keyed upsert (latest-wins, one
+versioned commit per batch), and a doc re-ingested on a retry maps to ITSELF in
 the exact layer — reported ``kept``, stores unchanged. This mirrors the
 exactly-once construction of ``log_loop``/``upsert`` (the reference's
 at-least-once append, ``logger/main.py:107-150``, has no such guard).

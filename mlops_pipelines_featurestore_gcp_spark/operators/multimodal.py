@@ -22,9 +22,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# typed metadata carried alongside every payload
-MEDIA_META = "struct<mime: string, n_bytes: bigint, fingerprint: string>"
-
 FEATURE_DIM = 8
 
 

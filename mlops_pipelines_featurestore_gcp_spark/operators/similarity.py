@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mlops_pipelines_featurestore_gcp_spark.functions.vectors import cosine, dot, norm_sq
+from mlops_pipelines_featurestore_gcp_spark.operators.dedup import _spread
 
 # ANN query sets ride executor closures / broadcasts by module convention
 # ("tiny by construction"). The convention is ENFORCED here (the ml07
@@ -249,7 +250,7 @@ def brute_force_topk(
     # single-file sources arrive as one partition; rebalance so the
     # n·N scoring pass uses every core (guarded: no Exchange when the
     # input already has enough splits, as a real 100 TB scan would)
-    c = _maybe_spread(c)
+    c = _spread(c)
 
     def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         neg_inf = float("-inf")
@@ -378,7 +379,7 @@ def lsh_blocked_pairs(
     ranking) so the bucket assignment is bit-identical across engines.
     """
     base = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-    base = _maybe_spread(base)
+    base = _spread(base)
     sigged = hyperplane_signatures(base, vec_col="v", tables=tables, planes=planes, dim=dim)
     bucketed = sigged.select("vid", "v", F.posexplode("sigs").alias("t", "sig"))
     a = bucketed.select(F.col("vid").alias("id_a"), F.col("v").alias("va"), "t", "sig")
@@ -437,7 +438,7 @@ def coord_sign_blocked_pairs(
     ``lsh_blocked_pairs`` (md5-derived random hyperplanes) remains the
     generic alternative for data whose axes are degenerate (e.g. one-hot).
     """
-    base = _maybe_spread(
+    base = _spread(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),
@@ -582,7 +583,7 @@ def quantized_topk(
         F.col(vec_col).alias("qv"),
         norm_sq(F.col(vec_col), dim).alias("__qn"),
     )
-    c = _maybe_spread(
+    c = _spread(
         corpus_q.select(F.col(id_col).alias("neighbor_id"), "qvec", "qscale")
     )
     # Approximate per-query cosine RANKING: cos ≈ (qdot·s_c·s_q) /
@@ -650,20 +651,6 @@ def quantized_topk(
     )
     w2 = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return rescored.withColumn("rnk", F.row_number().over(w2)).where(F.col("rnk") <= k)
-
-
-def _maybe_spread(df: DataFrame) -> DataFrame:
-    """Rebalance single-file fixture inputs across all cores; no-op when the
-    plan already repartitions (``load_table`` rebalance — avoids a second
-    exchange) or the input already has at least default-parallelism splits
-    (an already-split 100 TB scan). Same two-guard shape as
-    ``dedup._spread``."""
-    if "Repartition" in df._jdf.queryExecution().logical().toString():
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
 
 
 def _hyperplane_components(planes: int, dim: int) -> list[list[float]]:
@@ -825,7 +812,7 @@ def lsh_topk(
         planes = auto_p if planes is None else planes
         tables = auto_t if tables is None else tables
 
-    c = _maybe_spread(corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")))
+    c = _spread(corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")))
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     csig = hyperplane_signatures(c, vec_col="cv", tables=tables, planes=planes, dim=dim)
     qsig = hyperplane_signatures(q, vec_col="qv", tables=tables, planes=planes, dim=dim)
@@ -1233,7 +1220,7 @@ def pq_topk(
     mm, ksub, dsub = codebooks.shape
     if corpus_codes is None:
         corpus_codes = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
-    corpus_codes = _maybe_spread(corpus_codes)
+    corpus_codes = _spread(corpus_codes)
 
     # driver-side query tables: tiny by construction (queries are the
     # broadcast-sized side everywhere in this module). adc_queries (same
@@ -1522,7 +1509,7 @@ def ivf_pq_topk(
     ct = cells
 
     if corpus_codes is None:
-        enc = _maybe_spread(ivfpq_encode(corpus, cells, books, id_col=id_col, vec_col=vec_col))
+        enc = _spread(ivfpq_encode(corpus, cells, books, id_col=id_col, vec_col=vec_col))
     else:
         enc = corpus_codes.select("neighbor_id", "cell", "codes", "rnorm")
 
@@ -2311,7 +2298,7 @@ def semantic_dedup_pairs(
     centroid list (the r9 flat full-corpus ``KMeans(k=N/1024)`` fit was
     O(N²·d/1024) per iteration).
     """
-    c = _maybe_spread(
+    c = _spread(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),
@@ -2469,7 +2456,7 @@ def semantic_dedup_keep_star(
     small and shuffle-joins on ``cell`` at the 10⁹-vector scale where k
     rows are GBs.
     """
-    c = _maybe_spread(
+    c = _spread(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),

@@ -44,13 +44,6 @@ from mlops_pipelines_featurestore_gcp_spark.functions.text import md5_long
 # mirrored VERBATIM in every oracle twin (plans/llm_data.py d11).
 TRACKING_PARAM_RE = "^(utm_[a-z]+|gclid|fbclid|msclkid|ref)="
 
-# RFC 3986 §2.3 unreserved characters: percent-encodings of these are
-# equivalent to the bare character and MUST be decoded for comparison
-# (§6.2.2.2). Everything else (%2F, %3F, …) changes structure and stays.
-_UNRESERVED = (
-    "ABCDEFGHIJKLMNOPQRSTUVWXYZ" "abcdefghijklmnopqrstuvwxyz" "0123456789" "-._~"
-)
-
 # host-cap auto-salting (round 12): estimated max-host-rows threshold at
 # which the one-window cap flips to the q37 two-phase salted rank. A
 # window's per-host state is tiny (one long per row) and spills

@@ -196,10 +196,11 @@ def compact_table(
     evenly.
 
     The frame is eagerly ``localCheckpoint``-ed before the dynamic
-    self-overwrite — the same crash-safety barrier as the rollup/upsert
-    stores (a task retry after the overwrite starts must not re-read the
-    half-deleted input). At 100 TB run this per PARTITION DIRECTORY
-    (date=…/), not on the table root: each invocation's checkpoint must
+    self-overwrite, because the caller owns ``path`` and it is rewritten in
+    place (a task retry after the overwrite starts must not re-read the
+    half-deleted input; the rollup/upsert stores avoid the barrier by
+    writing a new version instead). At 100 TB run this per PARTITION
+    DIRECTORY (date=…/), not on the table root: each invocation's checkpoint must
     fit cluster storage, and partition-scoped runs parallelize trivially.
 
     Returns {files_before, files_after, bytes, skipped}.

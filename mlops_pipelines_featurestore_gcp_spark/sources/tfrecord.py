@@ -239,15 +239,26 @@ def _exact_int(v):
     return int(v)
 
 
+def _exact_ints(arr):
+    """One cell of an integral array column: pandas widens every cell to
+    float64 when any element in the batch is NULL. Exact ints again, with
+    the NULL elements left out."""
+    if arr is None or arr.dtype.kind != "f":
+        return arr
+    return [i for i in map(_exact_int, arr) if i is not None]
+
+
 def _typed(pdf: pd.DataFrame, schema: T.StructType) -> pd.DataFrame:
-    """``pdf`` with every integral column holding exact Python ints (and
-    ``None``) again, so it encodes as the Int64List its Spark type says;
-    other columns pass as they are."""
-    fixed = {
-        f.name: pd.Series([_exact_int(v) for v in pdf[f.name]], index=pdf.index, dtype=object)
-        for f in schema.fields
-        if isinstance(f.dataType, _INTEGRAL) and pdf[f.name].dtype.kind == "f"
-    }
+    """``pdf`` with every integral column and integral array column holding
+    exact Python ints (and ``None``) again, so it encodes as the Int64List
+    its Spark type says; other columns pass as they are."""
+    fixed = {}
+    for f in schema.fields:
+        t, col = f.dataType, pdf[f.name]
+        if isinstance(t, _INTEGRAL) and col.dtype.kind == "f":
+            fixed[f.name] = pd.Series([_exact_int(v) for v in col], index=pdf.index, dtype=object)
+        elif isinstance(t, T.ArrayType) and isinstance(t.elementType, _INTEGRAL):
+            fixed[f.name] = pd.Series([_exact_ints(v) for v in col], index=pdf.index, dtype=object)
     return pdf.assign(**fixed) if fixed else pdf
 
 
@@ -260,8 +271,9 @@ def write_partition(
     empty partition).
 
     Each feature's list kind follows the column's Spark type: a NULL value
-    is left out of its Example, and an integral column stays an Int64List
-    even when a NULL made pandas hand it over as float64.
+    or array element is left out of its Example, and an integral column or
+    array stays an Int64List even when a NULL made pandas hand it over as
+    float64.
 
     Retry safety: the output filename is DETERMINISTIC per partition
     (``part-<partitionId>``) and each attempt writes to an attempt-private

@@ -26,9 +26,9 @@ then holds only for in-domain quantiles). For unbounded domains, compose
 with a log transform upstream; the store mechanics are identical.
 
 Storage reuses ``rollup.ContinuousAggregate`` verbatim with ``__bin`` as
-an extra key — pgroup partition layout, dynamic-partition overwrite,
-localCheckpoint write barrier, batch-id replay protection are all the
-same audited code path (streaming/rollup.py), not a re-implementation.
+an extra key — the pgroup partition layout and the versioned commit that
+carries state and batch-id replay mark in one pointer are the same
+audited code path (streaming/rollup.py), not a re-implementation.
 
 Rank arithmetic is INTEGER on purpose: rank k for quantile q = n_num/n_den
 is ceil(q*n) computed as (n_num*n + (n_den-1)) // n_den. A double 0.95*n

@@ -11,13 +11,14 @@ per (time bucket, key). A refresh:
 2. reads ONLY the stored partial-state partitions the batch touches
    (partition pruning on disk — untouched history is never opened);
 3. merges (partials are associative: count+count, sum+sum, min(min),
-   max(max)) and dynamic-partition-overwrites just those partitions.
+   max(max)) and writes just those partitions into the store's next
+   version, which shares every other partition with the current one.
 
 ``ContinuousAggregate`` is the one store behind every rollup. A subclass
 defines only what differs per aggregate — the partial aggregates of a
 batch (``_partial_aggs``), the merge aggregates over partials
 (``_merge_aggs``) and the read that finalizes them — and inherits the
-layout, replay mark, merge, write barrier, overwrite and range pruning:
+layout, versioned commit, replay mark, merge and range pruning:
 ``distinct_rollup.DistinctCountRollup`` keeps HLL sketches this way, and
 ``quantile_rollup.QuantileRollup`` wraps the store with a bin key.
 
@@ -43,24 +44,21 @@ grouped by (pgroup, bucket, keys) within it, so the merge needs no
 exchange of its own (the ``upsert_batch`` pattern). ``compact()`` remains
 for stores written by many fine-grained historical refreshes.
 
-Crash safety: the merged state is eagerly materialized
-(``localCheckpoint``) BEFORE the overwrite, because the refresh reads and
-rewrites the SAME path — without the barrier a lazy plan would read
-partitions mid-replacement on a task retry. The dynamic-overwrite mode
-is scoped to the DataFrameWriter ``.option(...)``, never set on the
-session, so sibling static-overwrite writers (e.g. the IVF index rebuild
-in ``operators/similarity.py``) keep truncate-on-overwrite semantics.
+Versioned commit (``sources/atomic.py``): a write puts the pgroup dirs it
+rewrites into ``{path}/v{n+1}``, hard-links the other dirs of ``v{n}``
+beside them, and one atomic replace of ``{path}/_current.json``
+(``{"version": n+1, "last_batch_id": b}``) makes it current. The write
+never targets what its lazy plan reads, so it needs no barrier.
 
-Rows with a NULL ``time_col`` are dropped with a warning counter: a NULL
-event time has no bucket (the same convention watermarking applies to
-late/null event times). Silently keeping them would strand state in a
-NULL partition that ``Column.isin`` pruning can never select.
+Rows with a NULL ``time_col`` are dropped: a NULL event time has no bucket
+(the watermark convention), and keeping them would strand state in a NULL
+partition that ``Column.isin`` pruning can never select.
 
 Exactly-once: ``refresh`` records the batch id high-water mark and skips
 replays (Structured Streaming re-delivers a failed micro-batch under the
 SAME id — merging partials twice would double-count, the additive-state
-failure mode append/recompute sinks don't have). The mark is replaced
-atomically, so a crash mid-write leaves the previous mark readable.
+failure mode append/recompute sinks don't have). The mark is in the
+pointer, so a crash before its replace leaves the previous state AND mark.
 ``rollup_sink`` wires any rollup into ``writeStream.foreachBatch``.
 
 Cascades compose: a day-grain ``ContinuousAggregate`` can ``refresh`` from
@@ -73,15 +71,12 @@ Spark's own map-side combine relies on.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mlops_pipelines_featurestore_gcp_spark.sources.atomic import write_json
-
-_META = "_rollup_meta.json"
+from mlops_pipelines_featurestore_gcp_spark.sources import atomic
 
 
 class ContinuousAggregate:
@@ -156,25 +151,18 @@ class ContinuousAggregate:
             .agg(*self._partial_aggs())
         )
 
-    def _last_batch(self) -> int:
-        meta = os.path.join(self.path, _META)
-        if os.path.exists(meta):
-            with open(meta) as f:
-                return json.load(f)["last_batch_id"]
-        return -1
+    def _current(self) -> dict:
+        """The pointer: ``{"version": n, "last_batch_id": b}``, version 0
+        and batch -1 for a new store."""
+        doc = atomic.read_pointer(self.path, legacy=("state", "_rollup_meta.json"))
+        return doc or {"version": 0, "last_batch_id": -1}
 
-    def _record_batch(self, batch_id: int) -> None:
-        write_json(os.path.join(self.path, _META), {"last_batch_id": batch_id})
+    def _dir(self, cur: dict) -> str:
+        return os.path.join(self.path, f"v{cur['version']}")
 
-    @property
-    def _store(self) -> str:
-        return os.path.join(self.path, "state")
-
-    def _store_has_state(self) -> bool:
-        store = self._store
-        return os.path.isdir(store) and any(
-            e.startswith("pgroup=") for e in os.listdir(store)
-        )
+    def _groups(self, cur: dict) -> list[str]:
+        """The pgroup dirs of version ``cur``."""
+        return [e for e in os.listdir(self._dir(cur)) if e.startswith("pgroup=")] if cur["version"] else []
 
     def _state(
         self,
@@ -187,72 +175,50 @@ class ContinuousAggregate:
         prune twice: the derived pgroup filter prunes partition DIRECTORIES;
         the bucket filter then skips parquet row-groups via min/max stats
         inside the surviving files."""
-        st = spark.read.parquet(self._store)
+        st = spark.read.parquet(self._dir(self._current()))
         bpp = self.buckets_per_partition
         if bucket_min is not None:
-            st = st.where(
-                (F.col("pgroup") >= bucket_min // bpp) & (F.col("bucket") >= bucket_min)
-            )
+            st = st.where((F.col("pgroup") >= bucket_min // bpp) & (F.col("bucket") >= bucket_min))
         if bucket_max is not None:
-            st = st.where(
-                (F.col("pgroup") <= bucket_max // bpp) & (F.col("bucket") <= bucket_max)
-            )
+            st = st.where((F.col("pgroup") <= bucket_max // bpp) & (F.col("bucket") <= bucket_max))
         return st
 
-    def _write_state(self, parts: DataFrame, *, merge: bool = False) -> None:
-        """Dynamic-partition-overwrite the pgroup dirs of ``parts``.
-
-        One shuffle routes each pgroup to one task, so every rewritten dir
-        is a single file (self-compacting). With ``merge``, partials that
-        share a (bucket, keys) are merged inside that shuffle.
-
-        A merge plan READS the same path it overwrites, so the state is
-        eagerly materialized first — a lazy plan would re-read partitions
-        mid-replacement on task retry (`test_rollup.py` injects a store
-        wipe between the two steps to prove the barrier holds). On a
-        FRESH store (r14, guide §5) the lineage cannot read the path —
-        ``refresh`` writes the batch partials directly and ``cascade_into``
-        reads a DIFFERENT store's path — so the barrier is skipped: one
-        action (the write) instead of two, and the batch is scanned once
-        by the write itself. Every read-own-path writer (stateful
-        refresh, ``compact``, an equal-width self-cascade) has state on
-        disk and keeps the barrier. The checkpoint keeps the pgroup
-        partitioning, so the write adds no shuffle.
-        """
-        staged = self._with_pgroup(parts).repartition("pgroup")
-        if merge:
-            staged = staged.groupBy("pgroup", "bucket", *self.keys).agg(*self._merge_aggs())
-        if self._store_has_state():
-            staged = staged.localCheckpoint(eager=True)
-        self._overwrite(staged)
-
-    def _overwrite(self, materialized: DataFrame) -> None:
-        (
-            materialized.write.mode("overwrite")
-            # writer-scoped: never mutate the session conf (sibling static
-            # overwrites — e.g. IVF index rebuilds — rely on truncate mode)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pgroup")
-            .parquet(self._store)
-        )
+    def _write_state(self, parts, *, merge=False, keep=lambda group: True, batch_id=None) -> None:
+        """Commit a new version holding the pgroup dirs of ``parts`` (if
+        any) and a hard link of each other group of the current version
+        that ``keep`` accepts, with replay mark ``batch_id`` (unchanged when
+        None). One shuffle routes each pgroup to one task, so a written dir
+        is one file; with ``merge``, partials sharing a (bucket, keys) merge
+        inside that shuffle."""
+        cur = self._current()
+        n = atomic.next_version(self.path)
+        new = os.path.join(self.path, f"v{n}")
+        if parts is not None:
+            staged = self._with_pgroup(parts).repartition("pgroup")
+            if merge:
+                staged = staged.groupBy("pgroup", "bucket", *self.keys).agg(*self._merge_aggs())
+            staged.write.partitionBy("pgroup").parquet(new)
+        os.makedirs(new, exist_ok=True)
+        if cur["version"]:
+            atomic.link_partitions(self._dir(cur), new, lambda g: keep(int(g.split("=", 1)[1])))
+        mark = cur["last_batch_id"] if batch_id is None else batch_id
+        atomic.commit(self.path, {"version": n, "last_batch_id": mark})
 
     # --- API ----------------------------------------------------------------
     def refresh(self, batch: DataFrame, *, batch_id: int = 0) -> None:
         """Merge a batch into the rollup; replay-safe via the batch-id
         high-water mark (partials are additive — merging a re-delivered
         batch twice would double-count)."""
-        if batch_id <= self._last_batch():
+        cur = self._current()
+        if batch_id <= cur["last_batch_id"]:
             return
         incoming = self._partials(batch)
-        if self._store_has_state():
-            # The touched-groups probe is an eager job; without a
-            # materialization barrier the merge below would re-run the
-            # whole batch scan + partial aggregation a second time —
-            # at production batch sizes that doubles the refresh's
-            # dominant cost (r13 optimization; guide §5: cache only what
-            # is reused AND expensive — the partials are both).
+        if self._groups(cur):
+            # The touched-groups probe is an eager job: pin the partials so
+            # the merge reuses its blocks instead of re-running the batch
+            # scan + partial aggregation (r13: reused AND expensive).
             incoming = incoming.localCheckpoint(eager=False)
-            # dynamic overwrite replaces whole pgroup dirs, so untouched
+            # a written pgroup dir replaces the whole group, so untouched
             # buckets in a touched group must ride along through the merge
             touched_groups = [
                 r["pgroup"]
@@ -263,10 +229,9 @@ class ContinuousAggregate:
                 .where(F.col("pgroup").isin(touched_groups))  # dir-pruned read
                 .drop("pgroup")
             )
-            self._write_state(existing.unionByName(incoming), merge=True)
+            self._write_state(existing.unionByName(incoming), merge=True, batch_id=batch_id)
         else:
-            self._write_state(incoming)
-        self._record_batch(batch_id)
+            self._write_state(incoming, batch_id=batch_id)
 
     def read(
         self,
@@ -292,41 +257,28 @@ class ContinuousAggregate:
         """Retention: drop all state with ``bucket < before_bucket``.
 
         Partition-grain first: pgroup dirs ENTIRELY older than the cutoff
-        are removed directly (no read, no rewrite — the dominant case for
-        steady retention on time-ordered data). Only the single boundary
-        group straddling the cutoff is filtered and rewritten. Cost is
-        O(dirs dropped) + one group rewrite, never a table scan.
+        are simply not linked into the new version (no read, no rewrite —
+        the dominant case for steady retention on time-ordered data). Only
+        the single boundary group straddling the cutoff is filtered and
+        rewritten. Cost is one group rewrite, never a table scan.
         """
-        import shutil
-
-        if not self._store_has_state():
+        cur = self._current()
+        groups = self._groups(cur)
+        if not groups:
             return
         boundary = before_bucket // self.buckets_per_partition
-        store = self._store
-        for entry in sorted(os.listdir(store)):
-            if not entry.startswith("pgroup="):
-                continue
-            g = int(entry.split("=", 1)[1])
-            if g < boundary:
-                shutil.rmtree(os.path.join(store, entry))
-        # boundary group: keep only >= cutoff rows (skip if cutoff aligns)
-        bpath = os.path.join(store, f"pgroup={boundary}")
-        if before_bucket % self.buckets_per_partition and os.path.isdir(bpath):
-            kept = (
-                self._state(spark)
-                .where((F.col("pgroup") == boundary) & (F.col("bucket") >= before_bucket))
-                .repartition("pgroup")
-                .localCheckpoint(eager=True)
-            )
-            shutil.rmtree(bpath)
-            if kept.limit(1).count():
-                self._overwrite(kept)
+        rewrite = bool(before_bucket % self.buckets_per_partition) and f"pgroup={boundary}" in groups
+        kept = None
+        if rewrite:  # boundary group: keep only >= cutoff rows (skip if cutoff aligns)
+            at = (F.col("pgroup") == boundary) & (F.col("bucket") >= before_bucket)
+            kept = self._state(spark).where(at).drop("pgroup")
+        self._write_state(kept, keep=lambda g: g > boundary or (g == boundary and not rewrite))
 
     def compact(self, spark: SparkSession) -> None:
         """Rewrite every pgroup dir to one file (idempotent: state rows are
         already one per (bucket, keys), so this only coalesces files from
         stores produced by many historical fine-grained refreshes)."""
-        if not self._store_has_state():
+        if not self._groups(self._current()):
             return
         self._write_state(self._state(spark).drop("pgroup"))
 
@@ -340,14 +292,13 @@ class ContinuousAggregate:
             raise ValueError(
                 f"coarser width {coarser.bucket_width} is not a multiple of {self.bucket_width}"
             )
-        if batch_id <= coarser._last_batch():
+        if batch_id <= coarser._current()["last_batch_id"]:
             return
         ratio = coarser.bucket_width // self.bucket_width
         rebucketed = self._state(spark).drop("pgroup").withColumn(
             "bucket", F.floor(F.col("bucket") / F.lit(ratio)).cast("long")
         )
-        coarser._write_state(rebucketed, merge=True)
-        coarser._record_batch(batch_id)
+        coarser._write_state(rebucketed, merge=True, batch_id=batch_id)
 
 
 def rollup_sink(stream: DataFrame, agg, checkpoint_dir: str):

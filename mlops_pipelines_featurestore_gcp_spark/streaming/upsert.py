@@ -12,13 +12,17 @@ incoming batch only touches the buckets its keys land in:
   3. latest-wins per key inside the union (``latest_by`` on the version
      column), grouped after the one shuffle that routes each bucket to one
      writer,
-  4. dynamic-partition-overwrite the touched buckets atomically.
+  4. write the touched buckets into the next version ``v{n+1}``, hard-link
+     the untouched ones from ``v{n}``, and commit with one atomic replace
+     of ``_current.json`` (``sources/atomic.py``): the write never reads
+     what it writes, so it needs no barrier, and a crash before the
+     replace leaves ``v{n}`` current and whole.
 
 Per-batch cost is proportional to |touched buckets| ≈ batch key spread,
 not table size. A retried/replayed batch recomputes the identical bucket
-contents and overwrites the same partitions — idempotent, the same
-exactly-once construction as ``log_loop``'s ``_batch`` sink (reference's
-at-least-once append path: ``logger/main.py:107-150`` has no such guard).
+contents — idempotent, the same exactly-once construction as
+``log_loop``'s ``_batch`` sink (reference's at-least-once append path:
+``logger/main.py:107-150`` has no such guard).
 
 ``bucket_col``/``bucket_of`` and ``latest_by`` are also the feature
 store's online layout and latest-wins read (``feature_store/store.py``).
@@ -34,6 +38,8 @@ import zlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mlops_pipelines_featurestore_gcp_spark.sources import atomic
 
 _BUCKET = "__kbucket"
 
@@ -60,6 +66,12 @@ def latest_by(df: DataFrame, keys: list[str], order) -> DataFrame:
     return df.groupBy(*keys).agg(winner).select("__latest.*")
 
 
+def _current(table_path: str) -> str | None:
+    """The current version directory of the table, ``None`` if it has none."""
+    doc = atomic.read_pointer(table_path, legacy=(f"{_BUCKET}=",))
+    return doc and os.path.join(table_path, f"v{doc['version']}")
+
+
 def upsert_batch(
     table_path: str,
     batch: DataFrame,
@@ -76,55 +88,45 @@ def upsert_batch(
     spark = batch.sparkSession
     # Pinned before the touched-bucket probe (an eager job), so the merge
     # reads the probe's blocks instead of re-running the batch's source
-    # (the rollup refresh's r13 barrier).
+    # (the rollup refresh's r13 pin).
     incoming = batch.withColumn(_BUCKET, bucket_col(key, n_buckets)).localCheckpoint(eager=False)
     touched = [r[_BUCKET] for r in incoming.select(_BUCKET).distinct().collect()]
     if not touched:
         return
-    has_state = os.path.isdir(table_path) and any(
-        e.startswith(f"{_BUCKET}=") for e in os.listdir(table_path)
-    )
-    if has_state:
+    current = _current(table_path)
+    merged = incoming
+    if current is not None:
         existing = (
             # mergeSchema: batches may EVOLVE the schema (new columns);
             # untouched buckets keep their old files and read as NULL for
             # columns they predate — plain parquet schema evolution
-            spark.read.option("basePath", table_path)
-            .option("mergeSchema", "true")
-            .parquet(table_path)
+            spark.read.option("mergeSchema", "true")
+            .parquet(current)
             .where(F.col(_BUCKET).isin(touched))  # partition-pruned read
         )
         # allowMissingColumns both ways: a batch can add columns the table
         # lacks, and late replays can lack columns the table gained
         merged = existing.unionByName(incoming, allowMissingColumns=True)
-    else:
-        merged = incoming
     # One shuffle routes each bucket to one partition; the latest-wins
     # aggregate runs inside it and the write keeps that layout, so every
     # rewritten dir is a single file (self-compacting — without this every
     # merge leaves one shard per contributing partition).
     latest = latest_by(merged.repartition(_BUCKET), [_BUCKET, key], version_col)
-    if has_state:
-        # The merge plan reads the same path it overwrites: eagerly
-        # materialize first, or a task retry mid-replacement would re-read
-        # partially rewritten buckets (same barrier as
-        # rollup._write_state; a fresh table's plan reads only the batch).
-        # The checkpoint keeps the bucket partitioning.
-        latest = latest.localCheckpoint(eager=True)
-    # dynamic overwrite replaces exactly the touched bucket partitions;
-    # untouched buckets' files are never rewritten (or read)
-    (
-        latest.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(_BUCKET)
-        .parquet(table_path)
-    )
+    n = atomic.next_version(table_path)
+    new = os.path.join(table_path, f"v{n}")
+    latest.write.partitionBy(_BUCKET).parquet(new)
+    if current is not None:
+        atomic.link_partitions(current, new)  # every bucket the batch did not touch
+    atomic.commit(table_path, {"version": n})
 
 
 def read_upsert_table(spark: SparkSession, table_path: str) -> DataFrame:
     """Current state of the upsert table (one row per key); mergeSchema so
     buckets untouched since a schema evolution still read (as NULLs)."""
-    return spark.read.option("mergeSchema", "true").parquet(table_path).drop(_BUCKET)
+    # no version yet: read a path that never exists, so Spark raises its
+    # path-not-found AnalysisException rather than reading an orphan
+    current = _current(table_path) or os.path.join(table_path, "v0")
+    return spark.read.option("mergeSchema", "true").parquet(current).drop(_BUCKET)
 
 
 def upsert_sink(
@@ -139,8 +141,9 @@ def upsert_sink(
     """Attach the upsert merge as a ``foreachBatch`` streaming sink.
 
     Batch replay after a crash re-runs ``upsert_batch`` for the same
-    micro-batch; latest-wins plus dynamic overwrite make the rerun converge
-    to the identical table state (idempotent effect, exactly-once result).
+    micro-batch; latest-wins plus the versioned commit make the rerun
+    converge to the identical table state (idempotent effect, exactly-once
+    result).
     """
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:

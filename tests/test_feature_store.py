@@ -561,7 +561,8 @@ def test_upsert_and_online_buckets_are_one_function(store, spark, tmp_path):
         rows = [(k, 1.0) for k in keys]
         table = str(tmp_path / f"upsert_{kind}")
         upsert_batch(table, spark.createDataFrame(rows, f"k {kind}, v double"), key="k", version_col="v", n_buckets=n)
-        upserted = {r.k: r["__kbucket"] for r in spark.read.parquet(table).collect()}
+        current = os.path.join(table, "v1")  # the table's first version
+        upserted = {r.k: r["__kbucket"] for r in spark.read.parquet(current).collect()}
         assert upserted == {k: bucket_of(k, n) for k in keys}
 
         fs = FeatureStore(spark, str(tmp_path / f"fs_{kind}"))

@@ -214,7 +214,7 @@ def test_pq_shortlist_tie_break_is_layout_independent(spark):
     outs2 = []
     for parts in (1, 5, 32):
         # ivf_pq builds codes in-call: vary layout via the corpus frame
-        # (an explicit repartition suppresses _maybe_spread's rebalance,
+        # (an explicit repartition suppresses dedup._spread's rebalance,
         # so the requested layout is what the ADC kernel actually sees)
         out = similarity.ivf_pq_topk(
             emb.repartition(parts), queries, dim=DIM, m=M, k=5, shortlist=7,

@@ -4,6 +4,8 @@ import json
 import os
 import re
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,6 +45,18 @@ def _both(spark, rows):
 
 # Both stores run the same store code; ``n`` is each one's finalized count.
 ROLLUPS = pytest.mark.parametrize("make, n", [(_ca, "n"), (_hll, "n_rows")], ids=["sum", "hll"])
+
+
+def _current(root) -> Path:
+    """The version dir the store's pointer names."""
+    root = Path(root)
+    return root / f"v{json.loads((root / '_current.json').read_text())['version']}"
+
+
+def _inodes(group: Path) -> dict:
+    """File name -> inode: equal across versions only for a hard link, never
+    for a rewrite or a copy."""
+    return {f.name: f.stat().st_ino for f in group.iterdir()}
 
 
 def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
@@ -131,7 +145,7 @@ def test_partition_dirs_bounded_by_bucket_group(spark, tmp_path):
     )
     rows = [(i * 100 + 5, "a", float(i)) for i in range(10)]
     ca.refresh(_batch(spark, rows), batch_id=0)
-    store = tmp_path / "rollup" / "state"
+    store = _current(tmp_path / "rollup")
     dirs = [e for e in store.iterdir() if e.name.startswith("pgroup=")]
     assert {d.name for d in dirs} == {"pgroup=0", "pgroup=1", "pgroup=2"}
     # self-compacting: one data file per pgroup dir per rewrite
@@ -146,12 +160,13 @@ def test_refresh_rewrites_only_touched_groups(spark, tmp_path):
         bucket_width=100, buckets_per_partition=4,
     )
     ca.refresh(_batch(spark, [(5, "a", 1.0), (905, "b", 2.0)]), batch_id=0)  # pgroups 0, 2
-    store = tmp_path / "rollup" / "state"
-    untouched_files = set((store / "pgroup=2").iterdir())
+    before = _current(tmp_path / "rollup")
+    untouched, touched = _inodes(before / "pgroup=2"), _inodes(before / "pgroup=0")
     ca.refresh(_batch(spark, [(105, "a", 3.0)]), batch_id=1)  # pgroup 0 only
-    assert set((store / "pgroup=2").iterdir()) == untouched_files, (
-        "refresh of pgroup 0 must not rewrite pgroup 2's files"
-    )
+    after = _current(tmp_path / "rollup")
+    assert after != before
+    assert _inodes(after / "pgroup=2") == untouched, "refresh of pgroup 0 must link pgroup 2's files"
+    assert not set(_inodes(after / "pgroup=0").values()) & set(touched.values())
     got = {(r.bucket, r.k): r.n for r in ca.read(spark).collect()}
     assert got == {(0, "a"): 1, (1, "a"): 1, (9, "b"): 1}
 
@@ -170,89 +185,63 @@ def test_bucket_range_read_prunes_and_matches(spark, tmp_path):
     assert "pgroup" in plan
 
 
-@ROLLUPS
-def test_refresh_survives_store_wipe_after_materialize(spark, tmp_path, monkeypatch, make, n):
-    """Kill-and-retry safety: the merged state must be fully materialized
-    BEFORE the overwrite starts. Injecting a total store wipe between the
-    localCheckpoint and the write simulates the worst mid-replacement
-    state a task retry could observe; a lazy merge plan (the r3 hazard)
-    would lose rows or crash reading the vanishing files."""
-    import shutil
-
-    ca = make(tmp_path)
-    ca.refresh(_both(spark, [(10, "a", 1.0), (550, "b", 9.0)]), batch_id=0)
-
-    real_overwrite = ContinuousAggregate._overwrite
-
-    def wiping_overwrite(self, materialized):
-        shutil.rmtree(self._store)  # worst-case: every old file already gone
-        real_overwrite(self, materialized)
-
-    monkeypatch.setattr(ContinuousAggregate, "_overwrite", wiping_overwrite)
-    ca.refresh(_both(spark, [(20, "a", 1.0)]), batch_id=1)
-    monkeypatch.undo()
-
-    got = {(r.bucket, r.k): r[n] for r in ca.read(spark).collect()}
-    # bucket 0 merged across both batches; bucket 5's state survived because
-    # it was read into the merge before the wipe (same pgroup at width=100/64)
-    assert got[(0, "a")] == 2
-    assert got[(5, "b")] == 1
-
-
 def _exchanges(plan: str) -> int:
     return len(re.findall(r"\bExchange\b", plan))
 
 
 @ROLLUPS
 def test_stateful_refresh_merges_inside_the_write_shuffle(spark, spark_jobs, tmp_path, monkeypatch, make, n):
-    """A stateful refresh runs at most 7 Spark jobs, and one Exchange sits
-    between the union of stored and incoming partials and the write: the
-    pgroup repartition the write needs, with the merge grouped inside it
-    (a merge shuffle on (bucket, keys) ahead of it makes 2 Exchanges and 8
-    jobs). Each rewritten pgroup dir still holds one file."""
+    """A stateful refresh runs at most 6 Spark jobs and takes no eager
+    checkpoint: its one write reads the current version and writes the
+    next. One Exchange sits in that write's plan between the union of
+    stored and incoming partials and the write: the pgroup repartition,
+    with the merge grouped inside it (a merge shuffle on (bucket, keys)
+    ahead of it makes 2 Exchanges). Each rewritten pgroup dir still holds
+    one file."""
     ca = make(tmp_path)
     ca.refresh(_both(spark, [(i * 7 % 9000, "abc"[i % 3], float(i % 50)) for i in range(600)]), batch_id=0)
     batch = _both(spark, [(i * 11 % 9000, "abd"[i % 3], float(i % 70)) for i in range(600)])
-    plans = []
-    frame = type(batch)  # the concrete DataFrame class
-    real_checkpoint, real_overwrite = frame.localCheckpoint, ContinuousAggregate._overwrite
+    frame, writer = type(batch), type(batch.write)
+    real_checkpoint, real_parquet = frame.localCheckpoint, writer.parquet
+    eagers, writes = [], []
 
     def recording_checkpoint(self, eager=True, storageLevel=None):
         if eager:
-            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            eagers.append(self)
         return real_checkpoint(self, eager, storageLevel)
 
-    def recording_overwrite(self, materialized):
-        plans.append(materialized._jdf.queryExecution().executedPlan().toString())
-        real_overwrite(self, materialized)
+    def recording_parquet(self, path, *args, **kwargs):
+        writes.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return real_parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(frame, "localCheckpoint", recording_checkpoint)
-    monkeypatch.setattr(ContinuousAggregate, "_overwrite", recording_overwrite)
+    monkeypatch.setattr(writer, "parquet", recording_parquet)
     _, jobs = spark_jobs(lambda: ca.refresh(batch, batch_id=1))
     monkeypatch.undo()
 
-    assert len(jobs) <= 7
-    barrier, write = plans
-    assert "Union" in barrier
-    assert _exchanges(barrier) + _exchanges(write) == 1
-    store = tmp_path / "rollup" / "state"
-    for d in store.iterdir():
+    assert len(jobs) <= 6
+    assert eagers == []
+    (write,) = writes
+    assert "Union" in write
+    assert _exchanges(write) == 1
+    for d in _current(tmp_path / "rollup").iterdir():
         if d.name.startswith("pgroup="):
             assert len([f for f in d.iterdir() if f.name.endswith(".parquet")]) == 1
 
 
 @ROLLUPS
 def test_torn_mark_write_keeps_the_previous_mark(spark, tmp_path, monkeypatch, make, n):
-    """The replay mark is replaced atomically: a crash halfway through its
-    ``json.dump`` leaves the previous mark byte-identical and loadable,
-    with no temp file beside it."""
+    """The pointer (version and replay mark) is replaced atomically: a
+    crash halfway through its ``json.dump`` leaves the previous pointer
+    byte-identical and loadable, with no temp file beside it; the version
+    written before the crash is an orphan the next commit sweeps."""
     ca = make(tmp_path)
     ca.refresh(_both(spark, [(10, "a", 1.0)]), batch_id=0)
-    mark = tmp_path / "rollup" / "_rollup_meta.json"
+    mark = tmp_path / "rollup" / "_current.json"
     before = mark.read_bytes()
 
     def partial_dump(doc, f, **kwargs):
-        f.write('{"last_batch_id": ')
+        f.write('{"version": ')
         raise OSError("simulated crash")
 
     monkeypatch.setattr(atomic.json, "dump", partial_dump)
@@ -261,9 +250,54 @@ def test_torn_mark_write_keeps_the_previous_mark(spark, tmp_path, monkeypatch, m
     monkeypatch.undo()
 
     assert mark.read_bytes() == before
-    assert json.loads(before) == {"last_batch_id": 0}
-    assert sorted(os.listdir(tmp_path / "rollup")) == ["_rollup_meta.json", "state"]
-    assert ca._last_batch() == 0
+    assert json.loads(before) == {"version": 1, "last_batch_id": 0}
+    assert sorted(os.listdir(tmp_path / "rollup")) == ["_current.json", "v1", "v2"]
+    assert ca._current()["last_batch_id"] == 0
+    ca.refresh(_both(spark, [(20, "a", 2.0)]), batch_id=1)
+    assert sorted(os.listdir(tmp_path / "rollup")) == ["_current.json", "v1", "v3"]
+
+
+@ROLLUPS
+@pytest.mark.parametrize("via", ["refresh", "cascade"])
+def test_crash_before_commit_merges_the_redelivered_batch_once(spark, tmp_path, monkeypatch, make, n, via):
+    """State and replay mark commit in one pointer replace. A crash after
+    batch 1's state is written but before the replace leaves the previous
+    version current and readable, and redelivering batch 1 merges it once:
+    (10,'a',1.0) and (20,'a',2.0) read n = 2, total = 3.0 (with the state
+    and the mark committed apart, the retry read n = 3, total = 5.0)."""
+    if via == "refresh":
+        store = make(tmp_path)
+
+        def apply(rows, batch_id):
+            store.refresh(_both(spark, rows), batch_id=batch_id)
+    else:
+        fine, store = make(tmp_path / "fine"), make(tmp_path / "coarse", width=200)
+
+        def apply(rows, batch_id):
+            fine.refresh(_both(spark, rows), batch_id=batch_id)
+            fine.cascade_into(store, spark, batch_id=batch_id)
+
+    def state():
+        (row,) = store.read(spark).collect()
+        return row[n], row["total"] if n == "n" else row["approx_distinct"]
+
+    apply([(10, "a", 1.0)], 0)
+    if via == "cascade":  # only the cascade crashes
+        fine.refresh(_both(spark, [(20, "a", 2.0)]), batch_id=1)
+
+    def crash(*args, **kwargs):
+        raise OSError("simulated crash")
+
+    monkeypatch.setattr(atomic.json, "dump", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        apply([(20, "a", 2.0)], 1)
+    monkeypatch.undo()
+    assert state() == (1, 1.0)
+
+    apply([(20, "a", 2.0)], 1)
+    assert state() == (2, 3.0 if n == "n" else 2.0)
+    apply([(20, "a", 2.0)], 1)  # a later redelivery is skipped by the mark
+    assert state() == (2, 3.0 if n == "n" else 2.0)
 
 
 def test_compact_coalesces_and_preserves_state(spark, tmp_path):
@@ -277,8 +311,7 @@ def test_compact_coalesces_and_preserves_state(spark, tmp_path):
     ca.compact(spark)
     after = {(r.bucket, r.k): (r.n, r.total) for r in ca.read(spark).collect()}
     assert before == after
-    store = tmp_path / "rollup" / "state"
-    for d in store.iterdir():
+    for d in _current(tmp_path / "rollup").iterdir():
         if d.name.startswith("pgroup="):
             assert len([f for f in d.iterdir() if f.name.endswith(".parquet")]) == 1
 
@@ -300,14 +333,14 @@ def test_expire_drops_old_partitions_and_filters_boundary(spark, tmp_path):
     )
     rows = [(i * 100 + 5, "a", float(i)) for i in range(12)]  # buckets 0..11
     ca.refresh(_batch(spark, rows), batch_id=0)
-    store = tmp_path / "rollup" / "state"
     # cutoff mid-group: bucket >= 6 kept → pgroup 0 dropped whole, pgroup 1
     # (buckets 4-7) filtered, pgroup 2 untouched
-    untouched = set((store / "pgroup=2").iterdir())
+    untouched = _inodes(_current(tmp_path / "rollup") / "pgroup=2")
     ca.expire(spark, before_bucket=6)
+    store = _current(tmp_path / "rollup")
     names = {e.name for e in store.iterdir() if e.name.startswith("pgroup=")}
     assert names == {"pgroup=1", "pgroup=2"}
-    assert set((store / "pgroup=2").iterdir()) == untouched  # not rewritten
+    assert _inodes(store / "pgroup=2") == untouched  # linked, not rewritten
     got = sorted(r.bucket for r in ca.read(spark).collect())
     assert got == [6, 7, 8, 9, 10, 11]
 
@@ -318,12 +351,13 @@ def test_expire_aligned_cutoff_is_pure_deletion(spark, tmp_path):
         bucket_width=100, buckets_per_partition=4,
     )
     ca.refresh(_batch(spark, [(i * 100 + 5, "a", 1.0) for i in range(12)]), batch_id=0)
-    store = tmp_path / "rollup" / "state"
-    survivors = {n: set((store / n).iterdir()) for n in ("pgroup=1", "pgroup=2")}
+    store = _current(tmp_path / "rollup")
+    survivors = {n: _inodes(store / n) for n in ("pgroup=1", "pgroup=2")}
     ca.expire(spark, before_bucket=4)  # exactly at a group boundary
+    store = _current(tmp_path / "rollup")
     assert {e.name for e in store.iterdir() if e.name.startswith("pgroup=")} == {"pgroup=1", "pgroup=2"}
     for n, files in survivors.items():
-        assert set((store / n).iterdir()) == files  # zero rewrites
+        assert _inodes(store / n) == files  # zero rewrites
     assert sorted(r.bucket for r in ca.read(spark).collect()) == list(range(4, 12))
 
 
@@ -341,3 +375,21 @@ def test_cascade_after_expire_reflects_retention(spark, tmp_path):
     got = {(r.bucket, r.k): r.n for r in coarse.read(spark).collect()}
     # only fine buckets 4..7 survive -> one coarse bucket (4..7)//4 == 1
     assert got == {(1, "a"): 4}
+
+
+@ROLLUPS
+@pytest.mark.parametrize("old", ["state", "_rollup_meta.json"])
+def test_unversioned_store_fails_loudly(spark, tmp_path, make, n, old):
+    """A store written in the unversioned layout (``state/`` and
+    ``_rollup_meta.json``, no pointer) raises instead of reading as empty
+    and merging every batch into a new state beside it."""
+    ca = make(tmp_path)
+    (tmp_path / "rollup").mkdir()
+    if old == "state":
+        (tmp_path / "rollup" / "state" / "pgroup=0").mkdir(parents=True)
+    else:
+        (tmp_path / "rollup" / old).write_text('{"last_batch_id": 3}')
+    with pytest.raises(ValueError, match="unversioned layout; rebuild"):
+        ca.refresh(_both(spark, [(10, "a", 1.0)]), batch_id=4)
+    with pytest.raises(ValueError, match="unversioned layout; rebuild"):
+        ca.read(spark)

@@ -186,6 +186,32 @@ def test_tfrecord_long_column_with_null_stays_int64(spark, tmp_path):
         tfr.write_tfrecords(rounded, str(tmp_path / "rounded"))
 
 
+def test_tfrecord_long_array_with_null_element_stays_int64(spark, tmp_path):
+    """A NULL element makes pandas hand every cell of an ``array<long>``
+    column over as float64; the writer types it by its Spark type instead:
+    the NULL element is left out, the rest stay Int64List, a NULL array is
+    left out of its Example, and an element that float64 already rounded
+    raises instead of being written wrong."""
+    schema = "ids array<long>, label string"
+    ok = spark.createDataFrame([([1, None], "x"), ([2**53], "y"), (None, "z")], schema).coalesce(1)
+    out = str(tmp_path / "ok")
+    tfr.write_tfrecords(ok, out)
+    back = tfr.read_tfrecords(spark, out, ok.schema)
+    assert sorted(map(tuple, back.collect()), key=lambda r: r[1]) == [([1], "x"), ([2**53], "y"), ([], "z")]
+    (name,) = [f for f in os.listdir(out) if f.endswith(".tfrecord")]
+    with open(os.path.join(out, name), "rb") as f:
+        examples = [tfr.decode_example(rec) for rec in tfr.unframe_records(f.read())]
+    assert [ex.get("ids") for ex in examples] == [[1], [2**53], None]  # Int64List, not FloatList
+
+    exact = spark.createDataFrame([([2**60 + 1], "x")], schema).coalesce(1)  # no NULL: not widened
+    tfr.write_tfrecords(exact, str(tmp_path / "exact"))
+    assert [r.ids for r in tfr.read_tfrecords(spark, str(tmp_path / "exact"), exact.schema).collect()] == [[2**60 + 1]]
+
+    rounded = spark.createDataFrame([([1, None], "x"), ([2**60 + 1], "y")], schema).coalesce(1)
+    with pytest.raises(Exception, match="ValueError"):
+        tfr.write_tfrecords(rounded, str(tmp_path / "rounded"))
+
+
 def test_fixture_schemas_match_declared(sf_small):
     """Early drift alarm: the driver regenerates /root/testdata between
     rounds, and a physical-type change (events.ts went int64-ns →

@@ -5,12 +5,15 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from mlops_pipelines_featurestore_gcp_spark.sources import atomic
 from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import (
     read_upsert_table,
     upsert_batch,
@@ -20,6 +23,18 @@ from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import (
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, v string, ver long")
+
+
+def _buckets(path) -> dict:
+    """``__kbucket=`` dir -> {file name: inode} in the version the table's
+    pointer names; an inode is shared across versions only by a hard link."""
+    root = Path(path)
+    current = root / f"v{json.loads((root / '_current.json').read_text())['version']}"
+    return {
+        d.name: {f.name: f.stat().st_ino for f in d.iterdir()}
+        for d in current.iterdir()
+        if d.name.startswith("__kbucket=")
+    }
 
 
 def test_upsert_insert_update_and_late_version(spark, tmp_path):
@@ -38,19 +53,13 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         F.col("id").alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v"), F.lit(1).cast("long").alias("ver")
     )
     upsert_batch(path, big, key="k", version_col="ver", n_buckets=16)
-    before = {
-        d: sorted(os.listdir(os.path.join(path, d)))
-        for d in os.listdir(path)
-        if d.startswith("__kbucket=")
-    }
+    before = _buckets(path)
     upsert_batch(path, _df(spark, [(7, "updated", 2)]), key="k", version_col="ver", n_buckets=16)
-    after = {
-        d: sorted(os.listdir(os.path.join(path, d)))
-        for d in os.listdir(path)
-        if d.startswith("__kbucket=")
-    }
+    after = _buckets(path)
+    assert after.keys() == before.keys()
     changed = [d for d in before if before[d] != after[d]]
     assert len(changed) == 1, f"exactly one bucket dir should be rewritten, got {changed}"
+    assert not set(after[changed[0]].values()) & set(before[changed[0]].values())
     got = {r.k: r.v for r in read_upsert_table(spark, path).collect()}
     assert got[7] == "updated" and len(got) == 200
 
@@ -71,9 +80,57 @@ def test_upsert_fresh_table_runs_one_pass_over_the_batch(spark, spark_jobs, tmp_
     newest = {k: k + 30 * ((499 - k) // 30) for k in range(30)}
     want = {k: (f"v{i}", i) for k, i in newest.items()} | {31: ("new", 1), 29: ("up", 600)}
     assert got == want
-    for d in os.listdir(path):
-        if d.startswith("__kbucket="):
-            assert len([f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]) == 1
+    for files in _buckets(path).values():
+        assert len([f for f in files if f.endswith(".parquet")]) == 1
+
+
+def test_stateful_upsert_writes_the_next_version_in_one_pass(spark, spark_jobs, tmp_path):
+    """A stateful upsert reads the current version and writes the next, so
+    it takes no eager barrier: at most 5 jobs (6 with one), for a 3 000-row
+    batch and for a 1-key batch alike."""
+    path = str(tmp_path / "tbl")
+    first = spark.range(0, 3000).select(
+        (F.col("id") % 1000).alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v"), F.col("id").alias("ver")
+    )
+    upsert_batch(path, first, key="k", version_col="ver", n_buckets=16)
+    wide = spark.range(0, 3000).select(
+        (F.col("id") % 1500).alias("k"), F.concat(F.lit("w"), F.col("id")).alias("v"), (F.col("id") + 5000).alias("ver")
+    )
+    _, jobs = spark_jobs(lambda: upsert_batch(path, wide, key="k", version_col="ver", n_buckets=16))
+    assert len(jobs) <= 5
+    _, jobs = spark_jobs(lambda: upsert_batch(path, _df(spark, [(3, "x", 99999)]), key="k", version_col="ver", n_buckets=16))
+    assert len(jobs) <= 5
+    got = {r.k: (r.v, r.ver) for r in read_upsert_table(spark, path).collect()}
+    assert len(got) == 1500 and got[3] == ("x", 99999) and got[1499] == ("w2999", 7999)
+
+
+def test_crash_before_commit_keeps_the_previous_table(spark, tmp_path, monkeypatch):
+    """The pointer replace is the commit: a crash before it leaves the
+    previous table reading back unchanged (its bucket files untouched), and
+    a rerun of the batch converges to the state an uncrashed run reaches."""
+    path, clean = str(tmp_path / "tbl"), str(tmp_path / "clean")
+    first = _df(spark, [(k, f"a{k}", 1) for k in range(40)])
+    batch = _df(spark, [(k, f"b{k}", 2) for k in range(0, 40, 3)] + [(99, "new", 1)])
+    for p in (path, clean):
+        upsert_batch(p, first, key="k", version_col="ver", n_buckets=8)
+    upsert_batch(clean, batch, key="k", version_col="ver", n_buckets=8)
+    before = sorted(map(tuple, read_upsert_table(spark, path).collect()))
+    files = _buckets(path)
+
+    def crash(*args, **kwargs):
+        raise OSError("simulated crash")
+
+    monkeypatch.setattr(atomic, "write_json", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        upsert_batch(path, batch, key="k", version_col="ver", n_buckets=8)
+    monkeypatch.undo()
+    assert sorted(map(tuple, read_upsert_table(spark, path).collect())) == before
+    assert _buckets(path) == files
+
+    upsert_batch(path, batch, key="k", version_col="ver", n_buckets=8)
+    want = sorted(map(tuple, read_upsert_table(spark, clean).collect()))
+    assert sorted(map(tuple, read_upsert_table(spark, path).collect())) == want
+    assert sorted(os.listdir(path)) == ["_current.json", "v1", "v3"]
 
 
 def test_upsert_batch_replay_is_idempotent(spark, tmp_path):
@@ -111,23 +168,18 @@ def test_upsert_streaming_foreachbatch(spark, tmp_path):
 
 
 def test_upsert_schema_evolution_new_column(spark, tmp_path):
-    from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import read_upsert_table, upsert_batch
-
     path = str(tmp_path / "tbl")
     b1 = spark.createDataFrame([("k1", 1, 10.0), ("k2", 1, 20.0)], "id string, ver int, v double")
     upsert_batch(path, b1, key="id", version_col="ver", n_buckets=8)
     # batch 2 ADDS a column and updates k2 only
     b2 = spark.createDataFrame([("k2", 2, 21.0, "new")], "id string, ver int, v double, tag string")
     upsert_batch(path, b2, key="id", version_col="ver", n_buckets=8)
-    got = {r.id: (r.ver, r.v, r.tag) for r in
-           spark.read.option("mergeSchema", "true").parquet(path).drop("__kbucket").collect()}
+    got = {r.id: (r.ver, r.v, r.tag) for r in read_upsert_table(spark, path).collect()}
     assert got["k2"] == (2, 21.0, "new")
     assert got["k1"][0] == 1 and got["k1"][2] is None  # untouched row: NULL for new col
 
 
 def test_upsert_replay_missing_new_column(spark, tmp_path):
-    from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import upsert_batch
-
     path = str(tmp_path / "tbl")
     wide = spark.createDataFrame([("k1", 2, 1.0, "x")], "id string, ver int, v double, tag string")
     upsert_batch(path, wide, key="id", version_col="ver", n_buckets=8)
@@ -135,23 +187,40 @@ def test_upsert_replay_missing_new_column(spark, tmp_path):
     # regress the key
     narrow = spark.createDataFrame([("k1", 1, 0.5)], "id string, ver int, v double")
     upsert_batch(path, narrow, key="id", version_col="ver", n_buckets=8)
-    row = spark.read.option("mergeSchema", "true").parquet(path).collect()[0]
+    (row,) = read_upsert_table(spark, path).collect()
     assert (row.ver, row.v, row.tag) == (2, 1.0, "x")
 
 
 def test_upsert_buckets_self_compact(spark, tmp_path):
-    from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import upsert_batch
-
     path = tmp_path / "tbl"
     for v in range(3):  # three merges into the same bucket set
         b = spark.createDataFrame(
             [(f"k{i}", v, float(v)) for i in range(20)], "id string, ver int, v double"
         )
         upsert_batch(str(path), b, key="id", version_col="ver", n_buckets=4)
-    for d in path.iterdir():
-        if d.name.startswith("__kbucket="):
-            files = [f for f in d.iterdir() if f.name.endswith(".parquet")]
-            assert len(files) == 1, f"{d.name}: {len(files)} files"
+    buckets = _buckets(path)
+    assert len(buckets) == 4
+    for d, files in buckets.items():
+        parquet = [f for f in files if f.endswith(".parquet")]
+        assert len(parquet) == 1, f"{d}: {len(parquet)} files"
+
+
+def test_unversioned_table_fails_loudly(spark, tmp_path):
+    """A table written in the unversioned layout (``__kbucket=`` dirs at
+    its root, no pointer) raises instead of reading as empty: the dedup
+    index would otherwise re-admit every doc against an empty store."""
+    from mlops_pipelines_featurestore_gcp_spark.operators.incremental import IncrementalDedupIndex
+
+    path = tmp_path / "tbl"
+    (path / "__kbucket=3").mkdir(parents=True)
+    with pytest.raises(ValueError, match="unversioned layout; rebuild"):
+        upsert_batch(str(path), _df(spark, [(1, "a", 1)]), key="k", version_col="ver", n_buckets=8)
+    with pytest.raises(ValueError, match="unversioned layout; rebuild"):
+        read_upsert_table(spark, str(path))
+    (tmp_path / "idx" / "exact" / "__kbucket=0").mkdir(parents=True)
+    docs = spark.createDataFrame([(1, "the quick brown fox jumps")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="unversioned layout; rebuild"):
+        IncrementalDedupIndex(spark, str(tmp_path / "idx")).ingest(docs, "doc_id", "text")
 
 
 # a batch of (key, version) rows; a row's value is a function of both, so

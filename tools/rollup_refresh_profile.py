@@ -72,11 +72,11 @@ def _build_10x(spark, sf_dir: str) -> str:
 
 
 def _pre_r13_refresh(agg: ContinuousAggregate, batch, *, batch_id: int) -> None:
-    """refresh() without the r13 incoming-partials barrier (the rest is the
-    shipped stateful path: merge inside the pgroup shuffle, eager write
-    barrier)."""
+    """refresh() without the r13 incoming-partials pin (the rest is the
+    shipped stateful path: merge inside the pgroup shuffle, written into
+    the next version and committed with the batch id)."""
     incoming = agg._partials(batch)
-    assert agg._store_has_state(), "profile needs the stateful path"
+    assert agg._groups(agg._current()), "profile needs the stateful path"
     touched_groups = [
         r["pgroup"]
         for r in agg._with_pgroup(incoming).select("pgroup").distinct().collect()
@@ -86,8 +86,7 @@ def _pre_r13_refresh(agg: ContinuousAggregate, batch, *, batch_id: int) -> None:
         .where(F.col("pgroup").isin(touched_groups))
         .drop("pgroup")
     )
-    agg._write_state(existing.unionByName(incoming), merge=True)
-    agg._record_batch(batch_id)
+    agg._write_state(existing.unionByName(incoming), merge=True, batch_id=batch_id)
 
 
 def main() -> None:
