@@ -40,6 +40,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
+from datetime import datetime
 from pathlib import Path
 
 import pyarrow as pa
@@ -254,9 +255,11 @@ class FeatureStore:
         ``feature_time=None`` mirrors the reference's wall-clock import time
         (``:21-23``); a string naming a source column gives event-time
         imports (the fix for the reference's always-"now" versioning); any
-        other value is a literal timestamp. ``worker_count`` maps to write
-        parallelism (``repartition``), like the import job's worker knob
-        (``:11,45``). Returns rows written.
+        other value is a literal timestamp. A string that is neither a
+        column nor an ISO timestamp raises ``ValueError`` before any job
+        runs, instead of importing every row with a NULL time.
+        ``worker_count`` maps to write parallelism (``repartition``), like
+        the import job's worker knob (``:11,45``). Returns rows written.
         """
         feats = feature_fields or [c for c in src.columns if c != entity_id_field]
         if feature_time is None:
@@ -264,6 +267,13 @@ class FeatureStore:
         elif isinstance(feature_time, str) and feature_time in src.columns:
             time_col = F.col(feature_time)
         else:
+            if isinstance(feature_time, str):
+                try:
+                    datetime.fromisoformat(feature_time)
+                except ValueError:
+                    raise ValueError(
+                        f"feature_time {feature_time!r} is neither a source column nor an ISO timestamp"
+                    ) from None
             time_col = F.lit(feature_time)
         long_df = src.select(
             F.col(entity_id_field).cast("string").alias("entity_id"),

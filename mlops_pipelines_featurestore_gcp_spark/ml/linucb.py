@@ -16,8 +16,9 @@ multiply A−λI and b by the epoch count, which we expose as ``num_epochs``
 for numerical parity).
 
 Scale design: sufficient stats are **per-partition partial aggregates** —
-one ``mapInPandas`` pass emits a k×k/k partial per arm present in each
-input partition, with no shuffle (no task ever holds an arm's full row set),
+one ``mapInArrow`` pass emits a k×k/k partial per arm present in each
+input partition, with no shuffle (no task ever holds an arm's full row set;
+X is the flattened Arrow ``obs`` column reshaped, never a per-row stack),
 and only the tiny ``partitions × arms`` partial set is reduced on the
 driver (``solve``). ``arm_partials`` is that pass's body, so the retrain
 (``pipeline.py``) runs it in the same pass that writes its TFRecord files.
@@ -29,9 +30,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,24 +46,27 @@ from mlops_pipelines_featurestore_gcp_spark.sources.atomic import write_json
 PARTIALS_SCHEMA = "action long, a_flat array<double>, b_vec array<double>, n long"
 
 
-def arm_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def arm_partials(batches: Iterator[pa.RecordBatch], context_dim: int) -> Iterator[pa.RecordBatch]:
     """One partition's per-arm ``(XᵀX, Xᵀr, n)`` as ``PARTIALS_SCHEMA`` rows:
-    a ``mapInPandas`` body over ``(obs, action, reward)`` rows. Rows with a
-    NULL field are skipped; an empty partition yields nothing."""
+    a ``mapInArrow`` body over ``(obs, action, reward)`` rows. A row is
+    skipped when a field is NULL (or NaN), or ``obs`` holds a NULL element
+    or is not ``context_dim`` long; an empty partition yields nothing."""
     acc = {}  # action -> (XᵀX, Xᵀr, n) over this partition's batches
-    for pdf in batches:
-        pdf = pdf[pdf["obs"].notna() & pdf["action"].notna() & pdf["reward"].notna()]
-        if pdf.empty:
+    for batch in batches:
+        full = pc.equal(pc.list_value_length(batch["obs"]), context_dim)
+        batch = batch.filter(pc.and_(pc.is_valid(batch["action"]), full))
+        X = pc.list_flatten(batch["obs"]).to_numpy(zero_copy_only=False).reshape(-1, context_dim)  # NULL → NaN
+        r = batch["reward"].to_numpy(zero_copy_only=False)
+        keep = ~(np.isnan(X).any(axis=1) | np.isnan(r))
+        if not keep.any():
             continue
-        X = np.stack(pdf["obs"].to_numpy())
-        r = pdf["reward"].to_numpy()
-        actions = pdf["action"].to_numpy().astype(np.int64)
+        X, r, actions = X[keep], r[keep], batch["action"].to_numpy()[keep]
         for a in np.unique(actions).tolist():
             m = actions == a
             xtx, xtr, n = acc.get(a, (0.0, 0.0, 0))
             acc[a] = (xtx + X[m].T @ X[m], xtr + X[m].T @ r[m], n + int(m.sum()))
     if acc:
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
                 "action": list(acc),
                 "a_flat": [xtx.ravel().tolist() for xtx, _, _ in acc.values()],
@@ -95,7 +102,8 @@ class LinUCB:
             F.col(reward_col).cast("double").alias("reward"),
         )
         # ≤ partitions × num_actions tiny rows — model state
-        return self.solve(prepped.mapInPandas(arm_partials, PARTIALS_SCHEMA).collect())
+        partials = prepped.mapInArrow(partial(arm_partials, context_dim=self.context_dim), PARTIALS_SCHEMA)
+        return self.solve(partials.collect())
 
     def solve(self, partials: list) -> "LinUCBModel":
         """The driver-side reduction: ``arm_partials`` rows → fitted policy."""

@@ -129,10 +129,10 @@ def _ingest_and_train(
     spark: SparkSession, training_table: str, work_dir: str, cfg: PipelineConfig
 ) -> tuple[str, str]:
     """The shared tail in one pass: SELECT * LIMIT n → each partition writes
-    its TFRecord file and yields its LinUCB partials over the same rows →
-    solve → artifact. Nothing reads the files back: obs and reward are
-    rounded to float32 (FloatList) in the plan, so the partials sum what a
-    read-back returns and the files' bytes do not change."""
+    its TFRecord file and yields its LinUCB partials over the same Arrow
+    batches → solve → artifact. Nothing reads the files back: obs and reward
+    are rounded to float32 (FloatList) in the plan, so the partials sum what
+    a read-back returns and the files' bytes do not change."""
     nested = spark.read.schema(TRAJECTORY_SCHEMA).parquet(training_table).limit(cfg.max_rows)
     flat_rows = (
         flatten_observations(nested)
@@ -144,17 +144,16 @@ def _ingest_and_train(
         )
     )
     tfrecord_dir = f"{work_dir}/tfrecords"
-    schema = flat_rows.schema
 
     def _write_and_sum(batches):
-        return arm_partials(tfrecord.write_partition(batches, tfrecord_dir, schema))
+        return arm_partials(tfrecord.write_partition(batches, tfrecord_dir), cfg.rank_k)
 
     model = LinUCB(
         context_dim=cfg.rank_k,
         num_actions=cfg.num_actions,
         alpha=cfg.agent_alpha,
         tikhonov=cfg.tikhonov_weight,
-    ).solve(flat_rows.mapInPandas(_write_and_sum, PARTIALS_SCHEMA).collect())
+    ).solve(flat_rows.mapInArrow(_write_and_sum, PARTIALS_SCHEMA).collect())
     model_path = f"{work_dir}/model/policy.json"
     model.save(model_path)
     return tfrecord_dir, model_path

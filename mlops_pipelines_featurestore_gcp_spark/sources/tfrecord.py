@@ -15,14 +15,16 @@ formats are public and simple, so the engine implements them directly:
   packed).
 
 Unlike the reference we do NOT double-serialize (its rows are tensor→bytes→
-Example→bytes, SURVEY §4.1 anti-pattern): long columns become Int64List,
-double columns FloatList, strings/binary BytesList, and array<T> columns
-map to multi-value lists — the natural columnar↔Example mapping.
+Example→bytes, SURVEY §4.1 anti-pattern): each column's list kind comes
+from its type — integral (and boolean) columns become Int64List, float and
+double FloatList, strings/binary BytesList, and array<T> columns the
+multi-value list of T's kind — the natural columnar↔Example mapping.
 
-Distribution: writes go through ``mapInPandas`` (one TFRecord file per
-partition, executor-side; ``write_partition`` is the per-task body, which the
-retrain also runs), reads through the ``binaryFile`` source +
-``mapInPandas`` decode. No driver-side data movement.
+Distribution: both directions run on Arrow batches. Writes go through
+``mapInArrow`` (one TFRecord file per partition, executor-side;
+``write_partition`` is the per-task body, which the retrain also runs),
+reads through the ``binaryFile`` source + a ``mapInArrow`` decode into
+columns of the declared types. No driver-side data movement.
 """
 
 from __future__ import annotations
@@ -32,12 +34,12 @@ import os
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # --- crc32c (Castagnoli), table-driven, pure python ------------------------
 
@@ -92,30 +94,31 @@ def _len_delim(field: int, payload: bytes) -> bytes:
     return _varint(field << 3 | 2) + _varint(len(payload)) + payload
 
 
-def _encode_feature(value) -> bytes:
-    """One Feature message from a python value (int/float/bytes/str or a
-    list thereof)."""
-    vals = value if isinstance(value, (list, tuple)) else [value]
-    if len(vals) and isinstance(vals[0], (bytes, str)):
-        payload = b"".join(
-            _len_delim(1, v.encode() if isinstance(v, str) else bytes(v)) for v in vals
-        )
-        return _len_delim(1, payload)  # BytesList in Feature field 1
-    if len(vals) and isinstance(vals[0], float):
+# A Feature's oneof field: the list kind every value of a column is written as.
+BYTES_LIST, FLOAT_LIST, INT64_LIST = 1, 2, 3
+
+
+def _encode_feature(kind: int, vals: list) -> bytes:
+    """One Feature message of list kind ``kind`` (bytes, floats or ints)."""
+    if kind == BYTES_LIST:
+        return _len_delim(1, b"".join(_len_delim(1, v) for v in vals))
+    if kind == FLOAT_LIST:
         packed = struct.pack(f"<{len(vals)}f", *vals)
-        return _len_delim(2, _len_delim(1, packed))  # FloatList packed
-    packed = b"".join(_varint(int(v) & 0xFFFFFFFFFFFFFFFF) for v in vals)
-    return _len_delim(3, _len_delim(1, packed))  # Int64List packed
+    else:
+        packed = b"".join(_varint(v & 0xFFFFFFFFFFFFFFFF) for v in vals)
+    return _len_delim(kind, _len_delim(1, packed))  # FloatList/Int64List packed
 
 
-def encode_example(row: dict) -> bytes:
-    """dict → serialized tf.train.Example (keys sorted for determinism)."""
+def encode_example(features: dict, kinds: dict) -> bytes:
+    """``{name: list of values}`` → serialized tf.train.Example, each
+    feature the list kind ``kinds[name]`` (keys sorted for determinism).
+    A NULL feature or list element is left out."""
     entries = b""
-    for key in sorted(row):
-        if row[key] is None:
+    for key in sorted(features):
+        if features[key] is None:
             continue
-        entry = _len_delim(1, key.encode()) + _len_delim(2, _encode_feature(row[key]))
-        entries += _len_delim(1, entry)  # map entry in Features field 1
+        feature = _encode_feature(kinds[key], [v for v in features[key] if v is not None])
+        entries += _len_delim(1, _len_delim(1, key.encode()) + _len_delim(2, feature))  # Features map entry
     return _len_delim(1, entries)  # Features in Example field 1
 
 
@@ -224,56 +227,44 @@ def unframe_records(data: bytes) -> Iterator[bytes]:
 # --- DataFrame-level sink/scan ----------------------------------------------
 
 
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+def _kind(t: pa.DataType) -> int:
+    """The list kind of a column of Arrow type ``t``; an array takes its
+    element's kind."""
+    t = t.value_type if pa.types.is_list(t) else t
+    if pa.types.is_integer(t) or pa.types.is_boolean(t):
+        return INT64_LIST
+    if pa.types.is_floating(t):
+        return FLOAT_LIST
+    if pa.types.is_string(t) or pa.types.is_binary(t):
+        return BYTES_LIST
+    raise TypeError(f"a {t} column has no TFRecord list kind")
 
 
-def _exact_int(v):
-    """One value of an integral column that pandas widened to float64
-    because the batch holds a NULL: NaN is that NULL; a magnitude above
-    2**53 was already rounded by the widening, so it raises rather than
-    being written wrong."""
-    if v != v:
-        return None
-    if abs(v) > 2**53:
-        raise ValueError(f"integral value {v!r} was rounded to float64 by a NULL in its column")
-    return int(v)
+def _pylist(arr: pa.Array) -> list:
+    """A flat array's values as Python objects: through NumPy when it holds
+    no NULL, which is faster than Arrow's per-value scalars."""
+    return arr.to_numpy(zero_copy_only=False).tolist() if arr.null_count == 0 else arr.to_pylist()
 
 
-def _exact_ints(arr):
-    """One cell of an integral array column: pandas widens every cell to
-    float64 when any element in the batch is NULL. Exact ints again, with
-    the NULL elements left out."""
-    if arr is None or arr.dtype.kind != "f":
-        return arr
-    return [i for i in map(_exact_int, arr) if i is not None]
+def _lists(col: pa.Array) -> list:
+    """``col`` as ``encode_example`` takes it: one list of values per row
+    (a NULL row stays ``None``), strings as their UTF-8 bytes."""
+    is_list = pa.types.is_list(col.type)
+    if pa.types.is_string(col.type.value_type if is_list else col.type):
+        col = col.cast(pa.list_(pa.binary()) if is_list else pa.binary())
+    if not is_list:
+        return [None if v is None else [v] for v in _pylist(col)]
+    vals, ends, valid = _pylist(col.values), _pylist(col.offsets), _pylist(col.is_valid())
+    return [vals[ends[i] : ends[i + 1]] if valid[i] else None for i in range(len(col))]
 
 
-def _typed(pdf: pd.DataFrame, schema: T.StructType) -> pd.DataFrame:
-    """``pdf`` with every integral column and integral array column holding
-    exact Python ints (and ``None``) again, so it encodes as the Int64List
-    its Spark type says; other columns pass as they are."""
-    fixed = {}
-    for f in schema.fields:
-        t, col = f.dataType, pdf[f.name]
-        if isinstance(t, _INTEGRAL) and col.dtype.kind == "f":
-            fixed[f.name] = pd.Series([_exact_int(v) for v in col], index=pdf.index, dtype=object)
-        elif isinstance(t, T.ArrayType) and isinstance(t.elementType, _INTEGRAL):
-            fixed[f.name] = pd.Series([_exact_ints(v) for v in col], index=pdf.index, dtype=object)
-    return pdf.assign(**fixed) if fixed else pdf
+def write_partition(batches: Iterator[pa.RecordBatch], out_dir: str) -> Iterator[pa.RecordBatch]:
+    """S6 for one ``mapInArrow`` task: yields each batch on unchanged and,
+    once the batches are exhausted, commits them as the partition's
+    TFRecord file under ``out_dir`` (none for an empty partition).
 
-
-def write_partition(
-    batches: Iterator[pd.DataFrame], out_dir: str, schema: T.StructType
-) -> Iterator[pd.DataFrame]:
-    """S6 for one ``mapInPandas`` task over a frame of ``schema``: yields
-    each batch on unchanged and, once the batches are exhausted, commits
-    them as the partition's TFRecord file under ``out_dir`` (none for an
-    empty partition).
-
-    Each feature's list kind follows the column's Spark type: a NULL value
-    or array element is left out of its Example, and an integral column or
-    array stays an Int64List even when a NULL made pandas hand it over as
-    float64.
+    Each column's list kind follows its type (``_kind``), and a NULL value
+    or array element is left out of its Example.
 
     Retry safety: the output filename is DETERMINISTIC per partition
     (``part-<partitionId>``) and each attempt writes to an attempt-private
@@ -286,14 +277,11 @@ def write_partition(
     this through a Hadoop committer / custom datasource instead.
     """
     records = []
-    for pdf in batches:
-        for row in _typed(pdf, schema).to_dict("records"):
-            clean = {
-                k: (list(v) if hasattr(v, "__len__") and not isinstance(v, (str, bytes)) else v)
-                for k, v in row.items()
-            }
-            records.append(encode_example(clean))
-        yield pdf
+    for batch in batches:
+        kinds = {f.name: _kind(f.type) for f in batch.schema}
+        cols = [_lists(col) for col in batch.columns]
+        records += [encode_example(dict(zip(batch.schema.names, row)), kinds) for row in zip(*cols)]
+        yield batch
     if records:
         ctx = TaskContext.get()
         part, attempt = ctx.partitionId(), ctx.taskAttemptId()
@@ -307,14 +295,13 @@ def write_partition(
 
 def write_tfrecords(df: DataFrame, out_dir: str) -> None:
     """S6: ``write_partition`` in every task of ``df`` — the write
-    parallelism IS the partition count; repartition upstream to size files."""
-    schema = df.schema
+    parallelism IS the partition count; repartition upstream to size files.
+    Collecting each partition's row count forces the write in one stage."""
 
-    def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield pd.DataFrame({"n": [sum(len(pdf) for pdf in write_partition(batches, out_dir, schema))]})
+    def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield pa.RecordBatch.from_pydict({"n": [sum(b.num_rows for b in write_partition(batches, out_dir))]})
 
-    # the aggregate forces the write on every partition
-    df.mapInPandas(_write, "n long").agg(F.sum("n")).collect()
+    df.mapInArrow(_write, "n long").collect()
 
 
 def read_tfrecords(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -323,35 +310,26 @@ def read_tfrecords(spark: SparkSession, path: str, schema: T.StructType) -> Data
     ``schema`` plays the role of the reference's ``feature_description``
     (``trainer_component.py:32-40``): it names the features to parse and
     their target types (long / double / string / binary or arrays thereof).
+    Each column is built as an Arrow array of its declared type, so a value
+    is never widened on the way; a missing feature reads as NULL, or as an
+    empty array.
     """
-    cols = [(f.name, f.dataType) for f in schema.fields]
+    arrow_schema = to_arrow_schema(schema)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                for rec in unframe_records(bytes(blob)):
-                    ex = decode_example(rec)
-                    row = {}
-                    for name, dtype in cols:
-                        vals = ex.get(name, [])
-                        if isinstance(dtype, T.ArrayType):
-                            row[name] = _coerce_list(vals, dtype.elementType)
-                        else:
-                            coerced = _coerce_list(vals, dtype)
-                            row[name] = coerced[0] if coerced else None
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=[c for c, _ in cols])
+    def _decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            examples = [
+                decode_example(rec) for blob in batch.column("content").to_pylist() for rec in unframe_records(blob)
+            ]
+            cols = [
+                [ex.get(f.name, []) for ex in examples]
+                if pa.types.is_list(f.type)
+                else [(ex.get(f.name) or [None])[0] for ex in examples]
+                for f in arrow_schema
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, f.type) for col, f in zip(cols, arrow_schema)], schema=arrow_schema
+            )
 
     binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.tfrecord").load(path).select("content")
-    return binary.mapInPandas(_decode, schema)
-
-
-def _coerce_list(vals: list, dtype: T.DataType) -> list:
-    if isinstance(dtype, T.StringType):
-        return [v.decode() if isinstance(v, bytes) else str(v) for v in vals]
-    if isinstance(dtype, T.BinaryType):
-        return [bytes(v) for v in vals]
-    if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        return [float(v) for v in vals]
-    return [int(v) for v in vals]
+    return binary.mapInArrow(_decode, schema)

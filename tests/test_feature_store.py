@@ -492,6 +492,27 @@ def test_asof_timestamp_tolerance_interval(spark):
     assert got == {1: 1.0, 3: None}  # March read is 60 days stale → dropped
 
 
+def test_import_rejects_a_feature_time_that_is_no_column_or_timestamp(store, spark, spark_jobs):
+    """A misspelled ``feature_time`` column raises on the driver, naming
+    it, before any job runs, and writes nothing; the column itself and a
+    literal date still import."""
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    src = spark.createDataFrame([(1, 10.0, "2024-03-01 00:00:00")], "uid long, bal double, event_time string")
+    src = src.withColumn("event_time", F.col("event_time").cast("timestamp"))
+
+    def typo():
+        with pytest.raises(ValueError, match="'evnt_time'"):
+            store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_time="evnt_time")
+
+    assert spark_jobs(typo)[1] == []
+    assert not os.path.exists(store._values_path("fs", "users"))
+    for when in ("event_time", "2024-01-01"):
+        store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_fields=["bal"], feature_time=when)
+    dates = sorted(r.feature_date.isoformat() for r in store.values("fs", "users").collect())
+    assert dates == ["2024-01-01", "2024-03-01"]
+
+
 def test_empty_import_writes_nothing_and_store_keeps_working(store, spark):
     """An import with no rows (a cycle with no new ratings) returns 0 and
     writes no rows, before and after real imports."""

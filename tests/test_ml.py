@@ -91,7 +91,19 @@ def test_linucb_fit_collects_one_pass_without_exchange(spark, monkeypatch):
     monkeypatch.setattr(type(df), "collect", spy)
     LinUCB(context_dim=3, num_actions=3).fit(df)
     assert len(plans) == 1
-    assert "MapInPandas" in plans[0] and "Exchange" not in plans[0]
+    assert "MapInArrow" in plans[0] and "Exchange" not in plans[0]
+
+
+def test_linucb_fit_skips_rows_with_a_null_or_short_observation(spark):
+    """A row whose ``obs`` holds a NULL element or is not ``context_dim``
+    long is skipped like a row with a NULL field: the policy equals the
+    one fitted without it."""
+    rows = _bandit_rows(n=200, seed=4)
+    bad = [([0.1, None, 0.3], 1, 0.5), ([0.2, 0.3], 2, 1.0), ([0.2, 0.3, 0.4, 0.5], 0, 1.0)]
+    want = LinUCB(context_dim=3, num_actions=3, alpha=0.5).fit(_bandit_df(spark, rows, 1))
+    got = LinUCB(context_dim=3, num_actions=3, alpha=0.5).fit(_bandit_df(spark, rows[:100] + bad + rows[100:], 1))
+    assert np.array_equal(got.theta, want.theta) and np.array_equal(got.a_inv, want.a_inv)
+    assert got.counts.tolist() == want.counts.tolist()
 
 
 @pytest.mark.parametrize("action", [-1, 3])

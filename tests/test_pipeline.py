@@ -183,8 +183,8 @@ def test_retrain_is_one_pass_equal_to_the_read_back_oracle(spark, spark_jobs, tm
 def test_retrain_with_null_actions_writes_int64_actions(spark, tmp_path):
     """``enrich_with_reward`` keeps a ragged message's extra slots with a
     NULL action. The retrain's handoff still types ``action`` as Int64List
-    (pandas hands the column over as float64), leaves the NULL out, and
-    the policy equals the read-back oracle's."""
+    by its column type, leaves the NULL out, and the policy equals the
+    read-back oracle's."""
     from mlops_pipelines_featurestore_gcp_spark.sources.tfrecord import decode_example, unframe_records
 
     cfg = PipelineConfig(rank_k=4, batch_size=3, num_actions=5)
@@ -206,3 +206,47 @@ def test_retrain_with_null_actions_writes_int64_actions(spark, tmp_path):
     actions = [ex["action"] for ex in examples if "action" in ex]
     assert len(actions) < len(examples)  # the NULL actions are left out
     assert all(len(a) == 1 and isinstance(a[0], int) for a in actions)
+
+
+def test_retrain_skips_an_observation_with_a_null_element(spark, tmp_path):
+    """A published message whose observation holds a NULL element is kept
+    by ``enrich_with_reward`` (reward 0.0) and lands in the sink. The
+    retrain writes that slot to the handoff and leaves it out of the fit:
+    the policy equals the one retrained on the sink without that slot."""
+    from mlops_pipelines_featurestore_gcp_spark.sources.tfrecord import decode_example, unframe_records
+    from mlops_pipelines_featurestore_gcp_spark.streaming.log_loop import enrich_with_reward, factor_map
+
+    cfg = PipelineConfig(rank_k=4, batch_size=2, num_actions=3)
+    rng = np.random.default_rng(11)
+    factors = spark.createDataFrame(
+        [(a, rng.normal(size=cfg.rank_k).tolist()) for a in range(cfg.num_actions)], "item_id long, features array<double>"
+    )
+    t0 = dt.datetime(2024, 1, 1)
+    good = [
+        (f"m{i:02d}", t0, rng.normal(size=(cfg.batch_size, cfg.rank_k)).tolist(), rng.integers(0, 3, 2).tolist())
+        for i in range(20)
+    ]
+    bad = ("m99", t0, [[0.1, None, 0.3, 0.4], [0.5, 0.6, 0.7, 0.8]], [1, 2])
+    without = ("m99", t0, [[0.5, 0.6, 0.7, 0.8]], [2])  # the same message without the bad slot
+    schema = "message_id string, publish_time timestamp, observations array<array<double>>, predicted_actions array<long>"
+
+    def sink(name, messages):
+        path = str(tmp_path / name)
+        enriched = enrich_with_reward(spark.createDataFrame(messages, schema), factor_map(factors))
+        enriched.coalesce(1).write.parquet(path)
+        return path
+
+    want = LinUCBModel.load(retrain(spark, sink("clean", good + [without]), str(tmp_path / "want"), config=cfg))
+    got = LinUCBModel.load(retrain(spark, sink("sink", good + [bad]), str(tmp_path / "got"), config=cfg))
+    assert np.array_equal(got.theta, want.theta) and np.array_equal(got.a_inv, want.a_inv)
+    assert got.counts.tolist() == want.counts.tolist()
+    assert got.counts.sum() == cfg.batch_size * len(good) + 1
+
+    tfrecords = tmp_path / "got" / "tfrecords"
+    obs = [
+        decode_example(rec)["obs"]
+        for name in os.listdir(tfrecords)
+        for rec in unframe_records((tfrecords / name).read_bytes())
+    ]
+    assert len(obs) == cfg.batch_size * (len(good) + 1)  # the handoff keeps both slots
+    assert sorted(map(len, obs))[0] == cfg.rank_k - 1  # the NULL element is left out

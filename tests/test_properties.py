@@ -18,32 +18,31 @@ names = st.text(
     min_size=1,
     max_size=12,
 )
-int_lists = st.lists(st.integers(min_value=-(2**62), max_value=2**62), min_size=1, max_size=8)
-byte_lists = st.lists(st.binary(max_size=32), min_size=1, max_size=4)
+int_lists = st.lists(st.integers(min_value=-(2**62), max_value=2**62), max_size=8)
+byte_lists = st.lists(st.binary(max_size=32), max_size=4)
 
 
 def _f32(x: float) -> float:
     return struct.unpack("<f", struct.pack("<f", x))[0]
 
 
-float_lists = st.lists(
-    st.floats(allow_nan=False, allow_infinity=False, width=32), min_size=1, max_size=8
+float_lists = st.lists(st.floats(allow_nan=False, allow_infinity=False, width=32), max_size=8)
+kinded_lists = st.one_of(
+    int_lists.map(lambda v: (tfr.INT64_LIST, v)),
+    byte_lists.map(lambda v: (tfr.BYTES_LIST, v)),
+    float_lists.map(lambda v: (tfr.FLOAT_LIST, v)),
 )
 
 
-@given(st.dictionaries(names, st.one_of(int_lists, byte_lists, float_lists), max_size=6))
+@given(st.dictionaries(names, kinded_lists, max_size=6))
 @settings(max_examples=200, deadline=None)
 def test_example_codec_roundtrip_property(payload):
-    decoded = tfr.decode_example(tfr.encode_example(payload))
+    features = {k: v for k, (_, v) in payload.items()}
+    kinds = {k: kind for k, (kind, _) in payload.items()}
+    decoded = tfr.decode_example(tfr.encode_example(features, kinds))
     assert set(decoded) == set(payload)
-    for k, v in payload.items():
-        got = decoded[k]
-        if isinstance(v[0], bytes):
-            assert got == v
-        elif isinstance(v[0], float):
-            assert got == [_f32(x) for x in v]
-        else:
-            assert got == v
+    for k, (kind, v) in payload.items():
+        assert decoded[k] == ([_f32(x) for x in v] if kind == tfr.FLOAT_LIST else v)
 
 
 @given(st.lists(st.binary(max_size=256), max_size=16))

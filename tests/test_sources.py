@@ -113,10 +113,11 @@ def test_example_codec_roundtrip():
     row = {
         "step_type": [0, 1, 2],
         "reward": [0.5, 1.5],
-        "name": "policy-a",
-        "blob": b"\x00\x01",
+        "name": [b"policy-a"],
+        "blob": [b"\x00\x01"],
     }
-    ex = tfr.encode_example(row)
+    kinds = {"step_type": tfr.INT64_LIST, "reward": tfr.FLOAT_LIST, "name": tfr.BYTES_LIST, "blob": tfr.BYTES_LIST}
+    ex = tfr.encode_example(row, kinds)
     got = tfr.decode_example(ex)
     assert got["step_type"] == [0, 1, 2]
     assert got["reward"] == [0.5, 1.5]
@@ -125,7 +126,7 @@ def test_example_codec_roundtrip():
 
 
 def test_example_codec_negative_ints():
-    got = tfr.decode_example(tfr.encode_example({"x": [-1, -(2**40), 3]}))
+    got = tfr.decode_example(tfr.encode_example({"x": [-1, -(2**40), 3]}, {"x": tfr.INT64_LIST}))
     assert got["x"] == [-1, -(2**40), 3]
 
 
@@ -166,10 +167,9 @@ def test_tfrecord_df_roundtrip(spark, tmp_path):
 
 
 def test_tfrecord_long_column_with_null_stays_int64(spark, tmp_path):
-    """A NULL makes pandas hand a ``long`` column over as float64; the
-    writer types it by its Spark type instead: the NULL is left out, the
-    rest stay Int64List, and a value that float64 already rounded raises
-    instead of being written wrong."""
+    """A ``long`` column with a NULL is written by its type: the NULL is
+    left out, the rest stay Int64List, and a value above 2**53 round-trips
+    exactly."""
     schema = "id long, label string"
     ok = spark.createDataFrame([(1, "x"), (None, "y"), (2**53, "z")], schema).coalesce(1)
     out = str(tmp_path / "ok")
@@ -181,17 +181,17 @@ def test_tfrecord_long_column_with_null_stays_int64(spark, tmp_path):
         examples = [tfr.decode_example(rec) for rec in tfr.unframe_records(f.read())]
     assert [ex.get("id") for ex in examples] == [[1], None, [2**53]]  # Int64List, not FloatList
 
-    rounded = spark.createDataFrame([(1, "x"), (None, "y"), (2**60 + 1, "z")], schema).coalesce(1)
-    with pytest.raises(Exception, match="ValueError"):
-        tfr.write_tfrecords(rounded, str(tmp_path / "rounded"))
+    big = spark.createDataFrame([(1, "x"), (None, "y"), (2**60 + 1, "z")], schema).coalesce(1)
+    tfr.write_tfrecords(big, str(tmp_path / "big"))
+    back = tfr.read_tfrecords(spark, str(tmp_path / "big"), big.schema)
+    assert sorted(map(tuple, back.collect()), key=lambda r: r[1]) == [(1, "x"), (None, "y"), (2**60 + 1, "z")]
 
 
 def test_tfrecord_long_array_with_null_element_stays_int64(spark, tmp_path):
-    """A NULL element makes pandas hand every cell of an ``array<long>``
-    column over as float64; the writer types it by its Spark type instead:
-    the NULL element is left out, the rest stay Int64List, a NULL array is
-    left out of its Example, and an element that float64 already rounded
-    raises instead of being written wrong."""
+    """An ``array<long>`` column with a NULL element is written by its
+    type: the NULL element is left out, the rest stay Int64List, a NULL
+    array is left out of its Example, and an element above 2**53
+    round-trips exactly."""
     schema = "ids array<long>, label string"
     ok = spark.createDataFrame([([1, None], "x"), ([2**53], "y"), (None, "z")], schema).coalesce(1)
     out = str(tmp_path / "ok")
@@ -203,13 +203,59 @@ def test_tfrecord_long_array_with_null_element_stays_int64(spark, tmp_path):
         examples = [tfr.decode_example(rec) for rec in tfr.unframe_records(f.read())]
     assert [ex.get("ids") for ex in examples] == [[1], [2**53], None]  # Int64List, not FloatList
 
-    exact = spark.createDataFrame([([2**60 + 1], "x")], schema).coalesce(1)  # no NULL: not widened
+    exact = spark.createDataFrame([([2**60 + 1], "x")], schema).coalesce(1)
     tfr.write_tfrecords(exact, str(tmp_path / "exact"))
     assert [r.ids for r in tfr.read_tfrecords(spark, str(tmp_path / "exact"), exact.schema).collect()] == [[2**60 + 1]]
 
-    rounded = spark.createDataFrame([([1, None], "x"), ([2**60 + 1], "y")], schema).coalesce(1)
-    with pytest.raises(Exception, match="ValueError"):
-        tfr.write_tfrecords(rounded, str(tmp_path / "rounded"))
+    big = spark.createDataFrame([([1, None], "x"), ([2**60 + 1], "y")], schema).coalesce(1)
+    tfr.write_tfrecords(big, str(tmp_path / "big"))
+    back = tfr.read_tfrecords(spark, str(tmp_path / "big"), big.schema)
+    assert sorted(map(tuple, back.collect()), key=lambda r: r[1]) == [([1], "x"), ([2**60 + 1], "y")]
+
+
+def test_read_tfrecords_keeps_large_longs_beside_a_missing_feature(spark, tmp_path):
+    """A record without a feature reads as NULL there and leaves the long
+    above 2**53 in the next record exact."""
+    kinds = {"x": tfr.INT64_LIST, "s": tfr.BYTES_LIST}
+    records = [tfr.encode_example({"s": [b"a"]}, kinds), tfr.encode_example({"x": [2**60 + 1], "s": [b"b"]}, kinds)]
+    (tmp_path / "part-00000.tfrecord").write_bytes(tfr.frame_records(records))
+    back = tfr.read_tfrecords(spark, str(tmp_path), T.StructType.fromDDL("x long, s string"))
+    assert sorted(map(tuple, back.collect()), key=lambda r: r[1]) == [(None, "a"), (2**60 + 1, "b")]
+
+
+def test_tfrecord_empty_arrays_take_their_column_kind(spark, tmp_path):
+    """An empty array is written as the list kind of its column's element
+    type, not a guessed one."""
+    df = spark.createDataFrame([([], [], [], "x")], "f array<double>, s array<string>, i array<long>, label string")
+    out = str(tmp_path / "out")
+    tfr.write_tfrecords(df.coalesce(1), out)
+    (name,) = [f for f in os.listdir(out) if f.endswith(".tfrecord")]
+    (rec,) = tfr.unframe_records((tmp_path / "out" / name).read_bytes())
+    kinds = {"f": tfr.FLOAT_LIST, "s": tfr.BYTES_LIST, "i": tfr.INT64_LIST, "label": tfr.BYTES_LIST}
+    assert rec == tfr.encode_example({"f": [], "s": [], "i": [], "label": [b"x"]}, kinds)
+    assert tfr.read_tfrecords(spark, out, df.schema).collect() == df.collect()
+
+
+def test_write_tfrecords_runs_one_stage(spark, tmp_path, monkeypatch):
+    """The write is forced by collecting each partition's row count: one
+    collect, no Exchange."""
+    rdd = spark.sparkContext.parallelize([(i, f"r{i}") for i in range(30)], 3)
+    df = spark.createDataFrame(rdd, "id long, label string")
+    plans = []
+    collect = type(df).collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    out = str(tmp_path / "out")
+    tfr.write_tfrecords(df, out)
+    assert len(plans) == 1
+    assert "MapInArrow" in plans[0] and "Exchange" not in plans[0]
+    assert sorted(f for f in os.listdir(out) if f.endswith(".tfrecord")) == [f"part-0000{i}.tfrecord" for i in range(3)]
+    monkeypatch.undo()
+    assert sorted(r.id for r in tfr.read_tfrecords(spark, out, df.schema).collect()) == list(range(30))
 
 
 def test_fixture_schemas_match_declared(sf_small):
