@@ -18,16 +18,17 @@ Mirrors the signatures of the reference's helper layer (SURVEY.md §2.9):
 - **Reads** — latest-wins is one grouped ``max_by`` on ``(feature_time,
   value)`` (J2): ``latest_values`` for long rows, ``latest_wide`` for one
   wide row per key; no window sort. Spine joins via the as-of operator.
-- **Online store** (FS7) — immutable snapshots of the bucketed latest row
-  per entity, ``{base}/online/{fs}/{entity}/v{n}``, bucketed with
-  ``streaming.upsert.bucket_col`` (the upsert tables' ``crc32`` layout).
-  ``materialize_online`` writes a new snapshot in 4 Spark jobs (one
-  aggregation inside the shuffle that writes one file per bucket), then one
-  registry replace makes it current, then it removes all but the current
-  and the previous snapshot.
-  ``online_read`` reads the current snapshot's key buckets on the driver
-  with ``pyarrow.dataset`` and returns a local ``DataFrame``: a lookup runs
-  no Spark job and never sees a half-written store.
+- **Online store** (FS7) — a keyed table in the upsert tables' layout
+  (``streaming/upsert.py``) at ``{base}/online/{fs}/{entity}``: the latest
+  long row per (entity, feature) under ``__kbucket = crc32(entity_id) %
+  buckets`` partitions of a version ``v{n}``, made current by one
+  ``_current.json`` replace that also records the modulus and the sorted
+  feature names. ``materialize_online`` rebuilds it from the log in 2
+  Spark jobs (latest-wins inside the one shuffle that writes one file per
+  bucket; the names are observed on that write). ``online_read`` reads the
+  current version's key buckets on the driver with ``pyarrow.dataset``
+  and pivots the few rows there into ``read_latest``'s columns: a lookup
+  runs no Spark job and never sees a half-written store.
 
 Two reference bugs deliberately NOT reproduced (SURVEY §2.9 FS6): the
 hardcoded source-URI and the ``entity_id_field`` parameter being overridden
@@ -46,17 +47,18 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from mlops_pipelines_featurestore_gcp_spark.operators.asof import asof_join
-from mlops_pipelines_featurestore_gcp_spark.sources.atomic import next_version, sweep, write_json
-from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import bucket_col, bucket_of, latest_by
+from mlops_pipelines_featurestore_gcp_spark.sources.atomic import commit, write_json
+from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import bucket_of, latest_by, read_keyed_pointer, write_latest
 
 VALUES_SCHEMA = "entity_id string, feature_name string, value string, feature_time timestamp"
 REGISTRY_FILE = "registry.json"
+# The online store's columns a lookup reads (its files also hold feature_time).
+_ONLINE_COLUMNS = pa.schema([("entity_id", pa.string()), ("feature_name", pa.string()), ("value", pa.string())])
 
 
 # ---------------------------------------------------------------------------
@@ -158,9 +160,10 @@ class FeatureStore:
     Concurrent writers can lose an update. Shape::
 
         {"featurestores": {fs: {"online_node_count": n, "entity_types": {
-            et: {"description": ..., "features": {f: {"value_type": ..., "description": ...}},
-                 "online": {"path": "online/{fs}/{et}/v{n}", "buckets": n,
-                            "schema": <StructType JSON>}}}}}}
+            et: {"description": ..., "features": {f: {"value_type": ..., "description": ...}}}}}}}
+
+    The online store is not in it: like every versioned store, it is
+    committed by its own ``_current.json`` (``materialize_online``).
     """
 
     spark: SparkSession
@@ -195,8 +198,8 @@ class FeatureStore:
 
     def cleanup_featurestore(self, featurestore_id: str, *, force: bool = True) -> None:
         """FS3 (``feature_store_helper.py:8-27``): drop the store's registry
-        entry (entity types, features, online layouts), then its values and
-        online files (``force`` mirrors the reference's force-delete)."""
+        entry (entity types, features), then its values and online files
+        (``force`` mirrors the reference's force-delete)."""
         doc = self._load()
         entry = doc["featurestores"].pop(featurestore_id, None)
         if entry is not None:
@@ -329,9 +332,11 @@ class FeatureStore:
         """FS7/J2: wide latest-row per entity (optionally as of ``at`` /
         restricted to ``entity_ids`` — the ``FeatureSelector(IdMatcher(...))``
         equivalent, notebook cell 7): ``entity_id`` and one column per
-        feature name present, sorted."""
+        feature name in the log as of ``at``, sorted, whichever entities
+        are asked for (NULL where an entity has no value)."""
+        names = feature_names(self._log(featurestore_id, entity_type_id, at=at))
         v = self._log(featurestore_id, entity_type_id, at=at, entity_ids=entity_ids)
-        return latest_wide(v, ["entity_id"], feature_names(v))
+        return latest_wide(v, ["entity_id"], names)
 
     def point_in_time_join(
         self, featurestore_id: str, entity_type_id: str, spine: DataFrame, *, spine_key: str, spine_time: str
@@ -344,111 +349,95 @@ class FeatureStore:
 
     # -- online store ------------------------------------------------------
 
+    def _online_root(self, featurestore_id: str, entity_type_id: str) -> str:
+        return f"{self.base_path}/online/{featurestore_id}/{entity_type_id}"
+
     def materialize_online(
         self, featurestore_id: str, entity_type_id: str, *, buckets: int = 16, at=None
     ) -> str:
-        """Compact the append-only values log into a new ONLINE snapshot (one
-        wide latest-row per entity) and make it current. Returns the
-        snapshot directory.
+        """Rebuild the ONLINE store from the values log (optionally as of
+        ``at``) and make it current. Returns the new version's directory.
 
         The reference serves online reads from Vertex's managed store
         (``feature_store_helper.py`` online node knob; notebook cell 7
-        reads). Here a snapshot is plain parquet at
-        ``online/{fs}/{entity}/v{n}`` with ``bucket = crc32(entity_id) %
-        buckets`` (``streaming.upsert.bucket_col``, the upsert tables'
-        layout) as a PARTITION column, so a lookup opens only the buckets
-        its keys hash to; ``buckets`` plays the ``online_node_count`` role.
-        Each refresh is a full rebuild (the log is the source of truth)
-        into a new directory, never over one that readers scan, in 4 Spark
-        jobs: two collect the feature names from the log; the write
-        shuffles the bucketed log rows once and runs the latest-wins pivot
-        (``latest_wide`` on ``(bucket, entity_id)``) inside that
-        partitioning, one file per bucket. One registry replace then makes
-        the snapshot current, so a reader sees the old or the new snapshot
-        whole. ``sources.atomic.sweep`` then removes every other version
-        except the snapshot just replaced, which a reader may still be
-        scanning; that also sweeps a snapshot whose refresh crashed before
+        reads). Here it is a keyed table in the upsert tables' layout at
+        ``online/{fs}/{entity}``, bucketed by ``entity_id`` (``buckets``
+        plays the ``online_node_count`` role), written by the upsert
+        tables' ``write_latest``: the latest row per entity and feature,
+        into a new ``v{n}`` that no reader scans, in 2 Spark jobs (one
+        shuffle, one file per bucket). The sorted feature names are
+        observed on that write. One ``_current.json`` replace
+        (``sources.atomic.commit``) records the version, the modulus and
+        the names, so a reader sees the old or the new version whole, and
+        sweeps every version but it and the one it replaced (which a reader
+        may still be scanning), including one whose refresh crashed before
         the replace.
         """
-        log = self._log(featurestore_id, entity_type_id, at=at)
-        names = feature_names(log)
-        bucketed = log.withColumn("bucket", bucket_col("entity_id", buckets)).repartition("bucket")
-        out = latest_wide(bucketed, ["bucket", "entity_id"], names).select("entity_id", *names, "bucket")
-        root = Path(self.base_path) / "online" / featurestore_id / entity_type_id
-        snapshot = root / f"v{next_version(root)}"
-        out.write.partitionBy("bucket").parquet(str(snapshot))
-        # Record the modulus (sparse data writes fewer bucket dirs than it, so
-        # the listing cannot recover it) and the schema the files read back
-        # as: every field nullable, like a fresh file read. An unregistered
-        # entity type gets registered.
-        doc = self._load()
-        store = doc["featurestores"].setdefault(featurestore_id, {"online_node_count": 1, "entity_types": {}})
-        entity = store["entity_types"].setdefault(entity_type_id, {"description": "", "features": {}})
-        previous = entity.get("online", {}).get("path", "")
-        schema = T.StructType([T.StructField(f.name, f.dataType) for f in out.schema.fields])
-        entity["online"] = {
-            "path": snapshot.relative_to(self.base_path).as_posix(),
-            "buckets": buckets,
-            "schema": schema.jsonValue(),
-        }
-        self._save(doc)
-        sweep(root, {snapshot.name, Path(previous).name})
-        return str(snapshot)
+        root = self._online_root(featurestore_id, entity_type_id)
+        log = self._log(featurestore_id, entity_type_id, at=at).select("entity_id", "feature_name", "value", "feature_time")
+        names = Observation()
+        n = write_latest(
+            root,
+            log,
+            ["entity_id", "feature_name"],
+            _newest(),
+            n_buckets=buckets,
+            observe=(names, F.array_sort(F.collect_set("feature_name")).alias("features")),
+        )
+        commit(root, {"version": n, "buckets": buckets, "features": names.get["features"]})
+        return f"{root}/v{n}"
 
-    def _online_layout(self, featurestore_id: str, entity_type_id: str) -> dict:
-        try:
-            return self._load()["featurestores"][featurestore_id]["entity_types"][entity_type_id]["online"]
-        except KeyError:
+    def _online_pointer(self, featurestore_id: str, entity_type_id: str) -> dict:
+        doc = read_keyed_pointer(self._online_root(featurestore_id, entity_type_id))
+        if doc is None:
             raise ValueError(
                 f"no online store materialized for {featurestore_id}/{entity_type_id}; "
                 "call materialize_online first"
-            ) from None
+            )
+        return doc
 
-    def _read_snapshot(self, layout: dict, ids: list[str]) -> pa.Table:
-        """The rows of ``ids`` from the recorded snapshot, read driver-side
-        from the bucket directories the keys hash to. Raises
-        ``FileNotFoundError`` if the snapshot is removed under the read."""
-        snapshot = Path(self.base_path) / layout["path"]
-        wanted = {f"bucket={bucket_of(e, layout['buckets'])}" for e in ids}
+    def _read_online(self, featurestore_id: str, entity_type_id: str, doc: dict, ids: list[str]) -> pa.Table:
+        """The long rows of ``ids`` in the version ``doc`` names, read
+        driver-side from the bucket directories the keys hash to (no
+        ``feature_time``). Raises ``FileNotFoundError`` if the version is
+        removed under the read."""
+        version = Path(self._online_root(featurestore_id, entity_type_id)) / f"v{doc['version']}"
+        wanted = {f"__kbucket={bucket_of(e, doc['buckets'])}" for e in ids}
         files = [
-            str(snapshot / b / f)
-            for b in sorted(wanted.intersection(os.listdir(snapshot)))
-            for f in os.listdir(snapshot / b)
+            str(version / b / f)
+            for b in sorted(wanted.intersection(os.listdir(version)))
+            for f in os.listdir(version / b)
             if not f.startswith((".", "_"))  # Spark's hidden files: checksums, _SUCCESS
         ]
-        schema = to_arrow_schema(T.StructType.fromJson(layout["schema"]))
-        dataset = ds.dataset(
-            files,
-            schema=schema,
-            format="parquet",
-            partitioning=ds.partitioning(pa.schema([schema.field("bucket")]), flavor="hive"),
-            partition_base_dir=str(snapshot),
-        )
-        # One chunk: createDataFrame drops every record batch after an empty
-        # one, and a bucket file holding none of the keys yields one.
         keys = pc.field("entity_id").isin(pa.array(ids, pa.string()))
-        return dataset.to_table(filter=keys).combine_chunks()
+        return ds.dataset(files, schema=_ONLINE_COLUMNS, format="parquet").to_table(filter=keys)
 
     def online_read(
         self, featurestore_id: str, entity_type_id: str, entity_ids: list
     ) -> DataFrame:
-        """Point lookup against the current online snapshot.
+        """Point lookup against the current online store: ``read_latest``'s
+        rows and columns for ``entity_ids`` as of the last refresh.
 
-        Loads the registry once, recomputes each key's bucket with
-        ``bucket_of`` and reads only those ``bucket=`` directories of the
-        recorded snapshot with ``pyarrow.dataset`` on the driver, filtering
-        on ``entity_id``. The rows come back as a local ``DataFrame``
-        (``createDataFrame`` over the Arrow table, with the recorded
-        schema: the columns and types of a fresh ``spark.read`` of the
-        snapshot), so neither building nor collecting it runs a Spark job.
-        If a read overlaps two refreshes, its snapshot may be removed under
-        it; it then reloads the registry once and reads the current one.
+        Reads the pointer once, recomputes each key's bucket with
+        ``bucket_of`` and reads only those ``__kbucket=`` directories of the
+        current version with ``pyarrow.dataset`` on the driver, filtering
+        on ``entity_id``. The few long rows are pivoted on the driver into
+        ``entity_id`` plus one string column per recorded feature name, and
+        come back as a local ``DataFrame`` (``createDataFrame`` over the
+        Arrow table), so neither building nor collecting it runs a Spark
+        job. If a read overlaps two refreshes, its version may be removed
+        under it; it then reloads the pointer once and reads the current one.
         """
         ids = [str(e) for e in entity_ids]
-        layout = self._online_layout(featurestore_id, entity_type_id)
+        doc = self._online_pointer(featurestore_id, entity_type_id)
         try:
-            table = self._read_snapshot(layout, ids)
+            rows = self._read_online(featurestore_id, entity_type_id, doc, ids)
         except FileNotFoundError:
-            layout = self._online_layout(featurestore_id, entity_type_id)
-            table = self._read_snapshot(layout, ids)
-        return self.spark.createDataFrame(table, T.StructType.fromJson(layout["schema"]))
+            doc = self._online_pointer(featurestore_id, entity_type_id)
+            rows = self._read_online(featurestore_id, entity_type_id, doc, ids)
+        wide: dict[str, dict] = {}
+        for e, f, v in zip(*(rows[c].to_pylist() for c in _ONLINE_COLUMNS.names)):
+            wide.setdefault(e, {})[f] = v
+        columns = {"entity_id": list(wide)} | {f: [row.get(f) for row in wide.values()] for f in doc["features"]}
+        table = pa.table(columns, pa.schema([(c, pa.string()) for c in columns]))
+        return self.spark.createDataFrame(table, T.StructType([T.StructField(c, T.StringType()) for c in columns]))

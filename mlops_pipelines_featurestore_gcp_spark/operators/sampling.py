@@ -1,4 +1,4 @@
-"""Deterministic sampling & source mixing — training-mix construction.
+"""Deterministic sampling — training-mix construction.
 
 Every sampler here is HASH-based, not RNG-based: a doc's keep/drop decision
 is a pure function of (id, salt), so
@@ -102,24 +102,6 @@ def per_group_cap(
     )
 
 
-def mix_sources(
-    sources: dict[str, DataFrame], id_col: str, weights: dict[str, float], *, salt: str = "mix"
-) -> DataFrame:
-    """Weighted union of corpora: source s keeps fraction ``weights[s]``,
-    rows tagged with their origin. The canonical data-mixture builder —
-    each source's sample is independently deterministic, so re-weighting
-    one source never perturbs another's sample."""
-    out = None
-    for name, df in sorted(sources.items()):
-        w = float(weights.get(name, 0.0))
-        part = (
-            deterministic_sample(df, id_col, w, salt=f"{salt}|{name}")
-            .withColumn("mix_source", F.lit(name))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
 def leakage_safe_split(
     df: DataFrame,
     id_col: str,
@@ -185,7 +167,7 @@ def importance_sample(
     ``min(1, weight · scale)`` — the DSIR-style importance-resampling step
     that skews a training mix toward high-relevance/quality documents.
 
-    The keep decision is the same md5-uniform draw the mix/split operators
+    The keep decision is the same md5-uniform draw the sample/split operators
     use (pure function of (salt, id) — reshuffle-proof, SQL-replayable),
     compared against the row's own clipped acceptance probability. Map-only
     pass, no shuffle; weights ≤ 0 always drop, weights ≥ 1/scale always

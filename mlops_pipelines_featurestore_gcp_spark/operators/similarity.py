@@ -716,14 +716,6 @@ def hyperplane_signatures(
     return df.withColumn(out_col, _sigs(F.col(vec_col)))
 
 
-def hyperplane_signature(df: DataFrame, *, vec_col: str, planes: int, dim: int, out_col: str = "sig") -> DataFrame:
-    """Single-table hyperplane sign signature (SimHash for vectors) — the
-    one-table special case of :func:`hyperplane_signatures`, kept for
-    callers that want one packed ``long``."""
-    sigged = hyperplane_signatures(df, vec_col=vec_col, tables=1, planes=planes, dim=dim, out_col="__sigs")
-    return sigged.withColumn(out_col, F.element_at("__sigs", 1)).drop("__sigs")
-
-
 def _auto_planes(
     n_rows: int,
     *,

@@ -1,15 +1,16 @@
 """One atomic commit for everything the package rewrites: the small JSON
 documents (feature-store registry, LinUCB policy artifact) and the
-versioned stores (online snapshots, rollups, upsert tables).
+versioned stores (rollups, and the keyed tables: upsert tables and the
+feature store's online store).
 
 ``write_json`` writes a temp file beside the target, fsyncs it and
 ``os.replace``\\ s it over the target, so a reader (or a process restarted
 after a crash) sees the previous document or the new one, never a torn one.
 
 A versioned store writes ``v{next_version}`` beside the current ``v{n}``,
-linking the partitions it keeps; one pointer replace (``commit``; the
-online store's pointer is its registry) makes it current, and ``sweep``
-removes all but it and the version it replaced.
+linking the partitions it keeps; one replace of its ``_current.json``
+pointer (``commit``) makes it current, and ``sweep`` removes all but it
+and the version it replaced.
 """
 
 from __future__ import annotations

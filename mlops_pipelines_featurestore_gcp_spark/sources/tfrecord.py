@@ -12,7 +12,7 @@ formats are public and simple, so the engine implements them directly:
 - **Example proto** (``tensorflow/core/example/example.proto``): Example{1:
   Features{1: map<string, Feature>}}, Feature = oneof BytesList(1)/
   FloatList(2)/Int64List(3), each ``repeated value = 1`` (floats/ints
-  packed).
+  written packed; read packed or unpacked, as protobuf parsers must).
 
 Unlike the reference we do NOT double-serialize (its rows are tensor→bytes→
 Example→bytes, SURVEY §4.1 anti-pattern): each column's list kind comes
@@ -88,6 +88,13 @@ def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             return result, pos
         shift += 7
+
+
+def _varints(buf: bytes) -> Iterator[int]:
+    pos = 0
+    while pos < len(buf):
+        v, pos = _read_varint(buf, pos)
+        yield v
 
 
 def _len_delim(field: int, payload: bytes) -> bytes:
@@ -170,23 +177,18 @@ def decode_example(data: bytes) -> dict:
         ftype = tag >> 3
         llen, fp = _read_varint(feat, fp)
         lst = feat[fp : fp + llen]
+        inner = _decode_list(lst)
         if ftype == 1:
-            out[key] = _decode_list(lst)
+            out[key] = inner
         elif ftype == 2:
-            # packed floats arrive as one length-delimited blob
-            inner = _decode_list(lst)
-            raw = inner[0] if inner and isinstance(inner[0], bytes) else b""
-            out[key] = list(struct.unpack(f"<{len(raw) // 4}f", raw))
+            # packed floats arrive as length-delimited blobs, unpacked ones
+            # one by one (wire type 5, already floats)
+            out[key] = [x for v in inner for x in (struct.unpack(f"<{len(v) // 4}f", v) if isinstance(v, bytes) else (v,))]
         else:
-            inner = _decode_list(lst)
-            raw = inner[0] if inner and isinstance(inner[0], bytes) else b""
-            vals = []
-            q = 0
-            while q < len(raw):
-                v, q = _read_varint(raw, q)
-                # two's-complement back to signed
-                vals.append(v - (1 << 64) if v >= 1 << 63 else v)
-            out[key] = vals
+            # packed ints arrive as blobs of varints, unpacked ones one by
+            # one (wire type 0); two's complement back to signed
+            ints = [x for v in inner for x in (_varints(v) if isinstance(v, bytes) else (v,))]
+            out[key] = [v - (1 << 64) if v >= 1 << 63 else v for v in ints]
     return out
 
 

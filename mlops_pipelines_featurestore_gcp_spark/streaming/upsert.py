@@ -24,8 +24,12 @@ contents — idempotent, the same exactly-once construction as
 ``log_loop``'s ``_batch`` sink (reference's at-least-once append path:
 ``logger/main.py:107-150`` has no such guard).
 
-``bucket_col``/``bucket_of`` and ``latest_by`` are also the feature
-store's online layout and latest-wins read (``feature_store/store.py``).
+The pointer records the bucket modulus beside the version: a batch
+bucketed by another modulus would put a key in a second bucket, so
+``upsert_batch`` refuses it. ``write_latest`` (step 3 and the write of
+step 4) is the feature store's online store too: its full rebuild writes
+the latest long row per ``(entity_id, feature_name)`` in this layout and
+commits the same pointer (``feature_store/store.py``).
 
 Use standalone for batch CDC-style merges, or as the ``foreachBatch``
 body of a streaming write (``upsert_sink``).
@@ -66,10 +70,33 @@ def latest_by(df: DataFrame, keys: list[str], order) -> DataFrame:
     return df.groupBy(*keys).agg(winner).select("__latest.*")
 
 
-def _current(table_path: str) -> str | None:
-    """The current version directory of the table, ``None`` if it has none."""
+def read_keyed_pointer(table_path: str) -> dict | None:
+    """The committed pointer of a keyed table (``version``, ``buckets`` and
+    whatever else its writer recorded), ``None`` if it has none."""
     doc = atomic.read_pointer(table_path, legacy=(f"{_BUCKET}=",))
-    return doc and os.path.join(table_path, f"v{doc['version']}")
+    if doc is not None and "buckets" not in doc:
+        raise ValueError(f"{table_path} records no bucket modulus; rebuild it")
+    return doc
+
+
+def write_latest(table_path: str, rows: DataFrame, keys: list[str], order, *, n_buckets: int, observe=()) -> int:
+    """Write the row with the largest ``order`` per ``keys`` of ``rows`` as
+    the next version ``v{n}`` of the keyed table at ``table_path``, bucketed
+    by ``keys[0]`` under ``__kbucket``, and return ``n``; the caller links
+    and commits.
+
+    One shuffle routes each bucket to one partition; the latest-wins
+    aggregate runs inside it and the write keeps that layout, so every
+    written dir is a single file (self-compacting — without this every
+    write leaves one shard per contributing partition). ``observe`` is an
+    ``(Observation, *metrics)`` pair computed on the written rows."""
+    bucketed = rows.withColumn(_BUCKET, bucket_col(keys[0], n_buckets)).repartition(_BUCKET)
+    latest = latest_by(bucketed, [_BUCKET, *keys], order)
+    if observe:
+        latest = latest.observe(*observe)
+    n = atomic.next_version(table_path)
+    latest.write.partitionBy(_BUCKET).parquet(os.path.join(table_path, f"v{n}"))
+    return n
 
 
 def upsert_batch(
@@ -84,7 +111,12 @@ def upsert_batch(
 
     Latest ``version_col`` wins per key (existing row kept when the batch
     carries an older version — late/replayed data cannot regress a key).
+    ``n_buckets`` must be the modulus the table was written with
+    (``ValueError`` otherwise).
     """
+    doc = read_keyed_pointer(table_path)
+    if doc is not None and doc["buckets"] != n_buckets:
+        raise ValueError(f"{table_path} is bucketed by {doc['buckets']}, not {n_buckets}")
     spark = batch.sparkSession
     # Pinned before the touched-bucket probe (an eager job), so the merge
     # reads the probe's blocks instead of re-running the batch's source
@@ -93,7 +125,7 @@ def upsert_batch(
     touched = [r[_BUCKET] for r in incoming.select(_BUCKET).distinct().collect()]
     if not touched:
         return
-    current = _current(table_path)
+    current = doc and os.path.join(table_path, f"v{doc['version']}")
     merged = incoming
     if current is not None:
         existing = (
@@ -107,25 +139,19 @@ def upsert_batch(
         # allowMissingColumns both ways: a batch can add columns the table
         # lacks, and late replays can lack columns the table gained
         merged = existing.unionByName(incoming, allowMissingColumns=True)
-    # One shuffle routes each bucket to one partition; the latest-wins
-    # aggregate runs inside it and the write keeps that layout, so every
-    # rewritten dir is a single file (self-compacting — without this every
-    # merge leaves one shard per contributing partition).
-    latest = latest_by(merged.repartition(_BUCKET), [_BUCKET, key], version_col)
-    n = atomic.next_version(table_path)
-    new = os.path.join(table_path, f"v{n}")
-    latest.write.partitionBy(_BUCKET).parquet(new)
+    n = write_latest(table_path, merged, [key], version_col, n_buckets=n_buckets)
     if current is not None:
-        atomic.link_partitions(current, new)  # every bucket the batch did not touch
-    atomic.commit(table_path, {"version": n})
+        atomic.link_partitions(current, os.path.join(table_path, f"v{n}"))  # every bucket the batch did not touch
+    atomic.commit(table_path, {"version": n, "buckets": n_buckets})
 
 
 def read_upsert_table(spark: SparkSession, table_path: str) -> DataFrame:
     """Current state of the upsert table (one row per key); mergeSchema so
     buckets untouched since a schema evolution still read (as NULLs)."""
-    # no version yet: read a path that never exists, so Spark raises its
+    # no version yet: read v0, a path that never exists, so Spark raises its
     # path-not-found AnalysisException rather than reading an orphan
-    current = _current(table_path) or os.path.join(table_path, "v0")
+    doc = read_keyed_pointer(table_path)
+    current = os.path.join(table_path, f"v{doc['version'] if doc else 0}")
     return spark.read.option("mergeSchema", "true").parquet(current).drop(_BUCKET)
 
 

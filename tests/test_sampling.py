@@ -45,20 +45,6 @@ def test_token_budget(spark, sf_medium):
     assert sampling.token_budget_sample(profiled, int(total * 10)).count() == profiled.count()
 
 
-def test_mix_sources_independent(spark, sf_medium):
-    docs = load_table(spark, "documents", sf_medium)
-    en = docs.where(F.col("lang") == "en")
-    es = docs.where(F.col("lang") == "es")
-    m1 = sampling.mix_sources({"en": en, "es": es}, "doc_id", {"en": 0.5, "es": 0.5})
-    m2 = sampling.mix_sources({"en": en, "es": es}, "doc_id", {"en": 0.5, "es": 0.1})
-    kept_en_1 = {r.doc_id for r in m1.where(F.col("mix_source") == "en").collect()}
-    kept_en_2 = {r.doc_id for r in m2.where(F.col("mix_source") == "en").collect()}
-    assert kept_en_1 == kept_en_2  # re-weighting es never perturbs en's sample
-    kept_es_2 = {r.doc_id for r in m2.where(F.col("mix_source") == "es").collect()}
-    kept_es_1 = {r.doc_id for r in m1.where(F.col("mix_source") == "es").collect()}
-    assert kept_es_2 <= kept_es_1  # nested: lower rate is a subset
-
-
 def test_leakage_safe_split_duplicates_same_side(spark):
     df = spark.createDataFrame(
         [(i, f"unique doc {i}") for i in range(40)]

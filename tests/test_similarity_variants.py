@@ -33,12 +33,12 @@ def test_blocked_variants_are_subsets_of_exact(emb):
 
 
 def test_hyperplane_signature_deterministic(emb):
-    a = similarity.hyperplane_signature(emb, vec_col="embedding", planes=8, dim=64)
-    b = similarity.hyperplane_signature(emb, vec_col="embedding", planes=8, dim=64)
-    ra = {r.vec_id: r.sig for r in a.collect()}
-    rb = {r.vec_id: r.sig for r in b.collect()}
+    a = similarity.hyperplane_signatures(emb, vec_col="embedding", tables=1, planes=8, dim=64)
+    b = similarity.hyperplane_signatures(emb, vec_col="embedding", tables=1, planes=8, dim=64)
+    ra = {r.vec_id: r.sigs for r in a.collect()}
+    rb = {r.vec_id: r.sigs for r in b.collect()}
     assert ra == rb
-    assert all(0 <= s < 256 for s in ra.values())
+    assert all(len(s) == 1 and 0 <= s[0] < 256 for s in ra.values())
 
 
 def test_ivf_index_persist_and_search(spark, emb, tmp_path):

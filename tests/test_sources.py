@@ -130,6 +130,30 @@ def test_example_codec_negative_ints():
     assert got["x"] == [-1, -(2**40), 3]
 
 
+def test_example_decodes_unpacked_int64_and_float_lists():
+    """Protobuf writers may emit a repeated scalar unpacked, one tagged
+    value after another (wire type 0 for an Int64List, 5 for a FloatList);
+    such an Example decodes to the same lists as the packed form."""
+    # Int64List {value: 5, value: 7}, unpacked: tag 0x08 before each varint
+    ints = b"\x1a\x04" + b"\x08\x05\x08\x07"  # Feature.int64_list (field 3)
+    # FloatList {value: 1.5, value: -2.0}, unpacked: tag 0x0d before each float32
+    floats = b"\x12\x0a" + b"\x0d\x00\x00\xc0\x3f" + b"\x0d\x00\x00\x00\xc0"  # Feature.float_list (field 2)
+
+    def example(*entries):
+        body = b"".join(b"\x0a" + bytes([len(e)]) + e for e in entries)  # Features.feature map entries
+        return b"\x0a" + bytes([len(body)]) + body  # Example.features
+
+    def entry(key: bytes, feature: bytes) -> bytes:
+        return b"\x0a" + bytes([len(key)]) + key + b"\x12" + bytes([len(feature)]) + feature
+
+    assert tfr.decode_example(example(entry(b"x", ints))) == {"x": [5, 7]}
+    assert tfr.decode_example(example(entry(b"y", floats))) == {"y": [1.5, -2.0]}
+    both = tfr.decode_example(example(entry(b"x", ints), entry(b"y", floats)))
+    assert both == {"x": [5, 7], "y": [1.5, -2.0]}
+    packed = tfr.encode_example({"x": [5, 7], "y": [1.5, -2.0]}, {"x": tfr.INT64_LIST, "y": tfr.FLOAT_LIST})
+    assert tfr.decode_example(packed) == both
+
+
 def test_tfrecord_framing_roundtrip_and_crc():
     recs = [b"alpha", b"", b"gamma" * 100]
     framed = tfr.frame_records(recs)

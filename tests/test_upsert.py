@@ -223,6 +223,32 @@ def test_unversioned_table_fails_loudly(spark, tmp_path):
         IncrementalDedupIndex(spark, str(tmp_path / "idx")).ingest(docs, "doc_id", "text")
 
 
+def test_upsert_refuses_another_bucket_modulus(spark, spark_jobs, tmp_path):
+    """The pointer records the modulus: a batch bucketed by another one
+    raises before any job runs and leaves the table as it was (it would
+    put a key in a second bucket and read back twice), and a pointer
+    written without a modulus asks for a rebuild."""
+    path = str(tmp_path / "tbl")
+    upsert_batch(path, _df(spark, [(k, f"a{k}", 1) for k in range(20)]), key="k", version_col="ver", n_buckets=4)
+    assert json.loads((Path(path) / "_current.json").read_text()) == {"version": 1, "buckets": 4}
+
+    def other_modulus():
+        with pytest.raises(ValueError, match="bucketed by 4, not 7"):
+            upsert_batch(path, _df(spark, [(k, f"b{k}", 2) for k in range(20)]), key="k", version_col="ver", n_buckets=7)
+
+    assert spark_jobs(other_modulus)[1] == []
+    got = read_upsert_table(spark, path).collect()
+    assert len(got) == 20 and {r.v for r in got} == {f"a{k}" for k in range(20)}
+
+    atomic.write_json(os.path.join(path, "_current.json"), {"version": 1})
+    for call in (
+        lambda: upsert_batch(path, _df(spark, [(1, "c", 3)]), key="k", version_col="ver", n_buckets=4),
+        lambda: read_upsert_table(spark, path),
+    ):
+        with pytest.raises(ValueError, match="no bucket modulus; rebuild it"):
+            call()
+
+
 # a batch of (key, version) rows; a row's value is a function of both, so
 # rows that tie on version are equal
 _batches = st.lists(
