@@ -295,8 +295,6 @@ class FeatureStore:
         # r1 version ran a separate count() first — two full source scans).
         # Observed after the shuffle: on an empty import, adaptive execution
         # drops every node above an empty shuffle, and with it the metrics.
-        from pyspark.sql import Observation
-
         obs = Observation("import_feature_values")
         (
             long_df.repartition(worker_count)

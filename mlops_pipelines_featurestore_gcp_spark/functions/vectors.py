@@ -16,35 +16,31 @@ def _fold_sum(arr: Column) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ (elements cast to double first), as a ``zip_with`` +
     ``aggregate`` fold.
 
-    ``dim`` is accepted for API stability but unused. An earlier revision
-    expanded the sum into a 64-term ``element_at`` chain when ``dim`` was
-    given, on the theory that plain arithmetic stays inside whole-stage
-    codegen while HOFs are CodegenFallback. Measured on the d05 verify
-    stage (join + filter + 64-term project fused into one stage), the
-    chain blows past the codegen method-size limit, the WHOLE stage falls
-    back, and per-pair scoring ran ~5× SLOWER than the HOF fold (1.54s vs
-    0.32s over 124k candidate pairs at sf0.1) — the fold is one
-    interpreted call per ROW over a primitive array, the de-optimized
-    chain is interpreted per TERM. The fold is also left-to-right
-    (acc = 0.0; acc += aᵢbᵢ), so values are bit-identical to the chain
-    and to the DuckDB ``list_sum(list_transform(...))`` oracle twin.
+    The fold beats an expanded 64-term ``element_at`` chain. Plain
+    arithmetic stays inside whole-stage codegen while HOFs are
+    CodegenFallback, but measured on the d05 verify stage (join + filter +
+    64-term project fused into one stage) the chain blows past the codegen
+    method-size limit, the WHOLE stage falls back, and per-pair scoring
+    ran ~5× SLOWER than the fold (1.54s vs 0.32s over 124k candidate pairs
+    at sf0.1): the fold is one interpreted call per ROW over a primitive
+    array, the de-optimized chain is interpreted per TERM. The fold is
+    left-to-right (acc = 0.0; acc += aᵢbᵢ), so values are bit-identical to
+    the DuckDB ``list_sum(list_transform(...))`` oracle twin.
     """
-    del dim
     return _fold_sum(F.zip_with(a.cast("array<double>"), b.cast("array<double>"), lambda x, y: x * y))
 
 
-def norm_sq(a: Column, dim: int | None = None) -> Column:
+def norm_sq(a: Column) -> Column:
     """Σ aᵢ² as double (see :func:`dot` for the evaluation-strategy note)."""
-    del dim
     ad = a.cast("array<double>")
     return _fold_sum(F.zip_with(ad, ad, lambda x, y: x * y))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     """dot(a,b) / sqrt(‖a‖²·‖b‖²) — one combined sqrt, matching the oracle
-    formula exactly (``dim`` accepted but unused — see :func:`dot`)."""
-    return dot(a, b, dim) / F.sqrt(norm_sq(a, dim) * norm_sq(b, dim))
+    formula exactly."""
+    return dot(a, b) / F.sqrt(norm_sq(a) * norm_sq(b))

@@ -290,63 +290,6 @@ def binned_auc(
     return s / (pos * neg)
 
 
-def score_sink(
-    stream: DataFrame,
-    model: QualityClassifierModel,
-    report_path: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-):
-    """Attach the trained classifier as a ``foreachBatch`` scoring sink:
-    each micro-batch is featurized and scored map-side (the per-batch
-    cost is featurize's one aggregate over BATCH rows — batch-
-    proportional, never corpus-proportional) and ``(id, score, pred,
-    batch_id)`` appends to ``report_path``. This is the online half of
-    the reference's predict path (``prediction_container/main.py:60-89``
-    serves per-request endpoint predictions from the reloaded policy;
-    here the model is the driver-sized artifact from :func:`save_model`
-    and scoring stays inside the engine, batched instead of per-request).
-
-    Exactly-once per batch WITHOUT downstream dedup: the sink writes
-    ``partitionBy(batch_id)`` with DYNAMIC partition overwrite, so a
-    replayed micro-batch rewrites ONLY its own ``batch_id=`` partition
-    in place instead of appending duplicate rows — idempotent under
-    foreachBatch's at-least-once replay, and untouched batches' output
-    is never dropped (static overwrite mode would truncate the whole
-    path). Note ``batch_id`` comes back as a partition column on read
-    (directory-derived, integer-inferred). Zero-token docs produce no
-    row (featurize's documented contract)."""
-    w = list(model.weights)
-    dim, len_cap, len_scale = model.dim, model.len_cap, model.len_scale
-
-    def _score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        feats = featurize(
-            batch_df, id_col, text_col, dim=dim, len_cap=len_cap, len_scale=len_scale
-        )
-        out = score(feats, w).select(
-            F.col(id_col),
-            F.col("score"),
-            (F.col("score") >= threshold).cast("int").alias("pred"),
-            F.lit(batch_id).cast("long").alias("batch_id"),
-        )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(report_path)
-        )
-
-    writer = stream.writeStream.foreachBatch(_score_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return writer.trigger(availableNow=True).start()
-
-
 def save_model(spark: SparkSession, model: QualityClassifierModel, path: str) -> None:
     """Persist the driver-sized artifact as one parquet row (the S11
     model-artifact surface, like ml/linucb's ``LinUCBModel.save``)."""

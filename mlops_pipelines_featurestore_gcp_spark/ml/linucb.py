@@ -106,13 +106,17 @@ class LinUCB:
         return self.solve(partials.collect())
 
     def solve(self, partials: list) -> "LinUCBModel":
-        """The driver-side reduction: ``arm_partials`` rows → fitted policy."""
+        """The driver-side reduction: ``arm_partials`` rows → fitted policy.
+        A partial whose action is not an arm (outside ``[0, num_actions)``)
+        is left out, as ``arm_partials`` leaves out a NULL action."""
         k = self.context_dim
         A = {a: self.tikhonov * np.eye(k) for a in range(self.num_actions)}
         b = {a: np.zeros(k) for a in range(self.num_actions)}
         counts = {a: 0 for a in range(self.num_actions)}
         for row in partials:
             a = row["action"]
+            if a not in A:
+                continue
             A[a] = A[a] + self.num_epochs * np.asarray(row["a_flat"]).reshape(k, k)
             b[a] = b[a] + self.num_epochs * np.asarray(row["b_vec"])
             counts[a] += row["n"]

@@ -107,21 +107,6 @@ def learn_bpe(df: DataFrame, text_col: str, *, n_merges: int) -> list[tuple[str,
     return merges
 
 
-def bpe_segment(
-    df: DataFrame, id_col: str, text_col: str, merges: list[tuple[str, str]]
-) -> DataFrame:
-    """Apply a learned merge list: (id, word, pieces array) per corpus word
-    occurrence — the segmentation a tokenizer would emit. Map-only; the
-    merge list is a driver-side constant folded into the expression tree,
-    the same way a production tokenizer ships its merges file."""
-    toks = tokens(normalize(F.col(text_col)))
-    out = df.select(F.col(id_col), F.explode(toks).alias("word"))
-    expr = F.concat(F.concat_ws(" ", F.split(F.col("word"), "")), F.lit(" " + END))
-    for s1, s2 in merges:
-        expr = _merge_expr(expr, s1, s2)
-    return out.select(id_col, "word", F.split(expr, " ").alias("pieces"))
-
-
 def reference_learn_bpe(word_freqs: dict[str, int], n_merges: int) -> list[tuple[str, str]]:
     """Pure-Python reference of the published algorithm (greedy
     most-frequent pair; count-desc then lexicographic tie-break;

@@ -620,65 +620,6 @@ def exact_substring_spans(
     )
 
 
-def remove_duplicate_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Cut flagged spans out of the corpus — the ACTION half of
-    exact-substring dedup (:func:`exact_substring_spans` is the detection
-    half): every token position covered by a span is dropped and the
-    remaining tokens re-joined in order.
-
-    ``spans`` is ``(id_col, span_start, span_end)`` rows (1-based inclusive
-    token positions over the NORMALIZED token sequence, as
-    ``exact_substring_spans`` emits). Removing every occurrence is the
-    conservative decontamination-style policy; to keep one canonical copy,
-    filter the spans frame first (e.g. anti-join the doc chosen as keeper).
-
-    Plan shape: positional token explode (map-side), a doc-keyed join to
-    the per-doc span LIST (one collect_list shuffle on the spans side —
-    spans per doc are few by construction), a codegen array filter against
-    that list, and one groupBy(id) to reassemble — per-doc state only,
-    no cross-doc anything. Docs with no flagged span pass through with
-    ``n_removed_tokens = 0``.
-
-    Returns (id, clean_text, n_tokens, n_removed_tokens) where
-    ``n_tokens`` counts the original normalized tokens.
-    """
-    # null text → empty token array (size(null) is -1 with ANSI off, and
-    # sequence(1, n) counts DOWN for n < 1 — both must never reach the
-    # position-zip below)
-    toks = F.coalesce(tokens(normalize(F.col(text_col))), F.array().cast("array<string>"))
-    base = _spread(df).select(F.col(id_col), toks.alias("__toks"))
-    span_lists = spans.groupBy(id_col).agg(
-        F.collect_list(
-            F.struct(F.col("span_start").alias("a"), F.col("span_end").alias("b"))
-        ).alias("__spans")
-    )
-    joined = base.join(span_lists, id_col, "left").select(
-        F.col(id_col),
-        "__toks",
-        F.coalesce("__spans", F.array().cast("array<struct<a:long,b:long>>")).alias("__spans"),
-    )
-    # keep token i iff NO span [a, b] contains it — a nested HOF over the
-    # tiny per-doc span list, evaluated once per token
-    positions = F.when(
-        F.size("__toks") > 0, F.sequence(F.lit(1), F.size("__toks")).cast("array<bigint>")
-    ).otherwise(F.array().cast("array<bigint>"))
-    kept = F.filter(
-        F.arrays_zip(positions.alias("p"), F.col("__toks").alias("t")),
-        lambda e: ~F.exists("__spans", lambda s: (e["p"] >= s["a"]) & (e["p"] <= s["b"])),
-    )
-    return joined.select(
-        F.col(id_col),
-        F.concat_ws(" ", F.transform(kept, lambda e: e["t"])).alias("clean_text"),
-        F.size("__toks").cast("long").alias("n_tokens"),
-        (F.size("__toks") - F.size(kept)).cast("long").alias("n_removed_tokens"),
-    )
-
-
 def hamming_blocked_pairs(
     sig: DataFrame,
     id_col: str,

@@ -108,53 +108,3 @@ def psi(
     )
 
 
-def drift_report(
-    ref: DataFrame,
-    cur: DataFrame,
-    cols: list[str],
-    *,
-    bins: int = 10,
-) -> DataFrame:
-    """PSI per feature column — one row each, unioned."""
-    parts = [psi(ref, cur, c, bins=bins) for c in cols]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def drift_sink(
-    stream: DataFrame,
-    ref: DataFrame,
-    cols: list[str],
-    report_path: str,
-    checkpoint_dir: str,
-    *,
-    bins: int = 10,
-):
-    """Attach the PSI monitor as a ``foreachBatch`` streaming sink: every
-    micro-batch's feature distributions are scored against the frozen
-    REFERENCE snapshot and the per-feature report appends to
-    ``report_path`` tagged with the batch id — the online half of
-    training-serving-skew monitoring (the reference configures this as a
-    managed Vertex service; here it is ~20 lines over ``psi``).
-
-    The reference snapshot is captured ONCE (localCheckpoint) so repeated
-    batches don't rescan it, and reports are append-only with the batch id
-    as lineage — a replayed batch rewrites the same (batch_id, feature)
-    rows downstream consumers dedup on.
-    """
-    frozen = ref.localCheckpoint(eager=False)
-
-    def _score(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        report = drift_report(frozen, batch_df, cols, bins=bins).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        report.write.mode("append").parquet(report_path)
-
-    writer = stream.writeStream.foreachBatch(_score).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return writer.trigger(availableNow=True).start()

@@ -129,50 +129,3 @@ def enforce(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     return df
 
 
-def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """ANALYZE-style column statistics in ONE scan: per column — row count,
-    null count/fraction, HLL++ distinct estimate, min/max (rendered to
-    string so every type shares the report schema), and for numerics the
-    mean. The catalog-stats pass an optimizer or a data catalog wants,
-    costed like any other single aggregate at 100 TB.
-    """
-    from pyspark.sql.types import NumericType
-
-    target = cols or df.columns
-    types = dict(df.dtypes)
-    numeric = {
-        f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)
-    }
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in target:
-        aggs += [
-            F.sum(F.col(c).isNull().cast("long")).alias(f"__null_{c}"),
-            F.approx_count_distinct(c, rsd=0.02).alias(f"__dist_{c}"),
-            F.min(c).cast("string").alias(f"__min_{c}"),
-            F.max(c).cast("string").alias(f"__max_{c}"),
-        ]
-        if c in numeric:
-            aggs.append(F.avg(c).alias(f"__avg_{c}"))
-    row = df.agg(*aggs).collect()[0]
-    n = row["__n"]
-    # aggregates over zero rows come back NULL — an empty table must
-    # profile as zeros, not crash
-    report = [
-        (
-            c,
-            types[c],
-            int(n),
-            int(row[f"__null_{c}"] or 0),
-            (float(row[f"__null_{c}"] or 0) / n) if n else 0.0,
-            int(row[f"__dist_{c}"] or 0),
-            row[f"__min_{c}"],
-            row[f"__max_{c}"],
-            float(row[f"__avg_{c}"]) if c in numeric and row[f"__avg_{c}"] is not None else None,
-        )
-        for c in target
-    ]
-    return df.sparkSession.createDataFrame(
-        report,
-        "column string, dtype string, n_rows long, n_nulls long, null_frac double, "
-        "approx_distinct long, min_value string, max_value string, mean double",
-    )

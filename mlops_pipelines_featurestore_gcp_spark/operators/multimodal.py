@@ -1,15 +1,15 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata, with decode / feature-extract / resize / frame-sample as
-Arrow-batched Pandas transforms.
+metadata, with decode / perceptual hash / audio fingerprint / frame-sample
+as Arrow-batched Pandas transforms.
 
 Design for 100 TB: payloads stay in executor-side Arrow batches end to end —
 metadata-only queries (size, fingerprint, mime dispatch) never touch Python,
 and the Pandas stages stream ``mapInPandas`` batches without per-row
-serialization. The actual image/audio codecs are NOT in this container, so
-the decode kernels are deterministic fakes behind ``use_real_codecs`` —
-the Spark-side contract (schemas, batch shapes, partition flow, UDF
-signatures) is real and tested; swapping in PIL/librosa is a local change
-inside one generator function.
+serialization. The package ships no image or audio codec, so each decode is a
+deterministic digest-derived stand-in (``_fake_decode``, ``_fake_pixels``,
+``_fake_chroma``), so every mm* query is deterministic and oracle-checked. The
+Spark-side contract (schemas, batch shapes, partition flow, UDF signatures)
+is real and tested; a real codec replaces one of those functions.
 """
 
 from __future__ import annotations
@@ -19,11 +19,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FEATURE_DIM = 8
-
 
 def attach_payload(df: DataFrame, src_col: str, *, mime: str = "application/octet-stream") -> DataFrame:
     """Opaque binary column + typed metadata from any source column.
@@ -50,46 +47,16 @@ def _fake_decode(blob: bytes) -> tuple[int, int, int]:
     return 16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 4
 
 
-def _real_decode(blob: bytes) -> tuple[int, int, int]:
-    """Actual image decode: PIL when present, else the pure-stdlib PNG
-    decoder (``functions/png.py``) — PNG payloads decode for real even in
-    codec-less containers. Non-PNG formats without PIL raise
-    ``NotImplementedError`` (the documented stub contract).
-    """
-    import io
-
-    try:
-        from PIL import Image
-    except ImportError:
-        from mlops_pipelines_featurestore_gcp_spark.functions import png
-
-        if png.is_png(blob):
-            w, h, ch, _ = png.decode_png(blob)
-            return w, h, ch
-        raise NotImplementedError(
-            "use_real_codecs=True without PIL decodes PNG only; "
-            "install pillow for other formats or use the stub decoder"
-        )
-    with Image.open(io.BytesIO(blob)) as im:
-        return im.width, im.height, len(im.getbands())
-
-
-def decode_media(df: DataFrame, *, payload_col: str = "payload", use_real_codecs: bool = False) -> DataFrame:
-    """Decode: payload → (width, height, channels) via ``mapInPandas``.
-
-    ``use_real_codecs=True`` routes each payload through PIL when
-    installed, else the pure-stdlib PNG decoder (PNG decodes for real in
-    this codec-less container; other formats raise ``NotImplementedError``
-    per payload). The default is the deterministic digest-derived stub,
-    which keeps the plumbing testable and SQL-oracle-reproducible.
-    """
-    decode = _real_decode if use_real_codecs else _fake_decode
+def decode_media(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+    """Decode: payload → (width, height, channels) via ``mapInPandas``,
+    with the deterministic digest-derived stub decoder, which keeps the
+    plumbing testable and SQL-oracle-reproducible."""
     out_schema = ", ".join(f"{c} {t}" for c, t in _schema_of(df).items()) + ", width int, height int, channels int"
     passthrough = [c for c in df.columns]
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            decoded = [decode(bytes(b)) for b in pdf[payload_col]]
+            decoded = [_fake_decode(bytes(b)) for b in pdf[payload_col]]
             res = pdf[passthrough].copy()
             res["width"] = [d[0] for d in decoded]
             res["height"] = [d[1] for d in decoded]
@@ -97,27 +64,6 @@ def decode_media(df: DataFrame, *, payload_col: str = "payload", use_real_codecs
             yield res
 
     return df.mapInPandas(_decode, out_schema)
-
-
-def extract_features(df: DataFrame, *, payload_col: str = "payload", dim: int = FEATURE_DIM) -> DataFrame:
-    """Feature-extraction stub: payload → ``array<float>`` embedding.
-
-    Deterministic digest-derived vector; the vectorized batch shape and
-    output schema match what a real CNN/wav2vec encoder stage would emit.
-    """
-    schema = ", ".join(f"{c} {t}" for c, t in _schema_of(df).items()) + f", features array<float>"
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf[payload_col]:
-                d = hashlib.sha256(bytes(b)).digest()
-                feats.append([round(d[i] / 255.0, 6) for i in range(dim)])
-            res = pdf.copy()
-            res["features"] = feats
-            yield res
-
-    return df.mapInPandas(_extract, schema)
 
 
 def frame_sample(df: DataFrame, *, payload_col: str = "payload", frame_bytes: int = 64, every: int = 2) -> DataFrame:
@@ -161,9 +107,7 @@ def _fake_pixels(blob: bytes) -> list[int]:
     return list(d1 + d2)
 
 
-def perceptual_hash(
-    df: DataFrame, *, payload_col: str = "payload", out_col: str = "phash", use_real_codecs: bool = False
-) -> DataFrame:
+def perceptual_hash(df: DataFrame, *, payload_col: str = "payload", out_col: str = "phash") -> DataFrame:
     """Average-hash (aHash) perceptual image signature → 60-bit long.
 
     The published image-dedup primitive: downsample to an 8×8 grayscale
@@ -174,33 +118,16 @@ def perceptual_hash(
     ``dedup.hamming_blocked_pairs`` for corpus-scale image dedup, the
     exact machinery text SimHash uses.
 
-    Decode follows the module contract: deterministic digest-derived
-    pixels by default, real pixels behind ``use_real_codecs`` — PIL when
-    installed, else the stdlib PNG decoder's 8×8 box average
-    (``functions/png.gray_8x8``). The Arrow batch flow is identical
-    either way.
+    Decode follows the module contract: the 8×8 grid is the deterministic
+    digest-derived ``_fake_pixels``.
     """
-
-    def _pixels_real(blob: bytes) -> list[int]:
-        import io
-
-        try:
-            from PIL import Image
-        except ImportError:
-            from mlops_pipelines_featurestore_gcp_spark.functions import png
-
-            return png.gray_8x8(blob)
-        with Image.open(io.BytesIO(blob)) as im:
-            return list(im.convert("L").resize((8, 8)).getdata())
-
-    pixels = _pixels_real if use_real_codecs else _fake_pixels
     schema = ", ".join(f"{c} {t}" for c, t in _schema_of(df).items()) + f", {out_col} bigint"
 
     def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for b in pdf[payload_col]:
-                px = pixels(bytes(b))
+                px = _fake_pixels(bytes(b))
                 mean = sum(px) / len(px)
                 h = 0
                 for i in range(PHASH_BITS):
@@ -212,76 +139,6 @@ def perceptual_hash(
             yield res
 
     return df.mapInPandas(_hash, schema)
-
-
-def resize_media(
-    df: DataFrame,
-    *,
-    out_w: int,
-    out_h: int,
-    payload_col: str = "payload",
-    out_col: str = "resized",
-    use_real_codecs: bool = False,
-) -> DataFrame:
-    """Resize image payloads to (out_w, out_h) → a new PNG binary column
-    plus its byte size — the resize stage of the decode / feature-extract
-    / resize / frame-sample multimodal kernel set.
-
-    ``use_real_codecs=True`` decodes for real — PIL when installed, else
-    the pure-stdlib PNG decoder — box-resamples (``png.box_resize``, the
-    gray_8x8 binning generalized to any target and channel count), and
-    re-encodes with the stdlib PNG writer: for PNG inputs the WHOLE
-    pipeline runs on real pixels even in this codec-less container
-    (non-PNG without PIL raises ``ValueError`` per payload, the decoder's
-    documented contract). The default stub derives deterministic
-    grayscale samples at the target size from the payload digest and
-    re-encodes them through the SAME real PNG writer, so output payloads
-    are genuine PNGs either way and the Arrow batch flow is identical.
-    """
-    from mlops_pipelines_featurestore_gcp_spark.functions import png
-
-    def _resize_real(blob: bytes) -> bytes:
-        import io
-
-        try:
-            from PIL import Image
-        except ImportError:
-            w, h, ch, samples = png.decode_png(blob)
-            return png.encode_png(
-                out_w, out_h, png.box_resize(w, h, ch, samples, out_w, out_h), channels=ch
-            )
-        with Image.open(io.BytesIO(blob)) as im:
-            out = io.BytesIO()
-            # Pin the resample filter to BOX so the PIL path computes the
-            # same box average as png.box_resize — PIL's default (bicubic)
-            # would make use_real_codecs=True output depend on whether PIL
-            # happens to be installed (ADVICE r6: cross-environment
-            # determinism for the same flag value).
-            im.resize((out_w, out_h), resample=Image.Resampling.BOX).save(out, format="PNG")
-            return out.getvalue()
-
-    def _resize_stub(blob: bytes) -> bytes:
-        need, d, buf = out_w * out_h, hashlib.sha256(blob).digest(), bytearray()
-        while len(buf) < need:
-            buf.extend(d)
-            d = hashlib.sha256(d).digest()
-        return png.encode_png(out_w, out_h, bytes(buf[:need]), channels=1)
-
-    resize = _resize_real if use_real_codecs else _resize_stub
-    schema = (
-        ", ".join(f"{c} {t}" for c, t in _schema_of(df).items())
-        + f", {out_col} binary, {out_col}_bytes bigint"
-    )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [resize(bytes(b)) for b in pdf[payload_col]]
-            res = pdf.copy()
-            res[out_col] = blobs
-            res[f"{out_col}_bytes"] = [len(b) for b in blobs]
-            yield res
-
-    return df.mapInPandas(_run, schema)
 
 
 def video_neardup_pairs(
@@ -371,9 +228,7 @@ def _fake_chroma(blob: bytes) -> list[list[int]]:
     return frames
 
 
-def audio_fingerprint(
-    df: DataFrame, *, payload_col: str = "payload", out_col: str = "afp", use_real_codecs: bool = False
-) -> DataFrame:
+def audio_fingerprint(df: DataFrame, *, payload_col: str = "payload", out_col: str = "afp") -> DataFrame:
     """Chromaprint-style audio fingerprint → 60-bit long.
 
     The published acoustic-fingerprint shape (Chromaprint/AcoustID): decode
@@ -384,19 +239,11 @@ def audio_fingerprint(
     5 frame-transitions × 12 bins = 60 bits, matching the engine's SimHash/
     aHash width so ``dedup.hamming_blocked_pairs`` is reused verbatim.
 
-    Codec contract (module docstring): no audio codec ships in this
-    container, so the chroma stage is the deterministic digest-derived stub
-    by default — SQL-oracle-reproducible and honest about its boundary;
-    ``use_real_codecs=True`` raises ``NotImplementedError`` until a real
-    decoder (librosa / ffmpeg bindings) is installed. The Arrow batch flow,
-    schema, and blocking machinery are real either way.
+    Codec contract (module docstring): the package ships no audio codec, so
+    the chroma stage is the deterministic digest-derived ``_fake_chroma`` —
+    SQL-oracle-reproducible and honest about its boundary. The Arrow batch
+    flow, schema, and blocking machinery are real.
     """
-    if use_real_codecs:
-        raise NotImplementedError(
-            "no audio codec in this container; install librosa/ffmpeg "
-            "bindings and replace _fake_chroma with a real decode → FFT → "
-            "chroma pipeline"
-        )
     schema = ", ".join(f"{c} {t}" for c, t in _schema_of(df).items()) + f", {out_col} bigint"
 
     def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -427,14 +274,13 @@ def audio_neardup_pairs(
     payload_col: str = "payload",
     chunks: int = 4,
     max_hamming: int = 8,
-    use_real_codecs: bool = False,
 ) -> DataFrame:
     """Corpus-scale audio near-dup: chromaprint-style fingerprint + hamming
     chunk blocking — (id_a, id_b, hamming). The audio twin of
     :func:`image_neardup_pairs`, sharing ``dedup.hamming_blocked_pairs``."""
     from mlops_pipelines_featurestore_gcp_spark.operators.dedup import hamming_blocked_pairs
 
-    sig = audio_fingerprint(df, payload_col=payload_col, use_real_codecs=use_real_codecs)
+    sig = audio_fingerprint(df, payload_col=payload_col)
     return hamming_blocked_pairs(
         sig.select(id_col, "afp"), id_col, "afp",
         bits=AFP_BITS, chunks=chunks, max_hamming=max_hamming,
@@ -448,14 +294,13 @@ def image_neardup_pairs(
     payload_col: str = "payload",
     chunks: int = 4,
     max_hamming: int = 8,
-    use_real_codecs: bool = False,
 ) -> DataFrame:
     """Corpus-scale image near-dup: perceptual hash + hamming chunk
     blocking — (id_a, id_b, hamming). The multimodal twin of text
     SimHash dedup."""
     from mlops_pipelines_featurestore_gcp_spark.operators.dedup import hamming_blocked_pairs
 
-    sig = perceptual_hash(df, payload_col=payload_col, use_real_codecs=use_real_codecs)
+    sig = perceptual_hash(df, payload_col=payload_col)
     return hamming_blocked_pairs(
         sig.select(id_col, "phash"), id_col, "phash",
         bits=PHASH_BITS, chunks=chunks, max_hamming=max_hamming,

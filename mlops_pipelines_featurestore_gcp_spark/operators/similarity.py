@@ -332,11 +332,11 @@ def cosine_neardup_pairs(
     # caller's oracle twin
     a = corpus.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        norm_sq(F.col(vec_col), dim).alias("__na"),
+        norm_sq(F.col(vec_col)).alias("__na"),
     )
     b = corpus.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        norm_sq(F.col(vec_col), dim).alias("__nb"),
+        norm_sq(F.col(vec_col)).alias("__nb"),
     )
     return (
         a.crossJoin(b)
@@ -345,7 +345,7 @@ def cosine_neardup_pairs(
             "id_a",
             "id_b",
             F.round(
-                dot(F.col("va"), F.col("vb"), dim)
+                dot(F.col("va"), F.col("vb"))
                 / F.sqrt(F.col("__na") * F.col("__nb")),
                 round_digits,
             ).alias("cos_sim"),
@@ -397,7 +397,7 @@ def lsh_blocked_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(cosine(F.col("va"), F.col("vb"), dim), round_digits).alias("cos_sim"),
+            F.round(cosine(F.col("va"), F.col("vb")), round_digits).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
         .distinct()
@@ -444,7 +444,7 @@ def coord_sign_blocked_pairs(
             F.col(vec_col).alias("v"),
             # squared norm once per VECTOR (not per pair): cheaper and keeps
             # the pair-verify expression inside the codegen method limit
-            norm_sq(F.col(vec_col), dim).alias("nrm"),
+            norm_sq(F.col(vec_col)).alias("nrm"),
         )
     )
     sig_exprs = []
@@ -486,7 +486,7 @@ def coord_sign_blocked_pairs(
             "id_a",
             "id_b",
             F.round(
-                dot(F.col("va"), F.col("vb"), dim) / F.sqrt(F.col("na") * F.col("nb")),
+                dot(F.col("va"), F.col("vb")) / F.sqrt(F.col("na") * F.col("nb")),
                 round_digits,
             ).alias("cos_sim"),
         )
@@ -581,7 +581,7 @@ def quantized_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        norm_sq(F.col(vec_col), dim).alias("__qn"),
+        norm_sq(F.col(vec_col)).alias("__qn"),
     )
     c = _spread(
         corpus_q.select(F.col(id_col).alias("neighbor_id"), "qvec", "qscale")
@@ -634,7 +634,7 @@ def quantized_topk(
     full = corpus_full.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        norm_sq(F.col(vec_col), dim).alias("__cn"),
+        norm_sq(F.col(vec_col)).alias("__cn"),
     )
     rescored = (
         short.select("query_id", "neighbor_id")
@@ -644,7 +644,7 @@ def quantized_topk(
             "query_id",
             "neighbor_id",
             F.round(
-                dot(F.col("qv"), F.col("cv"), dim) / F.sqrt(F.col("__qn") * F.col("__cn")),
+                dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__qn") * F.col("__cn")),
                 round_digits,
             ).alias("cos_sim"),
         )
@@ -849,7 +849,7 @@ def lsh_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv"), dim), round_digits).alias("cos_sim"),
+            F.round(cosine(F.col("qv"), F.col("cv")), round_digits).alias("cos_sim"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
@@ -968,7 +968,7 @@ def ivf_search(
     assigned = spark.read.parquet(f"{path}/assigned")
     centroids = spark.read.parquet(f"{path}/centroids")
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    return _ivf_probe(assigned, centroids, q, n_probe=n_probe, k=k, round_digits=round_digits, dim=dim)
+    return _ivf_probe(assigned, centroids, q, n_probe=n_probe, k=k, round_digits=round_digits)
 
 
 def _ivf_probe(
@@ -979,7 +979,6 @@ def _ivf_probe(
     n_probe: int,
     k: int,
     round_digits: int,
-    dim: int | None = None,
 ) -> DataFrame:
     """Probe phase shared by ``ivf_topk`` (in-memory) and ``ivf_search``
     (persisted): each query scores the broadcast centroid table, keeps its
@@ -1009,7 +1008,7 @@ def _ivf_probe(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv"), dim), round_digits).alias("cos_sim"),
+            F.round(cosine(F.col("qv"), F.col("cv")), round_digits).alias("cos_sim"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
@@ -1065,7 +1064,7 @@ def ivf_topk(
         [(i, [float(x) for x in ctr]) for i, ctr in enumerate(cells)],
         "cell int, centroid array<double>",
     )
-    return _ivf_probe(assigned, centroids, q, n_probe=n_probe, k=k, round_digits=round_digits, dim=dim)
+    return _ivf_probe(assigned, centroids, q, n_probe=n_probe, k=k, round_digits=round_digits)
 
 
 def pq_train(
@@ -1278,12 +1277,12 @@ def pq_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        norm_sq(F.col(vec_col), dim).alias("__qn"),
+        norm_sq(F.col(vec_col)).alias("__qn"),
     )
     full = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        norm_sq(F.col(vec_col), dim).alias("__cn"),
+        norm_sq(F.col(vec_col)).alias("__cn"),
     )
     rescored = (
         short.select("query_id", "neighbor_id")
@@ -1293,7 +1292,7 @@ def pq_topk(
             "query_id",
             "neighbor_id",
             F.round(
-                dot(F.col("qv"), F.col("cv"), dim) / F.sqrt(F.col("__qn") * F.col("__cn")),
+                dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__qn") * F.col("__cn")),
                 round_digits,
             ).alias("cos_sim"),
         )
@@ -1576,12 +1575,12 @@ def ivf_pq_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        norm_sq(F.col(vec_col), dim).alias("__qn"),
+        norm_sq(F.col(vec_col)).alias("__qn"),
     )
     full = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        norm_sq(F.col(vec_col), dim).alias("__cn"),
+        norm_sq(F.col(vec_col)).alias("__cn"),
     )
     rescored = (
         short.select("query_id", "neighbor_id")
@@ -1591,7 +1590,7 @@ def ivf_pq_topk(
             "query_id",
             "neighbor_id",
             F.round(
-                dot(F.col("qv"), F.col("cv"), dim) / F.sqrt(F.col("__qn") * F.col("__cn")),
+                dot(F.col("qv"), F.col("cv")) / F.sqrt(F.col("__qn") * F.col("__cn")),
                 round_digits,
             ).alias("cos_sim"),
         )
@@ -1979,12 +1978,6 @@ def ivfpq_compact(spark, path: str, **kwargs) -> dict:
     return compact_cell_partitions(spark, f"{path}/codes", **kwargs)
 
 
-def ivf_compact(spark, path: str, **kwargs) -> dict:
-    """Compact a persisted IVF index's ``assigned`` table (see
-    :func:`compact_cell_partitions`); centroids are untouched."""
-    return compact_cell_partitions(spark, f"{path}/assigned", **kwargs)
-
-
 _OPQ_UNSET = object()  # sentinel: rotation=None legitimately means "plain index"
 
 
@@ -2294,7 +2287,7 @@ def semantic_dedup_pairs(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),
-            norm_sq(F.col(vec_col), dim).alias("nrm"),
+            norm_sq(F.col(vec_col)).alias("nrm"),
         )
     )
     if n_clusters is None:
@@ -2320,46 +2313,11 @@ def semantic_dedup_pairs(
             "id_b",
             F.col("cell"),
             F.round(
-                dot(F.col("va"), F.col("vb"), dim) / F.sqrt(F.col("na") * F.col("nb")),
+                dot(F.col("va"), F.col("vb")) / F.sqrt(F.col("na") * F.col("nb")),
                 round_digits,
             ).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
-    )
-
-
-def semantic_dedup_keep(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int | None = None,
-    threshold: float = 0.95,
-    seed: int = 42,
-    max_iter: int = 10,
-    dim: int | None = None,
-) -> DataFrame:
-    """Ids surviving semantic dedup: one canonical member per duplicate
-    component (transitive closure over :func:`semantic_dedup_pairs`), plus
-    every vector in no pair."""
-    from mlops_pipelines_featurestore_gcp_spark.operators.components import dedup_keep_set
-
-    pairs = semantic_dedup_pairs(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_clusters=n_clusters,
-        threshold=threshold,
-        seed=seed,
-        max_iter=max_iter,
-        dim=dim,
-    )
-    return dedup_keep_set(
-        pairs.select(F.col("id_a"), F.col("id_b")),
-        corpus.select(F.col(id_col)),
-        id_col,
-        src="id_a",
-        dst="id_b",
     )
 
 
@@ -2452,7 +2410,7 @@ def semantic_dedup_keep_star(
         corpus.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),
-            norm_sq(F.col(vec_col), dim).alias("nrm"),
+            norm_sq(F.col(vec_col)).alias("nrm"),
         )
     )
     if n_clusters is None:
@@ -2463,8 +2421,8 @@ def semantic_dedup_keep_star(
         .withColumn(
             "__c_sim",
             F.round(
-                dot(F.col("v").cast("array<double>"), F.col("ctr"), dim)
-                / F.sqrt(F.col("nrm") * norm_sq(F.col("ctr"), dim)),
+                dot(F.col("v").cast("array<double>"), F.col("ctr"))
+                / F.sqrt(F.col("nrm") * norm_sq(F.col("ctr"))),
                 round_digits,
             ),
         )
@@ -2524,7 +2482,7 @@ def semantic_dedup_keep_star(
                     F.col("__hubs"),
                     lambda h: F.struct(
                         F.round(
-                            dot(F.col("v"), h["hv"], dim) / F.sqrt(F.col("nrm") * h["hn"]),
+                            dot(F.col("v"), h["hv"]) / F.sqrt(F.col("nrm") * h["hn"]),
                             round_digits,
                         ).alias("cos"),
                         h["hid"].alias("hid"),

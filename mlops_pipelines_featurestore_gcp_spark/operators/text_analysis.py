@@ -57,21 +57,6 @@ def redact_pii(col: Column) -> Column:
     return out
 
 
-def pii_redact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document PII scrub: typed match counts + redacted text.
-
-    Pure regexp codegen — at corpus scale this is a map-only pass with no
-    shuffle and no Python.
-    """
-    df = _spread(df)
-    counts = pii_counts(F.col(text_col))
-    return df.select(
-        F.col(id_col),
-        *[c.alias(f"n_{kind}") for kind, c in counts.items()],
-        redact_pii(F.col(text_col)).alias("redacted_text"),
-    )
-
-
 def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document token statistics.
 

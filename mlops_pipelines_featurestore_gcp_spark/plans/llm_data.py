@@ -459,7 +459,7 @@ def d10_semantic_keep_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)  # feeds both the flags and the witness joins
     ev = emb.select(
         F.col("vec_id").alias("__wid"), F.col("embedding").alias("__wv"),
-        norm_sq(F.col("embedding"), 64).alias("__wn"),
+        norm_sq(F.col("embedding")).alias("__wn"),
     )
     hubs_kept = out.select(F.col("vec_id").alias("dup_of"), F.col("kept").alias("__hk"))
     dropped = (
@@ -477,7 +477,7 @@ def d10_semantic_keep_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.col("__hk").alias("__witness_kept_raw"),
             F.round(
-                dot(F.col("__wv"), F.col("__hv"), 64)
+                dot(F.col("__wv"), F.col("__hv"))
                 / F.sqrt(F.col("__wn") * F.col("__hn")),
                 6,
             ).alias("__exact"),
@@ -753,7 +753,7 @@ def _ann_contract(
     out = out.localCheckpoint(eager=False)
     qv = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
     cv = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"))
-    exact = F.round(cosine(F.col("__qv"), F.col("__cv"), dim), 6)
+    exact = F.round(cosine(F.col("__qv"), F.col("__cv")), 6)
     w = Window.partitionBy("query_id").orderBy("rnk")
     checked = (
         out.join(F.broadcast(qv.join(out.select("query_id").distinct(), "query_id")), "query_id")
@@ -916,11 +916,11 @@ def d07_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parity is bit-exact. No all-pairs stage anywhere in this plan.
     ea = emb.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"),
-        norm_sq(F.col("embedding"), 64).alias("__na"),
+        norm_sq(F.col("embedding")).alias("__na"),
     )
     eb = emb.select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"),
-        norm_sq(F.col("embedding"), 64).alias("__nb"),
+        norm_sq(F.col("embedding")).alias("__nb"),
     )
     rescored = (
         pairs.select("id_a", "id_b", "cos_sim")
@@ -929,7 +929,7 @@ def d07_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "__exact",
             F.round(
-                dot(F.col("__va"), F.col("__vb"), 64)
+                dot(F.col("__va"), F.col("__vb"))
                 / F.sqrt(F.col("__na") * F.col("__nb")),
                 6,
             ),

@@ -66,10 +66,3 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     plain ``spark.read.parquet`` of the files would lose it)."""
     return spark.table(table)
 
-
-def join_is_shuffle_free(joined: DataFrame) -> bool:
-    """True when the physical plan contains a SortMergeJoin with no
-    Exchange above either input — the bucketing payoff, assertable in
-    tests and sanity checks."""
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    return "SortMergeJoin" in plan and "Exchange" not in plan

@@ -128,13 +128,17 @@ def upsert_batch(
     current = doc and os.path.join(table_path, f"v{doc['version']}")
     merged = incoming
     if current is not None:
+        # a NULL key's bucket is NULL, which no IN list matches
+        pruned = F.col(_BUCKET).isin([b for b in touched if b is not None])
+        if None in touched:
+            pruned = pruned | F.col(_BUCKET).isNull()
         existing = (
             # mergeSchema: batches may EVOLVE the schema (new columns);
             # untouched buckets keep their old files and read as NULL for
             # columns they predate — plain parquet schema evolution
             spark.read.option("mergeSchema", "true")
             .parquet(current)
-            .where(F.col(_BUCKET).isin(touched))  # partition-pruned read
+            .where(pruned)  # partition-pruned read
         )
         # allowMissingColumns both ways: a batch can add columns the table
         # lacks, and late replays can lack columns the table gained

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from mlops_pipelines_featurestore_gcp_spark.operators import multimodal
 
 
@@ -57,9 +55,3 @@ def test_mm05_fixture_buckets_never_collide():
     mm04 pins for aHash. Pure driver-side check of the stub pipeline."""
     fps = {_ref_fingerprint(f"aud-{i}".encode()) for i in range(89)}
     assert len(fps) == 89
-
-
-def test_real_codec_path_is_a_documented_stub(spark):
-    df = _payloads(spark, [(1, "x")])
-    with pytest.raises(NotImplementedError):
-        multimodal.audio_fingerprint(df, use_real_codecs=True)

@@ -26,10 +26,18 @@ def test_merge_sequence_matches_reference(spark):
     assert got == expect
 
 
+def _segment(docs, merges):
+    """(word, pieces) per distinct word: the word table's symbol strings
+    with each merge applied in order, as ``learn_bpe`` applies them."""
+    syms = F.col("syms")
+    for s1, s2 in merges:
+        syms = bpe._merge_expr(syms, s1, s2)
+    return bpe.word_symbol_table(docs, "text").select("word", F.split(syms, " ").alias("pieces"))
+
+
 def test_run_merging_left_to_right(spark):
     docs = spark.createDataFrame([(1, "aaaa aaa")], "doc_id long, text string")
-    seg = bpe.bpe_segment(docs, "doc_id", "text", [("a", "a")])
-    got = {r.word: r.pieces for r in seg.collect()}
+    got = {r.word: r.pieces for r in _segment(docs, [("a", "a")]).collect()}
     assert got["aaaa"] == ["aa", "aa", bpe.END]
     assert got["aaa"] == ["aa", "a", bpe.END]
 
@@ -40,7 +48,7 @@ def test_segmentation_reconstructs_words(spark, sf_small):
     docs = load_table(spark, "documents", sf_small).limit(50)
     merges = bpe.learn_bpe(docs, "text", n_merges=8)
     assert len(merges) == 8
-    seg = bpe.bpe_segment(docs, "doc_id", "text", merges)
+    seg = _segment(docs, merges)
     bad = seg.where(
         F.concat_ws("", F.col("pieces")) != F.concat(F.col("word"), F.lit(bpe.END))
     ).count()

@@ -10,6 +10,13 @@ from mlops_pipelines_featurestore_gcp_spark.sources import bucketing
 from mlops_pipelines_featurestore_gcp_spark.sources.catalog import load_table
 
 
+def join_is_shuffle_free(joined) -> bool:
+    """True when the physical plan contains a SortMergeJoin with no
+    Exchange above either input — the bucketing payoff."""
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    return "SortMergeJoin" in plan and "Exchange" not in plan
+
+
 @pytest.fixture
 def bucketed_pair(spark, sf_small, tmp_path_factory):
     orders = load_table(spark, "orders", sf_small).select("o_orderkey", "o_totalprice")
@@ -29,7 +36,7 @@ def test_bucketed_join_is_shuffle_free(spark, sf_small, bucketed_pair):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = o.join(li, o.o_orderkey == li.l_orderkey)
-        assert bucketing.join_is_shuffle_free(joined), (
+        assert join_is_shuffle_free(joined), (
             "bucketed same-key join should have no Exchange:\n"
             + joined._jdf.queryExecution().executedPlan().toString()[:2000]
         )
@@ -53,7 +60,7 @@ def test_unbucketed_join_shuffles(spark, sf_small):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = o.join(li, o.o_orderkey == li.l_orderkey)
-        assert not bucketing.join_is_shuffle_free(joined)
+        assert not join_is_shuffle_free(joined)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 

@@ -123,8 +123,18 @@ def test_contamination_probe_is_broadcast(spark):
 
 
 # ---------------------------------------------------------------------------
-# pii_redact
+# pii_counts / redact_pii
 # ---------------------------------------------------------------------------
+
+
+def _pii(df):
+    """Typed PII counts and the redacted text per doc, the t01 columns."""
+    counts = text_analysis.pii_counts(F.col("text"))
+    return df.select(
+        "doc_id",
+        *[c.alias(f"n_{kind}") for kind, c in counts.items()],
+        text_analysis.redact_pii(F.col("text")).alias("redacted_text"),
+    )
 
 
 def test_pii_redaction_and_counts(spark):
@@ -132,7 +142,7 @@ def test_pii_redaction_and_counts(spark):
         "mail bob.smith+x@corp.example.org or admin@a.io, host 192.168.0.1, "
         "ssn 123-45-6789, call 555-123-4567 now"
     )
-    row = text_analysis.pii_redact(_docs(spark, [(1, text)]), "doc_id", "text").collect()[0]
+    row = _pii(_docs(spark, [(1, text)])).collect()[0]
     assert row.n_email == 2 and row.n_ip == 1 and row.n_ssn == 1 and row.n_phone == 1
     red = row.redacted_text
     assert "<EMAIL>" in red and "<IP>" in red and "<SSN>" in red and "<PHONE>" in red
@@ -141,7 +151,7 @@ def test_pii_redaction_and_counts(spark):
 
 def test_pii_clean_text_unchanged(spark):
     text = "no personal data here just words and 42 numbers"
-    row = text_analysis.pii_redact(_docs(spark, [(1, text)]), "doc_id", "text").collect()[0]
+    row = _pii(_docs(spark, [(1, text)])).collect()[0]
     assert row.redacted_text == text
     assert row.n_email == row.n_ip == row.n_ssn == row.n_phone == 0
 
@@ -214,7 +224,7 @@ def test_null_text_rows_are_safe(spark):
         df, _docs(spark, [(9, "alpha beta gamma delta epsilon zeta")]), "doc_id", "text", n=5
     ).collect()
     assert {r.doc_id for r in cont} == {2}
-    pii = {r.doc_id: r for r in text_analysis.pii_redact(df, "doc_id", "text").collect()}
+    pii = {r.doc_id: r for r in _pii(df).collect()}
     assert pii[1].redacted_text is None
     assert pii[2].redacted_text == "alpha beta gamma delta epsilon zeta"
 

@@ -14,7 +14,6 @@ import os
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from mlops_pipelines_featurestore_gcp_spark.ml import classifier
 
@@ -130,34 +129,6 @@ def test_featurize_shape_and_length_feature(spark):
     assert abs(sum(v * v for v in out[1][:DIM]) - 1.0) < 1e-9
 
 
-def test_score_sink_streaming(spark, tmp_path, toy):
-    df, _, _ = toy
-    model = classifier.fit_quality_classifier(df, dim=DIM, iters=3, lr=1.0)
-    src = tmp_path / "src"
-    docs = spark.createDataFrame(
-        [(1, "the quick fox"), (2, "of and to the"), (3, "")],
-        "doc_id long, text string",
-    )
-    docs.write.parquet(str(src))
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = classifier.score_sink(
-        stream,
-        # model was fit at DIM; featurize in the sink uses model.dim
-        model,
-        str(tmp_path / "scores"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    rows = {r.doc_id: r for r in spark.read.parquet(str(tmp_path / "scores")).collect()}
-    assert set(rows) == {1, 2}  # zero-token doc 3 produces no row
-    for r in rows.values():
-        assert 0.0 < r.score < 1.0
-        assert r.pred == int(r.score >= 0.5)
-        assert r.batch_id == 0
-    # batch-replay posture: appends carry batch_id lineage for dedup
-    assert "batch_id" in spark.read.parquet(str(tmp_path / "scores")).columns
-
-
 def test_ml07_keeps_zero_token_docs(spark, tmp_path):
     """The registered query's row set must equal `documents` even when a
     doc has no tokens (featurize drops it; the LEFT join + bias-only
@@ -192,44 +163,15 @@ def test_model_save_load_roundtrip(spark, tmp_path, toy):
     classifier.save_model(spark, model, path)
     back = classifier.load_model(spark, path)
     assert back == model
-
-
-def test_score_sink_replay_is_idempotent(spark, tmp_path, toy):
-    """r10 (ADVICE r9): foreachBatch replays a micro-batch at-least-once;
-    the sink's dynamic partition overwrite must make the replay rewrite
-    its own batch_id partition in place — same rows, no duplicates —
-    while other batches' output stays untouched."""
-    df, _, _ = toy
-    model = classifier.fit_quality_classifier(df, dim=DIM, iters=3, lr=1.0)
-    report = str(tmp_path / "scores_replay")
+    # the reloaded artifact scores text end to end: featurize with its own
+    # dim and length scaling, then score with its weights; a zero-token doc
+    # yields no row
     docs = spark.createDataFrame(
-        [(1, "the quick fox"), (2, "of and to the")], "doc_id long, text string"
+        [(1, "the quick fox"), (2, "of and to the"), (3, "")], "doc_id long, text string"
     )
-    other = spark.createDataFrame([(9, "some other batch")], "doc_id long, text string")
-    src = tmp_path / "replay_src"
-    docs.write.parquet(str(src))
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    q = classifier.score_sink(stream, model, report, str(tmp_path / "ck1"))
-    q.awaitTermination(120)
-    # simulate a DIFFERENT batch landing first, then a REPLAY of batch 0:
-    # drive the same batch function directly (foreachBatch gives no replay
-    # hook in availableNow mode)
-    w = list(model.weights)
-    feats9 = classifier.featurize(other, "doc_id", "text", dim=model.dim)
-    from pyspark.sql import functions as F
-
-    out9 = classifier.score(feats9, w).select(
-        F.col("doc_id"), F.col("score"),
-        (F.col("score") >= 0.5).cast("int").alias("pred"),
-        F.lit(7).cast("long").alias("batch_id"),
+    feats = classifier.featurize(
+        docs, "doc_id", "text", dim=back.dim, len_cap=back.len_cap, len_scale=back.len_scale
     )
-    (out9.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(report))
-    before = {(r.doc_id, r.batch_id) for r in spark.read.parquet(report).collect()}
-    # replay batch 0 through a fresh checkpoint (same data, same batch id)
-    q2 = classifier.score_sink(stream, model, report, str(tmp_path / "ck2"))
-    q2.awaitTermination(120)
-    after = spark.read.parquet(report).collect()
-    keys = [(r.doc_id, r.batch_id) for r in after]
-    assert len(keys) == len(set(keys)), "replay duplicated (batch_id, id) rows"
-    assert set(keys) == before, "replay must rewrite its partition in place, not grow or drop others"
+    scores = {r.doc_id: r.score for r in classifier.score(feats, back.weights).collect()}
+    assert set(scores) == {1, 2}
+    assert all(0.0 < v < 1.0 for v in scores.values())

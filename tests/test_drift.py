@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from mlops_pipelines_featurestore_gcp_spark.operators.drift import drift_report, psi
+from mlops_pipelines_featurestore_gcp_spark.operators.drift import psi
 
 
 def _df(spark, vals):
@@ -51,33 +51,7 @@ def test_drift_report_multiple_columns(spark):
     df = spark.createDataFrame(
         [(float(i % 10), float(i % 3)) for i in range(100)], "a double, b double"
     )
-    out = drift_report(df, df, ["a", "b"]).collect()
+    # one report row per feature, unioned as f06_feature_drift does
+    out = psi(df, df, "a").unionByName(psi(df, df, "b")).collect()
     assert [r["feature"] for r in out] == ["a", "b"]
     assert all(r["verdict"] == "stable" for r in out)
-
-
-def test_drift_sink_streaming(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    src = tmp_path / "src"
-    ref = spark.createDataFrame([(float(i % 50),) for i in range(500)], "value double")
-    # current batch shifted well above the reference range
-    cur = spark.createDataFrame([(float(200 + i % 50),) for i in range(500)], "value double")
-    cur.write.parquet(str(src))
-    stream = spark.readStream.schema("value double").parquet(str(src))
-    from mlops_pipelines_featurestore_gcp_spark.operators.drift import drift_sink
-
-    q = drift_sink(
-        stream,
-        ref,
-        ["value"],
-        str(tmp_path / "report"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    report = spark.read.parquet(str(tmp_path / "report"))
-    rows = report.collect()
-    assert len(rows) == 1
-    assert rows[0]["feature"] == "value"
-    assert rows[0]["verdict"] == "shifted"
-    assert rows[0]["batch_id"] == 0

@@ -83,30 +83,6 @@ def test_single_scan_plan(df):
     assert len(row) == aggs
 
 
-def test_profile_table_one_scan(spark):
-    d = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", None), (2, None, 3.0)], "id long, s string, x double"
-    )
-    rep = {r["column"]: r.asDict() for r in ex.profile_table(d).collect()}
-    assert rep["id"]["n_rows"] == 3 and rep["id"]["n_nulls"] == 0
-    assert rep["id"]["min_value"] == "1" and rep["id"]["max_value"] == "2"
-    assert rep["s"]["n_nulls"] == 1 and abs(rep["s"]["null_frac"] - 1 / 3) < 1e-12
-    assert rep["x"]["mean"] == 2.0
-    assert rep["s"]["mean"] is None
-    # distinct estimates exact at this cardinality
-    assert rep["id"]["approx_distinct"] == 2
-
-
-def test_profile_table_subset_and_fixture(spark, sf_small):
-    from mlops_pipelines_featurestore_gcp_spark.sources.catalog import load_table
-
-    docs = load_table(spark, "documents", sf_small)
-    rep = {r["column"]: r.asDict() for r in ex.profile_table(docs, ["doc_id", "lang"]).collect()}
-    assert set(rep) == {"doc_id", "lang"}
-    assert rep["doc_id"]["n_nulls"] == 0
-    assert 0 < rep["lang"]["approx_distinct"] <= 10
-
-
 def test_fraction_at_least_exact_at_boundary(spark):
     from mlops_pipelines_featurestore_gcp_spark.operators.expectations import (
         fraction_at_least,

@@ -108,9 +108,13 @@ def test_linucb_fit_skips_rows_with_a_null_or_short_observation(spark):
 
 @pytest.mark.parametrize("action", [-1, 3])
 def test_linucb_fit_rejects_action_out_of_range(spark, action):
-    rows = _bandit_rows(n=50) + [([0.5, 0.5, 0.5], action, 1.0)]
-    with pytest.raises(KeyError):
-        LinUCB(context_dim=3, num_actions=3).fit(_bandit_df(spark, rows, 2))
+    """A row whose action is not an arm is left out of the fit, like a row
+    with a NULL action: the policy equals the one fitted without it."""
+    rows = _bandit_rows(n=50)
+    want = LinUCB(context_dim=3, num_actions=3).fit(_bandit_df(spark, rows, 2))
+    got = LinUCB(context_dim=3, num_actions=3).fit(_bandit_df(spark, rows + [([0.5, 0.5, 0.5], action, 1.0)], 2))
+    assert np.array_equal(got.theta, want.theta) and np.array_equal(got.a_inv, want.a_inv)
+    assert got.counts.tolist() == want.counts.tolist()
 
 
 @pytest.fixture(scope="module")

@@ -39,22 +39,6 @@ def test_decode_stub_matches_digest(spark, docs):
     assert r[2].text == "hello world"
 
 
-def test_decode_real_codecs_rejects_non_png_without_pil(spark, docs):
-    # text payloads are not PNG: without PIL the real-codec path must fail
-    # loudly per payload (PNG itself decodes for real — test_png.py)
-    with pytest.raises(Exception, match="PNG|NotImplemented"):
-        mm.decode_media(mm.attach_payload(docs, "text"), use_real_codecs=True).collect()
-
-
-def test_extract_features_shape_and_determinism(spark, docs):
-    out = mm.extract_features(mm.attach_payload(docs, "text"))
-    feats = {r.doc_id: r.features for r in out.collect()}
-    assert all(len(v) == mm.FEATURE_DIM for v in feats.values())
-    d = hashlib.sha256(b"hello world").digest()
-    expected = [round(d[i] / 255.0, 6) for i in range(mm.FEATURE_DIM)]
-    assert feats[2] == pytest.approx(expected, abs=1e-6)
-
-
 def test_frame_sample_math(spark):
     # 200 bytes → frames of 64: sizes [64, 64, 64, 8]; keep idx 0, 2
     df = spark.createDataFrame([(1, "x" * 200)], "doc_id long, text string")
@@ -77,48 +61,6 @@ def test_frame_sample_empty_payload_yields_no_rows(spark):
     out = frame_sample(df, frame_bytes=64, every=1).select("id").collect()
     ids = sorted(r.id for r in out)
     assert ids == ["b", "b", "b"]  # 130 bytes -> 3 frames; empty -> none
-
-
-def test_box_resize_exact_averages():
-    from mlops_pipelines_featurestore_gcp_spark.functions import png
-
-    # 4x2 gray image -> 2x1: each output pixel is the mean of its 2x2 bin
-    samples = bytes([10, 20, 30, 40,
-                     50, 60, 70, 80])
-    out = png.box_resize(4, 2, 1, samples, 2, 1)
-    assert list(out) == [(10 + 20 + 50 + 60) // 4, (30 + 40 + 70 + 80) // 4]
-    # RGB channels average independently
-    rgb = bytes([1, 2, 3, 5, 6, 7])  # 2x1 RGB
-    out = png.box_resize(2, 1, 3, rgb, 1, 1)
-    assert list(out) == [(1 + 5) // 2, (2 + 6) // 2, (3 + 7) // 2]
-    # upscale: bins clamp to at least one source pixel
-    up = png.box_resize(1, 1, 1, bytes([9]), 3, 2)
-    assert list(up) == [9] * 6
-
-
-def test_resize_media_real_png_pipeline(spark):
-    from mlops_pipelines_featurestore_gcp_spark.functions import png
-
-    samples = bytes(range(64))  # 8x8 gray gradient
-    blob = png.encode_png(8, 8, samples, channels=1)
-    df = spark.createDataFrame([(1, blob)], "doc_id long, payload binary")
-    out = mm.resize_media(df, out_w=4, out_h=4, use_real_codecs=True).collect()[0]
-    w, h, ch, got = png.decode_png(bytes(out.resized))
-    assert (w, h, ch) == (4, 4, 1)
-    assert got == png.box_resize(8, 8, 1, samples, 4, 4)  # real pixels resampled
-    assert out.resized_bytes == len(bytes(out.resized))
-
-
-def test_resize_media_stub_is_deterministic_valid_png(spark):
-    from mlops_pipelines_featurestore_gcp_spark.functions import png
-
-    df = spark.createDataFrame([(1, b"payload-a"), (2, b"payload-a"), (3, b"b")],
-                               "doc_id long, payload binary")
-    rows = {r.doc_id: bytes(r.resized) for r in
-            mm.resize_media(df, out_w=6, out_h=3).collect()}
-    assert rows[1] == rows[2] != rows[3]  # payload-keyed, deterministic
-    w, h, ch, _ = png.decode_png(rows[1])  # stub output is a REAL PNG
-    assert (w, h, ch) == (6, 3, 1)
 
 
 def test_keep_best_by_signature_matches_pair_graph_path(spark):

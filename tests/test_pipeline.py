@@ -250,3 +250,25 @@ def test_retrain_skips_an_observation_with_a_null_element(spark, tmp_path):
     ]
     assert len(obs) == cfg.batch_size * (len(good) + 1)  # the handoff keeps both slots
     assert sorted(map(len, obs))[0] == cfg.rank_k - 1  # the NULL element is left out
+
+
+def test_an_action_outside_the_arms_is_left_out_of_the_fit(spark, tmp_path):
+    """A logged slot whose action is not an arm (``-1`` or ``num_actions``)
+    does not break the retrain: it equals the retrain over the same rows
+    without those slots (``LinUCB.fit``'s case is in ``test_ml.py``)."""
+    cfg = PipelineConfig(rank_k=4, batch_size=3, num_actions=5)
+    clean = str(tmp_path / "clean")
+    _sink_shaped_table(spark, clean, 4, 40, cfg)
+    rows = spark.read.parquet(clean)
+    off_arm = F.transform("action", lambda a, i: F.when(i % 2 == 0, F.lit(-1)).otherwise(F.lit(cfg.num_actions)))
+    extra = rows.where(F.col("message_id") < "m2").select(
+        *[F.concat(F.lit("x"), "message_id").alias(c) if c == "message_id" else F.col(c) for c in rows.columns]
+    ).withColumn("action", off_arm.cast("array<long>"))
+    table = str(tmp_path / "sink")
+    rows.unionByName(extra).write.partitionBy("_batch").parquet(table)
+    assert extra.count() > 0
+
+    want = LinUCBModel.load(retrain(spark, clean, str(tmp_path / "want"), config=cfg))
+    got = LinUCBModel.load(retrain(spark, table, str(tmp_path / "got"), config=cfg))
+    assert np.allclose(got.theta, want.theta) and np.allclose(got.a_inv, want.a_inv)
+    assert got.counts.tolist() == want.counts.tolist()

@@ -490,13 +490,13 @@ def test_ivfpq_compact_dedupes_exact_reupsert_rows_only(spark, tmp_path):
     assert report["cells_compacted"] == 0
 
 
-def test_ivf_compact_wraps_assigned_table(spark, tmp_path):
+def test_compact_cell_partitions_on_ivf_assigned_table(spark, tmp_path):
     emb = _emb(spark, n=40)
     path = str(tmp_path / "ivf_cmp")
     similarity.build_ivf_index(emb, path, n_centroids=4, sample=40)
     similarity.ivf_upsert(spark, path, _emb(spark, n=10, seed=11).withColumn(
         "vec_id", F.col("vec_id") + F.lit(900)))
-    report = similarity.ivf_compact(spark, path, max_files_per_cell=1)
+    report = similarity.compact_cell_partitions(spark, f"{path}/assigned", max_files_per_cell=1)
     assert report["cells_compacted"] >= 1
     q = emb.where(F.col("vec_id") % 10 == 0)
     out = similarity.ivf_search(spark, path, q, k=3).collect()

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mlops_pipelines_featurestore_gcp_spark.operators import similarity
+from mlops_pipelines_featurestore_gcp_spark.operators import components, similarity
 from mlops_pipelines_featurestore_gcp_spark.sources.catalog import load_table
 
 
@@ -131,7 +131,10 @@ def test_semantic_dedup_pairs_deterministic_across_runs(emb):
 
 def test_semantic_dedup_keep_one_per_component(emb, spark):
     pairs = similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4, dim=64)
-    keep = similarity.semantic_dedup_keep(emb, n_clusters=8, threshold=0.4, dim=64)
+    # the keep set is the transitive closure over the semantic pairs
+    keep = components.dedup_keep_set(
+        pairs.select("id_a", "id_b"), emb.select("vec_id"), "vec_id", src="id_a", dst="id_b"
+    )
     kept = {r.vec_id for r in keep.collect()}
     all_ids = {r.vec_id for r in emb.select("vec_id").collect()}
     assert kept <= all_ids
@@ -320,7 +323,7 @@ def _prep(emb):
     return emb.select(
         F.col("vec_id").alias("vid"),
         F.col("embedding").alias("v"),
-        norm_sq(F.col("embedding"), 64).alias("nrm"),
+        norm_sq(F.col("embedding")).alias("nrm"),
     )
 
 

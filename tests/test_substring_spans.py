@@ -82,45 +82,3 @@ def test_null_and_empty_text_docs_yield_no_windows(spark):
     rows = exact_substring_spans(docs, "doc_id", "text", window=W).collect()
     # only the two identical real docs flag; null/empty/short produce nothing
     assert sorted({r.doc_id for r in rows}) == [4, 5]
-
-
-def test_remove_duplicate_spans_cuts_exact_ranges(spark):
-    from mlops_pipelines_featurestore_gcp_spark.operators.dedup import remove_duplicate_spans
-
-    shared = "alpha beta gamma delta epsilon zeta"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{_words('a', 5)} {shared} {_words('b', 5)}"),
-            (2, f"{_words('c', 2)} {shared} {_words('d', 9)}"),
-            (3, "untouched by any span"),
-            (4, None),
-        ],
-        "doc_id long, text string",
-    )
-    spans = exact_substring_spans(docs, "doc_id", "text", window=W)
-    out = {r.doc_id: r for r in remove_duplicate_spans(docs, spans, "doc_id", "text").collect()}
-    assert set(out) == {1, 2, 3, 4}
-    assert out[1].clean_text == f"{_words('a', 5)} {_words('b', 5)}"
-    assert out[2].clean_text == f"{_words('c', 2)} {_words('d', 9)}"
-    assert (out[1].n_removed_tokens, out[2].n_removed_tokens) == (6, 6)
-    assert out[3].clean_text == "untouched by any span" and out[3].n_removed_tokens == 0
-    assert out[4].clean_text == "" and out[4].n_tokens == 0 and out[4].n_removed_tokens == 0
-    # idempotent: no cross-doc windows survive in the cleaned corpus
-    cleaned = spark.createDataFrame(
-        [(k, v.clean_text) for k, v in out.items()], "doc_id long, text string"
-    )
-    assert exact_substring_spans(cleaned, "doc_id", "text", window=W).count() == 0
-
-
-def test_remove_spans_keep_one_via_span_filter(spark):
-    from pyspark.sql import functions as F
-    from mlops_pipelines_featurestore_gcp_spark.operators.dedup import remove_duplicate_spans
-
-    text = _words("w", 6)
-    docs = spark.createDataFrame([(1, text), (2, text)], "doc_id long, text string")
-    spans = exact_substring_spans(docs, "doc_id", "text", window=W)
-    # keep the lowest doc id: drop its spans from the cut list
-    keeper = spans.groupBy().agg(F.min("doc_id").alias("k"))
-    cut = spans.join(keeper, spans.doc_id == keeper.k, "left_anti")
-    out = {r.doc_id: r.clean_text for r in remove_duplicate_spans(docs, cut, "doc_id", "text").collect()}
-    assert out == {1: text, 2: ""}

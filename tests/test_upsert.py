@@ -47,6 +47,23 @@ def test_upsert_insert_update_and_late_version(spark, tmp_path):
     assert got == {1: ("a", 1), 2: ("b2", 2), 3: ("c", 1)}
 
 
+def test_late_null_key_row_does_not_regress_the_null_key(spark, tmp_path):
+    """A NULL key has a NULL bucket; its stored row is read back like any
+    other touched bucket's, so it obeys latest-wins too."""
+    path = str(tmp_path / "tbl")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "k string, v string, ver long")
+
+    upsert_batch(path, batch([(None, "new", 5), ("a", "new", 5)]), key="k", version_col="ver", n_buckets=4)
+    upsert_batch(path, batch([(None, "late", 1), ("a", "late", 1)]), key="k", version_col="ver", n_buckets=4)
+    got = sorted((r.k or "", r.v, r.ver) for r in read_upsert_table(spark, path).collect())
+    assert got == [("", "new", 5), ("a", "new", 5)]
+    upsert_batch(path, batch([(None, "newer", 6)]), key="k", version_col="ver", n_buckets=4)
+    got = sorted((r.k or "", r.v, r.ver) for r in read_upsert_table(spark, path).collect())
+    assert got == [("", "newer", 6), ("a", "new", 5)]
+
+
 def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     path = str(tmp_path / "tbl")
     big = spark.range(0, 200).select(
