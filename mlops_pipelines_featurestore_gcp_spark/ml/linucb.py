@@ -20,10 +20,18 @@ one ``mapInArrow`` pass emits a k×k/k partial per arm present in each
 input partition, with no shuffle (no task ever holds an arm's full row set;
 X is the flattened Arrow ``obs`` column reshaped, never a per-row stack),
 and only the tiny ``partitions × arms`` partial set is reduced on the
-driver (``solve``). ``arm_partials`` is that pass's body, so the retrain
-(``pipeline.py``) runs it in the same pass that writes its TFRecord files.
-Inference broadcasts the solved per-arm parameters and scores rows in
-vectorized NumPy batches (Arrow ``pandas_udf``), never per-row Python.
+driver (``solve``). ``arm_partials`` is that pass's body; the retrain
+(``pipeline.py``) runs it on the driver, over the same Arrow batches its
+TFRecord write consumes.
+
+Inference has one kernel, ``LinUCBModel.scores``: NumPy over an ``(n, k)``
+matrix, each row's scores a function of that row alone. ``transform`` runs
+it in an Arrow ``pandas_udf`` (table-scale scoring, distributed);
+``pipeline.predict`` runs it on the driver over a request batch, as the
+reference's server scores each request in its one process. Both build the
+matrix with ``_obs_matrix``, so fit and scoring share one validity rule:
+an observation that is NULL, not ``k`` long, or holds a NULL or NaN
+element is not scored (NULL ``predicted_action``) and not fitted.
 """
 
 from __future__ import annotations
@@ -46,21 +54,32 @@ from mlops_pipelines_featurestore_gcp_spark.sources.atomic import write_json
 PARTIALS_SCHEMA = "action long, a_flat array<double>, b_vec array<double>, n long"
 
 
+def _obs_matrix(obs: pa.Array | pa.ChunkedArray, k: int) -> np.ndarray:
+    """The ``(n, k)`` float64 matrix of the list column ``obs``. A row that
+    is NULL or not ``k`` long is all NaN, and a NULL element is NaN, so an
+    invalid observation is exactly a row holding NaN."""
+    obs = obs.cast(pa.list_(pa.float64()))
+    full = pc.fill_null(pc.equal(pc.list_value_length(obs), k), False)
+    X = np.full((len(obs), k), np.nan)
+    values = pc.list_flatten(obs.filter(full)).to_numpy(zero_copy_only=False)  # NULL → NaN
+    X[full.to_numpy(zero_copy_only=False)] = values.reshape(-1, k)
+    return X
+
+
 def arm_partials(batches: Iterator[pa.RecordBatch], context_dim: int) -> Iterator[pa.RecordBatch]:
-    """One partition's per-arm ``(XᵀX, Xᵀr, n)`` as ``PARTIALS_SCHEMA`` rows:
-    a ``mapInArrow`` body over ``(obs, action, reward)`` rows. A row is
-    skipped when a field is NULL (or NaN), or ``obs`` holds a NULL element
-    or is not ``context_dim`` long; an empty partition yields nothing."""
-    acc = {}  # action -> (XᵀX, Xᵀr, n) over this partition's batches
+    """The per-arm ``(XᵀX, Xᵀr, n)`` of ``(obs, action, reward)`` batches as
+    ``PARTIALS_SCHEMA`` rows: a ``mapInArrow`` body, or a driver loop over
+    local batches. A row is skipped when its action or reward is NULL (or
+    NaN) or its observation is invalid (``_obs_matrix``); with no row
+    left it yields nothing."""
+    acc = {}  # action -> (XᵀX, Xᵀr, n) over the batches
     for batch in batches:
-        full = pc.equal(pc.list_value_length(batch["obs"]), context_dim)
-        batch = batch.filter(pc.and_(pc.is_valid(batch["action"]), full))
-        X = pc.list_flatten(batch["obs"]).to_numpy(zero_copy_only=False).reshape(-1, context_dim)  # NULL → NaN
-        r = batch["reward"].to_numpy(zero_copy_only=False)
-        keep = ~(np.isnan(X).any(axis=1) | np.isnan(r))
+        X = _obs_matrix(batch["obs"], context_dim)
+        r = batch["reward"].to_numpy(zero_copy_only=False)  # NULL → NaN
+        keep = ~(np.isnan(X).any(axis=1) | np.isnan(r)) & batch["action"].is_valid().to_numpy(zero_copy_only=False)
         if not keep.any():
             continue
-        X, r, actions = X[keep], r[keep], batch["action"].to_numpy()[keep]
+        X, r, actions = X[keep], r[keep], batch["action"].filter(pa.array(keep)).to_numpy()
         for a in np.unique(actions).tolist():
             m = actions == a
             xtx, xtr, n = acc.get(a, (0.0, 0.0, 0))
@@ -136,29 +155,42 @@ class LinUCB:
 
 @dataclass
 class LinUCBModel:
-    """Fitted policy: ``transform`` adds ``predicted_action`` (+ scores)."""
+    """Fitted policy: ``scores`` is the scoring kernel; ``transform`` adds
+    ``predicted_action`` (+ scores) to a DataFrame with it."""
 
     alpha: float
     theta: np.ndarray  # (num_actions, k)
     a_inv: np.ndarray  # (num_actions, k, k)
     counts: np.ndarray  # (num_actions,)
 
+    def scores(self, X: np.ndarray) -> np.ndarray:
+        """Each arm's UCB score ``xᵀθ_a + α √(xᵀ A_a⁻¹ x)`` of each row of
+        ``X``: ``(n, k)`` → ``(n, arms)``. A row holding NaN scores NaN.
+        ``einsum`` sums each row on its own, with no BLAS blocking, so a row
+        scores the same bits in any batch."""
+        mean = np.einsum("ij,aj->ia", X, self.theta)
+        var = np.einsum("ij,ajk,ik->ia", X, self.a_inv, X)
+        return mean + self.alpha * np.sqrt(np.maximum(var, 0.0))
+
+    def best_arms(self, obs: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """``(scores, best arm, scored)`` of each observation in ``obs``: the
+        arm is the argmax (ties go to the lowest arm), and ``scored`` is
+        False for an invalid observation, whose arm means nothing."""
+        S = self.scores(_obs_matrix(obs, self.theta.shape[1]))
+        return S, S.argmax(axis=1), ~np.isnan(S).any(axis=1)
+
     def transform(self, df: DataFrame, *, obs_col: str = "obs", with_scores: bool = False) -> DataFrame:
-        theta, a_inv, alpha = self.theta, self.a_inv, self.alpha
+        """Table-scale scoring, distributed: ``scores`` in an Arrow
+        ``pandas_udf``. An invalid observation gets a NULL
+        ``predicted_action`` (and NULL ``scores``)."""
 
         @F.pandas_udf("struct<predicted_action: long, scores: array<double>>")
         def _score(obs: pd.Series) -> pd.DataFrame:
-            X = np.stack(obs.to_numpy())  # (n, k)
-            n = X.shape[0]
-            scores = np.empty((n, theta.shape[0]))
-            for a in range(theta.shape[0]):
-                mean = X @ theta[a]
-                var = np.einsum("ij,jk,ik->i", X, a_inv[a], X)
-                scores[:, a] = mean + alpha * np.sqrt(np.maximum(var, 0.0))
+            S, best, scored = self.best_arms(pa.array(obs, pa.list_(pa.float64())))
             return pd.DataFrame(
                 {
-                    "predicted_action": scores.argmax(axis=1).astype("int64"),
-                    "scores": list(scores),
+                    "predicted_action": pd.arrays.IntegerArray(best.astype("int64"), ~scored),
+                    "scores": [s if ok else None for s, ok in zip(S, scored)],
                 }
             )
 

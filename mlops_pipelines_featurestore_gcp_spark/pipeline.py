@@ -20,13 +20,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mlops_pipelines_featurestore_gcp_spark.feature_store import FeatureStore
 from mlops_pipelines_featurestore_gcp_spark.ml.factorization import als_factors
 from mlops_pipelines_featurestore_gcp_spark.ml.generator import generate_trajectories
-from mlops_pipelines_featurestore_gcp_spark.ml.linucb import PARTIALS_SCHEMA, LinUCB, LinUCBModel, arm_partials
+from mlops_pipelines_featurestore_gcp_spark.ml.linucb import LinUCB, LinUCBModel, arm_partials
 from mlops_pipelines_featurestore_gcp_spark.sources import ratings as ratings_src
 from mlops_pipelines_featurestore_gcp_spark.sources import tfrecord
 from mlops_pipelines_featurestore_gcp_spark.sources.trajectories import TRAJECTORY_SCHEMA, flatten_observations
@@ -128,11 +130,20 @@ def run_startup_pipeline(
 def _ingest_and_train(
     spark: SparkSession, training_table: str, work_dir: str, cfg: PipelineConfig
 ) -> tuple[str, str]:
-    """The shared tail in one pass: SELECT * LIMIT n → each partition writes
-    its TFRecord file and yields its LinUCB partials over the same Arrow
-    batches → solve → artifact. Nothing reads the files back: obs and reward
-    are rounded to float32 (FloatList) in the plan, so the partials sum what
-    a read-back returns and the files' bytes do not change."""
+    """The shared tail in one pass over the slice: SELECT * LIMIT n (the
+    reference's ingest, ``ingester_component.py:22-40``, which reads the
+    slice in one container) → flatten → collect as Arrow → on the driver,
+    write the TFRecord file and sum the LinUCB partials over the same
+    batches → solve → artifact.
+
+    The slice is bounded by ``max_rows`` and its ``LIMIT`` plans as one
+    partition anyway, so the pass loses no parallelism on the driver and
+    starts no Python worker. It cuts the slice at the session's
+    ``maxRecordsPerBatch``, the batches a Spark task would get, so the
+    partials sum in the order a read-back fit sums them. Nothing reads the
+    file back: obs and reward are rounded to float32 (FloatList) in the
+    plan, so the partials sum what a read-back returns and the file's
+    bytes do not change."""
     nested = spark.read.schema(TRAJECTORY_SCHEMA).parquet(training_table).limit(cfg.max_rows)
     flat_rows = (
         flatten_observations(nested)
@@ -143,17 +154,16 @@ def _ingest_and_train(
             F.col("z.reward").cast("float").cast("double").alias("reward"),
         )
     )
+    batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    batches = flat_rows.toArrow().combine_chunks().to_batches(max_chunksize=batch_rows if batch_rows > 0 else None)
     tfrecord_dir = f"{work_dir}/tfrecords"
-
-    def _write_and_sum(batches):
-        return arm_partials(tfrecord.write_partition(batches, tfrecord_dir), cfg.rank_k)
-
+    written = tfrecord.write_partition(iter(batches), f"{tfrecord_dir}/part-00000.tfrecord")
     model = LinUCB(
         context_dim=cfg.rank_k,
         num_actions=cfg.num_actions,
         alpha=cfg.agent_alpha,
         tikhonov=cfg.tikhonov_weight,
-    ).solve(flat_rows.mapInArrow(_write_and_sum, PARTIALS_SCHEMA).collect())
+    ).solve([row for p in arm_partials(written, cfg.rank_k) for row in p.to_pylist()])
     model_path = f"{work_dir}/model/policy.json"
     model.save(model_path)
     return tfrecord_dir, model_path
@@ -168,5 +178,19 @@ def retrain(spark: SparkSession, training_table: str, work_dir: str, *, config: 
 
 
 def predict(spark: SparkSession, model_path: str, observations: DataFrame, *, obs_col: str = "obs") -> DataFrame:
-    """Entry point 2's serving call (M5): load artifact, score a batch."""
-    return LinUCBModel.load(model_path).transform(observations, obs_col=obs_col)
+    """Entry point 2's serving call (M5): load the artifact and score a
+    request batch on the driver, as the reference's server loads its policy
+    once and scores each request with ``policy.action`` in one process
+    (``prediction_container/main.py:20-93``).
+
+    The batch comes to the driver as Arrow (one job, no Python worker),
+    ``LinUCBModel.scores`` scores it, and the result is a local relation of
+    ``observations``' columns plus ``predicted_action`` (NULL for an invalid
+    observation): the columns and types ``LinUCBModel.transform`` gives, and
+    reading it runs no job. So ``predict`` is for request-sized batches;
+    score a table with ``LinUCBModel.transform``, which runs distributed."""
+    table = observations.toArrow()
+    _, best, scored = LinUCBModel.load(model_path).best_arms(table[obs_col])
+    table = table.append_column("predicted_action", pa.array(best, pa.int64(), mask=~scored))
+    schema = T.StructType([*observations.schema, T.StructField("predicted_action", T.LongType())])
+    return spark.createDataFrame(table, schema)

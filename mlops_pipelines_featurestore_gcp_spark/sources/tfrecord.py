@@ -20,11 +20,12 @@ from its type — integral (and boolean) columns become Int64List, float and
 double FloatList, strings/binary BytesList, and array<T> columns the
 multi-value list of T's kind — the natural columnar↔Example mapping.
 
-Distribution: both directions run on Arrow batches. Writes go through
-``mapInArrow`` (one TFRecord file per partition, executor-side;
-``write_partition`` is the per-task body, which the retrain also runs),
-reads through the ``binaryFile`` source + a ``mapInArrow`` decode into
-columns of the declared types. No driver-side data movement.
+Distribution: both directions run on Arrow batches. ``write_partition``
+writes one file from an iterator of batches; ``write_tfrecords`` runs it in
+every ``mapInArrow`` task (one file per partition, executor-side), and the
+retrain runs it on the driver over its collected slice. Reads go through
+the ``binaryFile`` source + a ``mapInArrow`` decode into columns of the
+declared types.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from __future__ import annotations
 import io
 import os
 import struct
+import tempfile
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -260,23 +262,25 @@ def _lists(col: pa.Array) -> list:
     return [vals[ends[i] : ends[i + 1]] if valid[i] else None for i in range(len(col))]
 
 
-def write_partition(batches: Iterator[pa.RecordBatch], out_dir: str) -> Iterator[pa.RecordBatch]:
-    """S6 for one ``mapInArrow`` task: yields each batch on unchanged and,
-    once the batches are exhausted, commits them as the partition's
-    TFRecord file under ``out_dir`` (none for an empty partition).
+def write_partition(batches: Iterator[pa.RecordBatch], path: str) -> Iterator[pa.RecordBatch]:
+    """S6 for one stream of batches: yields each batch on unchanged and,
+    once the batches are exhausted, commits them as the TFRecord file
+    ``path`` (none for no rows). It runs as-is in a ``mapInArrow`` task
+    (``write_tfrecords``) or on the driver (the retrain).
 
     Each column's list kind follows its type (``_kind``), and a NULL value
     or array element is left out of its Example.
 
-    Retry safety: the output filename is DETERMINISTIC per partition
-    (``part-<partitionId>``) and each attempt writes to an attempt-private
-    temp file followed by an atomic ``os.replace`` — a retried or
-    speculative task replaces the same file with identical content instead
-    of leaving an extra part file (a random-uuid filename per attempt would
-    silently duplicate data). Scope note: this writes through the local
-    filesystem, which is correct where executors share a POSIX-rename
-    filesystem (local mode, NFS); an object-store deployment would route
-    this through a Hadoop committer / custom datasource instead.
+    Retry safety: the caller names the file, deterministically
+    (``write_tfrecords``: ``part-<partitionId>``), and each call writes a
+    private hidden temp file beside it, which ``os.replace`` moves over
+    ``path`` — a retried or speculative task replaces the same file with
+    identical content instead of leaving an extra part file (a random-uuid
+    filename per attempt would silently duplicate data). Scope note: this
+    writes through the local filesystem, which is correct where executors
+    share a POSIX-rename filesystem (local mode, NFS); an object-store
+    deployment would route this through a Hadoop committer / custom
+    datasource instead.
     """
     records = []
     for batch in batches:
@@ -285,23 +289,23 @@ def write_partition(batches: Iterator[pa.RecordBatch], out_dir: str) -> Iterator
         records += [encode_example(dict(zip(batch.schema.names, row)), kinds) for row in zip(*cols)]
         yield batch
     if records:
-        ctx = TaskContext.get()
-        part, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        os.makedirs(out_dir, exist_ok=True)
-        final = f"{out_dir}/part-{part:05d}.tfrecord"
-        tmp = f"{final}.{attempt}.tmp"
-        with open(tmp, "wb") as f:
+        parent = os.path.dirname(path) or "."
+        os.makedirs(parent, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=parent, prefix=f".{os.path.basename(path)}-", suffix=".tmp")
+        with os.fdopen(fd, "wb") as f:
             f.write(frame_records(records))
-        os.replace(tmp, final)
+        os.replace(tmp, path)
 
 
 def write_tfrecords(df: DataFrame, out_dir: str) -> None:
-    """S6: ``write_partition`` in every task of ``df`` — the write
+    """S6: ``write_partition`` in every task of ``df``, to
+    ``part-<partitionId>.tfrecord`` under ``out_dir`` — the write
     parallelism IS the partition count; repartition upstream to size files.
     Collecting each partition's row count forces the write in one stage."""
 
     def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield pa.RecordBatch.from_pydict({"n": [sum(b.num_rows for b in write_partition(batches, out_dir))]})
+        path = f"{out_dir}/part-{TaskContext.get().partitionId():05d}.tfrecord"
+        yield pa.RecordBatch.from_pydict({"n": [sum(b.num_rows for b in write_partition(batches, path))]})
 
     df.mapInArrow(_write, "n long").collect()
 

@@ -53,6 +53,24 @@ def test_linucb_greedy_picks_best_arm(spark):
     assert len(pred.first().scores) == 3
 
 
+# One row of each kind the fit skips: NULL, too short, too long, a NULL
+# element, a NaN element.
+_INVALID_OBS = [(10, None), (11, [0.1, 0.2]), (12, [0.1, 0.2, 0.3, 0.4]), (13, [0.1, None, 0.3]), (14, [0.1, float("nan"), 0.3])]
+
+
+def test_transform_serves_null_for_an_invalid_observation(spark):
+    """An invalid observation gets a NULL ``predicted_action`` and NULL
+    ``scores``; the other rows of its batch score as they do without it."""
+    train = spark.createDataFrame(_bandit_rows(n=100), "obs array<double>, action long, reward double")
+    model = LinUCB(context_dim=3, num_actions=3, alpha=0.5, tikhonov=0.01).fit(train)
+    good = [(i, [0.1 * i, 0.2, 0.3]) for i in range(6)]
+    schema = "id long, obs array<double>"
+    got = model.transform(spark.createDataFrame(good + _INVALID_OBS, schema).coalesce(1), with_scores=True).collect()
+    want = model.transform(spark.createDataFrame(good, schema), with_scores=True).collect()
+    assert {r.id for r in got if r.predicted_action is None and r.scores is None} == {i for i, _ in _INVALID_OBS}
+    assert sorted(r for r in got if r.id < 10) == sorted(want)
+
+
 def test_linucb_epochs_scale_stats(spark):
     rows = _bandit_rows(n=100)
     df = spark.createDataFrame(rows, "obs array<double>, action long, reward double")

@@ -7,18 +7,27 @@ import datetime as dt
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mlops_pipelines_featurestore_gcp_spark.feature_store import FeatureStore
-from mlops_pipelines_featurestore_gcp_spark.ml.linucb import LinUCB, LinUCBModel
+from mlops_pipelines_featurestore_gcp_spark.ml.linucb import LinUCB, LinUCBModel, arm_partials
 from mlops_pipelines_featurestore_gcp_spark.pipeline import (
     PipelineConfig,
     predict,
     retrain,
     run_startup_pipeline,
 )
-from mlops_pipelines_featurestore_gcp_spark.sources.tfrecord import read_tfrecords, write_tfrecords
+from mlops_pipelines_featurestore_gcp_spark.sources.tfrecord import (
+    decode_example,
+    read_tfrecords,
+    unframe_records,
+    write_partition,
+    write_tfrecords,
+)
 from mlops_pipelines_featurestore_gcp_spark.sources.trajectories import TRAJECTORY_SCHEMA, flatten_observations
 
 
@@ -157,8 +166,9 @@ def test_retrain_is_one_pass_equal_to_the_read_back_oracle(spark, spark_jobs, tm
     """``retrain`` writes the TFRecord handoff and fits in one pass: the
     policy equals the write → read-back → fit oracle bit for bit, the files
     are byte-identical to ``write_tfrecords``', and it runs at most 2 Spark
-    jobs (the LIMIT's shuffle stage and the pass), none a ``binaryFile``
-    scan."""
+    jobs (the LIMIT's shuffle stage and the slice's collect), none a
+    ``binaryFile`` scan and none a Python task: the pass runs on the
+    driver."""
     cfg = PipelineConfig(rank_k=4, batch_size=3, num_actions=5, max_rows=max_rows)
     table = str(tmp_path / "sink")
     _sink_shaped_table(spark, table, seed, n_rows, cfg)
@@ -178,6 +188,7 @@ def test_retrain_is_one_pass_equal_to_the_read_back_oracle(spark, spark_jobs, tm
     assert 1 <= len(jobs) <= 2
     plans = _plans_of(spark, jobs)
     assert plans and not any("binaryFile" in p for p in plans)
+    assert not any("MapInArrow" in p for p in plans)
 
 
 def test_retrain_with_null_actions_writes_int64_actions(spark, tmp_path):
@@ -272,3 +283,114 @@ def test_an_action_outside_the_arms_is_left_out_of_the_fit(spark, tmp_path):
     got = LinUCBModel.load(retrain(spark, table, str(tmp_path / "got"), config=cfg))
     assert np.allclose(got.theta, want.theta) and np.allclose(got.a_inv, want.a_inv)
     assert got.counts.tolist() == want.counts.tolist()
+
+
+def test_retrain_pass_runs_on_local_batches_without_spark(tmp_path):
+    """The retrain's pass is two batch functions that run as-is on local
+    pyarrow batches, with no SparkSession: ``write_partition`` writes a file
+    that decodes back to the rows, and ``arm_partials`` sums numpy's
+    ``XᵀX``, ``Xᵀr`` and ``n`` per arm over the valid rows. Values are
+    quarters, so every sum is exact in any order and float32 holds them."""
+    rng = np.random.default_rng(3)
+    k, n = 4, 90
+    obs = (rng.integers(-8, 8, size=(n, k)) / 4).tolist()
+    actions = rng.integers(0, 3, n).tolist()
+    rewards = (rng.integers(-4, 4, n) / 2).tolist()
+    # rows 0-4 are skipped by the fit: NULL obs, short obs, NULL element, NULL action, NULL reward
+    obs[0], obs[1], obs[2][1] = None, obs[1][:-1], None
+    actions[3], rewards[4] = None, None
+    table = pa.table(
+        {
+            "obs": pa.array(obs, pa.list_(pa.float64())),
+            "action": pa.array(actions, pa.int64()),
+            "reward": pa.array(rewards, pa.float64()),
+        }
+    )
+    path = tmp_path / "tfrecords" / "part-00000.tfrecord"
+    written = write_partition(iter(table.to_batches(max_chunksize=32)), str(path))
+    partials = [row for p in arm_partials(written, k) for row in p.to_pylist()]
+
+    assert os.listdir(path.parent) == [path.name]
+    examples = [decode_example(rec) for rec in unframe_records(path.read_bytes())]
+    assert len(examples) == n
+    for ex, o, a, r in zip(examples, obs, actions, rewards):  # a NULL value or element is left out
+        assert ex.get("obs") == (None if o is None else [v for v in o if v is not None])
+        assert ex.get("action") == (None if a is None else [a])
+        assert ex.get("reward") == (None if r is None else [r])
+
+    valid = range(5, n)
+    assert sorted(row["action"] for row in partials) == sorted({actions[i] for i in valid})
+    for row in partials:
+        rows = [i for i in valid if actions[i] == row["action"]]
+        X, r = np.array([obs[i] for i in rows]), np.array([rewards[i] for i in rows])
+        assert row["n"] == len(rows)
+        assert np.array_equal(np.reshape(row["a_flat"], (k, k)), X.T @ X)
+        assert np.array_equal(row["b_vec"], X.T @ r)
+
+
+def _policy(tmp_path, seed, k, arms, alpha=1.0):
+    """A saved random LinUCB policy (positive-definite ``A⁻¹``)."""
+    rng = np.random.default_rng(seed)
+    m = rng.normal(size=(arms, k, k))
+    model = LinUCBModel(alpha=alpha, theta=rng.normal(size=(arms, k)), a_inv=m @ m.transpose(0, 2, 1), counts=np.zeros(arms))
+    path = str(tmp_path / "policy.json")
+    model.save(path)
+    return path
+
+
+def test_predict_serves_null_for_an_invalid_observation(spark, tmp_path):
+    """One invalid observation (NULL, too short, too long, a NULL or NaN
+    element) gets a NULL ``predicted_action``; the other rows of the batch
+    are served as they are without it."""
+    path = _policy(tmp_path, 0, 3, 4)
+    good = [(i, [0.1 * i, -0.2, 0.3]) for i in range(6)]
+    bad = [(10, None), (11, [0.1, 0.2]), (12, [0.1, 0.2, 0.3, 0.4]), (13, [0.1, None, 0.3]), (14, [0.1, float("nan"), 0.3])]
+    schema = "id long, obs array<double>"
+    got = {r.id: r.predicted_action for r in predict(spark, path, spark.createDataFrame(good + bad, schema)).collect()}
+    want = {r.id: r.predicted_action for r in predict(spark, path, spark.createDataFrame(good, schema)).collect()}
+    assert got == {**want, **{i: None for i, _ in bad}}
+
+
+_finite = st.floats(-100, 100, allow_nan=False, allow_infinity=False)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture])
+@given(data=st.data())
+def test_driver_predict_equals_the_udf_transform(spark, spark_jobs, tmp_path, data):
+    """``predict`` on the driver serves the action ``transform``'s UDF does on
+    any batch, exact ties included (arms drawn as copies of each other; the
+    lowest arm wins in both). Its other columns, a string and a timestamp
+    among them, pass through with their types; its plan evaluates no
+    Python UDF, and reading it runs no job."""
+    k = data.draw(st.integers(1, 4))
+    base = data.draw(st.integers(1, 4))
+    copies = data.draw(st.lists(st.integers(0, base - 1), min_size=1, max_size=5))  # arm a = base arm copies[a]
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**16)))
+    m = rng.normal(size=(base, k, k))
+    theta, a_inv = rng.normal(size=(base, k)), m @ m.transpose(0, 2, 1)
+    alpha = data.draw(st.sampled_from([0.0, 0.5, 10.0]))
+    path = str(tmp_path / "policy.json")
+    LinUCBModel(alpha=alpha, theta=theta[copies], a_inv=a_inv[copies], counts=np.zeros(len(copies))).save(path)
+    rows = data.draw(
+        st.lists(
+            st.tuples(
+                st.none() | st.text(st.characters(blacklist_categories=("Cs",)), max_size=4),
+                st.none() | st.datetimes(dt.datetime(1970, 1, 1), dt.datetime(2100, 1, 1)),
+                st.none() | st.lists(_finite, min_size=k, max_size=k),
+            ),
+            max_size=30,
+        )
+    )
+    df = spark.createDataFrame([(i, *row) for i, row in enumerate(rows)], "id long, s string, t timestamp, obs array<double>")
+
+    got = predict(spark, path, df)
+    want = LinUCBModel.load(path).transform(df, with_scores=True)
+    assert got.schema == want.drop("scores").schema
+    served, jobs = spark_jobs(got.collect)
+    assert jobs == []
+    scored = sorted(want.collect())
+    assert sorted(served) == [r[:-1] for r in scored]
+    assert [tuple(r[:-1]) for r in sorted(served)] == [(i, *row) for i, row in enumerate(rows)]
+    assert all(r.predicted_action == r.scores.index(max(r.scores)) for r in scored if r.scores is not None)
+    assert "ArrowEvalPython" in want._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in got._jdf.queryExecution().executedPlan().toString()
