@@ -261,10 +261,14 @@ class FeatureStore:
         other value is a literal timestamp. A string that is neither a
         column nor an ISO timestamp raises ``ValueError`` before any job
         runs, instead of importing every row with a NULL time.
+        ``feature_fields=None`` imports every column but the id; an empty
+        list names no feature and raises ``ValueError`` the same way.
         ``worker_count`` maps to write parallelism (``repartition``), like
         the import job's worker knob (``:11,45``). Returns rows written.
         """
-        feats = feature_fields or [c for c in src.columns if c != entity_id_field]
+        feats = [c for c in src.columns if c != entity_id_field] if feature_fields is None else feature_fields
+        if not feats:
+            raise ValueError(f"feature_fields {feature_fields!r} names no feature column to import")
         if feature_time is None:
             time_col = F.current_timestamp()
         elif isinstance(feature_time, str) and feature_time in src.columns:

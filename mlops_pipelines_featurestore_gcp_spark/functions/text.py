@@ -41,33 +41,13 @@ def tokens(col: Column) -> Column:
     return F.array_remove(F.split(F.trim(col), r"\s+"), "")
 
 
-def word_ngrams(toks: Column, n: int = 3) -> Column:
-    """Word n-grams (space-joined) from a token array.
-
-    PERF: ``transform`` is a higher-order function — CodegenFallback,
-    interpreted per element (profiled 4-5× slower than codegen on corpus
-    passes). On a hot path prefer :func:`word_ngram_structs` (row-local,
-    codegen) or the positional-explode pattern
-    (``operators/contamination.py _grams``).
-    """
-    size = F.size(toks)
-    return F.when(size < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), size - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),
-        )
-    )
-
-
 def word_ngram_structs(toks: Column, n: int = 3) -> Column:
     """Word n-grams as an array of n-field structs — pure codegen.
 
-    ``arrays_zip`` over n shifted ``slice`` views builds the same grams as
-    :func:`word_ngrams` without a lambda: struct equality is fieldwise, so
-    ``array_distinct``/joins/grouping treat a gram struct exactly like the
-    space-joined string (tokens can't contain whitespace, so both encodings
-    are injective). Use this form whenever the gram only needs equality
-    semantics, not a string rendering.
+    ``arrays_zip`` over n shifted ``slice`` views builds the grams without a
+    lambda: struct equality is fieldwise, so ``array_distinct``/joins/
+    grouping treat a gram struct exactly like the space-joined string
+    (tokens can't contain whitespace, so both encodings are injective).
     """
     length = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     return F.arrays_zip(*[F.slice(toks, i + 1, length) for i in range(n)])
@@ -126,7 +106,7 @@ def stopword_hits(toks: Column, lang: str) -> Column:
     consumes one of the two separator spaces, leaving one for the next).
     Codegen, no per-token work: this replaced first a ``filter`` lambda
     (interpreted) and then a 10-deep ``array_remove`` chain (10 array
-    copies per doc per language — 40× in lang_id).
+    copies per doc per language).
 
     Stopword tables are plain ASCII words, so the alternation needs no
     regex escaping.

@@ -8,9 +8,7 @@ checks run (uniqueness adds an exact ``count_distinct`` to that pass —
 still one shuffle; swap in ``approx=True`` for HLL when exactness isn't
 worth the memory).
 
-``validate`` returns a per-expectation report; ``enforce`` raises on any
-failure with the report rendered into the message — the fail-the-DAG form
-a scheduled pipeline wants.
+``validate`` returns a per-expectation report.
 
 Reference analog: none — the reference ingests MovieLens as-is
 (``pipeline.py:31-41``); validation is north-star pipeline surface.
@@ -116,16 +114,3 @@ def validate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     return spark.createDataFrame(
         report, "expectation string, n_violations long, n_rows long, ok boolean"
     )
-
-
-def enforce(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
-    """Raise ``ValueError`` listing every failed expectation; returns ``df``
-    unchanged when all pass (gate-in-the-DAG usage)."""
-    report = validate(df, expectations).collect()
-    failed = [r for r in report if not r["ok"]]
-    if failed:
-        lines = "; ".join(f"{r['expectation']}: {r['n_violations']} violations" for r in failed)
-        raise ValueError(f"data validation failed — {lines}")
-    return df
-
-

@@ -30,11 +30,6 @@ def uniform_hash(id_col: Column | str, salt: str) -> Column:
     return bucket.cast("double") / float(1 << 32)
 
 
-def deterministic_sample(df: DataFrame, id_col: str, fraction: float, *, salt: str = "sample") -> DataFrame:
-    """Keep ~``fraction`` of rows, decided per row by the id hash."""
-    return df.where(uniform_hash(id_col, salt) < fraction)
-
-
 def stratified_sample(
     df: DataFrame, id_col: str, strata_col: str, fractions: dict[str, float], *, salt: str = "strata"
 ) -> DataFrame:
@@ -91,8 +86,8 @@ def per_group_cap(
     One shuffle on ``group_col``; the rank window's per-group row count is
     the group size, so the skew profile is the biggest group — acceptable
     because WindowExec buffers spill, but for pathological single-domain
-    corpora prefer pre-filtering with :func:`deterministic_sample` to
-    knock the giant down before the exact cap.
+    corpora prefer pre-filtering by ``uniform_hash`` to knock the giant
+    down before the exact cap.
     """
     w = Window.partitionBy(group_col).orderBy(uniform_hash(id_col, salt), F.col(id_col))
     return (

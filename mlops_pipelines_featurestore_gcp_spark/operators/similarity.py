@@ -26,11 +26,10 @@ from mlops_pipelines_featurestore_gcp_spark.operators.dedup import _spread
 
 # ANN query sets ride executor closures / broadcasts by module convention
 # ("tiny by construction"). The convention is ENFORCED here (the ml07
-# MAX_DIM posture, r10 VERDICT "what's wrong" #3): a caller passing a
-# corpus-sized frame as `queries` gets a clear exception naming the
-# chunked alternative instead of a driver OOM. 65,536 dim-64 float64
-# query vectors ≈ 34 MB — comfortably broadcast-sized; beyond it, per-k
-# top-k results are independent per query, so chunk-and-union is exact.
+# MAX_DIM posture): a caller passing a corpus-sized frame as `queries`
+# gets a ValueError stating the cap and the size it saw instead of a
+# driver OOM. 65,536 dim-64 float64 query vectors ≈ 34 MB — comfortably
+# broadcast-sized.
 MAX_QUERY_ROWS = 65536
 
 
@@ -42,62 +41,10 @@ def _collect_query_rows(df: DataFrame, what: str) -> list:
     rows = df.limit(MAX_QUERY_ROWS + 1).collect()
     if len(rows) > MAX_QUERY_ROWS:
         raise ValueError(
-            f"{what}: query set exceeds MAX_QUERY_ROWS={MAX_QUERY_ROWS} "
-            "(the driver-collected/broadcast side must stay small). Use "
-            "chunked_query_topk(<tier_fn>, corpus, queries, ...) — it "
-            "md5-chunks the query set and unions the per-chunk results "
-            "(per-query top-k is independent, so the union is exact) — "
-            "or a join-based tier (lsh_topk/ivf_topk)."
+            f"{what}: query set has more than MAX_QUERY_ROWS={MAX_QUERY_ROWS} rows "
+            f"(saw at least {len(rows)})"
         )
     return rows
-
-
-def chunked_query_topk(
-    topk_fn,
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    max_rows: int = MAX_QUERY_ROWS,
-    **kwargs,
-) -> DataFrame:
-    """Run a broadcast-query ANN tier over a query set LARGER than
-    ``MAX_QUERY_ROWS`` — the chunk-and-union shape the guard's
-    ValueError names, as an operator instead of a recipe.
-
-    Per-query top-k is independent, so splitting queries and unioning
-    per-chunk outputs is EXACT. Chunks come from a deterministic md5
-    draw on the query id (layout-independent, never ``rand()``),
-    targeting ``max_rows // 2`` expected rows per chunk — at the 65536
-    cap the probability any md5 chunk overflows 2× its expectation is
-    negligible (Chernoff; and `_collect_query_rows` still enforces the
-    hard cap inside the tier, so an astronomically unlucky draw raises
-    rather than OOMs). The documented trade: the corpus is scanned once
-    PER CHUNK — for corpus-sized query sets prefer a join-based tier
-    (``lsh_topk``/``ivf_topk``), which this helper does not replace.
-
-    ``topk_fn``: any tier with the (corpus, queries, *, id_col, ...)
-    signature — ``brute_force_topk``, ``quantized_topk``, ``pq_topk``,
-    ``ivf_pq_topk``. Extra kwargs pass through.
-    """
-    import math
-
-    from mlops_pipelines_featurestore_gcp_spark.functions.text import md5_long
-
-    n_q = queries.count()
-    if n_q <= max_rows:
-        return topk_fn(corpus, queries, id_col=id_col, **kwargs)
-    n_chunks = math.ceil(n_q / max(1, max_rows // 2))
-    bucket = (
-        md5_long(
-            F.concat(F.lit("qchunk|"), F.col(id_col).cast("string")), bits=60
-        ) % n_chunks
-    )
-    out = None
-    for i in range(n_chunks):
-        part = topk_fn(corpus, queries.where(bucket == i), id_col=id_col, **kwargs)
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def _batch_topk_prune(scored: DataFrame, k: int) -> DataFrame:
@@ -170,15 +117,13 @@ def brute_force_topk(
     vec_col: str = "embedding",
     k: int = 5,
     round_digits: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     The query set rides in the scoring kernel's closure (collected under
-    the ``MAX_QUERY_ROWS`` guard like every other broadcast-query tier —
-    larger sets go through ``chunked_query_topk``), so scoring is a
-    map-only pass over the corpus; the only shuffle is the per-query
-    top-k window. Returns (query_id, neighbor_id, cos_sim, rnk).
+    the ``MAX_QUERY_ROWS`` guard like every other broadcast-query tier),
+    so scoring is a map-only pass over the corpus; the only shuffle is the
+    per-query top-k window. Returns (query_id, neighbor_id, cos_sim, rnk).
 
     cos_sim is rounded before ranking so the (sim, id) ordering is identical
     across engines even when two candidates differ only in the last float
@@ -217,7 +162,6 @@ def brute_force_topk(
     Corpus rows with a NULL vector are dropped before scoring; every
     other vector (corpus and queries) must have the queries' length.
     """
-    del dim
     qrows = _collect_query_rows(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -319,7 +263,6 @@ def cosine_neardup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.45,
     round_digits: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with rounded cosine ≥ threshold.
 
@@ -354,63 +297,11 @@ def cosine_neardup_pairs(
     )
 
 
-def lsh_blocked_pairs(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    planes: int = 6,
-    tables: int = 8,
-    threshold: float = 0.45,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Near-dup pairs via hyperplane-LSH blocking + exact rescoring.
-
-    The scale path for embedding near-dup: ``tables`` signature tables of
-    ``planes`` sign-bits each; a pair is a candidate iff it shares a full
-    signature in ≥1 table, so the join is a single equi shuffle on
-    (table, signature) and cost is Σ bucket² instead of the all-pairs n²
-    cartesian. Recall follows the standard OR-of-tables LSH curve — pairs
-    the blocking misses are missed identically by the SQL oracle twin,
-    which replays the same md5-derived hyperplanes.
-
-    Projections are rounded before the sign test (like ``cos_sim`` before
-    ranking) so the bucket assignment is bit-identical across engines.
-    """
-    base = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-    base = _spread(base)
-    sigged = hyperplane_signatures(base, vec_col="v", tables=tables, planes=planes, dim=dim)
-    bucketed = sigged.select("vid", "v", F.posexplode("sigs").alias("t", "sig"))
-    a = bucketed.select(F.col("vid").alias("id_a"), F.col("v").alias("va"), "t", "sig")
-    b = bucketed.select(F.col("vid").alias("id_b"), F.col("v").alias("vb"), "t", "sig")
-    cand = (
-        # r12 (the lsh_topk 100× finding applied here too): score → filter
-        # → distinct, never a pair-dedup shuffle carrying both vectors. A
-        # multi-table match rescores a duplicate pair map-side (identical
-        # deterministic cosine), but no ~1KB/row candidate mass ever
-        # crosses an exchange — only (id, id, cos) survivors do, and the
-        # threshold makes those tiny by definition (the
-        # coord_sign_blocked_pairs order rationale, shared verbatim).
-        a.join(b, ["t", "sig"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), round_digits).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .distinct()
-    )
-    return cand
-
-
 def coord_sign_blocked_pairs(
     corpus: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
     coords_per_table: int = 7,
     tables: int = 8,
     threshold: float = 0.45,
@@ -434,9 +325,6 @@ def coord_sign_blocked_pairs(
       Σ bucket² candidate pairs, exact cosine verify inside buckets only.
       Recall follows the OR-of-tables curve; missed pairs are missed
       identically by the oracle, which replays the same blocking.
-
-    ``lsh_blocked_pairs`` (md5-derived random hyperplanes) remains the
-    generic alternative for data whose axes are degenerate (e.g. one-hot).
     """
     base = _spread(
         corpus.select(
@@ -501,7 +389,6 @@ def quantize_embeddings(
     vec_col: str = "embedding",
     out_col: str = "qvec",
     scale_col: str = "qscale",
-    dim: int,
 ) -> DataFrame:
     """Per-vector int8 scalar quantization: ``q_i = round(v_i / s)`` with
     ``s = max|v| / 127`` → values in [-127, 127].
@@ -517,7 +404,7 @@ def quantize_embeddings(
 
     Per-element work is ``transform``/``array_max`` HOFs over the array —
     one evaluator call per ROW. The previous revision expanded both the
-    absmax and the quantized elements into ``dim``-term ``element_at``
+    absmax and the quantized elements into per-element ``element_at``
     chains on the codegen-stays-fused theory; measured on the full
     quantized-top-k plan the HOF form is ~25% faster end to end (0.66s vs
     0.89s at sf0.1) and produces bit-identical arrays — wide per-element
@@ -549,7 +436,6 @@ def quantized_topk(
     k: int = 5,
     shortlist: int = 20,
     round_digits: int = 6,
-    dim: int,
 ) -> DataFrame:
     """Two-stage ANN: int8-dot shortlist, exact float rescore of survivors.
 
@@ -594,7 +480,7 @@ def quantized_topk(
     # Queries quantize SPARK-SIDE (the same quantize_embeddings plan as
     # the corpus) and collect — capped (see MAX_QUERY_ROWS).
     cq_rows = _collect_query_rows(
-        quantize_embeddings(queries.select(F.col(id_col).alias("query_id"), vec_col), dim=dim),
+        quantize_embeddings(queries.select(F.col(id_col).alias("query_id"), vec_col)),
         "quantized_topk",
     )
     qids = np.asarray([r["query_id"] for r in cq_rows])
@@ -838,7 +724,7 @@ def lsh_topk(
     # width: ~450M multi-probe candidate rows at the 100× fixture spilled
     # >77 GB and died on disk. Computing the rounded cosine map-side and
     # deduping the skinny (query, neighbor, cos) triple (~24 B/row, the
-    # _ivf_probe shape) cuts the exchange ~45×; duplicate candidates
+    # ivf_topk shape) cuts the exchange ~45×; duplicate candidates
     # recompute an identical cosine (deterministic expression on
     # identical inputs), so dropDuplicates keeps the same values and the
     # output is bit-equal to the old plan.
@@ -880,109 +766,56 @@ def _auto_clusters(n_rows: int, target_cell: int = 1024) -> int:
 
 
 
-def build_ivf_index(
+def ivf_topk(
     corpus: DataFrame,
-    path: str,
+    queries: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_centroids: int | None = None,
+    n_probe: int = 4,
+    k: int = 5,
     seed: int = 42,
     max_iter: int = 10,
+    round_digits: int = 6,
     sample: int = 4096,
-) -> None:
-    """Persist an IVF index: build ONCE, search many times.
+) -> DataFrame:
+    """IVF (inverted-file) approximate top-k: k-means coarse quantizer.
 
-    Writes ``{path}/centroids`` (the tiny coarse-quantizer table) and
-    ``{path}/assigned`` — every corpus vector PARTITIONED BY its cell, so a
-    probe that touches ``n_probe`` of ``n_centroids`` cells prunes the rest
-    at the file level (plus dynamic partition pruning on the probe join).
-    This is the production ANN shape: the quantizer fit and the full-corpus
-    assignment pass amortize across every subsequent query batch.
-
-    r10: the coarse quantizer fits driver-side on an md5-ordered
-    ≤``sample``-row draw (seeded k-means++, the ``ivfpq_train`` posture;
-    ``n_centroids`` is capped by the sample size) instead of a
-    full-corpus MLlib fit — O(N·k·d) PER LLOYD ITERATION at k up to
-    65536 is impractical at 10⁹ vectors, which is why FAISS-class
-    systems train coarse quantizers on samples. Assignment stays one
-    Arrow map pass over the full corpus.
+    The classic scale path for ANN at 100 TB: (1) the coarse quantizer
+    fits driver-side on a bounded md5-ordered sample (r10 — the
+    ``ivfpq_train`` posture; a full-corpus fit at k
+    up to 65536 costs O(N·k·d) per Lloyd iteration, impractical at 10⁹
+    vectors, which is why FAISS-class systems sample-train); (2) each
+    corpus vector is assigned to its nearest cell — one Arrow map pass;
+    (3) each query probes its ``n_probe`` nearest cells and rescoring
+    runs only inside those cells, cutting scored pairs by
+    ~``n_centroids/n_probe``× vs brute force. Centroid assignment is
+    seeded and deterministic per engine build (not SQL-reproducible → the
+    s03 oracle is the per-query ANN contract: ≤k, contiguous ranks, exact
+    rescore parity, monotone scores; recall vs brute force is asserted in
+    tests).
     """
-    cells = _ivf_coarse_fit(
-        corpus, id_col=id_col, vec_col=vec_col,
-        n_centroids=n_centroids, seed=seed, max_iter=max_iter, sample=sample,
-    )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    assigned = c.withColumn("cell", _nearest_centroid_udf(cells)(F.col("cv")).cast("int"))
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/assigned")
-    spark = corpus.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(cells)],
-        "cell int, centroid array<double>",
-    )
-    centroids.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
 
-
-def _ivf_coarse_fit(
-    corpus: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int | None,
-    seed: int,
-    max_iter: int,
-    sample: int,
-):
-    """Shared IVF coarse-quantizer fit: seeded k-means++ on the bounded
-    md5-ordered sample (driver state ≤ sample×dim doubles at any N)."""
-    prep = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     if n_centroids is None:
         n_centroids = _auto_centroids(corpus.count())
     # cell count plateaus at `sample` (the documented ivfpq_train posture:
     # raise `sample` if a deployment needs more cells); the fit draw is
     # 32 rows per centroid, absolute cap 65536 (≤ 32 MB driver at dim 64,
     # k-means++ + BLAS Lloyd ≈ seconds at the cap)
-    k = min(n_centroids, sample)
-    n_take = min(max(2048, 32 * k), 65536)
-    X = _sample_matrix(prep, n_take, f"ivf{seed}")
-    return _kmeanspp_fit(X, min(k, X.shape[0]), seed, max_iter)
-
-
-def ivf_search(
-    spark,
-    path: str,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 4,
-    k: int = 5,
-    round_digits: int = 6,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k against a persisted IVF index (``build_ivf_index``).
-
-    Only the probed cells' partitions are read — the index does its job at
-    the storage layer, not just the compute layer.
-    """
-    assigned = spark.read.parquet(f"{path}/assigned")
-    centroids = spark.read.parquet(f"{path}/centroids")
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    return _ivf_probe(assigned, centroids, q, n_probe=n_probe, k=k, round_digits=round_digits)
-
-
-def _ivf_probe(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    q: DataFrame,
-    *,
-    n_probe: int,
-    k: int,
-    round_digits: int,
-) -> DataFrame:
-    """Probe phase shared by ``ivf_topk`` (in-memory) and ``ivf_search``
-    (persisted): each query scores the broadcast centroid table, keeps its
-    ``n_probe`` nearest cells, and rescoring joins only those cells."""
+    n_cells = min(n_centroids, sample)
+    n_take = min(max(2048, 32 * n_cells), 65536)
+    X = _sample_matrix(corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")), n_take, f"ivf{seed}")
+    cells = _kmeanspp_fit(X, min(n_cells, X.shape[0]), seed, max_iter)
+    assigned = c.withColumn("cell", _nearest_centroid_udf(cells)(F.col("cv")).cast("int"))
+    centroids = corpus.sparkSession.createDataFrame(
+        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(cells)],
+        "cell int, centroid array<double>",
+    )
+    # each query scores the broadcast centroid table, keeps its n_probe
+    # nearest cells, and rescoring joins only those cells
     probe_w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("cell"))
     probed = (
         q.crossJoin(F.broadcast(centroids))
@@ -1018,53 +851,6 @@ def _ivf_probe(
     scored = _batch_topk_prune(scored, k)
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int | None = None,
-    n_probe: int = 4,
-    k: int = 5,
-    seed: int = 42,
-    max_iter: int = 10,
-    round_digits: int = 6,
-    dim: int | None = None,
-    sample: int = 4096,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means coarse quantizer.
-
-    The classic scale path for ANN at 100 TB: (1) the coarse quantizer
-    fits driver-side on a bounded md5-ordered sample (r10 — the
-    ``ivfpq_train``/``build_ivf_index`` posture; a full-corpus fit at k
-    up to 65536 costs O(N·k·d) per Lloyd iteration, impractical at 10⁹
-    vectors, which is why FAISS-class systems sample-train); (2) each
-    corpus vector is assigned to its nearest cell — one Arrow map pass;
-    (3) each query probes its ``n_probe`` nearest cells and rescoring
-    runs only inside those cells, cutting scored pairs by
-    ~``n_centroids/n_probe``× vs brute force. Centroid assignment is
-    seeded and deterministic per engine build (not SQL-reproducible → the
-    s03 oracle is the per-query ANN contract: ≤k, contiguous ranks, exact
-    rescore parity, monotone scores; recall vs brute force is asserted in
-    tests).
-    """
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-
-    cells = _ivf_coarse_fit(
-        corpus, id_col=id_col, vec_col=vec_col,
-        n_centroids=n_centroids, seed=seed, max_iter=max_iter, sample=sample,
-    )
-    assigned = c.withColumn("cell", _nearest_centroid_udf(cells)(F.col("cv")).cast("int"))
-    spark = corpus.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(cells)],
-        "cell int, centroid array<double>",
-    )
-    return _ivf_probe(assigned, centroids, q, n_probe=n_probe, k=k, round_digits=round_digits)
 
 
 def pq_train(
@@ -1534,8 +1320,8 @@ def ivf_pq_topk(
     if corpus_codes is not None:
         # Persisted codes are partitioned by cell (build_ivfpq_index):
         # restricting the scan to the union of the batch's probed cells
-        # prunes every untouched partition at the source — the same
-        # pruning ivf_search gets, compounded with the 32× code shrink.
+        # prunes every untouched partition at the source, compounded with
+        # the 32× code shrink.
         enc = enc.where(F.col("cell").isin(*[int(c) for c in np.unique(probed)]))
     T = np.einsum("qsd,sjd->qsj", Q.reshape(len(qrows), m, dsub), books)
     S = shortlist
@@ -1682,15 +1468,15 @@ def build_pq_index(
     ``{path}/codebooks`` holds the m×ksub codeword table (KBs);
     ``{path}/codes`` holds one (id, codes, rnorm) row per corpus vector —
     the 32×-compressed scan set every subsequent ``pq_search`` reads
-    instead of the float corpus. Like ``build_ivf_index``, the train +
-    encode passes amortize across every query batch; rebuild when the
-    corpus distribution drifts (the published PQ maintenance trade).
+    instead of the float corpus. The train + encode passes amortize
+    across every query batch; rebuild when the corpus distribution drifts
+    (the published PQ maintenance trade).
 
     ``opq=True`` (r10, VERDICT r9 "what's missing" #1): fit the OPQ
     rotation (``_opq_fit`` — the s11 PCA basis, rotation-only) and
     train/encode in the ROTATED representation. The rotation persists at
-    ``{path}/opq`` beside the codebooks, so ``pq_search``/``pq_upsert``
-    apply it automatically — build and query sides can never drift apart,
+    ``{path}/opq`` beside the codebooks, so ``pq_search`` applies it
+    automatically — build and query sides can never drift apart,
     the failure mode of hand-composing ``apply_whitening`` around a plain
     index. Rescore stays in RAW space (rotation preserves cosine).
     """
@@ -1713,41 +1499,6 @@ def build_pq_index(
         "overwrite"
     ).parquet(f"{path}/codebooks")
     pq_encode(enc_corpus, books, id_col=id_col, vec_col=vec_col).write.mode("overwrite").parquet(
-        f"{path}/codes"
-    )
-
-
-def pq_upsert(
-    spark,
-    path: str,
-    batch: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental ingest into a persisted PQ index (``build_pq_index``).
-
-    New vectors are encoded against the EXISTING codebooks (no refit —
-    the serving-time contract, mirroring ``ivf_upsert``) and appended to
-    ``{path}/codes``; ingest cost ∝ batch size. Codebooks drift as the
-    corpus distribution moves — rebuild when recall degrades (the
-    published PQ maintenance trade). Re-appending the same batch
-    duplicates rows; dedupe ids upstream or rebuild — documented, not
-    hidden. An index built ``opq=True`` rotates the batch with its
-    persisted rotation before encoding — ingest stays consistent with the
-    build-time representation automatically.
-    """
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    mm = max(r["s"] for r in cb_rows) + 1
-    ksub = max(r["j"] for r in cb_rows) + 1
-    dsub = len(cb_rows[0]["centroid"])
-    books = np.empty((mm, ksub, dsub), dtype=np.float64)
-    for r in cb_rows:
-        books[r["s"], r["j"]] = r["centroid"]
-    rotation = _opq_read(spark, path)
-    if rotation is not None:
-        batch = _opq_apply(batch, rotation, vec_col=vec_col)
-    pq_encode(batch, books, id_col=id_col, vec_col=vec_col).write.mode("append").parquet(
         f"{path}/codes"
     )
 
@@ -1886,9 +1637,9 @@ def ivfpq_upsert(
 ) -> None:
     """Incremental ingest into a persisted IVF-PQ index: new vectors are
     cell-assigned and residual-encoded against the EXISTING quantizers (no
-    refit — the serving-time contract shared with ``ivf_upsert`` /
-    ``pq_upsert``) and appended to their cell partitions, so ingest cost
-    ∝ batch size and only touched cells' directories receive files.
+    refit — the serving-time contract) and appended to their cell
+    partitions, so ingest cost ∝ batch size and only touched cells'
+    directories receive files.
     Quantizers drift as the corpus moves — rebuild when recall degrades.
     Re-appending the same batch duplicates rows; dedupe ids upstream or
     rebuild — documented, not hidden. An index built ``opq=True`` rotates
@@ -2256,7 +2007,6 @@ def semantic_dedup_pairs(
     seed: int = 42,
     max_iter: int = 10,
     round_digits: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic duplicate pairs (Abbas et al. 2023).
 
@@ -2331,7 +2081,6 @@ def semantic_dedup_keep_star(
     seed: int = 42,
     max_iter: int = 10,
     round_digits: int = 6,
-    dim: int | None = None,
     n_hubs: int = 1,
     rounds: int = 1,
 ) -> DataFrame:
@@ -2546,45 +2295,3 @@ def semantic_dedup_keep_star(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def ivf_upsert(
-    spark,
-    path: str,
-    batch: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental ingest into a persisted IVF index (``build_ivf_index``).
-
-    New vectors are assigned to the EXISTING centroids (the broadcast-table
-    distance argmin — no refit, the standard serving-time IVF contract) and
-    appended to their cell partitions; only the touched cells' directories
-    receive files, so ingest cost ∝ batch size while the untouched cells'
-    data — and any query currently probing them — is undisturbed.
-    Centroids drift as the corpus grows; rebuild the index when recall
-    degrades (the published IVF maintenance trade, left to the caller).
-    Re-appending the same batch duplicates rows (append files are not
-    keyed); dedupe ids upstream or rebuild — documented, not hidden.
-    """
-    centroids = spark.read.parquet(f"{path}/centroids")
-    b = batch.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    w = Window.partitionBy("neighbor_id").orderBy(F.col("dist").asc(), F.col("cell"))
-    assigned = (
-        b.crossJoin(F.broadcast(centroids))
-        .select(
-            "neighbor_id",
-            "cv",
-            "cell",
-            F.aggregate(
-                F.zip_with(F.col("cv").cast("array<double>"), F.col("centroid"), lambda a, b2: (a - b2) * (a - b2)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
-        )
-        .withColumn("__r", F.row_number().over(w))
-        .where(F.col("__r") == 1)
-        .select("neighbor_id", "cv", "cell")
-    )
-    assigned.write.mode("append").partitionBy("cell").parquet(f"{path}/assigned")

@@ -57,28 +57,6 @@ def redact_pii(col: Column) -> Column:
     return out
 
 
-def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document token statistics.
-
-    n_tokens: whitespace tokens; n_bpe_tokens: BPE-ish pre-tokenizer count
-    (words + punctuation); n_uniq_tokens; avg_token_len.
-    """
-    df = _spread(df)
-    toks = tokens(F.col(text_col))
-    return df.select(
-        F.col(id_col),
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), 0)).cast("long").alias("n_bpe_tokens"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_uniq_tokens"),
-        # sum(len(tok)) == len(concat of toks) — a codegen built-in, not a
-        # CodegenFallback aggregate() lambda
-        (
-            F.length(F.concat_ws("", toks)).cast("long")
-            / F.greatest(F.size(toks), F.lit(1))
-        ).alias("avg_token_len"),
-    )
-
-
 def composite_quality(col: Column) -> Column:
     """The composite heuristic quality score as a single row-local codegen
     expression (length saturation + stopword presence + lexical diversity
@@ -150,10 +128,9 @@ def text_profile(
 ) -> DataFrame:
     """Token statistics + quality + repetition features in ONE row-local pass.
 
-    The union of ``token_stats`` and ``quality_score`` columns (plus
-    ``dup_bigram_frac``) computed from a single scan — at corpus scale the
-    text column is read once, not twice, and there is no join to reconcile
-    the projections. ``extra`` appends caller-supplied row-local columns
+    Token counts, the ``quality_score`` columns and ``dup_bigram_frac``
+    come from a single scan — at corpus scale the text column is read
+    once, not twice, and there is no join to reconcile the projections. ``extra`` appends caller-supplied row-local columns
     (e.g. PII counts) to the SAME select, keeping the single-pass shape
     instead of forcing a join on the id key.
     """
@@ -209,30 +186,6 @@ def lang_argmax(score_cols: dict[str, Column]) -> tuple[Column, Column]:
     for lang in STOPWORDS:  # dict order = precedence order
         pred = pred.when(score_cols[lang] == best, F.lit(lang))
     return pred, best
-
-
-def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """N-gram/stopword language-ID heuristic → (id, lang_pred, lang_hits).
-
-    Scores each language by stopword hits on the token stream; argmax with a
-    fixed precedence order (en > es > fr > de) for ties; 'und' when no
-    stopword hits at all. Deterministic, engine-reproducible.
-    """
-    df = _spread(df)
-    toks = tokens(normalize(F.col(text_col)))
-    # Two-stage select: score columns FIRST, then the argmax cascade over
-    # plain column references (see lang_argmax).
-    scored = df.select(
-        F.col(id_col),
-        *[c.alias(f"__s_{lang}") for lang, c in lang_scores(toks).items()],
-    )
-    score_cols = {lang: F.col(f"__s_{lang}") for lang in STOPWORDS}
-    pred, best = lang_argmax(score_cols)
-    return scored.select(
-        F.col(id_col),
-        pred.alias("lang_pred"),
-        best.cast("long").alias("lang_hits"),
-    )
 
 
 def doc_fingerprint(df: DataFrame, id_col: str, text_col: str, *, k: int = 8, sketch_size: int = 4) -> DataFrame:

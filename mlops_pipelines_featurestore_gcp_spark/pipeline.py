@@ -157,13 +157,13 @@ def _ingest_and_train(
     batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     batches = flat_rows.toArrow().combine_chunks().to_batches(max_chunksize=batch_rows if batch_rows > 0 else None)
     tfrecord_dir = f"{work_dir}/tfrecords"
-    written = tfrecord.write_partition(iter(batches), f"{tfrecord_dir}/part-00000.tfrecord")
+    tfrecord.write_partition(batches, f"{tfrecord_dir}/part-00000.tfrecord")
     model = LinUCB(
         context_dim=cfg.rank_k,
         num_actions=cfg.num_actions,
         alpha=cfg.agent_alpha,
         tikhonov=cfg.tikhonov_weight,
-    ).solve([row for p in arm_partials(written, cfg.rank_k) for row in p.to_pylist()])
+    ).solve([row for p in arm_partials(batches, cfg.rank_k) for row in p.to_pylist()])
     model_path = f"{work_dir}/model/policy.json"
     model.save(model_path)
     return tfrecord_dir, model_path

@@ -347,7 +347,7 @@ def d04_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DOT_SQL = "list_sum(list_transform(range(1, len({a}) + 1), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
 
 
-_D05_DIM, _D05_COORDS, _D05_TABLES = 64, 7, 8
+_D05_COORDS, _D05_TABLES = 7, 8
 
 
 def _d05_sig_sql(t: int) -> str:
@@ -397,12 +397,10 @@ def d05_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic in the blocking so both engines agree bit-for-bit with no
     summation-order risk) and the oracle replays the identical blocking —
     the documented LSH recall trade-off is shared exactly. The exact
-    all-pairs baseline remains ``similarity.cosine_neardup_pairs``;
-    md5-derived random hyperplanes (for axis-degenerate data) remain
-    ``similarity.lsh_blocked_pairs``."""
+    all-pairs baseline remains ``similarity.cosine_neardup_pairs``."""
     emb = load_table(spark, "embeddings", sf_dir)
     return similarity.coord_sign_blocked_pairs(
-        emb, dim=_D05_DIM, coords_per_table=_D05_COORDS, tables=_D05_TABLES, threshold=0.45
+        emb, coords_per_table=_D05_COORDS, tables=_D05_TABLES, threshold=0.45
     )
 
 
@@ -455,7 +453,7 @@ def d10_semantic_keep_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost stays O(n_hubs·rounds·N) worst case on a shrinking set.
     # Figures in SCALING.md (registered point marked).
     out = similarity.semantic_dedup_keep_star(
-        emb, threshold=0.30, dim=64, n_hubs=8, rounds=4
+        emb, threshold=0.30, n_hubs=8, rounds=4
     ).localCheckpoint(eager=False)  # feeds both the flags and the witness joins
     ev = emb.select(
         F.col("vec_id").alias("__wid"), F.col("embedding").alias("__wv"),
@@ -684,14 +682,13 @@ def _recall_truth(
     emb: DataFrame,
     queries: DataFrame,
     *,
-    dim: int,
     k: int,
     n_recall_sample: int = 32,
 ) -> DataFrame:
     """Exact brute-force top-k over the deterministic md5-ordered
     ≤``n_recall_sample``-query draw — the recall verifier's ground truth.
     Factored out so a query hosting SEVERAL ANN tiers against the same
-    (emb, queries, k, dim) computes the O(sample·N) exact scan ONCE and
+    (emb, queries, k) computes the O(sample·N) exact scan ONCE and
     hands it to each tier's ``_ann_contract`` call (s03's r7 merged form
     was running it twice)."""
     from mlops_pipelines_featurestore_gcp_spark.functions.text import md5_long
@@ -707,14 +704,13 @@ def _recall_truth(
         .limit(n_recall_sample)
         .drop("__h")
     )
-    return brute_force_topk(emb, sampled, k=k, dim=dim).select("query_id", "neighbor_id")
+    return brute_force_topk(emb, sampled, k=k).select("query_id", "neighbor_id")
 
 
 def _ann_contract(
     out: DataFrame,
     emb: DataFrame,
     *,
-    dim: int,
     k: int,
     exact_k: bool = False,
     recall_floor: float | None = None,
@@ -793,7 +789,7 @@ def _ann_contract(
     if recall_floor is None:
         return result
     if truth is None:
-        truth = _recall_truth(emb, queries, dim=dim, k=k, n_recall_sample=n_recall_sample)
+        truth = _recall_truth(emb, queries, k=k, n_recall_sample=n_recall_sample)
     hit = (
         truth.join(
             out.select("query_id", "neighbor_id").withColumn("__hit", one),
@@ -859,11 +855,11 @@ def s03_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries, ivf_out = s03_operator_parts(spark, sf_dir)
     _, _, lsh_out = s02_operator_parts(spark, sf_dir)
     # ONE exact ground-truth scan shared by both tiers' recall verifiers
-    # (the truth depends only on (emb, queries, k, dim)); materialized so
+    # (the truth depends only on (emb, queries, k)); materialized so
     # the two hit-joins read rows, not a replayed brute-force lineage.
-    truth = _recall_truth(emb, queries, dim=64, k=5).localCheckpoint(eager=False)
-    ivf = _ann_contract(ivf_out, emb, dim=64, k=5, recall_floor=0.7, queries=queries, truth=truth)
-    lsh = _ann_contract(lsh_out, emb, dim=64, k=5, recall_floor=0.7, queries=queries, truth=truth)
+    truth = _recall_truth(emb, queries, k=5).localCheckpoint(eager=False)
+    ivf = _ann_contract(ivf_out, emb, k=5, recall_floor=0.7, queries=queries, truth=truth)
+    lsh = _ann_contract(lsh_out, emb, k=5, recall_floor=0.7, queries=queries, truth=truth)
     return ivf.select(F.lit("ivf").alias("op"), "*").unionByName(
         lsh.select(F.lit("lsh").alias("op"), "*")
     )
@@ -910,7 +906,7 @@ def d07_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mlops_pipelines_featurestore_gcp_spark.functions.vectors import dot, norm_sq
 
     emb = load_table(spark, "embeddings", sf_dir)
-    pairs = similarity.semantic_dedup_pairs(emb, threshold=0.45, dim=64)
+    pairs = similarity.semantic_dedup_pairs(emb, threshold=0.45)
     # Rescore ONLY the emitted pairs: two keyed equi-joins on vec_id, the
     # identical round(dot/sqrt(na*nb), 6) expression as the operator, so
     # parity is bit-exact. No all-pairs stage anywhere in this plan.
@@ -965,11 +961,10 @@ def s05_ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity.quantize_embeddings / quantized_topk); emits the shared
     per-query ANN contract flags."""
     emb = load_table(spark, "embeddings", sf_dir)
-    dim = 64
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    cq = similarity.quantize_embeddings(emb, dim=dim)
-    out = similarity.quantized_topk(cq, queries, emb, k=5, shortlist=25, dim=dim)
-    return _ann_contract(out, emb, dim=dim, k=5, exact_k=True, queries=queries)
+    cq = similarity.quantize_embeddings(emb)
+    out = similarity.quantized_topk(cq, queries, emb, k=5, shortlist=25)
+    return _ann_contract(out, emb, k=5, exact_k=True, queries=queries)
 
 
 @register(
@@ -993,7 +988,7 @@ def s08_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled recall floor."""
     emb, queries, out = s08_operator_parts(spark, sf_dir)
     return _ann_contract(
-        out, emb, dim=64, k=5, exact_k=True, recall_floor=0.7, queries=queries
+        out, emb, k=5, exact_k=True, recall_floor=0.7, queries=queries
     )
 
 
@@ -1028,7 +1023,7 @@ def s09_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside probed cells only, exact float rescore; emits the shared ANN
     contract flags plus the sampled recall floor."""
     emb, queries, out = s09_operator_parts(spark, sf_dir)
-    return _ann_contract(out, emb, dim=64, k=5, recall_floor=0.65, queries=queries)
+    return _ann_contract(out, emb, k=5, recall_floor=0.65, queries=queries)
 
 
 def s09_operator_parts(spark: SparkSession, sf_dir: str):
@@ -1168,7 +1163,7 @@ def s10_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("int")
         ).alias("prebuilt_matches_incall")
     )
-    contract = _ann_contract(out, emb, dim=64, k=5, recall_floor=0.65, queries=queries)
+    contract = _ann_contract(out, emb, k=5, recall_floor=0.65, queries=queries)
     return contract.join(per_q, "query_id", "left").withColumn(
         "prebuilt_matches_incall", F.coalesce(F.col("prebuilt_matches_incall"), F.lit(1))
     )
@@ -2244,7 +2239,7 @@ def c03_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = emb.where(F.col("chunk_vid") % 251 == 0)
     out = similarity.brute_force_topk(
-        emb, queries, id_col="chunk_vid", vec_col="embedding", k=3, dim=64
+        emb, queries, id_col="chunk_vid", vec_col="embedding", k=3
     ).localCheckpoint(eager=False)  # exact result feeds output + both ANN flags
     # ANN leg: the same queries through the IVF-PQ tier on the same
     # embedding table; flags aggregate recall@3 vs the exact result and
@@ -2551,7 +2546,7 @@ def c05_ann_hybrid_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("fused_ranks_contiguous")
     )
     # --- recall floor on the absolute-capped sample (s02 rule) ------------
-    truth = _recall_truth(emb, queries, dim=64, k=20)
+    truth = _recall_truth(emb, queries, k=20)
     hit = (
         truth.join(
             short.select("query_id", "neighbor_id").withColumn("__hit", F.lit(1)),

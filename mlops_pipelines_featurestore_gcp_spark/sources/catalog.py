@@ -201,11 +201,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load all testdata tables keyed by name."""
-    return {name: load_table(spark, name, sf_dir) for name in TABLE_NAMES}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view so ``spark.sql`` queries see the
     same names the DuckDB oracle does."""

@@ -21,7 +21,7 @@ double FloatList, strings/binary BytesList, and array<T> columns the
 multi-value list of T's kind — the natural columnar↔Example mapping.
 
 Distribution: both directions run on Arrow batches. ``write_partition``
-writes one file from an iterator of batches; ``write_tfrecords`` runs it in
+writes one file from a stream of batches; ``write_tfrecords`` runs it in
 every ``mapInArrow`` task (one file per partition, executor-side), and the
 retrain runs it on the driver over its collected slice. Reads go through
 the ``binaryFile`` source + a ``mapInArrow`` decode into columns of the
@@ -34,7 +34,7 @@ import io
 import os
 import struct
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 
@@ -262,11 +262,11 @@ def _lists(col: pa.Array) -> list:
     return [vals[ends[i] : ends[i + 1]] if valid[i] else None for i in range(len(col))]
 
 
-def write_partition(batches: Iterator[pa.RecordBatch], path: str) -> Iterator[pa.RecordBatch]:
-    """S6 for one stream of batches: yields each batch on unchanged and,
-    once the batches are exhausted, commits them as the TFRecord file
-    ``path`` (none for no rows). It runs as-is in a ``mapInArrow`` task
-    (``write_tfrecords``) or on the driver (the retrain).
+def write_partition(batches: Iterable[pa.RecordBatch], path: str) -> int:
+    """S6 for one stream of batches: commits them as the TFRecord file
+    ``path`` (none for no rows) and returns the number of rows written. It
+    runs as-is in a ``mapInArrow`` task (``write_tfrecords``) or on the
+    driver (the retrain).
 
     Each column's list kind follows its type (``_kind``), and a NULL value
     or array element is left out of its Example.
@@ -287,7 +287,6 @@ def write_partition(batches: Iterator[pa.RecordBatch], path: str) -> Iterator[pa
         kinds = {f.name: _kind(f.type) for f in batch.schema}
         cols = [_lists(col) for col in batch.columns]
         records += [encode_example(dict(zip(batch.schema.names, row)), kinds) for row in zip(*cols)]
-        yield batch
     if records:
         parent = os.path.dirname(path) or "."
         os.makedirs(parent, exist_ok=True)
@@ -295,6 +294,7 @@ def write_partition(batches: Iterator[pa.RecordBatch], path: str) -> Iterator[pa
         with os.fdopen(fd, "wb") as f:
             f.write(frame_records(records))
         os.replace(tmp, path)
+    return len(records)
 
 
 def write_tfrecords(df: DataFrame, out_dir: str) -> None:
@@ -305,7 +305,7 @@ def write_tfrecords(df: DataFrame, out_dir: str) -> None:
 
     def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         path = f"{out_dir}/part-{TaskContext.get().partitionId():05d}.tfrecord"
-        yield pa.RecordBatch.from_pydict({"n": [sum(b.num_rows for b in write_partition(batches, path))]})
+        yield pa.RecordBatch.from_pydict({"n": [write_partition(batches, path)]})
 
     df.mapInArrow(_write, "n long").collect()
 

@@ -12,8 +12,7 @@ that defines only its partials (``hll_sketch_agg``, ``count``), its merge
 (``hll_union_agg``, ``sum``) and its reads. Layout, the touched-pgroup
 merge inside the write's ``pgroup`` shuffle, the versioned commit that
 carries state and batch-id replay mark together, and bucket-range
-pruning are ``rollup.py``'s, and ``rollup.rollup_sink`` drives it from a
-stream.
+pruning are ``rollup.py``'s.
 
 - read: ``hll_sketch_estimate`` per bucket, or union ACROSS buckets for
   a rollup estimate over any bucket range (day → month → all-time from

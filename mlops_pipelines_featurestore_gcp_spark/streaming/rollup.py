@@ -59,7 +59,7 @@ replays (Structured Streaming re-delivers a failed micro-batch under the
 SAME id — merging partials twice would double-count, the additive-state
 failure mode append/recompute sinks don't have). The mark is in the
 pointer, so a crash before its replace leaves the previous state AND mark.
-``rollup_sink`` wires any rollup into ``writeStream.foreachBatch``.
+A streaming caller passes its micro-batch id as ``batch_id``.
 
 Cascades compose: a day-grain ``ContinuousAggregate`` can ``refresh`` from
 the hour-grain store's partials (sum-of-sums), never from raw data.
@@ -299,18 +299,3 @@ class ContinuousAggregate:
             "bucket", F.floor(F.col("bucket") / F.lit(ratio)).cast("long")
         )
         coarser._write_state(rebucketed, merge=True, batch_id=batch_id)
-
-
-def rollup_sink(stream: DataFrame, agg, checkpoint_dir: str):
-    """Maintain a rollup from a stream: each micro-batch calls
-    ``agg.refresh(batch, batch_id=...)`` under its batch id
-    (replay-idempotent). Serves every rollup: ``ContinuousAggregate``,
-    ``DistinctCountRollup`` and ``QuantileRollup``."""
-
-    def _refresh(batch_df: DataFrame, batch_id: int) -> None:
-        agg.refresh(batch_df, batch_id=batch_id)
-
-    writer = stream.writeStream.foreachBatch(_refresh).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return writer.trigger(availableNow=True).start()

@@ -30,9 +30,6 @@ bucketed by another modulus would put a key in a second bucket, so
 step 4) is the feature store's online store too: its full rebuild writes
 the latest long row per ``(entity_id, feature_name)`` in this layout and
 commits the same pointer (``feature_store/store.py``).
-
-Use standalone for batch CDC-style merges, or as the ``foreachBatch``
-body of a streaming write (``upsert_sink``).
 """
 
 from __future__ import annotations
@@ -157,27 +154,3 @@ def read_upsert_table(spark: SparkSession, table_path: str) -> DataFrame:
     doc = read_keyed_pointer(table_path)
     current = os.path.join(table_path, f"v{doc['version'] if doc else 0}")
     return spark.read.option("mergeSchema", "true").parquet(current).drop(_BUCKET)
-
-
-def upsert_sink(
-    stream: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    *,
-    key: str,
-    version_col: str,
-    n_buckets: int = 64,
-):
-    """Attach the upsert merge as a ``foreachBatch`` streaming sink.
-
-    Batch replay after a crash re-runs ``upsert_batch`` for the same
-    micro-batch; latest-wins plus the versioned commit make the rerun
-    converge to the identical table state (idempotent effect, exactly-once
-    result).
-    """
-
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert_batch(table_path, batch_df, key=key, version_col=version_col, n_buckets=n_buckets)
-
-    writer = stream.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()

@@ -83,14 +83,3 @@ def test_null_time_rows_dropped(spark, tmp_path):
     assert len(rows) == 1 and rows[0].n_rows == 1
 
 
-def test_distinct_rollup_streaming_sink(spark, tmp_path):
-    from mlops_pipelines_featurestore_gcp_spark.streaming.rollup import rollup_sink
-
-    src = tmp_path / "src"
-    _batch(spark, [(10, "a", 1), (20, "a", 2), (30, "a", 1)]).write.parquet(str(src))
-    stream = spark.readStream.schema("t long, k string, u long").parquet(str(src))
-    dr = _dr(tmp_path)
-    q = rollup_sink(stream, dr, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    row = dr.read(spark).collect()[0]
-    assert row.n_rows == 3 and row.approx_distinct == 2

@@ -74,6 +74,6 @@ def test_near_dup_loop_via_derived_embeddings(spark):
     emb = hashed_embedding(_docs(spark, rows), "doc_id", "text").select(
         F.col("doc_id").alias("vec_id"), F.col("embedding").cast("array<float>").alias("embedding")
     )
-    pairs = cosine_neardup_pairs(emb, threshold=0.8, dim=64).collect()
+    pairs = cosine_neardup_pairs(emb, threshold=0.8).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
     assert pairs[0].cos_sim > 0.9

@@ -56,17 +56,6 @@ def test_regex_check(spark):
     assert rep["matches(code)"]["n_violations"] == 1  # only 'bb'
 
 
-def test_enforce_raises_with_details(df):
-    with pytest.raises(ValueError, match=r"unique\(id\): 1 violations"):
-        ex.enforce(df, [ex.unique("id"), ex.not_null("id")])
-
-
-def test_enforce_passes_clean_data(spark):
-    d = spark.createDataFrame([(1,), (2,)], "id long")
-    out = ex.enforce(d, [ex.unique("id"), ex.not_null("id")])
-    assert out.count() == 2
-
-
 def test_single_scan_plan(df):
     """All checks fold into one aggregate — the report derives from a single
     collected row, so the validated table is scanned once."""

@@ -545,6 +545,22 @@ def test_import_rejects_a_feature_time_that_is_no_column_or_timestamp(store, spa
     assert dates == ["2024-01-01", "2024-03-01"]
 
 
+def test_import_rejects_an_empty_feature_list(store, spark, spark_jobs):
+    """``feature_fields=[]`` names no feature: it raises on the driver
+    before any job runs and writes nothing, where it used to import every
+    column as if no list had been given."""
+    store.create_featurestore("fs")
+    store.create_entity_type("fs", "users")
+    src = spark.createDataFrame([("a", "gold", 1.0), ("b", "tin", 2.0)], "uid string, tier string, bal double")
+
+    def empty_list():
+        with pytest.raises(ValueError, match=r"feature_fields \[\]"):
+            store.import_feature_values("fs", "users", src, entity_id_field="uid", feature_fields=[])
+
+    assert spark_jobs(empty_list)[1] == []
+    assert not os.path.exists(store._values_path("fs", "users"))
+
+
 def test_empty_import_writes_nothing_and_store_keeps_working(store, spark):
     """An import with no rows (a cycle with no new ratings) returns 0 and
     writes no rows, before and after real imports."""

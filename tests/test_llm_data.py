@@ -140,16 +140,16 @@ def test_ann_contract_recall_flag_semantics(spark, sf_small):
 
     emb = load_table(spark, "embeddings", sf_small)
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    exact = similarity.brute_force_topk(emb, queries, k=5, dim=64)
+    exact = similarity.brute_force_topk(emb, queries, k=5)
 
-    perfect = _ann_contract(exact, emb, dim=64, k=5, recall_floor=0.99)
+    perfect = _ann_contract(exact, emb, k=5, recall_floor=0.99)
     rows = perfect.collect()
     assert rows and all(r.recall_floor_met == 1 for r in rows)
 
     # an approximate method that returns a single wrong-ish neighbor set:
     # keep only rank-1 rows for one query — aggregate recall collapses
     starved = exact.where((F.col("rnk") == 1) & (F.col("query_id") == 0))
-    bad = _ann_contract(starved, emb, dim=64, k=5, recall_floor=0.9)
+    bad = _ann_contract(starved, emb, k=5, recall_floor=0.9)
     assert all(r.recall_floor_met == 0 for r in bad.collect())
 
 

@@ -288,7 +288,8 @@ def test_an_action_outside_the_arms_is_left_out_of_the_fit(spark, tmp_path):
 def test_retrain_pass_runs_on_local_batches_without_spark(tmp_path):
     """The retrain's pass is two batch functions that run as-is on local
     pyarrow batches, with no SparkSession: ``write_partition`` writes a file
-    that decodes back to the rows, and ``arm_partials`` sums numpy's
+    that decodes back to the rows and returns their count, and
+    ``arm_partials`` sums numpy's
     ``XᵀX``, ``Xᵀr`` and ``n`` per arm over the valid rows. Values are
     quarters, so every sum is exact in any order and float32 holds them."""
     rng = np.random.default_rng(3)
@@ -307,8 +308,9 @@ def test_retrain_pass_runs_on_local_batches_without_spark(tmp_path):
         }
     )
     path = tmp_path / "tfrecords" / "part-00000.tfrecord"
-    written = write_partition(iter(table.to_batches(max_chunksize=32)), str(path))
-    partials = [row for p in arm_partials(written, k) for row in p.to_pylist()]
+    batches = table.to_batches(max_chunksize=32)
+    assert write_partition(batches, str(path)) == n
+    partials = [row for p in arm_partials(batches, k) for row in p.to_pylist()]
 
     assert os.listdir(path.parent) == [path.name]
     examples = [decode_example(rec) for rec in unframe_records(path.read_bytes())]

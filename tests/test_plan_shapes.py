@@ -23,7 +23,7 @@ def test_d05_blocked_plan_has_no_cartesian(spark):
         [(i, [float((i * 7 + d) % 5 - 2) for d in range(64)]) for i in range(40)],
         "vec_id long, embedding array<float>",
     )
-    out = similarity.coord_sign_blocked_pairs(emb, dim=64, threshold=0.45)
+    out = similarity.coord_sign_blocked_pairs(emb, threshold=0.45)
     plan = _plan(out)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -162,6 +162,6 @@ def test_semantic_pairs_join_spread_survives_aqe(spark, sf_small):
     plan still carries REPARTITION_BY_NUM on the cell key so a refactor
     can't silently drop it."""
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    pairs = similarity.semantic_dedup_pairs(emb, n_clusters=4, threshold=0.4, dim=64)
+    pairs = similarity.semantic_dedup_pairs(emb, n_clusters=4, threshold=0.4)
     plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "REPARTITION_BY_NUM" in plan or "repartitionbyexpression" in plan.lower(), plan[:2000]

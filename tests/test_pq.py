@@ -69,7 +69,7 @@ def test_pq_topk_exact_k_and_rescore_parity(spark):
 def test_pq_topk_recall_beats_floor_on_clustered_fixture(spark):
     emb = _emb(spark, n=120)
     queries = emb.where(F.col("vec_id") % 10 == 0)
-    truth = similarity.brute_force_topk(emb, queries, k=5, dim=DIM).select("query_id", "neighbor_id")
+    truth = similarity.brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
     out = similarity.pq_topk(emb, queries, dim=DIM, m=M, k=5, shortlist=24, sample=120)
     hit = truth.join(out.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]).count()
     assert hit / truth.count() >= 0.7
@@ -111,7 +111,7 @@ def test_ivf_pq_topk_contract_and_recall(spark):
             a, b = vecs[q], vecs[r.neighbor_id]
             exact = round(float(a @ b / np.sqrt((a @ a) * (b @ b))), 6)
             assert abs(r.cos_sim - exact) < 1e-9
-    truth = similarity.brute_force_topk(emb, queries, k=5, dim=DIM).select("query_id", "neighbor_id")
+    truth = similarity.brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id")
     hit = truth.join(out.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]).count()
     assert hit / truth.count() >= 0.6  # clustered fixture, cells prune
 
@@ -135,7 +135,7 @@ def test_pq_with_exhaustive_shortlist_equals_brute_force(spark):
     error lives ONLY in shortlist pruning, never in reported scores."""
     emb = _emb(spark, n=50, seed=11)
     queries = emb.where(F.col("vec_id") % 10 == 0)
-    truth = similarity.brute_force_topk(emb, queries, k=4, dim=DIM)
+    truth = similarity.brute_force_topk(emb, queries, k=4)
     got = similarity.pq_topk(emb, queries, dim=DIM, m=M, k=4, shortlist=50, sample=50)
     assert _as_pairs(got) == _as_pairs(truth)
 
@@ -143,34 +143,12 @@ def test_pq_with_exhaustive_shortlist_equals_brute_force(spark):
 def test_ivf_pq_probe_all_cells_exhaustive_equals_brute_force(spark):
     emb = _emb(spark, n=50, seed=12)
     queries = emb.where(F.col("vec_id") % 10 == 0)
-    truth = similarity.brute_force_topk(emb, queries, k=4, dim=DIM)
+    truth = similarity.brute_force_topk(emb, queries, k=4)
     got = similarity.ivf_pq_topk(
         emb, queries, dim=DIM, m=M, k=4, shortlist=50, sample=50,
         n_centroids=8, n_probe=8,
     )
     assert _as_pairs(got) == _as_pairs(truth)
-
-
-def test_pq_upsert_appends_batch_and_search_sees_it(spark, tmp_path):
-    emb = _emb(spark, n=50)
-    old = emb.where(F.col("vec_id") < 40)
-    new = emb.where(F.col("vec_id") >= 40)
-    path = str(tmp_path / "pqidx")
-    similarity.build_pq_index(old, path, dim=DIM, m=M, sample=40)
-    n0 = spark.read.parquet(f"{path}/codes").count()
-    similarity.pq_upsert(spark, path, new)
-    codes = spark.read.parquet(f"{path}/codes")
-    assert codes.count() == n0 + 10  # batch-proportional append
-    # upserted ids are encoded with the ORIGINAL codebooks: re-encoding
-    # the same rows yields identical codes
-    books = similarity.pq_train(old, dim=DIM, m=M, sample=40)
-    expect = {r.neighbor_id: list(r.codes) for r in similarity.pq_encode(new, books).collect()}
-    got = {r.neighbor_id: list(r.codes) for r in codes.where(F.col("neighbor_id") >= 40).collect()}
-    assert got == expect
-    # search over the upserted index can return new ids
-    queries = emb.where(F.col("vec_id") == 0)
-    out = similarity.pq_search(spark, path, emb, queries, dim=DIM, k=50 - 1, shortlist=60)
-    assert {r.neighbor_id for r in out.collect()} == set(range(1, 50))
 
 
 def test_pq_shortlist_is_partition_layout_independent(spark):
@@ -250,7 +228,7 @@ def test_persisted_ivfpq_index_prebuilt_matches_incall(spark, tmp_path):
 
 def test_ivfpq_codes_partitioned_by_cell(spark, tmp_path):
     """The persisted code table must be cell-partitioned so probes prune
-    partitions at the source (the ivf_search layout, 32× smaller)."""
+    partitions at the source."""
     import os
 
     emb = _emb(spark, n=60)
@@ -336,36 +314,30 @@ def test_opq_pq_search_rescores_in_raw_space(spark, tmp_path):
         assert len(ranks) <= 3
 
 
-def test_opq_upsert_encodes_in_rotated_basis(spark, tmp_path):
-    # a vector upserted into an OPQ index must get the SAME codes the
-    # build-time encode gave it — the build/query consistency the wiring
-    # exists to guarantee
+def test_opq_ivfpq_upsert_encodes_in_rotated_basis(spark, tmp_path):
+    # a vector upserted into an OPQ IVF-PQ index must get the SAME cell and
+    # codes the build-time encode gave it: the upsert rotates the batch with
+    # the persisted rotation before encoding
     emb = _emb(spark, n=60)
     base = emb.where(F.col("vec_id") % 2 == 0)
     extra = emb.where(F.col("vec_id") % 2 == 1)
-    p_all = str(tmp_path / "pq_all")
-    p_ups = str(tmp_path / "pq_ups")
-    similarity.build_pq_index(emb, p_all, dim=DIM, m=M, sample=60, seed=7, opq=True)
-    # build the upsert index from the SAME fitted state: copy codebooks +
-    # rotation by building on the full corpus, then rewrite codes from base
-    similarity.build_pq_index(emb, p_ups, dim=DIM, m=M, sample=60, seed=7, opq=True)
-    import shutil
-
-    shutil.rmtree(f"{p_ups}/codes")
+    p_all = str(tmp_path / "ivfpq_all")
+    p_ups = str(tmp_path / "ivfpq_ups")
+    # the same fitted state twice; then p_ups keeps only base's codes
+    similarity.build_ivfpq_index(emb, p_all, dim=DIM, m=M, sample=60, seed=7, opq=True)
+    similarity.build_ivfpq_index(emb, p_ups, dim=DIM, m=M, sample=60, seed=7, opq=True)
+    cells, books = similarity._ivfpq_state_read(spark, p_ups)
     rot = similarity._opq_read(spark, p_ups)
-    books_rows = spark.read.parquet(f"{p_ups}/codebooks").collect()
-    mm = max(r["s"] for r in books_rows) + 1
-    ksub = max(r["j"] for r in books_rows) + 1
-    books = np.empty((mm, ksub, len(books_rows[0]["centroid"])))
-    for r in books_rows:
-        books[r["s"], r["j"]] = r["centroid"]
-    similarity.pq_encode(
-        similarity._opq_apply(base, rot, vec_col="embedding"), books
-    ).write.mode("overwrite").parquet(f"{p_ups}/codes")
-    similarity.pq_upsert(spark, p_ups, extra)
-    codes_all = {r.neighbor_id: list(r.codes) for r in spark.read.parquet(f"{p_all}/codes").collect()}
-    codes_ups = {r.neighbor_id: list(r.codes) for r in spark.read.parquet(f"{p_ups}/codes").collect()}
-    assert codes_ups == codes_all
+    similarity.ivfpq_encode(
+        similarity._opq_apply(base, rot, vec_col="embedding"), cells, books
+    ).write.mode("overwrite").partitionBy("cell").parquet(f"{p_ups}/codes")
+    similarity.ivfpq_upsert(spark, p_ups, extra)
+
+    def codes(path):
+        return {r.neighbor_id: (r.cell, list(r.codes)) for r in spark.read.parquet(f"{path}/codes").collect()}
+
+    assert codes(p_ups) == codes(p_all)
+    assert len(codes(p_all)) == 60
 
 
 def test_opq_ivfpq_search_contract_and_recall(spark, tmp_path):
@@ -490,14 +462,3 @@ def test_ivfpq_compact_dedupes_exact_reupsert_rows_only(spark, tmp_path):
     assert report["cells_compacted"] == 0
 
 
-def test_compact_cell_partitions_on_ivf_assigned_table(spark, tmp_path):
-    emb = _emb(spark, n=40)
-    path = str(tmp_path / "ivf_cmp")
-    similarity.build_ivf_index(emb, path, n_centroids=4, sample=40)
-    similarity.ivf_upsert(spark, path, _emb(spark, n=10, seed=11).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(900)))
-    report = similarity.compact_cell_partitions(spark, f"{path}/assigned", max_files_per_cell=1)
-    assert report["cells_compacted"] >= 1
-    q = emb.where(F.col("vec_id") % 10 == 0)
-    out = similarity.ivf_search(spark, path, q, k=3).collect()
-    assert out  # index still serves after compaction

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from mlops_pipelines_featurestore_gcp_spark.sources import atomic
 from mlops_pipelines_featurestore_gcp_spark.streaming.distinct_rollup import DistinctCountRollup
-from mlops_pipelines_featurestore_gcp_spark.streaming.rollup import ContinuousAggregate, rollup_sink
+from mlops_pipelines_featurestore_gcp_spark.streaming.rollup import ContinuousAggregate
 
 
 def _ca(tmp_path, width=100):
@@ -111,17 +111,6 @@ def test_cascade_hour_to_day(spark, tmp_path):
     fine.cascade_into(coarse, spark, batch_id=0)
     got = {(r.bucket, r.k): (r.n, r.total) for r in coarse.read(spark).collect()}
     assert got == {(0, "a"): (3, 9.0), (1, "a"): (1, 7.0)}
-
-
-def test_rollup_sink_streaming(spark, tmp_path):
-    src = tmp_path / "src"
-    _batch(spark, [(10, "a", 1.0), (20, "a", 2.0)]).write.parquet(str(src))
-    stream = spark.readStream.schema("t long, k string, v double").parquet(str(src))
-    ca = _ca(tmp_path)
-    q = rollup_sink(stream, ca, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    rows = ca.read(spark).collect()
-    assert len(rows) == 1 and rows[0]["n"] == 2 and rows[0]["total"] == 3.0
 
 
 def test_null_time_rows_dropped(spark, tmp_path):

@@ -12,18 +12,6 @@ def _ids(df):
     return sorted(r.doc_id for r in df.select("doc_id").collect())
 
 
-def test_sample_is_deterministic_and_rate_accurate(spark, sf_medium):
-    docs = load_table(spark, "documents", sf_medium)
-    a = sampling.deterministic_sample(docs, "doc_id", 0.3)
-    b = sampling.deterministic_sample(docs, "doc_id", 0.3)
-    assert _ids(a) == _ids(b)
-    n, total = a.count(), docs.count()
-    assert abs(n / total - 0.3) < 0.08
-    # a larger fraction with the same salt is a SUPERSET (nested samples)
-    bigger = sampling.deterministic_sample(docs, "doc_id", 0.6)
-    assert set(_ids(a)) <= set(_ids(bigger))
-
-
 def test_stratified_allowlist(spark, sf_medium):
     docs = load_table(spark, "documents", sf_medium)
     out = sampling.stratified_sample(docs, "doc_id", "lang", {"en": 1.0, "es": 0.0})

@@ -1,4 +1,4 @@
-"""The three embedding near-dup strategies agree where they overlap:
+"""The embedding near-dup strategies agree where they overlap:
 any pair an LSH-blocked variant reports must appear in the exact all-pairs
 baseline with the identical rounded cosine; blocking only removes pairs."""
 
@@ -21,14 +21,10 @@ def _pairs(df):
 
 
 def test_blocked_variants_are_subsets_of_exact(emb):
-    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.4, dim=64))
-    coord = _pairs(similarity.coord_sign_blocked_pairs(emb, threshold=0.4, dim=64))
-    hyper = _pairs(similarity.lsh_blocked_pairs(emb, threshold=0.4, dim=64))
+    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.4))
+    coord = _pairs(similarity.coord_sign_blocked_pairs(emb, threshold=0.4))
     assert set(coord) <= set(exact)
-    assert set(hyper) <= set(exact)
     for k, v in coord.items():
-        assert v == exact[k]
-    for k, v in hyper.items():
         assert v == exact[k]
 
 
@@ -39,22 +35,6 @@ def test_hyperplane_signature_deterministic(emb):
     rb = {r.vec_id: r.sigs for r in b.collect()}
     assert ra == rb
     assert all(len(s) == 1 and 0 <= s[0] < 256 for s in ra.values())
-
-
-def test_ivf_index_persist_and_search(spark, emb, tmp_path):
-    """build_ivf_index → ivf_search returns the SAME answer as the in-memory
-    ivf_topk (same seed → same quantizer), and only probed cells are read."""
-    path = str(tmp_path / "ivf")
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    similarity.build_ivf_index(emb, path, n_centroids=8, seed=42)
-    searched = similarity.ivf_search(spark, path, queries, n_probe=3, k=5, dim=64)
-    in_mem = similarity.ivf_topk(emb, queries, n_centroids=8, n_probe=3, k=5, seed=42, dim=64)
-    got = sorted((r.query_id, r.neighbor_id, r.cos_sim, r.rnk) for r in searched.collect())
-    want = sorted((r.query_id, r.neighbor_id, r.cos_sim, r.rnk) for r in in_mem.collect())
-    assert got == want and len(got) > 0
-    # the assigned table is cell-partitioned: probing must not scan all cells
-    plan = searched._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or "dynamicpruning" in plan, plan
 
 
 def test_quantized_topk_recall_and_exact_scores(spark):
@@ -78,9 +58,9 @@ def test_quantized_topk_recall_and_exact_scores(spark):
     )
     queries = corpus.where(F.col("vec_id") < 8)
 
-    exact = brute_force_topk(corpus, queries, k=5, dim=dim).collect()
-    cq = quantize_embeddings(corpus, dim=dim)
-    got = quantized_topk(cq, queries, corpus, k=5, shortlist=25, dim=dim).collect()
+    exact = brute_force_topk(corpus, queries, k=5).collect()
+    cq = quantize_embeddings(corpus)
+    got = quantized_topk(cq, queries, corpus, k=5, shortlist=25).collect()
 
     exact_map = {(r.query_id, r.neighbor_id): r.cos_sim for r in exact}
     got_map = {(r.query_id, r.neighbor_id): r.cos_sim for r in got}
@@ -101,16 +81,16 @@ def test_quantize_embeddings_bounds_and_zero_vector(spark):
         [(1, [3.0, -1.5, 0.0, 0.75]), (2, [0.0, 0.0, 0.0, 0.0])],
         "vec_id long, embedding array<float>",
     )
-    out = {r.vec_id: r for r in quantize_embeddings(df, dim=4).collect()}
+    out = {r.vec_id: r for r in quantize_embeddings(df).collect()}
     assert out[1].qvec == [127, -64, 0, 32]  # round(v * 127 / 3.0)
     assert abs(out[1].qscale - 3.0 / 127.0) < 1e-12
     assert out[2].qvec == [0, 0, 0, 0] and out[2].qscale == 0.0
 
 
 def test_semantic_dedup_pairs_subset_of_exact_with_equal_scores(emb):
-    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.4, dim=64))
+    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.4))
     sem = _pairs(
-        similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4, dim=64).select(
+        similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4).select(
             "id_a", "id_b", "cos_sim"
         )
     )
@@ -124,13 +104,13 @@ def test_semantic_dedup_pairs_subset_of_exact_with_equal_scores(emb):
 
 
 def test_semantic_dedup_pairs_deterministic_across_runs(emb):
-    a = _pairs(similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4, dim=64).select("id_a", "id_b", "cos_sim"))
-    b = _pairs(similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4, dim=64).select("id_a", "id_b", "cos_sim"))
+    a = _pairs(similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4).select("id_a", "id_b", "cos_sim"))
+    b = _pairs(similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4).select("id_a", "id_b", "cos_sim"))
     assert a == b
 
 
 def test_semantic_dedup_keep_one_per_component(emb, spark):
-    pairs = similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4, dim=64)
+    pairs = similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4)
     # the keep set is the transitive closure over the semantic pairs
     keep = components.dedup_keep_set(
         pairs.select("id_a", "id_b"), emb.select("vec_id"), "vec_id", src="id_a", dst="id_b"
@@ -164,30 +144,6 @@ def test_semantic_dedup_keep_one_per_component(emb, spark):
     assert (all_ids - set(adj)) <= kept
 
 
-def test_ivf_upsert_appends_to_cells(spark, emb, tmp_path):
-    path = str(tmp_path / "ivf")
-    base = emb.where(F.col("vec_id") % 2 == 0)
-    extra = emb.where(F.col("vec_id") % 2 == 1)
-    similarity.build_ivf_index(base, path, n_centroids=4)
-    n_before = spark.read.parquet(f"{path}/assigned").count()
-    similarity.ivf_upsert(spark, path, extra)
-    after = spark.read.parquet(f"{path}/assigned")
-    assert after.count() == n_before + extra.count()
-    # upserted vectors are queryable through the same persisted-index search
-    q = extra.limit(3)
-    hits = similarity.ivf_search(spark, path, q, n_probe=4, k=3)
-    assert hits.count() > 0
-    # every upserted vector landed in its argmin centroid cell
-    import numpy as np
-
-    cents = {r.cell: np.array(r.centroid) for r in spark.read.parquet(f"{path}/centroids").collect()}
-    sample = after.join(extra.select(F.col("vec_id").alias("neighbor_id")), "neighbor_id").limit(20).collect()
-    for r in sample:
-        v = np.array(r.cv, dtype=float)
-        best = min(cents, key=lambda c: (float(((v - cents[c]) ** 2).sum()), c))
-        assert r.cell == best
-
-
 def test_auto_cell_sizing_scales_with_corpus():
     # VERDICT r3: fixed k makes SemDeDup's within-cell pair count quadratic;
     # k must grow ∝ N (and IVF centroids ∝ sqrt(N))
@@ -209,15 +165,15 @@ def test_semantic_dedup_auto_clusters_end_to_end(emb):
     # true near-duplicate pairs (subset-of-exact invariant)
     from mlops_pipelines_featurestore_gcp_spark.operators import similarity
 
-    auto = similarity.semantic_dedup_pairs(emb, threshold=0.4, dim=64)
+    auto = similarity.semantic_dedup_pairs(emb, threshold=0.4)
     rows = auto.select("id_a", "id_b").collect()
-    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.4, dim=64))
+    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.4))
     assert all((r.id_a, r.id_b) in exact for r in rows)
 
 
 def test_keep_star_one_row_per_vector_and_witness_guarantee(emb, spark):
     out = similarity.semantic_dedup_keep_star(
-        emb, n_clusters=8, threshold=0.3, dim=64
+        emb, n_clusters=8, threshold=0.3
     ).cache()
     rows = out.collect()
     ids = [r["vec_id"] for r in rows]
@@ -225,7 +181,7 @@ def test_keep_star_one_row_per_vector_and_witness_guarantee(emb, spark):
     kept = {r["vec_id"] for r in rows if r["kept"] == 1}
     dropped = [r for r in rows if r["kept"] == 0]
     assert dropped, "threshold 0.3 on the fixture should drop something"
-    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.3, dim=64))
+    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.3))
     for r in dropped:
         # witness is kept, edge score is the exact rounded cosine, >= tau
         assert r["dup_of"] in kept
@@ -239,10 +195,10 @@ def test_keep_star_drops_subset_of_pair_clique_components(emb):
     # every star drop corresponds to a within-cell pair the clique form
     # would also surface (same cells, same threshold) — star is a
     # recall-bounded subset, never an inventor
-    star = similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3, dim=64)
+    star = similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3)
     pair_keys = set(
         _pairs(
-            similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.3, dim=64)
+            similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.3)
             .select("id_a", "id_b", "cos_sim")
         )
     )
@@ -253,9 +209,9 @@ def test_keep_star_drops_subset_of_pair_clique_components(emb):
 
 def test_keep_star_deterministic_across_runs(emb):
     a = {r["vec_id"]: (r["kept"], r["dup_of"]) for r in
-         similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3, dim=64).collect()}
+         similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3).collect()}
     b = {r["vec_id"]: (r["kept"], r["dup_of"]) for r in
-         similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3, dim=64).collect()}
+         similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3).collect()}
     assert a == b
 
 
@@ -268,10 +224,10 @@ def test_keep_star_multi_hub_same_contract_more_coverage(emb):
     # vector dropped by the single hub may BE a hub at R=8), but the
     # contract must hold and coverage must not shrink.
     single = similarity.semantic_dedup_keep_star(
-        emb, n_clusters=8, threshold=0.3, dim=64, n_hubs=1
+        emb, n_clusters=8, threshold=0.3, n_hubs=1
     ).collect()
     multi = similarity.semantic_dedup_keep_star(
-        emb, n_clusters=8, threshold=0.3, dim=64, n_hubs=8
+        emb, n_clusters=8, threshold=0.3, n_hubs=8
     ).collect()
     assert sorted(r["vec_id"] for r in multi) == sorted(r["vec_id"] for r in single)
     # NOTE deliberately NOT asserted: n_drop_8 >= n_drop_1. Coverage
@@ -281,7 +237,7 @@ def test_keep_star_multi_hub_same_contract_more_coverage(emb):
     # change could legitimately shrink the drop count. The contract
     # invariants below are what the operator guarantees.
     kept = {r["vec_id"] for r in multi if r["kept"] == 1}
-    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.3, dim=64))
+    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.3))
     for r in multi:
         if r["kept"] == 0:
             assert r["dup_of"] in kept
@@ -309,7 +265,7 @@ def test_keep_star_synthetic_cluster_collapses_to_hub(spark):
         singles.append((100 + j, v))
     df = spark.createDataFrame(fam + singles, "vec_id long, embedding array<float>")
     out = similarity.semantic_dedup_keep_star(
-        df, n_clusters=6, threshold=0.9, dim=64
+        df, n_clusters=6, threshold=0.9
     ).collect()
     fam_rows = [r for r in out if r["vec_id"] < 100]
     single_rows = [r for r in out if r["vec_id"] >= 100]
@@ -394,17 +350,17 @@ def test_keep_star_multi_round_contract_and_coverage(emb):
     # round-1 hubs and round-1 drops are untouched by construction (later
     # rounds only consume survivors), so drops can only be added.
     one = similarity.semantic_dedup_keep_star(
-        emb, n_clusters=8, threshold=0.3, dim=64, n_hubs=2, rounds=1
+        emb, n_clusters=8, threshold=0.3, n_hubs=2, rounds=1
     ).collect()
     two = similarity.semantic_dedup_keep_star(
-        emb, n_clusters=8, threshold=0.3, dim=64, n_hubs=2, rounds=2
+        emb, n_clusters=8, threshold=0.3, n_hubs=2, rounds=2
     ).collect()
     assert sorted(r["vec_id"] for r in two) == sorted(r["vec_id"] for r in one)
     drops1 = {r["vec_id"] for r in one if r["kept"] == 0}
     drops2 = {r["vec_id"] for r in two if r["kept"] == 0}
     assert drops1 <= drops2  # monotone: later rounds only add drops
     kept2 = {r["vec_id"] for r in two if r["kept"] == 1}
-    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.3, dim=64))
+    exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.3))
     for r in two:
         if r["kept"] == 0:
             assert r["dup_of"] in kept2
@@ -416,9 +372,9 @@ def test_keep_star_multi_round_contract_and_coverage(emb):
 
 def test_keep_star_multi_round_deterministic(emb):
     a = {r["vec_id"]: (r["kept"], r["dup_of"]) for r in
-         similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3, dim=64, n_hubs=2, rounds=3).collect()}
+         similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3, n_hubs=2, rounds=3).collect()}
     b = {r["vec_id"]: (r["kept"], r["dup_of"]) for r in
-         similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3, dim=64, n_hubs=2, rounds=3).collect()}
+         similarity.semantic_dedup_keep_star(emb, n_clusters=8, threshold=0.3, n_hubs=2, rounds=3).collect()}
     assert a == b
 
 
@@ -464,7 +420,7 @@ def test_keep_star_zero_norm_vector_stays_survivor(spark):
     rows.append((99, [0.0] * 8))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     out = {r["vec_id"]: r for r in similarity.semantic_dedup_keep_star(
-        df, n_clusters=2, threshold=0.2, dim=8, n_hubs=2, rounds=2
+        df, n_clusters=2, threshold=0.2, n_hubs=2, rounds=2
     ).collect()}
     assert set(out) == {r[0] for r in rows}  # one row per vector, none vanish
     z = out[99]
@@ -520,11 +476,11 @@ def test_all_ann_tiers_handle_empty_query_set(emb):
     empty_q = emb.where(F.col("vec_id") < 0)
     want = ["query_id", "neighbor_id", "cos_sim", "rnk"]
     outs = {
-        "brute": similarity.brute_force_topk(emb, empty_q, k=5, dim=64),
+        "brute": similarity.brute_force_topk(emb, empty_q, k=5),
         "lsh": similarity.lsh_topk(emb, empty_q, dim=64, planes=8, tables=4, k=5),
-        "ivf": similarity.ivf_topk(emb, empty_q, n_centroids=8, n_probe=3, k=5, dim=64),
+        "ivf": similarity.ivf_topk(emb, empty_q, n_centroids=8, n_probe=3, k=5),
         "int8": similarity.quantized_topk(
-            similarity.quantize_embeddings(emb, dim=64), empty_q, emb, k=5, shortlist=25, dim=64
+            similarity.quantize_embeddings(emb), empty_q, emb, k=5, shortlist=25
         ),
         "pq": similarity.pq_topk(emb, empty_q, dim=64, k=5, shortlist=25),
         "ivfpq": similarity.ivf_pq_topk(emb, empty_q, dim=64, m=8, k=5, shortlist=25),
@@ -541,38 +497,14 @@ def test_quantizer_fits_raise_clearly_on_empty_corpus(emb):
     with pytest.raises(ValueError, match="ivfpq_train: empty corpus"):
         similarity.ivfpq_train(empty_c, dim=64, m=8)
     with pytest.raises(ValueError, match="learn_cells: empty corpus"):
-        similarity.ivf_topk(empty_c, emb.limit(1), n_centroids=8, n_probe=3, k=5, dim=64)
+        similarity.ivf_topk(empty_c, emb.limit(1), n_centroids=8, n_probe=3, k=5)
 
 
-def test_chunked_query_topk_exact_union(spark):
-    # chunk-and-union as an operator (r12): md5-chunked query batches
-    # through the same tier must union to EXACTLY the single-call result
-    # (per-query top-k independence), including when every tier call
-    # sees only a few queries.
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    rows = [(i, [float(x) for x in rng.randn(16)]) for i in range(120)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = emb.where(F.col("vec_id") % 3 == 0)  # 40 queries
-    direct = sorted(map(tuple, similarity.brute_force_topk(
-        emb, queries, k=3, dim=16).collect()))
-    chunked = sorted(map(tuple, similarity.chunked_query_topk(
-        similarity.brute_force_topk, emb, queries, max_rows=10, k=3, dim=16,
-    ).collect()))
-    assert chunked == direct
-    # under the cap: degenerates to one direct call
-    small = similarity.chunked_query_topk(
-        similarity.brute_force_topk, emb, queries, max_rows=4096, k=3, dim=16)
-    assert sorted(map(tuple, small.collect())) == direct
-
-
-def test_collect_query_rows_error_names_the_helper(spark):
+def test_collect_query_rows_error_states_the_cap_and_the_size(spark):
     big = spark.range(0, similarity.MAX_QUERY_ROWS + 8).select(
         F.col("id").alias("vec_id"))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="chunked_query_topk"):
+    cap = similarity.MAX_QUERY_ROWS
+    with pytest.raises(ValueError, match=rf"MAX_QUERY_ROWS={cap} rows \(saw at least {cap + 1}\)$"):
         similarity._collect_query_rows(big, "test")
 
 
@@ -598,7 +530,7 @@ def test_brute_force_small_blocks_exclude_self_and_match_naive(spark):
         "vec_id long, embedding array<double>",
     ).repartition(16)  # ~2-3 rows per partition << k
     queries = corpus.where(F.col("vec_id") % 9 == 0)
-    out = brute_force_topk(corpus, queries, k=10, dim=dim).collect()
+    out = brute_force_topk(corpus, queries, k=10).collect()
     assert all(r.query_id != r.neighbor_id for r in out)
     # naive truth with the same fold-order arithmetic + round-half-up
     def cos(a, b):

@@ -17,7 +17,6 @@ from mlops_pipelines_featurestore_gcp_spark.sources import atomic
 from mlops_pipelines_featurestore_gcp_spark.streaming.upsert import (
     read_upsert_table,
     upsert_batch,
-    upsert_sink,
 )
 
 
@@ -159,29 +158,6 @@ def test_upsert_batch_replay_is_idempotent(spark, tmp_path):
     upsert_batch(path, batch, key="k", version_col="ver")  # crash-replay
     state2 = sorted(map(tuple, read_upsert_table(spark, path).collect()))
     assert state1 == state2
-
-
-def test_upsert_streaming_foreachbatch(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    rows = [
-        {"k": 1, "v": "a", "ver": 1},
-        {"k": 1, "v": "a2", "ver": 2},
-        {"k": 2, "v": "b", "ver": 1},
-    ]
-    (src / "r.json").write_text("\n".join(json.dumps(r) for r in rows))
-    stream = spark.readStream.schema("k long, v string, ver long").json(str(src))
-    q = upsert_sink(
-        stream,
-        str(tmp_path / "tbl"),
-        str(tmp_path / "ckpt"),
-        key="k",
-        version_col="ver",
-        n_buckets=8,
-    )
-    q.awaitTermination(120)
-    got = {r.k: (r.v, r.ver) for r in read_upsert_table(spark, str(tmp_path / "tbl")).collect()}
-    assert got == {1: ("a2", 2), 2: ("b", 1)}
 
 
 def test_upsert_schema_evolution_new_column(spark, tmp_path):

@@ -39,7 +39,7 @@ def measure(spark, sf_dir: str, threshold: float, n_hubs: int = 1, rounds: int =
     n = emb.count()
     t0 = time.perf_counter()
     pairs = similarity.semantic_dedup_pairs(
-        emb, threshold=threshold, dim=64
+        emb, threshold=threshold
     ).localCheckpoint(eager=True)
     n_pairs = pairs.count()
     # clique drops = graph nodes − components (one keeper per component).
@@ -52,7 +52,7 @@ def measure(spark, sf_dir: str, threshold: float, n_hubs: int = 1, rounds: int =
     t_clique = time.perf_counter() - t0
     t0 = time.perf_counter()
     star = similarity.semantic_dedup_keep_star(
-        emb, threshold=threshold, dim=64, n_hubs=n_hubs, rounds=rounds
+        emb, threshold=threshold, n_hubs=n_hubs, rounds=rounds
     ).localCheckpoint(eager=True)
     star_dropped = star.where(F.col("kept") == 0).count()
     t_star = time.perf_counter() - t0

@@ -76,7 +76,7 @@ def main() -> int:
     print(f"corpus {n} vectors, {nq} queries, families of {FAMILY}")
 
     t0 = time.time()
-    truth = similarity.brute_force_topk(corpus, queries, k=5, dim=DIM).localCheckpoint()
+    truth = similarity.brute_force_topk(corpus, queries, k=5).localCheckpoint()
     print(f"exact truth: {time.time() - t0:.1f}s")
 
     for label, planes, tables in [

@@ -487,7 +487,7 @@ def _swept_df(name: str, spark, sf_dir: str):
         from mlops_pipelines_featurestore_gcp_spark.operators import similarity
 
         emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        return similarity.semantic_dedup_pairs(emb, threshold=0.45, dim=64)
+        return similarity.semantic_dedup_pairs(emb, threshold=0.45)
     if name == "s08_ann_pq_topk":
         from mlops_pipelines_featurestore_gcp_spark.plans import llm_data
 

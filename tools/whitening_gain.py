@@ -33,7 +33,7 @@ from mlops_pipelines_featurestore_gcp_spark.operators.whitening import (  # noqa
 
 def recall_at_k(spark, corpus, queries, *, dim, k, label):
     approx = similarity.pq_topk(corpus, queries, dim=dim, k=k, shortlist=4 * k)
-    exact = similarity.brute_force_topk(corpus, queries, dim=dim, k=k)
+    exact = similarity.brute_force_topk(corpus, queries, k=k)
     hits = (
         approx.select("query_id", "neighbor_id")
         .join(exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
@@ -80,7 +80,7 @@ def main() -> int:
     # recall difference of flipping the build flag.
     from mlops_pipelines_featurestore_gcp_spark.sources.scratch import scratch_dir
 
-    exact = similarity.brute_force_topk(emb, queries, dim=dim, k=k).select(
+    exact = similarity.brute_force_topk(emb, queries, k=k).select(
         "query_id", "neighbor_id"
     ).localCheckpoint(eager=True)
     total = exact.count()
