@@ -965,9 +965,6 @@ def pq_topk(
     sample: int = 2048,
     seed: int = 42,
     round_digits: int = 6,
-    codebooks: np.ndarray | None = None,
-    corpus_codes: DataFrame | None = None,
-    adc_queries: DataFrame | None = None,
 ) -> DataFrame:
     """Two-stage PQ-ADC approximate top-k: asymmetric-distance shortlist
     over the 8-byte codes, exact float rescore of survivors.
@@ -985,27 +982,17 @@ def pq_topk(
     reported scores are bit-equal to brute force on the same pairs
     (the rescore-parity contract flag), and the final top-k equals
     brute force whenever the true k-th neighbor survives the shortlist.
-
-    ``codebooks``/``corpus_codes`` accept a pre-trained/pre-encoded index
-    (the persist-once, search-many production shape); by default both are
-    built in-call.
     """
-    if codebooks is None:
-        codebooks = pq_train(
-            corpus, id_col=id_col, vec_col=vec_col, dim=dim, m=m, sample=sample, seed=seed
-        )
+    codebooks = pq_train(
+        corpus, id_col=id_col, vec_col=vec_col, dim=dim, m=m, sample=sample, seed=seed
+    )
     mm, ksub, dsub = codebooks.shape
-    if corpus_codes is None:
-        corpus_codes = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
-    corpus_codes = _spread(corpus_codes)
+    corpus_codes = _spread(pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col))
 
     # driver-side query tables: tiny by construction (queries are the
-    # broadcast-sized side everywhere in this module). adc_queries (same
-    # ids, possibly a rotated representation — the OPQ search path) feeds
-    # ONLY this ADC stage; the exact rescore below stays on `queries`.
-    aq = adc_queries if adc_queries is not None else queries
+    # broadcast-sized side everywhere in this module)
     qrows = _collect_query_rows(
-        aq.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")),
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")),
         "pq_topk",
     )
     qids = np.asarray([r["query_id"] for r in qrows])
@@ -1234,7 +1221,6 @@ def ivf_pq_topk(
     centroids: np.ndarray | None = None,
     codebooks: np.ndarray | None = None,
     corpus_codes: DataFrame | None = None,
-    adc_queries: DataFrame | None = None,
     adc_query_rows: list | None = None,
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the FAISS ``IVFADC`` composition
@@ -1290,8 +1276,6 @@ def ivf_pq_topk(
     else:
         enc = corpus_codes.select("neighbor_id", "cell", "codes", "rnorm")
 
-    # adc_queries (same ids, possibly rotated — the OPQ search path)
-    # feeds the probe + ADC stages only; the rescore stays on `queries`.
     # adc_query_rows (r14, guide §5 driver-side work): a caller running
     # SEVERAL tiers over the same query population (the s10 parity twin)
     # collects the (query_id, qv) rows ONCE and hands them to each call —
@@ -1299,9 +1283,8 @@ def ivf_pq_topk(
     if adc_query_rows is not None:
         qrows = adc_query_rows
     else:
-        aq = adc_queries if adc_queries is not None else queries
         qrows = _collect_query_rows(
-            aq.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")),
+            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")),
             "ivf_pq_topk",
         )
     qids = np.asarray([r["query_id"] for r in qrows])
@@ -1385,174 +1368,6 @@ def ivf_pq_topk(
     return rescored.withColumn("rnk", F.row_number().over(w2)).where(F.col("rnk") <= k)
 
 
-def _opq_path(path: str) -> str:
-    return f"{path}/opq"
-
-
-def _opq_fit(corpus: DataFrame, *, vec_col: str, dim: int) -> list[list[float]]:
-    """Fit the OPQ rotation for an index build: the PCA basis from
-    ``fit_whitening`` (one constant-width DECIMAL gram aggregate, s11)
-    with the TRANSLATION DISCARDED — ``y = R·v``, not ``R·(v − μ)``.
-
-    Rotation-only is the deployment shape for a cosine/IP index (Ge et
-    al. 2013 use a pure orthonormal R): it preserves every dot product
-    and norm EXACTLY, so the ADC stage's approximate cosine estimates the
-    same metric the exact rescore reports, while the PCA basis still
-    rebalances per-subspace energy for the codebooks. Centering would
-    silently change the ADC metric (cosine is not translation-invariant)
-    — callers who want true whitening compose ``apply_whitening``
-    explicitly and own that trade."""
-    from mlops_pipelines_featurestore_gcp_spark.operators import whitening
-
-    # exact one-pass gram up to its dim guard; bounded sample fit above
-    # (dim-1024 embeddings would explode 525k gram rows per vector)
-    sample = None if dim <= whitening._EXACT_GRAM_MAX_DIM else 65536
-    _mean, rotation, _eig = whitening.fit_whitening(
-        corpus, vec_col=vec_col, dim=dim, whiten=False, sample=sample
-    )
-    return rotation
-
-
-def _opq_apply(df: DataFrame, rotation: list[list[float]], *, vec_col: str) -> DataFrame:
-    """Map-side ``vec_col := R·vec_col`` (zero mean — see ``_opq_fit``)."""
-    from mlops_pipelines_featurestore_gcp_spark.operators.whitening import apply_whitening
-
-    dim = len(rotation[0])
-    return apply_whitening(df, [0.0] * dim, rotation, vec_col=vec_col, out_col=vec_col)
-
-
-def _opq_write(spark, path: str, rotation: list[list[float]]) -> None:
-    spark.createDataFrame([(rotation,)], "w array<array<double>>").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(_opq_path(path))
-
-
-def _opq_read(spark, path: str) -> list[list[float]] | None:
-    """The index's persisted rotation, or None for a plain index. Existence
-    goes through the Hadoop FileSystem API (the layout.py pattern) so any
-    object store the index lives on works, not just local paths."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(_opq_path(path))
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hp):
-        return None
-    r = spark.read.parquet(_opq_path(path)).first()
-    return [[float(x) for x in row] for row in r["w"]]
-
-
-def _opq_clear(spark, path: str) -> None:
-    """Remove a stale rotation when REBUILDING a path without one — a
-    leftover ``opq`` dir would make every search rotate queries against
-    codes that are no longer rotated."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(_opq_path(path))
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hp):
-        fs.delete(hp, True)
-
-
-def build_pq_index(
-    corpus: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int,
-    m: int = 8,
-    sample: int = 2048,
-    seed: int = 42,
-    opq: bool = False,
-) -> None:
-    """Persist a PQ index: codebooks + 8-byte codes, built once.
-
-    ``{path}/codebooks`` holds the m×ksub codeword table (KBs);
-    ``{path}/codes`` holds one (id, codes, rnorm) row per corpus vector —
-    the 32×-compressed scan set every subsequent ``pq_search`` reads
-    instead of the float corpus. The train + encode passes amortize
-    across every query batch; rebuild when the corpus distribution drifts
-    (the published PQ maintenance trade).
-
-    ``opq=True`` (r10, VERDICT r9 "what's missing" #1): fit the OPQ
-    rotation (``_opq_fit`` — the s11 PCA basis, rotation-only) and
-    train/encode in the ROTATED representation. The rotation persists at
-    ``{path}/opq`` beside the codebooks, so ``pq_search`` applies it
-    automatically — build and query sides can never drift apart,
-    the failure mode of hand-composing ``apply_whitening`` around a plain
-    index. Rescore stays in RAW space (rotation preserves cosine).
-    """
-    spark = corpus.sparkSession
-    if opq:
-        rotation = _opq_fit(corpus, vec_col=vec_col, dim=dim)
-        _opq_write(spark, path, rotation)
-        enc_corpus = _opq_apply(corpus, rotation, vec_col=vec_col)
-    else:
-        _opq_clear(spark, path)
-        enc_corpus = corpus
-    books = pq_train(
-        enc_corpus, id_col=id_col, vec_col=vec_col, dim=dim, m=m, sample=sample, seed=seed
-    )
-    mm, ksub, dsub = books.shape
-    rows = [
-        (s, j, [float(x) for x in books[s, j]]) for s in range(mm) for j in range(ksub)
-    ]
-    spark.createDataFrame(rows, "s int, j int, centroid array<double>").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codebooks")
-    pq_encode(enc_corpus, books, id_col=id_col, vec_col=vec_col).write.mode("overwrite").parquet(
-        f"{path}/codes"
-    )
-
-
-def pq_search(
-    spark,
-    path: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int,
-    k: int = 5,
-    shortlist: int = 32,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Approximate top-k against a persisted PQ index (``build_pq_index``).
-
-    The ADC stage scans ONLY ``{path}/codes``; ``corpus`` (the float
-    table) is touched just for the shortlist×|queries| rescore rows the
-    join prunes to — the scan-side I/O saving is the whole point of PQ.
-
-    An index built ``opq=True`` rotates the QUERIES with its persisted
-    rotation for the ADC stage (codes live in the rotated basis); the
-    exact rescore runs in raw space — rotation preserves cosine, so the
-    reported scores are the same metric as every other tier's.
-    """
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    mm = max(r["s"] for r in cb_rows) + 1
-    ksub = max(r["j"] for r in cb_rows) + 1
-    dsub = len(cb_rows[0]["centroid"])
-    books = np.empty((mm, ksub, dsub), dtype=np.float64)
-    for r in cb_rows:
-        books[r["s"], r["j"]] = r["centroid"]
-    codes = spark.read.parquet(f"{path}/codes")
-    rotation = _opq_read(spark, path)
-    adc_q = None if rotation is None else _opq_apply(queries, rotation, vec_col=vec_col)
-    return pq_topk(
-        corpus,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        m=mm,
-        k=k,
-        shortlist=shortlist,
-        round_digits=round_digits,
-        codebooks=books,
-        corpus_codes=codes,
-        adc_queries=adc_q,
-    )
-
-
 def _ivfpq_state_write(spark, path: str, cells: np.ndarray, books: np.ndarray) -> None:
     rows = [(int(c), [float(x) for x in cells[c]]) for c in range(len(cells))]
     spark.createDataFrame(rows, "cell int, centroid array<double>").coalesce(1).write.mode(
@@ -1566,6 +1381,17 @@ def _ivfpq_state_write(spark, path: str, cells: np.ndarray, books: np.ndarray) -
 
 
 def _ivfpq_state_read(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
+    """The persisted (cells, books) pair. An index whose codes sit in a
+    rotated basis carries an ``opq`` directory; it is refused, because raw
+    queries against rotated codes would return wrong neighbours silently.
+    Existence goes through the Hadoop FileSystem API, so any store the
+    index lives on works."""
+    rotated = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/opq")
+    if rotated.getFileSystem(spark._jsc.hadoopConfiguration()).exists(rotated):
+        raise ValueError(
+            f"{path} holds a rotated-basis index ({path}/opq); searching or "
+            "upserting it with raw vectors is wrong — rebuild it into an empty directory"
+        )
     c_rows = spark.read.parquet(f"{path}/centroids").collect()
     dim = len(c_rows[0]["centroid"])
     cells = np.empty((max(r["cell"] for r in c_rows) + 1, dim), dtype=np.float64)
@@ -1592,7 +1418,6 @@ def build_ivfpq_index(
     n_centroids: int | None = None,
     sample: int = 2048,
     seed: int = 42,
-    opq: bool = False,
 ) -> None:
     """Persist an IVF-PQ index — the tier a 100 TB deployment would
     actually keep on disk (VERDICT r6 #3: s09 refit per call until now).
@@ -1603,26 +1428,15 @@ def build_ivfpq_index(
     probe reads only its cells' directories — IVF partition pruning
     stacked on PQ's 32× code shrink. Train + encode amortize across every
     subsequent ``ivfpq_search``; rebuild when the corpus distribution
-    drifts (the published maintenance trade, as with the PQ/IVF indexes).
-
-    ``opq=True``: train + encode in the OPQ-rotated basis, rotation
-    persisted at ``{path}/opq`` and applied automatically by
-    ``ivfpq_search``/``ivfpq_upsert`` (see ``build_pq_index``).
+    drifts (the published maintenance trade).
     """
     spark = corpus.sparkSession
-    if opq:
-        rotation = _opq_fit(corpus, vec_col=vec_col, dim=dim)
-        _opq_write(spark, path, rotation)
-        enc_corpus = _opq_apply(corpus, rotation, vec_col=vec_col)
-    else:
-        _opq_clear(spark, path)
-        enc_corpus = corpus
     cells, books = ivfpq_train(
-        enc_corpus, id_col=id_col, vec_col=vec_col, dim=dim, m=m,
+        corpus, id_col=id_col, vec_col=vec_col, dim=dim, m=m,
         n_centroids=n_centroids, sample=sample, seed=seed,
     )
     _ivfpq_state_write(spark, path, cells, books)
-    ivfpq_encode(enc_corpus, cells, books, id_col=id_col, vec_col=vec_col).write.mode(
+    ivfpq_encode(corpus, cells, books, id_col=id_col, vec_col=vec_col).write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(f"{path}/codes")
 
@@ -1642,12 +1456,8 @@ def ivfpq_upsert(
     directories receive files.
     Quantizers drift as the corpus moves — rebuild when recall degrades.
     Re-appending the same batch duplicates rows; dedupe ids upstream or
-    rebuild — documented, not hidden. An index built ``opq=True`` rotates
-    the batch with its persisted rotation before encoding."""
+    rebuild — documented, not hidden."""
     cells, books = _ivfpq_state_read(spark, path)
-    rotation = _opq_read(spark, path)
-    if rotation is not None:
-        batch = _opq_apply(batch, rotation, vec_col=vec_col)
     ivfpq_encode(batch, cells, books, id_col=id_col, vec_col=vec_col).write.mode(
         "append"
     ).partitionBy("cell").parquet(f"{path}/codes")
@@ -1729,9 +1539,6 @@ def ivfpq_compact(spark, path: str, **kwargs) -> dict:
     return compact_cell_partitions(spark, f"{path}/codes", **kwargs)
 
 
-_OPQ_UNSET = object()  # sentinel: rotation=None legitimately means "plain index"
-
-
 def ivfpq_search(
     spark,
     path: str,
@@ -1746,7 +1553,6 @@ def ivfpq_search(
     shortlist: int = 32,
     round_digits: int = 6,
     state: tuple[np.ndarray, np.ndarray] | None = None,
-    rotation=_OPQ_UNSET,
     adc_query_rows: list | None = None,
 ) -> DataFrame:
     """Approximate top-k against a persisted IVF-PQ index.
@@ -1755,26 +1561,18 @@ def ivfpq_search(
     ``{path}/codes``; ``corpus`` (the float table) is touched just for
     the shortlist×|queries| rescore rows. Produces bit-identical results
     to the in-call ``ivf_pq_topk`` under the same quantizer state
-    (pinned in tests/test_pq.py). An index built ``opq=True`` rotates the
-    queries for the probe/ADC stages; rescore stays in raw space
-    (rotation preserves cosine — see ``pq_search``).
+    (pinned in tests/test_pq.py).
 
-    ``state``/``rotation``/``adc_query_rows`` (r14, guide §5): a caller
-    that already holds the persisted quantizer pair, the persisted
-    rotation (``None`` = plain index — hence the sentinel default), or
-    the collected rotated query rows can inject them and skip this
-    call's own driver round-trips — the s10 parity twin was paying the
-    2 state collects + the opq read + a query collect TWICE per call."""
+    ``state``/``adc_query_rows`` (r14, guide §5): a caller that already
+    holds the persisted quantizer pair (``_ivfpq_state_read``) or the
+    collected query rows can inject them and skip this call's own driver
+    round-trips — the s10 parity twin shares one state read and one query
+    collect between its two tiers."""
     if state is not None:
         cells, books = state
     else:
         cells, books = _ivfpq_state_read(spark, path)
     codes = spark.read.parquet(f"{path}/codes")
-    if rotation is _OPQ_UNSET:
-        rotation = _opq_read(spark, path)
-    adc_q = None
-    if rotation is not None and adc_query_rows is None:
-        adc_q = _opq_apply(queries, rotation, vec_col=vec_col)
     return ivf_pq_topk(
         corpus,
         queries,
@@ -1789,7 +1587,6 @@ def ivfpq_search(
         centroids=cells,
         codebooks=books,
         corpus_codes=codes,
-        adc_queries=adc_q,
         adc_query_rows=adc_query_rows,
     )
 

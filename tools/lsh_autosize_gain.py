@@ -2,11 +2,15 @@
 
 Builds a deterministic synthetic corpus ABOVE the knee (default 1M
 vectors, dim 64, planted ~20-member families so top-5 neighbors are
-meaningful), then runs `lsh_topk` twice over the SAME 32-query draw:
-once at the former manual sf-scale operating point (planes=8,
-tables=16) and once auto-sized (`planes=None/tables=None` →
-`_auto_planes(1M)` = planes=10, tables=25), reporting recall@5 against
-the exact brute-force truth plus candidate-volume/wall effects.
+meaningful), then runs `lsh_topk` over the SAME 32-query draw at the
+former manual sf-scale operating point (planes=8, tables=16) and
+auto-sized (`planes=None/tables=None` → `_auto_planes(1M)` = planes=10,
+tables=25), reporting recall@5 against the exact brute-force truth and
+the median wall of each.
+
+Both configurations share one Spark session, so each gets one untimed
+warm-up run first; the timed runs then alternate their order round by
+round, so neither side always pays for the other's leftovers.
 
 The claim under test (see `_auto_planes`'s docstring): holding planes
 fixed as N grows keeps expected buckets at N/2^planes — a constant
@@ -16,7 +20,7 @@ rule re-pins bucket size at ~1k and raises tables to hold recall.
 Corpus lives at /tmp/spark_graft_lsh1m (the documented scale-sweep /tmp
 fixture exemption — rebuilt on demand, never committed).
 
-Usage: python tools/lsh_autosize_gain.py [n_vectors]
+Usage: python tools/lsh_autosize_gain.py [n_vectors] [rounds]
 """
 
 from __future__ import annotations
@@ -68,6 +72,7 @@ def recall_at_5(got, truth) -> float:
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
+    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     spark = get_spark("lsh-autosize")
     spark.sparkContext.setLogLevel("ERROR")
     corpus = build_corpus(spark, n)
@@ -79,21 +84,29 @@ def main() -> int:
     truth = similarity.brute_force_topk(corpus, queries, k=5).localCheckpoint()
     print(f"exact truth: {time.time() - t0:.1f}s")
 
-    for label, planes, tables in [
-        ("manual (8,16) — sf-scale point", 8, 16),
-        ("auto _auto_planes(N)", None, None),
-    ]:
-        t0 = time.time()
+    configs = [("manual (8,16) — sf-scale point", 8, 16), ("auto _auto_planes(N)", None, None)]
+
+    def run(planes, tables) -> float:
         got = similarity.lsh_topk(
             corpus, queries, dim=DIM, planes=planes, tables=tables,
             k=5, probe_hamming=1,
         )
-        r = recall_at_5(got, truth)
+        return recall_at_5(got, truth)
+
+    recall = {label: run(planes, tables) for label, planes, tables in configs}  # warm-up
+    walls = {label: [] for label, _, _ in configs}
+    for r in range(rounds):
+        for label, planes, tables in configs if r % 2 == 0 else configs[::-1]:
+            t0 = time.time()
+            run(planes, tables)
+            walls[label].append(time.time() - t0)
+    for label, planes, tables in configs:
         p, t = (planes, tables) if planes else similarity._auto_planes(n)
-        exp_bucket = n / 2**p
+        w = sorted(walls[label])
         print(
-            f"{label}: planes={p} tables={t} expected-bucket~{exp_bucket:.0f} "
-            f"recall@5={r:.3f} wall={time.time() - t0:.1f}s"
+            f"{label}: planes={p} tables={t} expected-bucket~{n / 2**p:.0f} "
+            f"recall@5={recall[label]:.3f} wall median={w[len(w) // 2]:.1f}s "
+            f"runs={' '.join(f'{x:.1f}' for x in walls[label])}"
         )
     return 0
 

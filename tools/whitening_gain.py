@@ -1,15 +1,14 @@
 """Measure PQ recall with vs without the s11 PCA rotation/whitening.
 
-The OPQ literature's claim (Ge 2013): product quantizers split vectors
-into contiguous sub-blocks, so recall depends on variance being balanced
-across coordinates; rotating into the PCA basis first reduces
-quantization error. This tool puts a fixture NUMBER on that claim for
-THIS repo's PQ tier: recall@k of `pq_topk` against exact brute-force
-ground truth computed IN THE SAME representation (raw / PCA-rotated /
-whitened). Mean-centering changes the cosine task (cosine is
-origin-dependent), so cross-space recalls are not comparisons of the
-same ranking — each row is the quantizer's fidelity to exact search in
-that space, which is exactly the quantity OPQ optimizes.
+Ge et al. 2013 claim that product quantizers, which split vectors into
+contiguous sub-blocks, recall better after a rotation into the PCA
+basis balances variance across coordinates. This tool puts a fixture
+number on that claim for this repo's PQ tier: recall@k of `pq_topk`
+against exact brute-force ground truth computed IN THE SAME
+representation (raw / PCA-rotated / whitened). Mean-centering changes
+the cosine task (cosine is origin-dependent), so cross-space recalls are
+not comparisons of the same ranking — each row is the quantizer's
+fidelity to exact search in that space.
 
 Usage: python tools/whitening_gain.py [sf_dir] [n_queries] [k]
 """
@@ -31,7 +30,7 @@ from mlops_pipelines_featurestore_gcp_spark.operators.whitening import (  # noqa
 )
 
 
-def recall_at_k(spark, corpus, queries, *, dim, k, label):
+def recall_at_k(corpus, queries, *, dim, k, label):
     approx = similarity.pq_topk(corpus, queries, dim=dim, k=k, shortlist=4 * k)
     exact = similarity.brute_force_topk(corpus, queries, k=k)
     hits = (
@@ -62,7 +61,7 @@ def main() -> int:
         .localCheckpoint(eager=True)
     )
     dim = 64
-    recall_at_k(spark, emb, queries, dim=dim, k=k, label="raw")
+    recall_at_k(emb, queries, dim=dim, k=k, label="raw")
     for whiten, label in ((False, "pca-rotated"), (True, "whitened")):
         mean, rot, _ = fit_whitening(emb, dim=dim, whiten=whiten)
         emb_w = apply_whitening(emb, mean, rot).select(
@@ -71,27 +70,7 @@ def main() -> int:
         q_w = apply_whitening(queries, mean, rot).select(
             "vec_id", F.col("whitened").alias("embedding")
         )
-        recall_at_k(spark, emb_w, q_w, dim=dim, k=k, label=label)
-
-    # r10: the INTEGRATED path — build_pq_index(opq=...) + pq_search. The
-    # opq rotation is translation-free and the rescore runs in raw space,
-    # so BOTH rows score against the SAME raw exact ground truth (unlike
-    # the within-representation rows above) — this is the user-visible
-    # recall difference of flipping the build flag.
-    from mlops_pipelines_featurestore_gcp_spark.sources.scratch import scratch_dir
-
-    exact = similarity.brute_force_topk(emb, queries, k=k).select(
-        "query_id", "neighbor_id"
-    ).localCheckpoint(eager=True)
-    total = exact.count()
-    for opq, label in ((False, "index raw"), (True, "index opq-rotated")):
-        path = scratch_dir(f"wg_idx_{int(opq)}", fresh=True, per_process=True)
-        similarity.build_pq_index(emb, path, dim=dim, m=8, opq=opq)
-        approx = similarity.pq_search(spark, path, emb, queries, dim=dim, k=k, shortlist=4 * k)
-        hits = approx.select("query_id", "neighbor_id").join(
-            exact, ["query_id", "neighbor_id"]
-        ).count()
-        print(f"{label}: recall@{k} vs raw exact = {hits / total:.4f} ({hits}/{total})")
+        recall_at_k(emb_w, q_w, dim=dim, k=k, label=label)
     return 0
 
 
