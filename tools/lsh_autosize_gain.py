@@ -26,6 +26,7 @@ Usage: python tools/lsh_autosize_gain.py [n_vectors] [rounds]
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 import time
 
@@ -102,10 +103,9 @@ def main() -> int:
             walls[label].append(time.time() - t0)
     for label, planes, tables in configs:
         p, t = (planes, tables) if planes else similarity._auto_planes(n)
-        w = sorted(walls[label])
         print(
             f"{label}: planes={p} tables={t} expected-bucket~{n / 2**p:.0f} "
-            f"recall@5={recall[label]:.3f} wall median={w[len(w) // 2]:.1f}s "
+            f"recall@5={recall[label]:.3f} wall median={statistics.median(walls[label]):.1f}s "
             f"runs={' '.join(f'{x:.1f}' for x in walls[label])}"
         )
     return 0
