@@ -1093,9 +1093,8 @@ def s10_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not os.path.exists(f"{path}/codes"):
         similarity.build_ivfpq_index(emb, path, dim=64, m=8, seed=42)
-    # The twin exists to check the persisted codes against a fresh encode
-    # under the same quantizer pair; the state and the collected query
-    # rows are each read ONCE and shared by both tiers.
+    # the state and the collected query rows are each read ONCE and
+    # shared by both tiers
     cells, books = similarity._ivfpq_state_read(spark, path)
     qrows = similarity._collect_query_rows(
         queries.select(
@@ -1164,8 +1163,9 @@ def s10_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s11_embedding_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA rotation fit + map-side projection over the embeddings table
-    (operators/whitening.py; the PQ tiers index raw vectors). Fit is ONE constant-width aggregate (2145 partial rows per
-    partition after map-side combine, DECIMAL-accumulated), the 64×64
+    (operators/whitening.py; the PQ tiers index raw vectors). Fit is ONE
+    constant-width aggregate (2145 partial rows per partition after
+    map-side combine, DECIMAL-accumulated), the 64×64
     eigh runs driver-side, and projection (r10) and flag verification
     (r13) are each ONE Arrow-batched numpy matmul pass per batch —
     map-side, no shuffle, no Catalyst HOFs."""
