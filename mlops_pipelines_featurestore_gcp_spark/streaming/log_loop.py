@@ -34,8 +34,6 @@ per-batch work is embarrassingly parallel over source partitions.
 
 from __future__ import annotations
 
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -68,28 +66,15 @@ def factor_map(item_factors: DataFrame) -> DataFrame:
     """The item factors as a one-row ``__f map<item_id, features>`` local
     relation.
 
-    ``item_factors``: ``(item_id long, features array<double>)``. One job
-    reads them over Arrow; the map is assembled on the driver and handed
-    back as a local relation, so joining it into a batch re-runs nothing
-    over the factors and broadcasting it runs no job. A NULL or repeated
-    ``item_id`` raises ``ValueError`` naming it, as a map key must be
-    unique and non-NULL.
+    ``item_factors``: ``(item_id long, features array<double>)``. The map is
+    aggregated once, collected to the driver over Arrow and handed back as
+    a local relation, so joining it into a batch re-runs no aggregate over
+    the factors and broadcasting it runs no job.
     """
-    t = item_factors.select(
-        F.col("item_id").cast("long"), F.col("features").cast("array<double>")
-    ).toArrow()
-    ids = t.column("item_id").combine_chunks()
-    if ids.null_count:
-        raise ValueError("factor_map: NULL item_id")
-    uniq, counts = np.unique(ids.to_numpy(), return_counts=True)
-    if (counts > 1).any():
-        raise ValueError(f"factor_map: duplicate item_id {int(uniq[counts > 1][0])}")
-    entries = pa.MapArray.from_arrays(
-        pa.array([0, len(ids)], pa.int32()), ids, t.column("features").combine_chunks()
+    agg = item_factors.agg(
+        F.map_from_entries(F.collect_list(F.struct(F.col("item_id").cast("long"), "features"))).alias("__f")
     )
-    return item_factors.sparkSession.createDataFrame(
-        pa.table({"__f": entries}), "__f map<bigint, array<double>>"
-    )
+    return item_factors.sparkSession.createDataFrame(agg.toArrow(), agg.schema)
 
 
 def enrich_with_reward(messages: DataFrame, factors: DataFrame) -> DataFrame:

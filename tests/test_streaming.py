@@ -195,32 +195,6 @@ def test_enrich_reward_message_side_has_no_exchange(spark, factors):
     assert "Aggregate" in old
 
 
-def test_factor_map_is_one_arrow_read_equal_to_the_aggregate(spark, spark_jobs):
-    """factor_map builds the map on the driver from one Arrow read; it
-    equals the ``map_from_entries(collect_list(...))`` aggregate it
-    replaced, and a NULL or repeated item_id raises before any query."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    rows = [(int(i), [float(x) for x in rng.randn(5)]) for i in rng.permutation(300)]
-    item_factors = spark.createDataFrame(rows, "item_id long, features array<double>")
-    fm, jobs = spark_jobs(lambda: factor_map(item_factors))
-    assert len(jobs) == 1
-    oracle = item_factors.agg(
-        F.map_from_entries(F.collect_list(F.struct(F.col("item_id").cast("long"), "features"))).alias("__f")
-    )
-    assert fm.schema.simpleString() == oracle.schema.simpleString()
-    assert fm.first()["__f"] == oracle.first()["__f"]
-    assert len(fm.first()["__f"]) == 300
-
-    dup = spark.createDataFrame(rows[:3] + [(rows[1][0], [0.0] * 5)], "item_id long, features array<double>")
-    with pytest.raises(ValueError, match=f"duplicate item_id {rows[1][0]}"):
-        factor_map(dup)
-    null = spark.createDataFrame(rows[:3] + [(None, [0.0] * 5)], "item_id long, features array<double>")
-    with pytest.raises(ValueError, match="NULL item_id"):
-        factor_map(null)
-
-
 def test_log_loop_exactly_once(spark, factors, tmp_path):
     msg_dir = tmp_path / "msgs"
     sink = str(tmp_path / "sink")
